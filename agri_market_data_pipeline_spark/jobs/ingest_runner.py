@@ -91,7 +91,8 @@ def run_incremental_ingest(
         order_col="src_offset",
     )
 
-    if not dead.isEmpty():
+    n_dead = dead.count()
+    if n_dead:
         # keyed by offset via upsert: a crash-replay that dead-letters the
         # same page again must not double-count it. Written distributed —
         # no driver round-trip even though failed-page counts are small.
@@ -108,7 +109,7 @@ def run_incremental_ingest(
         "start": start,
         "end": end,
         "rows": n_rows,
-        "dead_pages": len(dead_rows),
+        "dead_pages": n_dead,
     }
 
 

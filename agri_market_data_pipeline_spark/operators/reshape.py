@@ -627,7 +627,8 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate per round instead of a max-then-filter double scan.
     Zero-norm / identical vectors just produce zero distances
     (degencheck class: no division exists; radius SQRT of a
-    nonnegative integer).
+    nonnegative integer). An empty embeddings table has no seed and
+    yields 0 rows, as the oracle does.
 
     Scale (r13, VERDICT r12 item 8): the quantized embedding frame is
     materialized ONCE, and each round is ONE job — the round's packed
@@ -684,7 +685,27 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         .observe(obs0, F.min(F.struct("vec_id", "qe")).alias("s"))
         .localCheckpoint(eager=True)
     )
+
+    def emit(rows: list) -> DataFrame:
+        """K driver-side (sel_order, id, radius_lat) scalars → one
+        local relation; sqrt stays an in-engine expression (same IEEE
+        op as the oracle's SQRT(CAST(mx AS DOUBLE))/LAT)."""
+        return spark.createDataFrame(
+            rows, "sel_order bigint, vec_id bigint, radius_lat bigint"
+        ).select(
+            "sel_order",
+            "vec_id",
+            "radius_lat",
+            (F.sqrt(F.col("radius_lat").cast("double")) / _KC_LAT).alias(
+                "radius"
+            ),
+        )
+
     seed = obs0.get["s"]
+    if seed is None:
+        # Empty embeddings table: there is no seed, so no center — the
+        # oracle's MIN(vec_id) is NULL and its result has 0 rows too.
+        return emit([])
     centers = [int(seed.vec_id)]  # center i's vec_id
     radii = []  # radius_lat AFTER adding center i
     m = emb.select("vec_id", "qe", F.expr(d2_lit(seed.qe)).alias("mind"))
@@ -714,18 +735,4 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qe",
             F.least(F.col("mind"), F.expr(d2_lit(s.qe))).alias("mind"),
         )
-    # Output: K driver-side (id, radius_lat) scalars → one local
-    # relation; sqrt stays an in-engine expression (same IEEE op as
-    # the oracle's SQRT(CAST(mx AS DOUBLE))/LAT).
-    out = spark.createDataFrame(
-        [(j, centers[j], radii[j]) for j in range(_KC_K)],
-        "sel_order bigint, vec_id bigint, radius_lat bigint",
-    )
-    return out.select(
-        "sel_order",
-        "vec_id",
-        "radius_lat",
-        (F.sqrt(F.col("radius_lat").cast("double")) / _KC_LAT).alias(
-            "radius"
-        ),
-    )
+    return emit([(j, centers[j], radii[j]) for j in range(_KC_K)])

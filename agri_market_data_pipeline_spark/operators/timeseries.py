@@ -2989,19 +2989,25 @@ def ts_wavelet_haar(spark: SparkSession, sf_dir: str) -> DataFrame:
     value — wavelet energies don't need µ-precision, and the coarser
     lattice keeps Σd² inside exact BIGINT with ~2 digits of headroom
     at tested SFs); every block sum, difference, and energy is an
-    exact integer (each level is one GROUP BY blk div 2 — L
-    declarative levels, no recursion, no window beyond the initial
-    rank); energy and share are integer-ratio doubles
-    (BIGINT→DOUBLE is correctly rounded on both engines), deliberately
-    UNROUNDED per the CLAUDE.md integer-ratio rule. Headroom: Σd²
-    grows ~linearly in series length; past ~1e16 (≈ SF 10 daily
-    grain) migrate the energy sum to DECIMAL(38,0) + ROUND — until
-    then ANSI mode fails loudly, never wraps (the ml_auc_roc
-    discipline).
+    exact integer. The oracle builds each level from the one below
+    (GROUP BY blk // 2); here the level-ℓ block of 0-based rank rk is
+    rk >> ℓ directly, it covers ranks [b·2^ℓ, (b+1)·2^ℓ), it is FULL
+    iff it holds 2^ℓ observations, and its detail is Σ±s with the
+    sign taken from the half it sits in ((rk >> (ℓ−1)) % 2) — the
+    same exact integer the recursion produces. Energy and share are
+    integer-ratio doubles (BIGINT→DOUBLE is correctly rounded on both
+    engines), deliberately UNROUNDED: rounding them would introduce tie
+    divergence. Headroom: Σd² grows ~linearly in series length; past ~1e16
+    (≈ SF 10 daily grain) migrate the energy sum to DECIMAL(38,0) +
+    ROUND — until then ANSI mode fails loudly, never wraps (the
+    ml_auc_roc discipline).
 
-    Scale: one partial agg to (type, day), then L = 5 tiny groupBys
-    over halving block grains — total extra rows < 2n per series, each
-    a map-side-combinable sum keyed by (series, blk div 2); no
+    Scale: one lazy plan, no eager jobs. One partial agg to (type,
+    day), one rank window, then every observation is replicated once
+    per level (L = 5 rows) and ONE map-side-combinable GROUP BY
+    (type, level, rk >> level) yields all blocks of all levels; a
+    second GROUP BY (type, level) sums their energies and a per-type
+    window adds the share denominator. L·n rows per series, no
     iteration state, no skew (grain is the bounded calendar)."""
     ev = load(spark, sf_dir, "events")
     daily = ev.groupBy(
@@ -3013,57 +3019,36 @@ def ts_wavelet_haar(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.count("*")
         ).alias("v")
     )
-    w = Window.partitionBy("et").orderBy("day_no")
-    cur = daily.select(
+    ranked = daily.select(
         "et",
-        (F.row_number().over(w) - 1).alias("blk"),
+        (F.row_number().over(Window.partitionBy("et").orderBy("day_no")) - 1)
+        .alias("rk"),
         F.floor(F.col("v") * 1e3 + F.lit(0.5)).cast("bigint").alias("s"),
-        F.lit(1).alias("full_blk"),
-    ).localCheckpoint(eager=True)
-    # Each level's frame is referenced TWICE (its energy branch + the
-    # next level's groupBy) and Spark shares no subplan results across
-    # references — unmaterialized, every levels[ℓ] branch would replay
-    # the events scan + daily agg + ℓ groupBys (ADVICE r10). The
-    # lattice frames are tiny (grain halves per level, ≤ types×days
-    # rows), so one eager localCheckpoint per level pins the whole
-    # decomposition to ONE events pass.
-    levels = []
-    for lv in range(1, _HAAR_LEVELS + 1):
-        cur = cur.groupBy("et", F.expr("blk div 2").alias("blk2")).agg(
-            F.sum("s").cast("bigint").alias("s"),
-            F.sum(
-                F.when(F.col("blk") % 2 == 0, F.col("s")).otherwise(
-                    -F.col("s")
-                )
-            )
-            .cast("bigint")
-            .alias("d"),
-            ((F.count("*") == 2) & (F.min("full_blk") == 1))
-            .cast("int")
-            .alias("full_blk"),
-        ).select(
-            "et", F.col("blk2").alias("blk"), "s", "d", "full_blk"
-        ).localCheckpoint(eager=True)
-        levels.append(
-            cur.filter(F.col("full_blk") == 1)
-            .groupBy("et")
-            .agg(
-                F.lit(lv).cast("int").alias("level"),
-                F.count("*").cast("bigint").alias("n_blocks"),
-                F.sum(F.col("d") * F.col("d"))
-                .cast("bigint")
-                .alias("energy_lat"),
-            )
-        )
-    lvl = levels[0]
-    for x in levels[1:]:
-        lvl = lvl.unionByName(x)
-    # lvl (types×levels rows) feeds tot AND the final join — one copy
-    lvl = lvl.localCheckpoint(eager=True)
-    tot = lvl.groupBy("et").agg(
-        F.sum("energy_lat").cast("bigint").alias("te")
     )
-    return lvl.join(F.broadcast(tot), "et").select(
+    # The level explode gets its own select: in the rank's select Spark
+    # would explode first, and row_number would rank the L copies.
+    per_level = ranked.select(
+        "et", "rk", "s",
+        F.explode(F.sequence(F.lit(1), F.lit(_HAAR_LEVELS))).alias("level"),
+    )
+    blocks = (
+        per_level.groupBy("et", "level", F.expr("shiftright(rk, level)"))
+        .agg(
+            F.expr(
+                "SUM(CASE WHEN shiftright(rk, level - 1) % 2 = 0"
+                " THEN s ELSE -s END)"
+            ).alias("d"),
+            F.count("*").alias("c"),
+        )
+        .filter(F.expr("c = shiftleft(1, level)"))
+    )
+    lvl = blocks.groupBy("et", "level").agg(
+        F.count("*").cast("bigint").alias("n_blocks"),
+        F.sum(F.col("d") * F.col("d")).cast("bigint").alias("energy_lat"),
+    ).select(
+        "*", F.sum("energy_lat").over(Window.partitionBy("et")).alias("te")
+    )
+    return lvl.select(
         F.col("et").alias("event_type"),
         "level",
         "n_blocks",

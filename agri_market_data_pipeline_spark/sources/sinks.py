@@ -170,7 +170,10 @@ def merge_upsert(
             # last rename wins — a classic lost update (ADVICE r6). The
             # link-based lock raises ConcurrentPublishError on contention
             # and steals only dead holders, same policy as
-            # SnapshotStore.publish.
+            # SnapshotStore.publish. The lock file sits beside the
+            # table, so a first write into a fresh path needs its
+            # parent directory before the lock can be taken.
+            os.makedirs(os.path.dirname(os.path.abspath(probe)), exist_ok=True)
             stack.enter_context(table_lock(probe + ".lock"))
             if not os.path.exists(probe) and os.path.exists(old_dir):
                 # a prior swap crashed between its two renames — the data

@@ -124,3 +124,21 @@ def test_degenerate_fixture_stays_oracle_green(
     assert sorted(scols) == sorted(ocols), (scols, ocols)
     assert len(srows) == len(orows), (len(srows), len(orows))
     assert sc.canon(srows, scols) == sc.canon(orows, ocols)
+
+
+def test_kcenter_coreset_on_empty_embeddings(spark, sf_dir, tmp_path):
+    """An empty embeddings table has no seed vector: sample_kcenter_coreset
+    returns 0 rows, as its oracle does, instead of failing on the None
+    the seed Observation reports."""
+    import __spark_entry__ as entrymod
+
+    src = os.path.join(sf_dir, "embeddings.parquet")
+    dst = os.path.join(str(tmp_path), "embeddings.parquet")
+    con = duckdb.connect()
+    con.sql(f"COPY (SELECT * FROM '{src}' LIMIT 0) TO '{dst}' (FORMAT PARQUET)")
+    sdf = entrymod.queries()["sample_kcenter_coreset"](spark, str(tmp_path))
+    assert sdf.columns == ["sel_order", "vec_id", "radius_lat", "radius"]
+    assert sdf.collect() == []
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{dst}'")
+    assert con.sql(entrymod.oracle_sql()["sample_kcenter_coreset"]).fetchall() == []
+    con.close()

@@ -151,6 +151,51 @@ def test_merge_upsert_keeps_latest(spark, tmp_path):
     assert got == {1: ("a", 1), 2: ("B2", 2), 3: ("c", 2)}
 
 
+def test_merge_upsert_creates_missing_parent_dir(spark, tmp_path):
+    """A first upsert into a path whose parent does not exist yet must
+    create it: the table lock lives beside the table."""
+    target = str(tmp_path / "new" / "prices")
+    v1 = spark.createDataFrame([(1, "a", 1), (2, "b", 1)], "k int, val string, ver int")
+    merge_upsert(spark, target, v1, keys=["k"], order_col="ver")
+    assert {r.k for r in spark.read.parquet(target).collect()} == {1, 2}
+
+
+def test_incremental_ingest_runner_saves_checkpoint(spark, tmp_path):
+    """run_incremental_ingest on the demo feed: upserts the cleaned rows,
+    dead-letters the failing page, returns its stats and saves the
+    checkpoint, so the next trigger resumes where this one ended."""
+    from agri_market_data_pipeline_spark.jobs.ingest_runner import (
+        _demo_fetch,
+        run_incremental_ingest,
+    )
+
+    def fetch(offset: int, limit: int) -> list[dict]:
+        if offset == 500:
+            raise ConnectionError("page down")
+        return _demo_fetch(offset, limit)
+
+    store = str(tmp_path / "store")
+    ckpt = OffsetCheckpoint(os.path.join(store, "progress.json"))
+    kw = dict(max_offset=1500, limit=500, pages_per_run=2, num_partitions=2, pace=0.0)
+    # page 500 is dead; page 0 keeps 490 rows (every 50th price is "n/a")
+    stats = run_incremental_ingest(spark, fetch, store, **kw)
+    assert stats == {"start": 0, "end": 1000, "rows": 490, "dead_pages": 1}
+    assert ckpt.load() == 1000
+    stats = run_incremental_ingest(spark, fetch, store, **kw)
+    assert stats == {"start": 1000, "end": 1500, "rows": 490, "dead_pages": 0}
+    assert ckpt.load() == 1500
+    # the store keeps one row per quotation key; the demo feed repeats keys
+    kept = [
+        r for off in (0, 1000) for r in _demo_fetch(off, 500)
+        if r["Modal_Price"] != "n/a"
+    ]
+    key_cols = ("State", "District", "Market", "Commodity", "Variety", "Grade", "Arrival_Date")
+    n_keys = len({tuple(r[c] for c in key_cols) for r in kept})
+    assert spark.read.parquet(os.path.join(store, "prices")).count() == n_keys
+    dead = spark.read.parquet(os.path.join(store, "dead_letters")).collect()
+    assert [r.offset for r in dead] == [500]
+
+
 def test_merge_upsert_swap_is_crash_safe(spark, tmp_path):
     """The parquet fallback must never expose a half-written table:
     (a) a normal merge leaves no .old/.stage residue; (b) a swap that

@@ -5,7 +5,10 @@ runs, calibration probe) for an arbitrary subset of queries.
 Usage: python tools/qbench.py name1 name2 ...  [-n RUNS]
 
 Prints one line per query: median, samples, normalized (median /
-calibration probe median). For triage only — the committed
+calibration probe median), and the untimed warm run's job, task and
+codegen-compile counts (classes the code generator compiled, i.e.
+codegen-cache misses). --split adds build vs execute time and the
+compiles of each timed run. For triage only — the committed
 BENCH_DETAIL.json comes from bench.py's full run.
 """
 
@@ -22,7 +25,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from agri_market_data_pipeline_spark import memo  # noqa: E402
 from agri_market_data_pipeline_spark.registry import all_queries  # noqa: E402
-from agri_market_data_pipeline_spark.session import get_spark  # noqa: E402
+from agri_market_data_pipeline_spark.session import (  # noqa: E402
+    codegen_compiles,
+    get_spark,
+)
 
 
 def main() -> int:
@@ -73,34 +79,37 @@ def main() -> int:
     for name in args.names:
         fn = queries[name]
 
-        def one_run() -> tuple[float, float]:
+        def one_run() -> tuple[float, float, int]:
+            c0 = codegen_compiles(spark)
             t0 = time.time()
             df = fn(spark, sf_dir)
             t1 = time.time()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.time()
+            compiled = codegen_compiles(spark) - c0
             spark.catalog.clearCache()
             # bench.py's sample boundary (r13): evict data memos so
             # every sample pays its own index/state builds.
             memo.clear_all()
             gc.collect()
-            return t1 - t0, t2 - t1
+            return t1 - t0, t2 - t1, compiled
 
         j0, t0n = job_stats()
-        one_run()
+        _, _, warm_compiled = one_run()
         j1, t1n = job_stats()
         runs = [one_run() for _ in range(args.n)]
-        tot = [b + e for b, e in runs]
+        tot = [b + e for b, e, _ in runs]
         med = statistics.median(tot)
         msg = (
             f"{name:40s} median={med:6.3f}  norm={med / calib:6.2f}"
-            f"  jobs={j1 - j0} tasks={t1n - t0n}"
+            f"  jobs={j1 - j0} tasks={t1n - t0n} compiles={warm_compiled}"
             f"  samples={[round(t, 3) for t in tot]}"
         )
         if args.split:
             msg += (
-                f"  build={[round(b, 3) for b, _ in runs]}"
-                f"  exec={[round(e, 3) for _, e in runs]}"
+                f"  build={[round(b, 3) for b, _, _ in runs]}"
+                f"  exec={[round(e, 3) for _, e, _ in runs]}"
+                f"  run_compiles={[c for _, _, c in runs]}"
             )
         print(msg)
     return 0
