@@ -854,36 +854,34 @@ def _cells_arr(cells: DataFrame) -> DataFrame:
     ).agg(F.collect_list(F.struct("cell_id", "cvec", "cnrm")).alias("cells"))
 
 
-def _argmax_cell(cells_col: str, vec_col: str, nrm_col: str | None = None):
+def _argmax_cell(cells_col: str, vec_col: str):
     """Row-local argmax over a broadcast array of (cell_id, cvec, cnrm)
     structs (build with _cells_arr): best (rounded) cosine, ties to
     the smallest cell_id — via array_max over (cos, -cell_id) structs,
     so each O(dim) dot fold is evaluated exactly once per
     (vector, cell) pair and struct ordering supplies the tie-break.
-    The cosine is dot/(na·nb) with both sqrts hoisted out of the fold
-    (cnrm stored per centroid; pass `nrm_col` to reuse a per-row norm
-    column) — the same float expression as vec_cosine, so bitwise-
-    equal to the oracle's full form at a third of the per-pair cost.
-    Zero-norm cosines (vector or centroid) are 0.0 — vec_cosine's
-    guard, matching the oracle's sql_cosine CASE. Built as ONE
-    parsed-SQL expression instead of 3 Python-lambda HOFs (~0.165 s
-    of py4j per call, measured r13 — the spark_dot_expr rule); the
-    parsed tree is the identical cosine/guard/tie-break op sequence,
-    so every assignment is unchanged."""
-    na = (
-        nrm_col
-        if nrm_col is not None
-        else f"sqrt({spark_dot_expr(vec_col, vec_col)})"
-    )
+    The cosine is dot/(na·nb) with both sqrts hoisted out of the fold:
+    cnrm is stored per centroid, and the vector's norm is bound once
+    per row as the lambda variable `_na` of a one-element transform
+    (higher-order functions run interpreted, so an inlined norm would
+    be folded twice per pair). It is the same float expression as
+    vec_cosine, so bitwise-equal to the oracle's full form at a third
+    of the per-pair cost. Zero-norm cosines (vector or centroid) are
+    0.0 — vec_cosine's guard, matching the oracle's sql_cosine CASE.
+    Built as ONE parsed-SQL expression instead of 3 Python-lambda HOFs
+    (~0.165 s of py4j per call, measured r13 — the spark_dot_expr
+    rule); the parsed tree is the identical cosine/guard/tie-break op
+    sequence, so every assignment is unchanged."""
+    na = f"sqrt({spark_dot_expr(vec_col, vec_col)})"
     dot = spark_dot_expr(vec_col, "c.cvec")
     cos = (
-        f"CASE WHEN ({na}) * c.cnrm > 0 "
-        f"THEN round(({dot}) / (({na}) * c.cnrm), 6) ELSE 0.0D END"
+        "CASE WHEN _na * c.cnrm > 0 "
+        f"THEN round(({dot}) / (_na * c.cnrm), 6) ELSE 0.0D END"
     )
     return F.expr(
-        f"CAST(-array_max(transform({cells_col}, "
-        f"c -> struct({cos} AS cos, -c.cell_id AS neg_id))).neg_id "
-        f"AS BIGINT)"
+        f"CAST(-transform(array({na}), _na -> array_max(transform("
+        f"{cells_col}, c -> struct({cos} AS cos, -c.cell_id AS neg_id))"
+        f").neg_id)[0] AS BIGINT)"
     )
 
 

@@ -9,6 +9,9 @@ The engine targets a large multi-executor cluster; locally we run
 - shuffle partitions sized to the environment (overridable per job).
 - a codegen cache that holds the engine's whole working set, so a query
   that runs again reuses its compiled classes.
+- Python workers started through ``pydaemon``, which spares each task
+  the re-read of pyspark.zip's directory, with the package on the
+  workers' path whatever the working directory is.
 """
 
 from __future__ import annotations
@@ -44,6 +47,15 @@ _RUNTIME_CONF = {
 # A compiled class costs ~70 KB of metaspace. The conf is static: it
 # reaches only the sessions get_spark creates.
 CODEGEN_CACHE_ENTRIES = 2048
+
+
+# Python workers fork from this module instead of pyspark.daemon (see
+# pydaemon: ~0.27 -> ~0.04 s of worker CPU per no-op task). The daemon
+# runs in the JVM's working directory, so the package's parent directory
+# goes on the workers' PYTHONPATH, which Spark appends to pyspark's own.
+# Both confs are static: a driver-supplied session keeps Spark's daemon.
+PYTHON_DAEMON_MODULE = "agri_market_data_pipeline_spark.pydaemon"
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def codegen_compiles(spark: SparkSession) -> int:
@@ -93,6 +105,8 @@ def get_spark(app_name: str = "agri-market-data-pipeline-spark",
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
     )
     for k, v in _RUNTIME_CONF.items():
         builder = builder.config(k, v)

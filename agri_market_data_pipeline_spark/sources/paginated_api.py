@@ -83,7 +83,12 @@ def read_paginated_api(
     scales to any executor count; per-partition throttling keeps the
     aggregate request rate at num_partitions × (1/throttle) pages/s,
     the knob the upstream API's quota dictates (the reference is pinned
-    to 1 page / 0.3 s total; a cluster must *divide* that budget)."""
+    to 1 page / 0.3 s total; a cluster must *divide* that budget).
+
+    Each partition is one Python-worker task, and a task has a fixed
+    cost besides its pages: under a `session.get_spark` session the
+    workers start through `pydaemon`, which cuts it from ~0.27 to
+    ~0.04 s of worker CPU on CPython 3.11."""
     n_pages = max(0, (max_offset - start_offset + limit - 1) // limit)
     pages = spark.range(n_pages).select(
         (F.lit(start_offset) + F.col("id") * limit).alias("offset")

@@ -7,9 +7,10 @@ Usage: python tools/qbench.py name1 name2 ...  [-n RUNS]
 Prints one line per query: median, samples, normalized (median /
 calibration probe median), and the untimed warm run's job, task and
 codegen-compile counts (classes the code generator compiled, i.e.
-codegen-cache misses). --split adds build vs execute time and the
-compiles of each timed run. For triage only — the committed
-BENCH_DETAIL.json comes from bench.py's full run.
+codegen-cache misses) and its Python-worker CPU seconds (py_cpu=).
+--split adds build vs execute time and the compiles and worker CPU of
+each timed run. For triage only — the committed BENCH_DETAIL.json
+comes from bench.py's full run.
 """
 
 from __future__ import annotations
@@ -29,6 +30,34 @@ from agri_market_data_pipeline_spark.session import (  # noqa: E402
     codegen_compiles,
     get_spark,
 )
+
+
+def python_worker_cpu_s(spark) -> float:
+    """CPU seconds (user and system, reaped children included) used so
+    far by the JVM's Python descendants: the worker daemon and the
+    workers it forked, read from /proc."""
+    children: dict[int, list[int]] = {}
+    names: dict[int, str] = {}
+    ticks: dict[int, int] = {}
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat") as fh:
+                text = fh.read()
+        except OSError:
+            continue
+        pid, fields = int(entry), text.rsplit(")", 1)[1].split()
+        names[pid] = text[text.index("(") + 1:text.rindex(")")]
+        ticks[pid] = sum(int(x) for x in fields[11:15])  # utime stime cutime cstime
+        children.setdefault(int(fields[1]), []).append(pid)
+    total, todo = 0, list(children.get(spark._jvm.ProcessHandle.current().pid(), []))
+    while todo:
+        pid = todo.pop()
+        if names[pid].startswith("python"):
+            total += ticks[pid]
+        todo.extend(children.get(pid, []))
+    return total / os.sysconf("SC_CLK_TCK")
 
 
 def main() -> int:
@@ -79,37 +108,40 @@ def main() -> int:
     for name in args.names:
         fn = queries[name]
 
-        def one_run() -> tuple[float, float, int]:
-            c0 = codegen_compiles(spark)
+        def one_run() -> tuple[float, float, int, float]:
+            c0, p0 = codegen_compiles(spark), python_worker_cpu_s(spark)
             t0 = time.time()
             df = fn(spark, sf_dir)
             t1 = time.time()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.time()
             compiled = codegen_compiles(spark) - c0
+            py_cpu = python_worker_cpu_s(spark) - p0
             spark.catalog.clearCache()
             # bench.py's sample boundary (r13): evict data memos so
             # every sample pays its own index/state builds.
             memo.clear_all()
             gc.collect()
-            return t1 - t0, t2 - t1, compiled
+            return t1 - t0, t2 - t1, compiled, py_cpu
 
         j0, t0n = job_stats()
-        _, _, warm_compiled = one_run()
+        _, _, warm_compiled, warm_py_cpu = one_run()
         j1, t1n = job_stats()
         runs = [one_run() for _ in range(args.n)]
-        tot = [b + e for b, e, _ in runs]
+        tot = [b + e for b, e, _, _ in runs]
         med = statistics.median(tot)
         msg = (
             f"{name:40s} median={med:6.3f}  norm={med / calib:6.2f}"
             f"  jobs={j1 - j0} tasks={t1n - t0n} compiles={warm_compiled}"
+            f"  py_cpu={warm_py_cpu:.2f}"
             f"  samples={[round(t, 3) for t in tot]}"
         )
         if args.split:
             msg += (
-                f"  build={[round(b, 3) for b, _, _ in runs]}"
-                f"  exec={[round(e, 3) for _, e, _ in runs]}"
-                f"  run_compiles={[c for _, _, c in runs]}"
+                f"  build={[round(b, 3) for b, _, _, _ in runs]}"
+                f"  exec={[round(e, 3) for _, e, _, _ in runs]}"
+                f"  run_compiles={[c for _, _, c, _ in runs]}"
+                f"  run_py_cpu={[round(p, 2) for _, _, _, p in runs]}"
             )
         print(msg)
     return 0
