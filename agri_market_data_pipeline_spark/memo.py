@@ -1,35 +1,46 @@
-"""Registry for module-level memo caches that hold COMPUTED DATA.
+"""One way to memoize: :func:`cached` for in-session results, and
+``tables.mirror`` for on-disk fixture mirrors.
 
-Two classes of memo live in this package, and they follow different
-rules (OPTIMIZATION_r13 / VERDICT r12 item 2):
+Every memo is keyed on ``(applicationId, sf_dir, *extra, source
+fingerprint)``, so a result is reused only while the tables it was
+built from are unchanged on disk (regenerated testdata, or a cron
+append, misses and rebuilds). Three classes of memo live in this
+package:
 
 1. **Data memos** — checkpointed DataFrames (index builds, stored-side
-   assignments, curation stage frames). These model "in production the
+   assignments, curation stage frames), served by :func:`cached` over
+   a dict made with :func:`register`. These model "in production the
    index/table is built at write time and persisted", which is honest
    for repeated *serving* calls inside one invocation, but across bench
    samples it silently shifts the build out of the timed region (the
-   untimed warm-up pays it, the 3 timed samples never do). Every data
-   memo registers here, and ``bench.py``/``tools/qbench.py`` call
-   :func:`clear_all` between samples so EVERY timed invocation pays its
-   own builds. Eviction unpersists the checkpointed RDD blocks
-   (``spark.catalog.clearCache()`` does not see localCheckpoint blocks
-   — CLAUDE.md), fixing the ADVICE r12 stranded-block note.
+   untimed warm-up pays it, the 3 timed samples never do). So
+   ``bench.py``/``tools/qbench.py`` call :func:`clear_all` between
+   samples and EVERY timed invocation pays its own builds. A data memo
+   keeps one live entry; eviction unpersists the checkpointed RDD
+   blocks (``spark.catalog.clearCache()`` does not see localCheckpoint
+   blocks — CLAUDE.md).
 
-2. **Metadata memos** — immutable logical plans (``tables._LOAD_CACHE``),
-   parquet-footer row counts, and one-row plan-shape statistics
-   (``tables.max_group_count``, ``textstats._distinct_token_count``).
-   At 100 TB these are metastore/table statistics, not computation over
-   the data; they stay memoized and are NOT registered here.
+2. **Metadata memos** — immutable logical plans (``tables.load``),
+   one-row plan-shape statistics (``tables.max_group_count``,
+   ``textstats._distinct_token_count``) and write-once layouts
+   (``storage_layout.bucketed_tables``), served by :func:`cached` over
+   a plain dict. At 100 TB these are metastore/table statistics, not
+   computation over the data; they survive :func:`clear_all` and are
+   bounded by a size cap instead.
 
-Fixture-materialization path caches (``_CSV_CACHE`` etc.) hold paths of
-alternate-format *input* copies — inputs, not results — and also stay.
+3. **Fixture mirrors** — alternate-format copies of an *input* table
+   (CSV, ORC, XML, partitioned, compacted, manifest), served by
+   ``tables.mirror``: a directory under the temp dir named by the
+   source fingerprint, complete when its ``_SUCCESS`` marker exists.
 """
 
 from __future__ import annotations
 
-from typing import Any
+from typing import Any, Callable
 
 _REGISTRY: list[dict] = []
+_METADATA_ENTRIES = 256  # size cap of a metadata memo: entries are cheap
+COUNTS = {"builds": 0, "hits": 0}  # cached() calls, over every memo
 
 
 def register(cache: dict) -> dict:
@@ -37,6 +48,38 @@ def register(cache: dict) -> dict:
     ``_FOO_CACHE = memo.register({})`` at definition site."""
     _REGISTRY.append(cache)
     return cache
+
+
+def cached(
+    cache: dict,
+    spark,
+    sf_dir: str,
+    tables: tuple[str, ...],
+    build: Callable[[], Any],
+    *extra: Any,
+) -> Any:
+    """``build()``'s value, memoized in ``cache`` per (applicationId,
+    sf_dir, *extra, fingerprint of ``tables``). A registered (data)
+    memo evicts its one live entry before a build; any other cache is
+    cleared once it reaches the metadata size cap."""
+    from .tables import source_fingerprint
+
+    key = (
+        spark.sparkContext.applicationId,
+        sf_dir,
+        *extra,
+        source_fingerprint(sf_dir, *tables),
+    )
+    if key in cache:
+        COUNTS["hits"] += 1
+        return cache[key]
+    if any(c is cache for c in _REGISTRY):
+        evict(cache)  # one live entry — sessions/sf_dirs don't mix
+    elif len(cache) >= _METADATA_ENTRIES:
+        cache.clear()
+    COUNTS["builds"] += 1
+    value = cache[key] = build()
+    return value
 
 
 def _unpersist_value(value: Any) -> None:

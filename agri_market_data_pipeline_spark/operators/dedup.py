@@ -114,27 +114,20 @@ def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed-explode formulation both shuffles 12× the rows and pays 12
     md5s per shingle for the same answer.
 
-    Memoized per (applicationId, sf_dir, documents fingerprint) and
-    localCheckpointed — the _pq_index pattern: in production the band
-    index is persisted at ingest time, so a consumer never re-shingles
-    the corpus. Matters doubly here because consumers reference the
-    frame several times in ONE plan (dedup_incremental probes it four
-    ways); without materialization each reference re-executes the
-    whole shingle→minhash pipeline (the r10 benchguard 1.8x breach)."""
-    from ..tables import source_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
+    A localCheckpointed data memo (memo.cached on the documents
+    fingerprint): in production the band index is persisted at ingest
+    time, so a consumer never re-shingles the corpus. Matters doubly
+    here because consumers reference the frame several times in ONE plan
+    (dedup_incremental probes it four ways); without materialization
+    each reference re-executes the whole shingle→minhash pipeline (the
+    r10 benchguard 1.8x breach)."""
+    return memo.cached(
+        _MINHASH_BANDS_CACHE,
+        spark,
         sf_dir,
-        source_fingerprint(sf_dir, "documents"),
+        ("documents",),
+        lambda: _minhash_bands_build(spark, sf_dir).localCheckpoint(eager=True),
     )
-    hit = _MINHASH_BANDS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    memo.evict(_MINHASH_BANDS_CACHE)  # one live index at a time
-    out = _minhash_bands_build(spark, sf_dir).localCheckpoint(eager=True)
-    _MINHASH_BANDS_CACHE[key] = out
-    return out
 
 
 def _minhash_bands_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -311,20 +304,13 @@ _CUR_STAGE_CACHE: dict = memo.register({})
 
 def _curation_stage_frames(spark: SparkSession, sf_dir: str):
     """(gated, exact) survivor frames of the curation DAG's first two
-    stages — quality gate, then md5 keep-lowest exact dedup — memoized
-    per (application, sf_dir) and checkpointed, so curation_audit and
+    stages — quality gate, then md5 keep-lowest exact dedup — a data
+    memo (memo.cached) and checkpointed, so curation_audit and
     curation_lineage (which are the GROUP BY and the row view of the
     SAME DAG) compute them once per evaluation. At 100 TB each stage's
     output is a persisted table; this is that read path."""
-    from ..tables import source_fingerprint
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        source_fingerprint(sf_dir, "documents"),
-    )
-    hit = _CUR_STAGE_CACHE.get(key)
-    if hit is None:
+    def build():
         d = load_parallel(spark, sf_dir, "documents")
         toks = F.split(F.col("text"), " ")
         n_tok = F.size(toks)
@@ -341,35 +327,29 @@ def _curation_stage_frames(spark: SparkSession, sf_dir: str):
             .localCheckpoint(eager=True)
         )
         gated_ids = gated.select("doc_id").localCheckpoint(eager=True)
-        hit = (gated_ids, exact)
-        memo.evict(_CUR_STAGE_CACHE)
-        _CUR_STAGE_CACHE[key] = hit
-    return hit
+        return gated_ids, exact
+
+    return memo.cached(_CUR_STAGE_CACHE, spark, sf_dir, ("documents",), build)
 
 
 def _minhash_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected-component labels over the LSH candidate pairs,
-    memoized per (application, sf_dir): dedup_cluster, curation_audit
-    and curation_lineage all consume the SAME band join + label
+    """Connected-component labels over the LSH candidate pairs, a data
+    memo (memo.cached): dedup_cluster, curation_audit and
+    curation_lineage all consume the SAME band join + label
     propagation, and the loop's final frame is already
     localCheckpoint'd — sharing it turns the 2nd/3rd consumer's most
     expensive subtree into a metadata hit (VERDICT r3 item 7). At
     100 TB this is the persisted cluster-assignment table every
     curation stage reads."""
-    from ..tables import source_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
+    return memo.cached(
+        _CC_LABEL_CACHE,
+        spark,
         sf_dir,
-        source_fingerprint(sf_dir, "documents"),
+        ("documents",),
+        lambda: _connected_components(
+            dedup_near_minhash_pairs(spark, sf_dir), "doc_a", "doc_b"
+        ),
     )
-    hit = _CC_LABEL_CACHE.get(key)
-    if hit is None:
-        pairs = dedup_near_minhash_pairs(spark, sf_dir)
-        hit = _connected_components(pairs, "doc_a", "doc_b")
-        memo.evict(_CC_LABEL_CACHE)  # one live entry — sf_dirs don't mix
-        _CC_LABEL_CACHE[key] = hit
-    return hit
 
 
 def _connected_components(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:

@@ -11,9 +11,6 @@ fetch_data.py:146-156 are hash-verified, not just unit-tested.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -24,7 +21,7 @@ from ..functions.cleaning import (
 )
 from ..functions.exact import dsum, sql_dsum
 from ..registry import query
-from ..tables import load
+from ..tables import load, mirror
 from .scalar_fns import safe_name
 
 
@@ -219,35 +216,21 @@ def op_sink_delta_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CSV_CACHE: dict[str, str] = {}
-
-
 def _csv_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize a CSV mirror of lineitem once per sf (the reference's
-    storage format, SURVEY.md §1.2) for the CSV-scan operator."""
-    def complete(d: str) -> bool:
-        # _SUCCESS marker: a crashed earlier write leaves a partial dir
-        # that must not be served as the mirror.
-        return os.path.isdir(d) and os.path.exists(os.path.join(d, "_SUCCESS"))
+    """CSV mirror of lineitem (the reference's storage format,
+    SURVEY.md §1.2) for the CSV-scan operator, via tables.mirror."""
 
-    if sf_dir in _CSV_CACHE and complete(_CSV_CACHE[sf_dir]):
-        return _CSV_CACHE[sf_dir]
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "agri_csv_mirror_" + sf_dir.strip("/").replace("/", "_"),
-    )
-    if not complete(out):
-        li = load(spark, sf_dir, "lineitem").select(
+    def write(out: str) -> None:
+        load(spark, sf_dir, "lineitem").select(
             "l_orderkey",
             "l_linenumber",
             "l_quantity",
             "l_extendedprice",
             "l_returnflag",
             F.date_format("l_shipdate", "yyyy-MM-dd").alias("l_shipdate"),
-        )
-        li.write.mode("overwrite").option("header", True).csv(out)
-    _CSV_CACHE[sf_dir] = out
-    return out
+        ).write.mode("overwrite").option("header", True).csv(out)
+
+    return mirror(spark, sf_dir, "csv", ("lineitem",), write)
 
 
 @query(
@@ -295,22 +278,11 @@ def op_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORC_CACHE: dict[str, str] = {}
-
-
 def _orc_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize an ORC mirror of lineitem once per sf — the second
-    columnar format of the source layer (scan_parquet's sibling)."""
-    def complete(d: str) -> bool:
-        return os.path.isdir(d) and os.path.exists(os.path.join(d, "_SUCCESS"))
+    """ORC mirror of lineitem — the second columnar format of the
+    source layer (scan_parquet's sibling), via tables.mirror."""
 
-    if sf_dir in _ORC_CACHE and complete(_ORC_CACHE[sf_dir]):
-        return _ORC_CACHE[sf_dir]
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "agri_orc_mirror_" + sf_dir.strip("/").replace("/", "_"),
-    )
-    if not complete(out):
+    def write(out: str) -> None:
         load(spark, sf_dir, "lineitem").select(
             "l_orderkey",
             "l_linenumber",
@@ -319,8 +291,8 @@ def _orc_mirror(spark: SparkSession, sf_dir: str) -> str:
             "l_returnflag",
             "l_shipdate",
         ).write.mode("overwrite").orc(out)
-    _ORC_CACHE[sf_dir] = out
-    return out
+
+    return mirror(spark, sf_dir, "orc", ("lineitem",), write)
 
 
 @query(

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import dsum, sql_dsum
 from ..registry import query
-from ..tables import load, load_parallel
+from ..tables import load, load_parallel, mirror
 
 
 @query(
@@ -187,49 +187,13 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_XML_CACHE: dict[str, str] = {}
-
-
 def _xml_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize an XML mirror of orders once per sf for the XML-scan
-    operator — Spark 4's built-in XML source writes it distributed
+    """XML mirror of orders for the XML-scan operator, via
+    tables.mirror — Spark 4's built-in XML source writes it distributed
     (one part-file per partition, each a well-formed document), the
     same layout a feed of per-page XML exports would land in."""
-    import tempfile
 
-    def complete(d: str) -> bool:
-        return os.path.isdir(d) and os.path.exists(os.path.join(d, "_SUCCESS"))
-
-    # Key the mirror on a fingerprint of the source parquet (file
-    # names + sizes + mtimes) — a fixed path keyed only on sf_dir
-    # would silently serve a stale mirror after the testdata at that
-    # path is regenerated, while the oracle reads the fresh parquet.
-    import hashlib
-
-    src = os.path.join(sf_dir, "orders.parquet")
-    paths = [src]
-    if os.path.isdir(src):
-        paths = sorted(
-            os.path.join(src, f) for f in os.listdir(src) if not f.startswith("_")
-        )
-    sig = hashlib.md5(
-        "|".join(
-            f"{p}:{st.st_size}:{st.st_mtime_ns}"
-            for p in paths
-            for st in [os.stat(p)]
-        ).encode()
-    ).hexdigest()[:12]
-
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "agri_xml_mirror_"
-        + sf_dir.strip("/").replace("/", "_")
-        + "_"
-        + sig,
-    )
-    if _XML_CACHE.get(sf_dir) == out and complete(out):
-        return out
-    if not complete(out):
+    def write(out: str) -> None:
         o = load(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_custkey",
@@ -238,33 +202,8 @@ def _xml_mirror(spark: SparkSession, sf_dir: str) -> str:
             F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"),
         )
         o.write.mode("overwrite").format("xml").option("rowTag", "order").save(out)
-        # Drop mirrors of prior testdata vintages for this sf_dir — a
-        # regenerated source changes the fingerprint suffix, and the
-        # orphaned trees would otherwise accumulate in tmp forever.
-        # Match ONLY the 12-hex fingerprint slot: a bare `prefix + '_*'`
-        # glob also catches a sibling dir whose flattened name extends
-        # this one's (…_sf0.01 matches …_sf0.01_v2_<sig>) and would
-        # rmtree its LIVE mirror. Skip trees younger than a grace window
-        # so a concurrent run against a regenerated source isn't deleted
-        # mid-read.
-        import glob
-        import re
-        import shutil
-        import time as _time
 
-        prefix = out.rsplit("_", 1)[0]
-        slot = re.compile(re.escape(prefix) + r"_[0-9a-f]{12}$")
-        for stale in glob.glob(prefix + "_*"):
-            if stale == out or not slot.match(stale):
-                continue
-            try:
-                age = _time.time() - os.stat(stale).st_mtime
-            except OSError:
-                continue
-            if age > 3600:  # 1 h grace for concurrent readers
-                shutil.rmtree(stale, ignore_errors=True)
-    _XML_CACHE[sf_dir] = out
-    return out
+    return mirror(spark, sf_dir, "xml", ("orders",), write)
 
 
 @query(

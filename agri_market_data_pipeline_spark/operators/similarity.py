@@ -543,8 +543,8 @@ _KNN_CELL_CACHE: dict = memo.register({})
 
 def _knn_trained_arr(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFrame:
     """Trained coarse quantizer for the kNN join, as a 1-row cells
-    array, memoized per (application, sf_dir) so sim_knn_join and its
-    recall twin train ONCE per evaluation instead of once each.
+    array, a data memo (memo.cached) so sim_knn_join and its recall
+    twin train ONCE per evaluation instead of once each.
 
     K = ⌈√(P·n)⌉ (the balanced assign/probe dot-work optimum — see
     _KNN_K_SQL's derivation) with n from the parquet footer row count
@@ -559,29 +559,19 @@ def _knn_trained_arr(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFram
 
     from ..tables import table_row_count
 
-    from ..tables import source_fingerprint
+    def build() -> DataFrame:
+        kk = math.ceil(
+            math.sqrt(_KNN_PROBE * table_row_count(sf_dir, "embeddings"))
+        )
+        seeds = e.filter(F.col("vec_id") < kk).select(
+            F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cvec")
+        )
+        cells = _kmeans_cells(e, _KNN_ROUNDS, seeds=seeds).localCheckpoint(
+            eager=True
+        )
+        return _cells_arr(cells)
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        source_fingerprint(sf_dir, "embeddings"),
-    )
-    hit = _KNN_CELL_CACHE.get(key)
-    if hit is not None:
-        return hit
-    kk = math.ceil(
-        math.sqrt(_KNN_PROBE * table_row_count(sf_dir, "embeddings"))
-    )
-    seeds = e.filter(F.col("vec_id") < kk).select(
-        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cvec")
-    )
-    cells = _kmeans_cells(e, _KNN_ROUNDS, seeds=seeds).localCheckpoint(
-        eager=True
-    )
-    arr = _cells_arr(cells)
-    memo.evict(_KNN_CELL_CACHE)  # one live entry — sessions/sf_dirs don't mix
-    _KNN_CELL_CACHE[key] = arr
-    return arr
+    return memo.cached(_KNN_CELL_CACHE, spark, sf_dir, ("embeddings",), build)
 
 
 @query("sim_knn_join", oracle=_knn_sql())
@@ -1061,32 +1051,25 @@ _KMI_CELL_CACHE: dict = memo.register({})
 
 
 def _kmi_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized trained coarse quantizer: the _KMI_ROUNDS k-means
-    centroid frame, checkpointed once per (applicationId, sf_dir,
-    embeddings fingerprint) — the _pq_index / _KNN_CELL_CACHE
-    discipline (r12). In production the quantizer is trained at
-    index-BUILD time and stored; the queries that consume it
+    """Memoized trained coarse quantizer: the _KMI_ROUNDS k-means centroid
+    frame, checkpointed once per embeddings fingerprint — a data memo
+    (memo.cached), as _pq_index (r12). In production the quantizer is
+    trained at index-BUILD time and stored; the queries that consume it
     (ml_kmeans_train_ivf's serve stage, ml_kmeans_silhouette's eval
-    pass) never pay training per call. Before this, each call re-ran
-    the 2-round loop: 2 broadcast-argmax fact scans + 2 k×dim centroid
-    shuffles AND ~0.3 s of py4j lambda plan-construction per round.
-    The checkpointed frame is the identical deterministic lattice
-    result _kmeans_cells returns, so downstream values are unchanged."""
-    from ..tables import source_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
+    pass) never pay training per call. Before this, each call re-ran the
+    2-round loop: 2 broadcast-argmax fact scans + 2 k×dim centroid
+    shuffles AND ~0.3 s of py4j lambda plan-construction per round. The
+    checkpointed frame is the identical deterministic lattice result
+    _kmeans_cells returns, so downstream values are unchanged."""
+    return memo.cached(
+        _KMI_CELL_CACHE,
+        spark,
         sf_dir,
-        source_fingerprint(sf_dir, "embeddings"),
+        ("embeddings",),
+        lambda: _kmeans_cells(
+            load_parallel(spark, sf_dir, "embeddings"), _KMI_ROUNDS
+        ).localCheckpoint(eager=True),
     )
-    hit = _KMI_CELL_CACHE.get(key)
-    if hit is not None:
-        return hit
-    e = load_parallel(spark, sf_dir, "embeddings")
-    cells = _kmeans_cells(e, _KMI_ROUNDS).localCheckpoint(eager=True)
-    memo.evict(_KMI_CELL_CACHE)  # one live quantizer — sessions/sf_dirs don't mix
-    _KMI_CELL_CACHE[key] = cells
-    return cells
 
 
 @query("ml_kmeans_train_ivf", oracle=_ivf_sql(_KMI_ROUNDS, _KM_K))
@@ -1372,24 +1355,22 @@ def _pq_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     4 B/vector layout the docstring promises) for EVERY vector.
 
     In production both are precomputed at WRITE time; a query never
-    pays the build. Here the build is memoized per (applicationId,
-    sf_dir, embeddings fingerprint) — the tables.max_group_count
-    pattern (VERDICT r6 item 2) — so the first call per session builds
+    pays the build. Here the build is a data memo (memo.cached on the
+    embeddings fingerprint, VERDICT r6 item 2) — so the first call builds
     and checkpoints the index, and every later call (bench warm runs,
     the recall twin, repeated probes) pays only the serve path, which
     is the honest production cost shape. The fingerprint invalidates
     on regenerated testdata."""
-    from ..tables import source_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
+    return memo.cached(
+        _PQ_INDEX_CACHE,
+        spark,
         sf_dir,
-        source_fingerprint(sf_dir, "embeddings"),
+        ("embeddings",),
+        lambda: _pq_build(spark, sf_dir),
     )
-    hit = _PQ_INDEX_CACHE.get(key)
-    if hit is not None:
-        return hit
-    memo.evict(_PQ_INDEX_CACHE)  # one live index at a time (bounded memory)
+
+
+def _pq_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     # r13: no fact-grain checkpoint of e — it forced the whole encode
     # into ONE task (1.5 s single-threaded, measured); the tiny
     # cents/codebook branches re-scan the memoized parquet plan instead,
@@ -1419,7 +1400,6 @@ def _pq_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         )
         .localCheckpoint(eager=True)
     )
-    _PQ_INDEX_CACHE[key] = (cbrow, codes)
     return cbrow, codes
 
 
@@ -2720,27 +2700,19 @@ def incr_ann_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assigned in SEPARATE branches (the upsert path) then unioned.
     # r12: the STORED side is the persisted cell-partitioned table the
     # docstring already promises ("in production ... only the batch
-    # rows pay the argmax fold") — memoize+checkpoint it per
-    # (applicationId, sf_dir, fingerprint), the _pq_index discipline,
-    # so repeated calls pay the batch assignment + the live REBUILD
-    # audit (which stays uncached — it is the independent check), not
-    # three full assignment passes.
-    from ..tables import source_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
+    # rows pay the argmax fold") — a checkpointed data memo
+    # (memo.cached), so repeated calls pay the batch assignment + the
+    # live REBUILD audit (which stays uncached — it is the independent
+    # check), not three full assignment passes.
+    stored = memo.cached(
+        _UPS_STORED_CACHE,
+        spark,
         sf_dir,
-        source_fingerprint(sf_dir, "embeddings"),
+        ("embeddings",),
+        lambda: assign(e.filter(~is_batch))
+        .withColumn("src", F.lit(0))
+        .localCheckpoint(eager=True),
     )
-    stored = _UPS_STORED_CACHE.get(key)
-    if stored is None:
-        memo.evict(_UPS_STORED_CACHE)
-        stored = (
-            assign(e.filter(~is_batch))
-            .withColumn("src", F.lit(0))
-            .localCheckpoint(eager=True)
-        )
-        _UPS_STORED_CACHE[key] = stored
     ups = assign(e.filter(is_batch)).withColumn("src", F.lit(1))
     m = (
         stored.unionByName(ups)

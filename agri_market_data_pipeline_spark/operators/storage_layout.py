@@ -31,30 +31,30 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..functions.exact import dsum, sql_dsum
 from ..registry import query
-from ..tables import load
+from ..tables import load, mirror
 
 # ---------------------------------------------------------------------------
 # Bucketed co-located join
 
 
-def _sf_tag(sf_dir: str) -> str:
-    return re.sub(r"[^A-Za-z0-9]+", "_", sf_dir.strip("/"))
-
-
-_BUCKETED_READY: set[str] = set()
+_BUCKETED_CACHE: dict = {}
 _N_BUCKETS = 8
 
 
 def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Materialize lineitem/orders bucketed+sorted by the join key, once
-    per (process, sf_dir). At 100 TB this is the nightly table-format
-    job; buckets = shuffle partitions fixed at write time, so every
-    later join/aggregate on the key is exchange-free."""
-    tag = _sf_tag(sf_dir)
+    per (application, sf_dir, lineitem and orders fingerprint) — a
+    metadata memo (memo.cached), so a changed source is rewritten. At
+    100 TB this is the nightly table-format job; buckets = shuffle
+    partitions fixed at write time, so every later join/aggregate on
+    the key is exchange-free."""
+    tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir.strip("/"))
     li_name, o_name = f"li_bkt_{tag}", f"o_bkt_{tag}"
-    if tag not in _BUCKETED_READY:
+
+    def build() -> None:
         spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
         # A prior process may have left the warehouse directory behind
         # without a catalog entry (in-memory catalog, durable files) —
@@ -81,7 +81,8 @@ def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
             .mode("overwrite")
             .saveAsTable(o_name)
         )
-        _BUCKETED_READY.add(tag)
+
+    memo.cached(_BUCKETED_CACHE, spark, sf_dir, ("lineitem", "orders"), build)
     return spark.table(li_name), spark.table(o_name)
 
 
@@ -131,21 +132,12 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Partition-pruned scan
 
 
-_PRUNE_CACHE: dict[str, str] = {}
-
-
-def _complete(d: str) -> bool:
-    return os.path.isdir(d) and os.path.exists(os.path.join(d, "_SUCCESS"))
-
-
 def partitioned_mirror(spark: SparkSession, sf_dir: str) -> str:
     """Hive-partitioned parquet mirror of lineitem (partition key
-    l_returnflag), once per sf. The reference's per-commodity CSV layout
-    formalized: `.../l_returnflag=R/part-*.parquet`."""
-    if sf_dir in _PRUNE_CACHE and _complete(_PRUNE_CACHE[sf_dir]):
-        return _PRUNE_CACHE[sf_dir]
-    out = os.path.join(tempfile.gettempdir(), "agri_part_mirror_" + _sf_tag(sf_dir))
-    if not _complete(out):
+    l_returnflag), via tables.mirror. The reference's per-commodity CSV
+    layout formalized: `.../l_returnflag=R/part-*.parquet`."""
+
+    def write(out: str) -> None:
         (
             load(spark, sf_dir, "lineitem")
             .select("l_orderkey", "l_quantity", "l_extendedprice",
@@ -154,8 +146,8 @@ def partitioned_mirror(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("l_returnflag")
             .parquet(out)
         )
-    _PRUNE_CACHE[sf_dir] = out
-    return out
+
+    return mirror(spark, sf_dir, "part", ("lineitem",), write)
 
 
 @query(
@@ -192,29 +184,24 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Small-file compaction
 
 
-_COMPACT_CACHE: dict[str, str] = {}
 _COMPACT_ROWS_PER_FILE = 200_000
 
 
 def compacted_dataset(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """(fragmented_dir, compacted_dir): write lineitem fragmented into
-    64 shards (the reference's every-3-hours append, years of cron runs
-    deep), then compact by range-repartitioning on the sort key with
-    maxRecordsPerFile bounding file size. Range partitioning keeps the
-    compacted files key-clustered, so min/max row-group stats stay
-    selective — compaction that hash-shuffled would destroy them."""
-    if sf_dir in _COMPACT_CACHE:
-        frag, comp = _COMPACT_CACHE[sf_dir].split("|")
-        if _complete(frag) and _complete(comp):
-            return frag, comp
-    base = os.path.join(tempfile.gettempdir(), "agri_compact_" + _sf_tag(sf_dir))
-    frag, comp = os.path.join(base, "fragmented"), os.path.join(base, "compacted")
+    """(fragmented_dir, compacted_dir) under one tables.mirror: write
+    lineitem fragmented into 64 shards (the reference's every-3-hours
+    append, years of cron runs deep), then compact by range-repartitioning
+    on the sort key with maxRecordsPerFile bounding file size. Range
+    partitioning keeps the compacted files key-clustered, so min/max
+    row-group stats stay selective — compaction that hash-shuffled would
+    destroy them."""
     cols = ["l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"]
-    if not _complete(frag):
+
+    def write(base: str) -> None:
+        frag, comp = os.path.join(base, "fragmented"), os.path.join(base, "compacted")
         load(spark, sf_dir, "lineitem").select(cols).repartition(64).write.mode(
             "overwrite"
         ).parquet(frag)
-    if not _complete(comp):
         df = spark.read.parquet(frag)
         n_rows = df.count()
         n_parts = max(1, -(-n_rows // _COMPACT_ROWS_PER_FILE))
@@ -225,8 +212,9 @@ def compacted_dataset(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .mode("overwrite")
             .parquet(comp)
         )
-    _COMPACT_CACHE[sf_dir] = f"{frag}|{comp}"
-    return frag, comp
+
+    base = mirror(spark, sf_dir, "compact", ("lineitem",), write)
+    return os.path.join(base, "fragmented"), os.path.join(base, "compacted")
 
 
 @query(
@@ -409,7 +397,6 @@ def scan_dpp_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Manifest-based file skipping (table-format planning, natively)
 
 
-_MANIFEST_CACHE: dict[str, str] = {}
 _MANIFEST_FILES = 8
 _MAN_LO, _MAN_HI = 1000, 2999  # probe range: ~25% of the sf0.01 keyspace
 
@@ -422,16 +409,10 @@ def manifest_dataset(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     built here with one post-write scan grouped by input_file_name.
     Range clustering is what makes the stats selective: hash layout
     would give every file the full key range and no file would ever
-    skip."""
-    if sf_dir in _MANIFEST_CACHE:
-        base = _MANIFEST_CACHE[sf_dir]
-        if _complete(os.path.join(base, "data")) and _complete(
-            os.path.join(base, "manifest")
-        ):
-            return os.path.join(base, "data"), os.path.join(base, "manifest")
-    base = os.path.join(tempfile.gettempdir(), "agri_manifest_" + _sf_tag(sf_dir))
-    data, man = os.path.join(base, "data"), os.path.join(base, "manifest")
-    if not (_complete(data) and _complete(man)):
+    skip. One tables.mirror holds both directories."""
+
+    def write(base: str) -> None:
+        data, man = os.path.join(base, "data"), os.path.join(base, "manifest")
         (
             load(spark, sf_dir, "lineitem")
             .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
@@ -452,8 +433,9 @@ def manifest_dataset(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .write.mode("overwrite")
             .parquet(man)
         )
-    _MANIFEST_CACHE[sf_dir] = base
-    return data, man
+
+    base = mirror(spark, sf_dir, "manifest", ("lineitem",), write)
+    return os.path.join(base, "data"), os.path.join(base, "manifest")
 
 
 @query(

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..functions.text import (
     LANG_STOPWORDS,
     SENTIMENT_LEXICON,
@@ -456,30 +457,23 @@ def _distinct_token_count(spark: SparkSession, sf_dir: str) -> int:
     routing at all (the conditional degree-cap discipline, r6): when
     the WHOLE model table fits the broadcast head, routing's
     filter/union/tail-join scaffolding is pure overhead — measured
-    pointless on this corpus's constant 31-token vocabulary. Memoized
-    per (applicationId, sf_dir, documents fingerprint) like
+    pointless on this corpus's constant 31-token vocabulary. A
+    metadata memo (memo.cached on the documents fingerprint) like
     tables.max_group_count, so warm bench runs and the full selfcheck
     pay one tokenization scan. At 100 TB this scalar comes from the
     vocabulary table's metastore statistics."""
-    from ..tables import source_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
+    return memo.cached(
+        _VOCAB_COUNT_CACHE,
+        spark,
         sf_dir,
-        source_fingerprint(sf_dir, "documents"),
-    )
-    hit = _VOCAB_COUNT_CACHE.get(key)
-    if hit is None:
-        if len(_VOCAB_COUNT_CACHE) > 16:
-            _VOCAB_COUNT_CACHE.clear()
-        hit = int(
+        ("documents",),
+        lambda: int(
             load_parallel(spark, sf_dir, "documents")
             .select(F.explode(tokens("text")).alias("w"))
             .agg(F.count_distinct("w").alias("v"))
             .first()["v"]
-        )
-        _VOCAB_COUNT_CACHE[key] = hit
-    return hit
+        ),
+    )
 
 
 @query(

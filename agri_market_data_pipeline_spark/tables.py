@@ -7,11 +7,18 @@ dimensions only, and we broadcast those at join time instead).
 
 from __future__ import annotations
 
+import glob
 import os
+import re
+import shutil
+import tempfile
+import time
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import memo
 from .schemas import TABLE_NAMES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -23,10 +30,10 @@ def table_path(sf_dir: str, name: str) -> str:
 
 def source_fingerprint(sf_dir: str, *names: str) -> str:
     """12-hex fingerprint of one or more tables' on-disk parquet
-    (file names + sizes + mtimes). Memo caches that key on
-    (applicationId, sf_dir) fold this in so a regenerated testdata dir
-    within one Spark application invalidates them instead of serving
-    stale checkpointed frames — same contract the XML mirror uses."""
+    (file names + sizes + mtimes). Every memo (``memo.cached``) and
+    fixture mirror (:func:`mirror`) folds it into its key, so a
+    regenerated or appended testdata dir invalidates them instead of
+    serving stale frames, scalars or files."""
     import hashlib
 
     parts: list[str] = []
@@ -49,6 +56,51 @@ def source_fingerprint(sf_dir: str, *names: str) -> str:
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
 
 
+_MIRROR_GRACE_S = 3600  # a stale vintage younger than this may be in use
+
+
+def mirror(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: str,
+    tables: tuple[str, ...],
+    write: Callable[[str], None],
+) -> str:
+    """Path of an on-disk fixture mirror (an alternate-format copy of
+    input tables): ``$TMPDIR/agri_<kind>_<sf tag>_<fingerprint>``.
+
+    ``write(path)`` runs only when the path's ``_SUCCESS`` marker is
+    missing (a crashed earlier write leaves a partial dir that must
+    not be served); the marker is written after it returns. The path
+    is final — no stage-and-rename — because a mirror may store
+    absolute paths to its own files (the manifest does). After a write,
+    mirrors of earlier source vintages for this sf_dir and kind are
+    removed: only names with exactly this prefix plus a 12-hex
+    fingerprint (a sibling sf dir whose name extends this one's is not
+    touched), and only those older than a grace period, so a concurrent
+    reader of a just-replaced vintage keeps its files."""
+    prefix = os.path.join(
+        tempfile.gettempdir(), f"agri_{kind}_" + sf_dir.strip("/").replace("/", "_")
+    )
+    out = f"{prefix}_{source_fingerprint(sf_dir, *tables)}"
+    marker = os.path.join(out, "_SUCCESS")
+    if os.path.exists(marker):
+        return out
+    write(out)
+    open(marker, "a").close()
+    slot = re.compile(re.escape(prefix) + r"_[0-9a-f]{12}")
+    for stale in glob.glob(glob.escape(prefix) + "_*"):
+        if stale == out or not slot.fullmatch(stale):
+            continue
+        try:
+            age = time.time() - os.stat(stale).st_mtime
+        except OSError:
+            continue
+        if age > _MIRROR_GRACE_S:
+            shutil.rmtree(stale, ignore_errors=True)
+    return out
+
+
 _LOAD_CACHE: dict = {}
 
 
@@ -57,9 +109,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     applies to whatever the caller selects/filters downstream).
 
     The returned DataFrame (an immutable logical plan, no data, no
-    cached blocks) is memoized per (applicationId, sf_dir, name, source
-    fingerprint) — the register_views discipline applied to the
-    DataFrame path: `spark.read.parquet` re-resolves the footer and
+    cached blocks) is a metadata memo (``memo.cached``) per sf_dir, name
+    and source fingerprint — the register_views discipline applied to
+    the DataFrame path: `spark.read.parquet` re-resolves the footer and
     re-infers the schema on EVERY call (~0.1-0.15 s of py4j + listing
     even warm, measured r12), and queries call load() 1-5× per run, so
     the un-memoized form billed the whole suite a scan-independent tax
@@ -71,22 +123,13 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     invalidates on regenerated testdata."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        name,
-        source_fingerprint(sf_dir, name),
-    )
-    got = _LOAD_CACHE.get(key)
-    if got is None:
-        if len(_LOAD_CACHE) > 256:
-            _LOAD_CACHE.clear()  # plans are cheap to rebuild
+
+    def build() -> DataFrame:
         if name == "events":
-            got = load_events(spark, sf_dir)
-        else:
-            got = spark.read.parquet(table_path(sf_dir, name))
-        _LOAD_CACHE[key] = got
-    return got
+            return load_events(spark, sf_dir)
+        return spark.read.parquet(table_path(sf_dir, name))
+
+    return memo.cached(_LOAD_CACHE, spark, sf_dir, (name,), build, name)
 
 
 _MAX_GROUP_CACHE: dict = {}
@@ -99,22 +142,13 @@ def max_group_count(
     decides whether a degree-cap rank pass is needed (VERDICT r5: the
     unconditional ROW_NUMBER cap in the pair generators cost an extra
     exchange+sort at every data where the cap never binds). A single
-    partial-agg-friendly scan of one column, memoized per
-    (applicationId, sf_dir, table, key, source fingerprint) so repeated
-    bench runs and the full selfcheck pay it once; the fingerprint
-    invalidates on regenerated testdata. At 100 TB this scalar comes
-    from the metastore's column statistics / NDV instead."""
-    memo_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        name,
-        key,
-        source_fingerprint(sf_dir, name),
-    )
-    hit = _MAX_GROUP_CACHE.get(memo_key)
-    if hit is None:
-        if len(_MAX_GROUP_CACHE) > 64:
-            _MAX_GROUP_CACHE.clear()  # scalars are cheap to recompute
+    partial-agg-friendly scan of one column, a metadata memo
+    (``memo.cached``) per sf_dir, table, key and source fingerprint so
+    repeated bench runs and the full selfcheck pay it once; the
+    fingerprint invalidates on regenerated testdata. At 100 TB this
+    scalar comes from the metastore's column statistics / NDV instead."""
+
+    def build() -> int:
         row = (
             load(spark, sf_dir, name)
             .groupBy(key)
@@ -122,9 +156,9 @@ def max_group_count(
             .agg(F.max("c").alias("m"))
             .first()
         )
-        hit = int(row["m"] or 0)
-        _MAX_GROUP_CACHE[memo_key] = hit
-    return hit
+        return int(row["m"] or 0)
+
+    return memo.cached(_MAX_GROUP_CACHE, spark, sf_dir, (name,), build, name, key)
 
 
 def max_column_value(
@@ -137,22 +171,14 @@ def max_column_value(
     domain ever outgrows the radix — a domain change must fail loudly,
     not produce tie-dependent cross-engine divergence). At 100 TB this
     scalar comes from the metastore's column max statistic."""
-    memo_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        name,
-        key,
-        "max_value",
-        source_fingerprint(sf_dir, name),
-    )
-    hit = _MAX_GROUP_CACHE.get(memo_key)
-    if hit is None:
-        if len(_MAX_GROUP_CACHE) > 64:
-            _MAX_GROUP_CACHE.clear()  # scalars are cheap to recompute
+
+    def build() -> int:
         row = load(spark, sf_dir, name).agg(F.max(key).alias("m")).first()
-        hit = int(row["m"] or 0)
-        _MAX_GROUP_CACHE[memo_key] = hit
-    return hit
+        return int(row["m"] or 0)
+
+    return memo.cached(
+        _MAX_GROUP_CACHE, spark, sf_dir, (name,), build, name, key, "max_value"
+    )
 
 
 def events_ts_is_nanos(sf_dir: str) -> bool:

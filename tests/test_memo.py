@@ -77,3 +77,33 @@ def test_operators_rebuild_after_clear(spark, sf_dir):
     rows_second = sorted(map(tuple, second.collect()))
     assert rows_first == rows_second
     memo.clear_all()
+
+
+def test_memo_keys_and_mirror_paths_are_built_in_one_place():
+    """Only memo.py and tables.py build a memo key from applicationId
+    or a mirror path under the temp dir: every other module goes
+    through memo.cached / tables.mirror, so each memo and mirror is
+    keyed on the source fingerprint (pure AST scan, no Spark)."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(memo.__file__).parent
+    retired = {
+        "_CSV_CACHE", "_ORC_CACHE", "_XML_CACHE", "_PRUNE_CACHE",
+        "_COMPACT_CACHE", "_MANIFEST_CACHE", "_BUCKETED_READY",
+        "_sf_tag", "_complete",
+    }
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            name = getattr(node, "attr", None) or getattr(node, "id", None)
+            if isinstance(node, ast.FunctionDef):
+                name = node.name
+            if name in retired:
+                offenders.append(f"{rel}:{node.lineno} {name}")
+            if rel in ("memo.py", "tables.py"):
+                continue
+            if name in ("applicationId", "gettempdir"):
+                offenders.append(f"{rel}:{node.lineno} {name}")
+    assert not offenders, offenders

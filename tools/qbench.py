@@ -7,10 +7,11 @@ Usage: python tools/qbench.py name1 name2 ...  [-n RUNS]
 Prints one line per query: median, samples, normalized (median /
 calibration probe median), and the untimed warm run's job, task and
 codegen-compile counts (classes the code generator compiled, i.e.
-codegen-cache misses) and its Python-worker CPU seconds (py_cpu=).
---split adds build vs execute time and the compiles and worker CPU of
-each timed run. For triage only — the committed BENCH_DETAIL.json
-comes from bench.py's full run.
+codegen-cache misses), its Python-worker CPU seconds (py_cpu=) and its
+memo builds and reuses (memo=<builds>/<hits>, from memo.COUNTS).
+--split adds build vs execute time and the compiles, worker CPU and
+memo counts of each timed run. For triage only — the committed
+BENCH_DETAIL.json comes from bench.py's full run.
 """
 
 from __future__ import annotations
@@ -108,8 +109,9 @@ def main() -> int:
     for name in args.names:
         fn = queries[name]
 
-        def one_run() -> tuple[float, float, int, float]:
+        def one_run() -> tuple[float, float, int, float, str]:
             c0, p0 = codegen_compiles(spark), python_worker_cpu_s(spark)
+            m0 = dict(memo.COUNTS)
             t0 = time.time()
             df = fn(spark, sf_dir)
             t1 = time.time()
@@ -117,31 +119,35 @@ def main() -> int:
             t2 = time.time()
             compiled = codegen_compiles(spark) - c0
             py_cpu = python_worker_cpu_s(spark) - p0
+            memo_use = "/".join(
+                str(memo.COUNTS[k] - m0[k]) for k in ("builds", "hits")
+            )
             spark.catalog.clearCache()
             # bench.py's sample boundary (r13): evict data memos so
             # every sample pays its own index/state builds.
             memo.clear_all()
             gc.collect()
-            return t1 - t0, t2 - t1, compiled, py_cpu
+            return t1 - t0, t2 - t1, compiled, py_cpu, memo_use
 
         j0, t0n = job_stats()
-        _, _, warm_compiled, warm_py_cpu = one_run()
+        _, _, warm_compiled, warm_py_cpu, warm_memo = one_run()
         j1, t1n = job_stats()
         runs = [one_run() for _ in range(args.n)]
-        tot = [b + e for b, e, _, _ in runs]
+        tot = [b + e for b, e, *_ in runs]
         med = statistics.median(tot)
         msg = (
             f"{name:40s} median={med:6.3f}  norm={med / calib:6.2f}"
             f"  jobs={j1 - j0} tasks={t1n - t0n} compiles={warm_compiled}"
-            f"  py_cpu={warm_py_cpu:.2f}"
+            f"  py_cpu={warm_py_cpu:.2f}  memo={warm_memo}"
             f"  samples={[round(t, 3) for t in tot]}"
         )
         if args.split:
             msg += (
-                f"  build={[round(b, 3) for b, _, _, _ in runs]}"
-                f"  exec={[round(e, 3) for _, e, _, _ in runs]}"
-                f"  run_compiles={[c for _, _, c, _ in runs]}"
-                f"  run_py_cpu={[round(p, 2) for _, _, _, p in runs]}"
+                f"  build={[round(r[0], 3) for r in runs]}"
+                f"  exec={[round(r[1], 3) for r in runs]}"
+                f"  run_compiles={[r[2] for r in runs]}"
+                f"  run_py_cpu={[round(r[3], 2) for r in runs]}"
+                f"  run_memo={[r[4] for r in runs]}"
             )
         print(msg)
     return 0
