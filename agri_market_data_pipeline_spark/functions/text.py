@@ -12,31 +12,33 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+def tokens(text_col: str) -> Column:
+    return F.split(text_col, " ")
 
 
-def tokens(col: Column | str) -> Column:
-    return F.split(_c(col), " ")
+def kgrams(text_col: str, k: int) -> Column:
+    """Word k-gram strings of a space-tokenized text column (empty if
+    < k tokens).
 
-
-def shingles3(tok_col: Column | str) -> Column:
-    """Word 3-gram shingles from a token array (empty if < 3 tokens).
-
-    Built as zip(t[0:n-2], t[1:n-1], t[2:n]) → concat: the lambda touches
+    Built as zip(t[0:n-k+1], t[1:n-k+2], …) → concat: the lambda touches
     only its own zipped element, so Catalyst evaluates the token array
-    once. (The index-based form — transform(sequence(1, n-2),
+    once. (The index-based form — transform(sequence(1, n-k+1),
     i -> concat(element_at(t, i), …)) — re-evaluates the outer array
-    expression per index and ran ~5× slower; and sequence(1, n-2) with
-    n < 3 generates a *descending* sequence rather than an empty one.)
-    greatest(n-2, 0) keeps the slice length non-negative: short docs
-    yield empty slices, hence zero shingles, no conditional needed."""
-    t = _c(tok_col)
-    n = F.greatest(F.size(t) - 2, F.lit(0))
-    z = F.arrays_zip(
-        F.slice(t, 1, n).alias("a"), F.slice(t, 2, n).alias("b"), F.slice(t, 3, n).alias("c")
-    )
-    return F.transform(z, lambda s: F.concat_ws(" ", s.a, s.b, s.c))
+    expression per index and ran ~5× slower; and sequence(1, n-k+1)
+    with n < k generates a *descending* sequence rather than an empty
+    one.) greatest(n-k+1, 0) keeps the slice length non-negative: short
+    docs yield empty slices, hence zero grams, no conditional needed.
+    arrays_zip names the struct fields of its SQL form by position."""
+    t = f"split({text_col}, ' ')"
+    n = f"greatest(size({t}) - {k - 1}, 0)"
+    slices = ", ".join(f"slice({t}, {i + 1}, {n})" for i in range(k))
+    parts = ", ".join(f"s['{i}']" for i in range(k))
+    return F.expr(f"transform(arrays_zip({slices}), s -> concat_ws(' ', {parts}))")
+
+
+def shingles3(text_col: str) -> Column:
+    """Word 3-gram shingles (kgrams with k = 3)."""
+    return kgrams(text_col, 3)
 
 
 SQL_SHINGLES3 = """

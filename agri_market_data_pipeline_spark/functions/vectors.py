@@ -1,46 +1,24 @@
-"""Vector (embedding) column expressions — pure higher-order functions.
+"""Vector (embedding) expressions as SQL strings, one builder per engine.
 
-No UDF: dot products, norms, and cosine similarity compile to Catalyst
-expressions over ArrayType(Float), evaluated inside codegen. Element
-values are cast float→double (exact) before arithmetic so results are
-engine-portable; callers ROUND final similarity values when comparing
-across engines (fold order of a 64-element sum may differ).
+No UDF: dot products, norms, and cosine similarity are higher-order
+functions over ArrayType(Float). The Spark builders return Spark-SQL
+text for ``F.expr``/``selectExpr``, the one way this package builds an
+array expression: the parser makes the whole tree in one py4j call,
+where a Python-lambda ``F.zip_with``/``F.aggregate`` form crosses py4j
+once per node (~430 calls against 9 for one cosine select).
+``tests/test_hof_guard.py`` keeps the lambda forms out. The ``sql_*``
+builders are the DuckDB twins the oracles use. Element values are cast
+float→double (exact) before arithmetic so results are engine-portable;
+callers ROUND final similarity values when comparing across engines
+(fold order of a 64-element sum may differ).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
-
-
-def vec_dot(a: Column | str, b: Column | str) -> Column:
-    """Σ a[i]·b[i] via zip_with + aggregate (no UDF, no shuffle)."""
-    prods = F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda s, x: s + x)
-
-
-def vec_norm2(a: Column | str) -> Column:
-    """Σ a[i]² (squared L2 norm)."""
-    return vec_dot(a, a)
-
-
-def vec_cosine(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity dot/(‖a‖·‖b‖); sqrt is IEEE-exact. A zero
-    vector has no direction — its similarity to anything is defined as
-    0.0 (ranks last, never errors). The guard is mandatory: Spark ANSI
-    throws DIVIDE_BY_ZERO on DOUBLE division too, and DuckDB yields
-    NULL, so an unguarded zero norm either crashes or hash-diverges
-    (degencheck's zero-norm embedding pins this)."""
-    denom = F.sqrt(vec_norm2(a)) * F.sqrt(vec_norm2(b))
-    return F.when(denom > 0, vec_dot(a, b) / denom).otherwise(F.lit(0.0))
-
 
 def sql_dot(a: str, b: str) -> str:
-    """DuckDB twin of vec_dot (explicit element-wise, same cast path)."""
+    """DuckDB twin of spark_dot_expr (explicit element-wise, same cast
+    path)."""
     return (
         f"list_sum(list_transform(generate_series(1, len({a})), "
         f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
@@ -48,7 +26,7 @@ def sql_dot(a: str, b: str) -> str:
 
 
 def sql_cosine(a: str, b: str) -> str:
-    """DuckDB twin of vec_cosine — same zero-norm → 0.0 contract."""
+    """DuckDB twin of spark_cosine_expr — same zero-norm → 0.0 contract."""
     denom = f"(sqrt({sql_dot(a, a)}) * sqrt({sql_dot(b, b)}))"
     return (
         f"(CASE WHEN {denom} > 0 THEN {sql_dot(a, b)} / {denom} "
@@ -57,14 +35,10 @@ def sql_cosine(a: str, b: str) -> str:
 
 
 def spark_dot_expr(a: str, b: str) -> str:
-    """Spark-SQL string twin of vec_dot, for F.expr()/selectExpr.
-
-    Parses to the SAME Catalyst tree as vec_dot (zip_with cast-double
-    product, left-to-right aggregate fold from a double 0.0), so every
-    output double is bit-identical — but costs ONE py4j round-trip
-    instead of the ~10 a Python-lambda zip_with/aggregate pair makes.
-    Plan-construction time, not execution time: use in serve paths
-    that build many dot expressions per call (the ivfpq LUT builds 16)."""
+    """Σ a[i]·b[i] as Spark SQL: a zip_with cast-double product folded
+    left to right by aggregate from a double 0.0 (no UDF, no shuffle).
+    `a`/`b` are SQL expressions of two equal-length float arrays; a dot
+    of a vector with itself is its squared L2 norm."""
     return (
         f"aggregate(zip_with({a}, {b}, "
         f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
@@ -73,8 +47,12 @@ def spark_dot_expr(a: str, b: str) -> str:
 
 
 def spark_cosine_expr(a: str, b: str) -> str:
-    """Spark-SQL string twin of vec_cosine (see spark_dot_expr) —
-    same zero-norm → 0.0 contract."""
+    """Cosine similarity dot/(‖a‖·‖b‖) as Spark SQL; sqrt is
+    IEEE-exact. A zero vector has no direction — its similarity to
+    anything is defined as 0.0 (ranks last, never errors). The guard is
+    mandatory: Spark ANSI throws DIVIDE_BY_ZERO on DOUBLE division too,
+    and DuckDB yields NULL, so an unguarded zero norm either crashes or
+    hash-diverges (degencheck's zero-norm embedding pins this)."""
     denom = (
         f"(sqrt({spark_dot_expr(a, a)}) * sqrt({spark_dot_expr(b, b)}))"
     )

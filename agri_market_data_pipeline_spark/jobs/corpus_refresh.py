@@ -37,7 +37,7 @@ import sys
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import shingles3, tokens
+from ..functions.text import shingles3
 from ..sources.snapshots import SnapshotStore
 from ..tables import load_parallel
 
@@ -68,7 +68,7 @@ def refresh(
 
     # 2. novelty triage: batch shingles anti-probe the corpus index
     sh = d.select(
-        "doc_id", F.explode(shingles3(tokens("text"))).alias("shingle")
+        "doc_id", F.explode(shingles3("text")).alias("shingle")
     ).distinct()
     b_sh = sh.filter(is_batch)
     c_sh = sh.filter(~is_batch).select("shingle").distinct()

@@ -35,7 +35,7 @@ import sys
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import vec_cosine
+from ..functions.vectors import spark_cosine_expr
 from ..operators.similarity import _argmax_cell, _cells_arr
 from ..tables import load_parallel
 
@@ -91,18 +91,15 @@ def embed_chunks(df: DataFrame, id_col: str = "chunk_id") -> DataFrame:
     m = sparse.groupBy(id_col).agg(
         F.map_from_entries(F.collect_list(F.struct("dim", "v"))).alias("m")
     )
-    dense = F.transform(
-        F.sequence(F.lit(0), F.lit(EMB_D - 1)),
-        lambda i: F.coalesce(F.element_at("m", i.cast("int")), F.lit(0.0)),
+    out = m.selectExpr(
+        id_col,
+        f"transform(sequence(0, {EMB_D - 1}), "
+        "i -> coalesce(element_at(m, CAST(i AS INT)), 0.0D)) AS embedding",
     )
-    out = m.select(id_col, dense.alias("embedding"))
     # A chunk whose signed counts fully cancel has a zero vector — it
     # carries no retrieval signal and would NaN/ANSI-error every cosine;
     # drop it here (the filter is row-local).
-    norm2 = F.aggregate(
-        "embedding", F.lit(0.0), lambda s, x: s + x * x
-    )
-    return out.filter(norm2 > 0)
+    return out.filter("aggregate(embedding, 0.0D, (s, x) -> s + x * x) > 0")
 
 
 def _train_cells(vecs: DataFrame, rounds: int) -> DataFrame:
@@ -134,9 +131,8 @@ def _train_cells(vecs: DataFrame, rounds: int) -> DataFrame:
             .agg(F.avg("v").alias("cv"))
             .groupBy("cell_id")
             .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "cv"))),
-                    lambda s: s.cv,
+                F.expr(
+                    "transform(array_sort(collect_list(struct(i, cv))), s -> s.cv)"
                 ).alias("cvec")
             )
         )
@@ -173,7 +169,7 @@ def _probe_cells_df(cells: DataFrame, q: DataFrame) -> DataFrame:
     centroid set is large (VERDICT r5 item 7)."""
     return (
         cells.join(F.broadcast(q))
-        .select("cell_id", vec_cosine("cvec", "qvec").alias("c"))
+        .selectExpr("cell_id", f"{spark_cosine_expr('cvec', 'qvec')} AS c")
         .orderBy(F.desc("c"), F.asc("cell_id"))
         .limit(N_PROBE)
     )
@@ -193,7 +189,9 @@ def serve_query(spark: SparkSession, out_dir: str, query_text: str) -> DataFrame
     return (
         idx.filter(F.col("cell_id").isin(probe))
         .join(F.broadcast(q))
-        .select("chunk_id", vec_cosine("embedding", "qvec").alias("cos_sim"))
+        .selectExpr(
+            "chunk_id", f"{spark_cosine_expr('embedding', 'qvec')} AS cos_sim"
+        )
         .orderBy(F.desc("cos_sim"), F.asc("chunk_id"))
         .limit(TOP_K)
     )
@@ -208,7 +206,9 @@ def brute_force(spark: SparkSession, out_dir: str, query_text: str) -> DataFrame
     idx = spark.read.parquet(os.path.join(out_dir, "index"))
     return (
         idx.join(F.broadcast(q))
-        .select("chunk_id", vec_cosine("embedding", "qvec").alias("cos_sim"))
+        .selectExpr(
+            "chunk_id", f"{spark_cosine_expr('embedding', 'qvec')} AS cos_sim"
+        )
         .orderBy(F.desc("cos_sim"), F.asc("chunk_id"))
         .limit(TOP_K)
     )

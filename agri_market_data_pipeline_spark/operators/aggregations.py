@@ -536,11 +536,11 @@ def agg_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (here: the quantity domain); unbounded group payloads belong in a
     re-explode pipeline, not an array cell."""
     li = load(spark, sf_dir, "lineitem")
-    qset = F.sort_array(F.collect_set(F.col("l_quantity").cast("bigint")))
     return li.groupBy("l_returnflag").agg(
-        F.concat_ws("|", F.transform(qset, lambda x: x.cast("string"))).alias(
-            "quantities"
-        ),
+        F.expr(
+            "concat_ws('|', transform(sort_array(collect_set("
+            "CAST(l_quantity AS BIGINT))), x -> CAST(x AS STRING)))"
+        ).alias("quantities"),
         F.size(F.collect_set("l_quantity")).cast("long").alias("n_distinct"),
     )
 
@@ -713,13 +713,13 @@ def agg_topk_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count("*").alias("cnt"))
     w = Window.partitionBy("l_returnflag").orderBy(F.desc("cnt"), F.asc("q"))
     r = c.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= _TOPF_K)
-    packed = F.array_sort(F.collect_list(F.struct("rn", "q", "cnt")))
+    packed = "array_sort(collect_list(struct(rn, q, cnt)))"
     return r.groupBy("l_returnflag").agg(
-        F.concat_ws(
-            "|", F.transform(packed, lambda s: s.q.cast("string"))
+        F.expr(
+            f"concat_ws('|', transform({packed}, s -> CAST(s.q AS STRING)))"
         ).alias("top_values"),
-        F.concat_ws(
-            "|", F.transform(packed, lambda s: s.cnt.cast("string"))
+        F.expr(
+            f"concat_ws('|', transform({packed}, s -> CAST(s.cnt AS STRING)))"
         ).alias("top_counts"),
     )
 

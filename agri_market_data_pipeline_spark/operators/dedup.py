@@ -17,8 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import SQL_SHINGLES3, shingles3, tokens
-from ..functions.vectors import sql_cosine, vec_cosine
+from ..functions.text import SQL_SHINGLES3, kgrams, shingles3, tokens
+from ..functions.vectors import spark_cosine_expr, sql_cosine
 from .. import memo
 from ..registry import query
 from ..tables import load, load_parallel
@@ -134,7 +134,7 @@ def _minhash_bands_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The uncached band-index build (see _minhash_bands)."""
     d = load_parallel(spark, sf_dir, "documents")
     sh = d.select(
-        "doc_id", F.explode(shingles3(tokens("text"))).alias("shingle")
+        "doc_id", F.explode(shingles3("text")).alias("shingle")
     )
     hv = sh.select(
         "doc_id",
@@ -525,7 +525,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the sub-quadratic alternative."""
     d = load_parallel(spark, sf_dir, "documents")
     ds_all = (
-        d.select("doc_id", F.explode(shingles3(tokens("text"))).alias("shingle"))
+        d.select("doc_id", F.explode(shingles3("text")).alias("shingle"))
         .distinct()
     )
     # df via a window partitioned by shingle: the same hash partitioning
@@ -619,7 +619,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical across engines (registry.py rules: don't round them)."""
     d = load_parallel(spark, sf_dir, "documents")
     ds = (
-        d.select("doc_id", F.explode(shingles3(tokens("text"))).alias("shingle"))
+        d.select("doc_id", F.explode(shingles3("text")).alias("shingle"))
         .distinct()
         .withColumn("df", F.count("*").over(Window.partitionBy("shingle")))
         .filter(F.col("df") <= _STOP_SHINGLE_DF)
@@ -677,7 +677,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = e.alias("b")
     # threshold on the ROUNDED cosine so the pair set can't differ by a
     # last-ulp fold-order divergence between engines
-    cos = F.round(vec_cosine(F.col("a.embedding"), F.col("b.embedding")), 6)
+    cos = F.expr(
+        f"ROUND({spark_cosine_expr('a.embedding', 'b.embedding')}, 6)"
+    )
     return (
         a.join(
             b,
@@ -750,25 +752,21 @@ def dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("pos") / _CHUNK_WORDS).cast("long").alias("cpos"),
         )
         .agg(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "tok"))),
-                    lambda s: s.tok,
-                ),
+            F.expr(
+                "concat_ws(' ', transform("
+                "array_sort(collect_list(struct(pos, tok))), s -> s.tok))"
             ).alias("ctext")
         )
     )
     w = Window.partitionBy(F.md5("ctext")).orderBy("doc_id", "cpos")
     ranked = chunks.withColumn("rn", F.row_number().over(w))
-    arr = F.array_sort(F.collect_list(F.struct("cpos", "rn", "ctext")))
-    kept = F.filter(arr, lambda s: s.rn == 1)
+    kept = "filter(array_sort(collect_list(struct(cpos, rn, ctext))), s -> s.rn = 1)"
     return ranked.groupBy("doc_id").agg(
         F.count("*").alias("n_chunks"),
         F.sum(F.when(F.col("rn") == 1, 1).otherwise(0))
         .cast("long")
         .alias("n_kept"),
-        F.md5(F.concat_ws(" ", F.transform(kept, lambda s: s.ctext))).alias(
+        F.expr(f"md5(concat_ws(' ', transform({kept}, s -> s.ctext)))").alias(
             "kept_md5"
         ),
     )
@@ -1112,7 +1110,7 @@ def dedup_minhash_estimate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs."""
     d = load_parallel(spark, sf_dir, "documents")
     sh = d.select(
-        "doc_id", F.explode(shingles3(tokens("text"))).alias("shingle")
+        "doc_id", F.explode(shingles3("text")).alias("shingle")
     )
     hv = sh.select(
         "doc_id",
@@ -1478,20 +1476,6 @@ def curation_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SUB_K = 8  # span length in tokens — the exact-substring dedup window
 
 
-def _kgrams(tok_col, k: int):
-    """Word k-gram strings from a token array via the zipped-slice
-    trick (shingles3 generalized): k parallel slices zipped so the
-    token array is evaluated once; short docs yield zero grams."""
-    t = tok_col
-    n = F.greatest(F.size(t) - (k - 1), F.lit(0))
-    z = F.arrays_zip(
-        *[F.slice(t, i + 1, n).alias(f"w{i}") for i in range(k)]
-    )
-    return F.transform(
-        z, lambda s: F.concat_ws(" ", *[s[f"w{i}"] for i in range(k)])
-    )
-
-
 _SQL_KGRAMS = """
 CASE WHEN len({toks}) >= {k}
      THEN list_transform(generate_series(1, len({toks}) - {km1}),
@@ -1546,7 +1530,7 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the shuffle to cut the exchange width."""
     d = load_parallel(spark, sf_dir, "documents")
     grams = d.select(
-        "doc_id", F.explode(_kgrams(tokens("text"), _SUB_K)).alias("gram")
+        "doc_id", F.explode(kgrams("text", _SUB_K)).alias("gram")
     ).distinct()
     shared = (
         grams.groupBy("gram")

@@ -200,15 +200,18 @@ def fn_array_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform/aggregate shape computes pairwise dot products in the
     similarity operators."""
     e = load(spark, sf_dir, "embeddings")
-    as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    sq = F.transform(F.col("embedding"), lambda x: x.cast("double") * x.cast("double"))
-    fold = lambda arr: F.aggregate(arr, F.lit(0.0), lambda s, x: s + x)  # noqa: E731
-    return e.select(
+    as_double = "transform(embedding, x -> CAST(x AS DOUBLE))"
+    sq = "transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
+
+    def fold(arr: str) -> str:
+        return f"aggregate({arr}, 0.0D, (s, x) -> s + x)"
+
+    return e.selectExpr(
         "vec_id",
-        F.size("embedding").cast("long").alias("dim"),
-        F.round(fold(sq), 6).alias("self_dot"),
-        F.round(F.element_at(as_double, 1), 6).alias("first_elem"),
-        F.round(fold(F.slice(as_double, 1, 8)), 6).alias("head_sum"),
+        "CAST(size(embedding) AS BIGINT) AS dim",
+        f"round({fold(sq)}, 6) AS self_dot",
+        f"round(element_at({as_double}, 1), 6) AS first_elem",
+        f"round({fold(f'slice({as_double}, 1, 8)')}, 6) AS head_sum",
     )
 
 
@@ -242,8 +245,10 @@ def fn_map(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.array_join(F.map_keys(m), ",").alias("keys_csv"),
         F.size(F.map_keys(m)).cast("int").alias("n_keys"),
-        F.aggregate(F.map_values(m), F.lit(0).cast("bigint"), lambda s, x: s + x)
-        .alias("sum_values"),
+        F.expr(
+            "aggregate(map_values(from_json(props, 'map<string,bigint>')), "
+            "CAST(0 AS BIGINT), (s, x) -> s + x)"
+        ).alias("sum_values"),
     )
 
 

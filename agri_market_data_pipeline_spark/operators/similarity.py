@@ -16,9 +16,6 @@ from ..functions.vectors import (
     spark_dot_expr,
     sql_cosine,
     sql_dot,
-    vec_cosine,
-    vec_dot,
-    vec_norm2,
 )
 from .. import memo
 from ..registry import query
@@ -26,6 +23,12 @@ from ..tables import load, load_parallel
 
 _QUERY_VEC_ID = 0
 _TOP_K = 20
+
+
+def _round_cos(a: str, b: str) -> F.Column:
+    """ROUND(6) cosine of two array columns (spark_cosine_expr's
+    zero-norm → 0.0 contract)."""
+    return F.expr(f"round({spark_cosine_expr(a, b)}, 6)")
 
 
 @query(
@@ -53,7 +56,7 @@ def sim_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ordering on the ROUNDED cosine: selection/rank boundaries must not
     # depend on last-ulp fold-order differences between engines
-    cos = F.round(vec_cosine("embedding", "qvec"), 6)
+    cos = _round_cos("embedding", "qvec")
     return (
         e.filter(F.col("vec_id") != _QUERY_VEC_ID)
         .join(F.broadcast(q))
@@ -188,14 +191,14 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = (
         cents.join(F.broadcast(q))
         .select(
-            "cell_id", F.round(vec_cosine("cvec", "qvec"), 6).alias("c_cos")
+            "cell_id", _round_cos("cvec", "qvec").alias("c_cos")
         )
         .orderBy(F.desc("c_cos"), F.asc("cell_id"))
         .limit(_N_PROBE)
         .select("cell_id")
     )
 
-    cos = F.round(vec_cosine("embedding", "qvec"), 6)
+    cos = _round_cos("embedding", "qvec")
     return (
         assigned.join(F.broadcast(probe), "cell_id", "leftsemi")
         .filter(F.col("vec_id") != _QUERY_VEC_ID)
@@ -265,10 +268,7 @@ def _lsh_plane(band: int, j: int, dim: int) -> list[int]:
 
 def _lsh_quantize(vec_col: str) -> F.Column:
     """FLOOR(v·1e6) BIGINT lattice of a float32 vector — exact and
-    identical across engines (float→double widening is lossless).
-    Built as ONE parsed-SQL expression — the Python-lambda HOF form
-    pays ~10 py4j round-trips per lambda at plan-build time (the
-    ivfpq/spark_dot_expr lesson; guide §4)."""
+    identical across engines (float→double widening is lossless)."""
     return F.expr(
         f"transform({vec_col}, x -> "
         "CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0D) AS BIGINT))"
@@ -278,10 +278,8 @@ def _lsh_quantize(vec_col: str) -> F.Column:
 def _lsh_bucket(vq_col: str, band: int, dim: int) -> F.Column:
     """Signed-random-projection bucket id for one band over the
     quantized vector: bit j = sign(vq · int_plane_j), all-BIGINT.
-    One parsed-SQL expression per band — the r11 form built
-    {_LSH_PLANES} zip_with+aggregate Python-lambda pairs per band
-    (~10 py4j round-trips each) plus dim F.lit() calls per plane;
-    identical Catalyst tree, one parser call (guide §4)."""
+    One parsed-SQL expression per band: the plane literals ride the
+    string too, so a band costs one parser call, not dim F.lit()s."""
     bits = []
     for j in range(_LSH_PLANES):
         arr = (
@@ -397,7 +395,7 @@ def sim_search_lsh_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     hit = F.lit(False)
     for b in range(_LSH_BANDS):
         hit = hit | F.array_contains(F.col(f"p{b}"), F.col(f"b{b}"))
-    cos = F.round(vec_cosine("embedding", "qvec"), 6)
+    cos = _round_cos("embedding", "qvec")
     return (
         assigned.join(F.broadcast(q))
         .filter(hit & (F.col("vec_id") != _QUERY_VEC_ID))
@@ -461,14 +459,30 @@ _KNN_K_SQL = (
 )
 
 
-def _safe_round_cos(dot: Column, denom: Column) -> Column:
-    """ROUND(6) cosine with vec_cosine's zero-norm → 0.0 contract, for
-    sites that factor the norms out of the per-pair fold (dot/(na·nb)
-    with denom = na·nb precomputed). The guard is mandatory under ANSI:
-    Spark throws DIVIDE_BY_ZERO on DOUBLE division, DuckDB yields NULL
-    — the old NaN→+inf mapping never executed once ANSI was on
-    (degencheck's zero-norm embedding pins this)."""
-    return F.when(denom > 0, F.round(dot / denom, 6)).otherwise(F.lit(0.0))
+def _safe_round_cos(dot: str, denom: str) -> str:
+    """ROUND(6) cosine with spark_cosine_expr's zero-norm → 0.0
+    contract, as Spark SQL, for sites that factor the norms out of the
+    per-pair fold (dot/(na·nb) with denom = na·nb precomputed). The
+    guard is mandatory under ANSI: Spark throws DIVIDE_BY_ZERO on
+    DOUBLE division, DuckDB yields NULL (degencheck's zero-norm
+    embedding pins this)."""
+    return (
+        f"CASE WHEN ({denom}) > 0 THEN round(({dot}) / ({denom}), 6) "
+        "ELSE 0.0D END"
+    )
+
+
+def _cell_scores(cells_col: str, vec_col: str, na: str) -> str:
+    """Spark SQL scoring a vector against a broadcast array of
+    (cell_id, cvec, cnrm) structs (build with _cells_arr): one
+    (cos, neg_id) struct per cell, cos = the ROUND(6) cosine with the
+    vector's norm `na` and the centroid's cnrm hoisted out of the fold.
+    Struct order is cos, then the lowest cell_id."""
+    cos = _safe_round_cos(spark_dot_expr(vec_col, "c.cvec"), f"{na} * c.cnrm")
+    return (
+        f"transform({cells_col}, "
+        f"c -> struct({cos} AS cos, -c.cell_id AS neg_id))"
+    )
 
 
 def _top_cells(cells_col: str, vec_col: str, nrm_col: str, p: int):
@@ -479,25 +493,12 @@ def _top_cells(cells_col: str, vec_col: str, nrm_col: str, p: int):
     oracle's ROW_NUMBER ordering; zero-norm cosines are 0.0 (same
     contract as _argmax_cell). Norms are PRE-computed (`nrm_col` per
     row, `cnrm` per centroid) so each pair costs one dot fold instead
-    of three — dot/(na·nb) is the same float expression as vec_cosine,
-    just with the sqrt factored out of the inner loop, so results are
-    bitwise identical to the oracle's full form."""
-    ranked = F.reverse(
-        F.array_sort(
-            F.transform(
-                F.col(cells_col),
-                lambda c: F.struct(
-                    _safe_round_cos(
-                        vec_dot(F.col(vec_col), c.cvec),
-                        F.col(nrm_col) * c.cnrm,
-                    ).alias("cos"),
-                    (-c.cell_id).alias("neg_id"),
-                ),
-            )
-        )
-    )
-    return F.transform(
-        F.slice(ranked, 1, p), lambda s: (-s.neg_id).cast("long")
+    of three — dot/(na·nb) is the same float expression as
+    spark_cosine_expr, just with the sqrt factored out of the inner
+    loop, so results are bitwise identical to the oracle's full form."""
+    ranked = f"reverse(array_sort({_cell_scores(cells_col, vec_col, nrm_col)}))"
+    return F.expr(
+        f"transform(slice({ranked}, 1, {p}), s -> CAST(-s.neg_id AS BIGINT))"
     )
 
 
@@ -606,7 +607,9 @@ def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and every candidate pair downstream (3 folds → 1 per pair).
     probed = (
         e.join(F.broadcast(arr))
-        .withColumn("nrm", F.sqrt(vec_norm2("embedding")))
+        .withColumn(
+            "nrm", F.expr(f"sqrt({spark_dot_expr('embedding', 'embedding')})")
+        )
         .select(
             "vec_id",
             "embedding",
@@ -631,12 +634,13 @@ def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "neighbor_id",
-            # dot/(na·nb): vec_cosine with the sqrts hoisted — same
-            # float ops, bitwise-equal to the oracle's full expression
-            # (zero-norm pairs → 0.0, the shared guard contract)
-            _safe_round_cos(
-                vec_dot("embedding", "n_emb"),
-                F.col("nrm") * F.col("n_nrm"),
+            # dot/(na·nb): spark_cosine_expr with the sqrts hoisted —
+            # same float ops, bitwise-equal to the oracle's full
+            # expression (zero-norm pairs → 0.0, the shared guard contract)
+            F.expr(
+                _safe_round_cos(
+                    spark_dot_expr("embedding", "n_emb"), "nrm * n_nrm"
+                )
             ).alias("cos_sim"),
         )
         .withColumn(
@@ -706,7 +710,7 @@ def sim_knn_join_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("q_id").alias("vec_id"),
             F.col("vec_id").alias("neighbor_id"),
-            F.round(vec_cosine("embedding", "q_emb"), 6).alias("cos_sim"),
+            _round_cos("embedding", "q_emb").alias("cos_sim"),
         )
         .withColumn(
             "rnk",
@@ -834,9 +838,7 @@ def _cells_arr(cells: DataFrame) -> DataFrame:
     """One-row broadcastable (cell_id, cvec, cnrm) struct array from a
     (cell_id, cvec) centroid frame — the centroid norm is computed
     once per cell here instead of once per (vector, cell) pair in the
-    assignment fold. The norm rides a parsed-SQL string
-    (spark_dot_expr — identical Catalyst tree to the vec_norm2
-    lambdas at a fraction of the py4j plan-build cost; r13)."""
+    assignment fold."""
     return cells.selectExpr(
         "cell_id",
         "cvec",
@@ -855,23 +857,15 @@ def _argmax_cell(cells_col: str, vec_col: str):
     per row as the lambda variable `_na` of a one-element transform
     (higher-order functions run interpreted, so an inlined norm would
     be folded twice per pair). It is the same float expression as
-    vec_cosine, so bitwise-equal to the oracle's full form at a third
-    of the per-pair cost. Zero-norm cosines (vector or centroid) are
-    0.0 — vec_cosine's guard, matching the oracle's sql_cosine CASE.
-    Built as ONE parsed-SQL expression instead of 3 Python-lambda HOFs
-    (~0.165 s of py4j per call, measured r13 — the spark_dot_expr
-    rule); the parsed tree is the identical cosine/guard/tie-break op
-    sequence, so every assignment is unchanged."""
+    spark_cosine_expr, so bitwise-equal to the oracle's full form at a
+    third of the per-pair cost. Zero-norm cosines (vector or centroid)
+    are 0.0 — spark_cosine_expr's guard, matching the oracle's
+    sql_cosine CASE."""
     na = f"sqrt({spark_dot_expr(vec_col, vec_col)})"
-    dot = spark_dot_expr(vec_col, "c.cvec")
-    cos = (
-        "CASE WHEN _na * c.cnrm > 0 "
-        f"THEN round(({dot}) / (_na * c.cnrm), 6) ELSE 0.0D END"
-    )
+    scores = _cell_scores(cells_col, vec_col, "_na")
     return F.expr(
-        f"CAST(-transform(array({na}), _na -> array_max(transform("
-        f"{cells_col}, c -> struct({cos} AS cos, -c.cell_id AS neg_id))"
-        f").neg_id)[0] AS BIGINT)"
+        f"CAST(-transform(array({na}), _na -> array_max({scores}).neg_id)[0]"
+        " AS BIGINT)"
     )
 
 
@@ -972,8 +966,8 @@ def ml_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     carr = cent.groupBy("cell_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("idx", "cv"))), lambda s: s.cv
+        F.expr(
+            "transform(array_sort(collect_list(struct(idx, cv))), s -> s.cv)"
         ).alias("cvec")
     )
     new_arr = _cells_arr(carr)
@@ -1039,9 +1033,8 @@ def _kmeans_cells(
             )
         )
         cells = cent.groupBy("cell_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("idx", "cv"))),
-                lambda s: s.cv,
+            F.expr(
+                "transform(array_sort(collect_list(struct(idx, cv))), s -> s.cv)"
             ).alias("cvec")
         )
     return cells
@@ -1104,13 +1097,13 @@ def ml_kmeans_train_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = (
         cells.join(F.broadcast(q))
         .select(
-            "cell_id", F.round(vec_cosine("cvec", "qvec"), 6).alias("c_cos")
+            "cell_id", _round_cos("cvec", "qvec").alias("c_cos")
         )
         .orderBy(F.desc("c_cos"), F.asc("cell_id"))
         .limit(_N_PROBE)
         .select("cell_id")
     )
-    cos = F.round(vec_cosine("embedding", "qvec"), 6)
+    cos = _round_cos("embedding", "qvec")
     return (
         assigned.join(F.broadcast(probe), "cell_id", "leftsemi")
         .filter(F.col("vec_id") != _QUERY_VEC_ID)
@@ -1123,6 +1116,8 @@ def ml_kmeans_train_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LR_ROUNDS = 8
 _LR_RATE = 2.0  # learning rate; features are normalized to ~unit scale
+# the logit x·w, folded left to right
+_LR_LOGIT = "aggregate(zip_with(x, w, (a, b) -> a * b), 0.0D, (s, v) -> s + v)"
 
 
 def _quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1161,20 +1156,16 @@ def _quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy()
         .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("j", "mu", "sd"))),
-                lambda s: F.struct(s.mu.alias("mu"), s.sd.alias("sd")),
+            F.expr(
+                "transform(array_sort(collect_list(struct(j, mu, sd))), "
+                "s -> struct(s.mu AS mu, s.sd AS sd))"
             ).alias("st")
         )
     )
-    return raw.join(F.broadcast(stats)).select(
+    # x = [1.0 (bias), standardized features]
+    return raw.join(F.broadcast(stats)).selectExpr(
         "doc_id",
-        F.concat(
-            F.array(F.lit(1.0)),  # bias
-            F.zip_with(
-                "xr", "st", lambda v, s: (v - s.mu) / s.sd
-            ),
-        ).alias("x"),
+        "concat(array(1.0D), zip_with(xr, st, (v, s) -> (v - s.mu) / s.sd)) AS x",
         "y",
     )
 
@@ -1206,9 +1197,7 @@ def ml_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for _ in range(_LR_ROUNDS):
         joined = X.join(F.broadcast(w))
-        z = F.aggregate(
-            F.zip_with("x", "w", lambda a, b: a * b), F.lit(0.0), lambda s, v: s + v
-        )
+        z = F.expr(_LR_LOGIT)
         p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
         g = (
             joined.select(
@@ -1223,17 +1212,14 @@ def ml_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
                           - F.lit(_LR_RATE) * F.col("g")).alias("wj"))
             .groupBy()
             .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("j", "wj"))),
-                    lambda s: s.wj,
+                F.expr(
+                    "transform(array_sort(collect_list(struct(j, wj))), s -> s.wj)"
                 ).alias("w")
             )
         )
         w = w.localCheckpoint(eager=True)  # flatten the round lineage
     final = X.join(F.broadcast(w))
-    z = F.aggregate(
-        F.zip_with("x", "w", lambda a, b: a * b), F.lit(0.0), lambda s, v: s + v
-    )
+    z = F.expr(_LR_LOGIT)
     pred = (z >= 0).cast("double")
     metrics = final.agg(
         F.count("*").alias("n_docs"),
@@ -1241,12 +1227,9 @@ def ml_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("y").cast("long").alias("n_positive"),
     )
     wt = w.select(F.posexplode("w").alias("j", "wj")).agg(
-        F.concat_ws(
-            "|",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("j", "wj"))),
-                lambda s: F.round(s.wj, 4).cast("string"),
-            ),
+        F.expr(
+            "concat_ws('|', transform(array_sort(collect_list(struct(j, wj))), "
+            "s -> CAST(round(s.wj, 4) AS STRING)))"
         ).alias("weights")
     )
     return metrics.join(F.broadcast(wt))
@@ -1272,46 +1255,13 @@ def _sql_l2(a: str, b: str) -> str:
     )
 
 
-def _pq_encode(m: int) -> F.Column:
-    """Nearest codeword struct (dist, code, cw) for subspace m: rounded
-    squared-L2 over the broadcast cb<m> codeword structs, ties to the
-    lowest code — ascending struct sort, element 1. Zero-error
-    invariant (test-pinned): a vector whose subvector IS a codeword
-    encodes to that codeword with dist 0."""
-    sub = F.slice("embedding", m * _PQ_DSUB + 1, _PQ_DSUB)
-    scored = F.transform(
-        F.col(f"cb{m}"),
-        lambda c: F.struct(
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        sub,
-                        c.cw,
-                        lambda x, y: (x.cast("double") - y.cast("double"))
-                        * (x.cast("double") - y.cast("double")),
-                    ),
-                    F.lit(0.0),
-                    lambda s, v: s + v,
-                ),
-                6,
-            ).alias("dist"),
-            c.code.alias("code"),
-            c.cw.alias("cw"),
-        ),
-    )
-    return F.element_at(F.array_sort(scored), 1)
-
-
 def _pq_encode_code_expr(m: int) -> str:
-    """Parsed-SQL twin of `_pq_encode(m).code` (the spark_dot_expr
-    rule, guide §4 plan latency): the Column form builds 3 Python
-    lambdas per subspace — ~0.9 s of py4j round-trips for the 8-wide
-    codes projection, measured r13 — while this string costs one
-    parser call and yields the same ROUND(6) squared-L2 argmin with
-    the same (dist, code) struct-order tie-break. The winner's cw is
-    dropped from the sort struct (code is unique per codebook, so
-    (dist, code) already totally orders; the selected code is
-    identical)."""
+    """PQ code of subspace m, as Spark SQL: the nearest codeword of the
+    broadcast cb<m> codebook by ROUND(6) squared L2, ties to the lowest
+    code — ascending (dist, code) struct sort, element 1 (code is
+    unique per codebook, so (dist, code) totally orders). Zero-error
+    invariant (test-pinned): a vector whose subvector IS a codeword
+    encodes to that codeword's code."""
     sub = f"slice(embedding, {m * _PQ_DSUB + 1}, {_PQ_DSUB})"
     d2 = (
         f"round(aggregate(zip_with({sub}, c.cw, "
@@ -1376,8 +1326,7 @@ def _pq_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     # cents/codebook branches re-scan the memoized parquet plan instead,
     # and the codes MAIN side rides load_parallel so the n×K argmax +
     # n×M×codes encode folds engage every core (the incr_ann_upsert
-    # rule). Encode projection is parsed-SQL (one parser call) instead
-    # of 8 × 3 Python-lambda HOFs (~0.9 s of py4j, measured).
+    # rule).
     e = load(spark, sf_dir, "embeddings")
     cents = e.filter(F.col("vec_id") < _N_CELLS).select(
         F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cvec")
@@ -1528,13 +1477,9 @@ def sim_search_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Query LUT: for each subspace m, qd[m][code] = dot(q_sub, codeword)
     # and n2[m][code] = |codeword|² — 8×16 dots computed ONCE on one
     # broadcast row (cb<m> is code-sorted, so position code+1 IS that
-    # code). The per-(m, code) values are the same vec_dot expressions
-    # the per-candidate form evaluated, so every downstream double is
-    # bit-identical. Built as ONE selectExpr of parsed-SQL strings
-    # (spark_dot_expr) rather than 16 Python-lambda transforms: the
-    # lambda form cost ~1 s of py4j plan-construction PER CALL — 2/3 of
-    # the whole serve path (r10, the benchguard 2.2x breach); the parsed
-    # form yields the identical Catalyst tree for ~40x fewer round-trips.
+    # code). The per-(m, code) values are the same dot expressions the
+    # per-candidate form evaluated, so every downstream double is
+    # bit-identical.
     lut_exprs = []
     for m in range(_PQ_M):
         qsub = f"slice(qvec, {m * _PQ_DSUB + 1}, {_PQ_DSUB})"
@@ -2544,28 +2489,14 @@ def ml_kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_parallel(spark, sf_dir, "embeddings")
     cells = _kmi_trained(spark, sf_dir)
     arr = _cells_arr(cells)
-    na = F.sqrt(vec_norm2(F.col("embedding")))
-    scored = e.join(F.broadcast(arr)).select(
-        "vec_id",
-        F.transform(
-            F.col("cells"),
-            lambda c: F.struct(
-                _safe_round_cos(
-                    vec_dot(F.col("embedding"), c.cvec), na * c.cnrm
-                ).alias("cos"),
-                (-c.cell_id).alias("neg_id"),
-            ),
-        ).alias("scores"),
+    na = f"sqrt({spark_dot_expr('embedding', 'embedding')})"
+    scored = e.join(F.broadcast(arr)).selectExpr(
+        "vec_id", f"{_cell_scores('cells', 'embedding', na)} AS scores"
     )
     withbest = scored.select(
         "vec_id", "scores", F.array_max("scores").alias("best")
     )
-    second = F.array_max(
-        F.filter(
-            F.col("scores"),
-            lambda s: s.neg_id != F.col("best.neg_id"),
-        )
-    )
+    second = F.expr("array_max(filter(scores, s -> s.neg_id != best.neg_id))")
     sil = withbest.select(
         "vec_id",
         (-F.col("best.neg_id")).cast("long").alias("cell_id"),

@@ -17,6 +17,7 @@ from ..functions.text import (
     LANG_STOPWORDS,
     SENTIMENT_LEXICON,
     SQL_SHINGLES3,
+    kgrams,
     shingles3,
     tokens,
 )
@@ -61,9 +62,13 @@ def text_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _stop_words(lang: str) -> str:
+    """The language's stopwords as an SQL IN-list body."""
+    return ", ".join(f"'{w}'" for w in LANG_STOPWORDS[lang])
+
+
 def _sql_stop_count(lang: str) -> str:
-    words = ", ".join(f"'{w}'" for w in LANG_STOPWORDS[lang])
-    return f"len(list_filter(toks, x -> x IN ({words})))"
+    return f"len(list_filter(toks, x -> x IN ({_stop_words(lang)})))"
 
 
 @query(
@@ -97,8 +102,9 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = d.select("doc_id", tokens("text").alias("toks"))
 
     def stop_count(lang: str) -> F.Column:
-        words = LANG_STOPWORDS[lang]
-        return F.size(F.filter("toks", lambda x: x.isin(*words))).cast("long")
+        return F.expr(
+            f"CAST(size(filter(toks, x -> x IN ({_stop_words(lang)}))) AS BIGINT)"
+        )
 
     s = t.select(
         "doc_id",
@@ -155,7 +161,9 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     — here as an auditable flag instead of a silent drop."""
     d = load_parallel(spark, sf_dir, "documents")
     toks = tokens("text")
-    stop = F.size(F.filter(toks, lambda x: x.isin(*LANG_STOPWORDS["en"])))
+    stop = F.expr(
+        f"size(filter(split(text, ' '), x -> x IN ({_stop_words('en')})))"
+    )
     t = d.select(
         "doc_id",
         F.length("text").cast("long").alias("n_char"),
@@ -197,8 +205,8 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     share a 3-gram window; used as a cheap pre-cluster key before the
     full MinHash pipeline."""
     d = load_parallel(spark, sf_dir, "documents")
-    t = d.select("doc_id", "text", shingles3(tokens("text")).alias("sh"))
-    min_sh = F.array_min(F.transform("sh", lambda s: F.md5(s)))
+    t = d.select("doc_id", "text", shingles3("text").alias("sh"))
+    min_sh = F.expr("array_min(transform(sh, s -> md5(s)))")
     return t.select(
         "doc_id",
         F.md5("text").alias("full_hash"),
@@ -307,11 +315,7 @@ def text_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut; `pyspark.ml.feature.NGram` produces the same arrays inside an
     ML pipeline."""
     d = load_parallel(spark, sf_dir, "documents")
-    t = tokens("text")
-    n = F.greatest(F.size(t) - 1, F.lit(0))
-    z = F.arrays_zip(F.slice(t, 1, n).alias("a"), F.slice(t, 2, n).alias("b"))
-    bigrams = F.transform(z, lambda s: F.concat_ws(" ", s.a, s.b))
-    bi = d.select("doc_id", F.explode(bigrams).alias("bigram"))
+    bi = d.select("doc_id", F.explode(kgrams("text", 2)).alias("bigram"))
     return (
         bi.groupBy("bigram")
         .agg(F.count("*").alias("freq"), F.countDistinct("doc_id").alias("doc_freq"))
@@ -690,17 +694,14 @@ def text_keyword_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = scored.withColumn("rn", F.row_number().over(w)).filter(
         F.col("rn") <= _KW_K
     )
-    packed = F.array_sort(F.collect_list(F.struct("rn", "tok", "score")))
+    packed = "array_sort(collect_list(struct(rn, tok, score)))"
     return ranked.groupBy("doc_id").agg(
-        F.concat_ws("|", F.transform(packed, lambda s: s.tok)).alias(
+        F.expr(f"concat_ws('|', transform({packed}, s -> s.tok))").alias(
             "keywords"
         ),
-        F.concat_ws(
-            "|",
-            F.transform(
-                packed,
-                lambda s: F.round(s.score * 1e6).cast("bigint").cast("string"),
-            ),
+        F.expr(
+            f"concat_ws('|', transform({packed}, s -> "
+            "CAST(CAST(round(s.score * 1000000.0D) AS BIGINT) AS STRING)))"
         ).alias("scores_micro"),
     )
 
@@ -816,33 +817,27 @@ def text_chunk_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE_MERGES = 10
 
 
-def _bpe_apply_merge(seq_col, a_col, b_col):
+def _bpe_apply_merge(seq: str, a: str, b: str) -> F.Column:
     """Replace every non-overlapping adjacent (a, b) with a||b in a
     symbol array — one left-to-right fold with a skip flag, entirely in
     codegen'd higher-order functions (no UDF): the accumulator struct
     carries the output array and whether the previous position was
-    consumed by a merge."""
-    n = F.size(seq_col)
-    init = F.struct(
-        F.array().cast("array<string>").alias("out"), F.lit(False).alias("skip")
+    consumed by a merge. `seq`, `a` and `b` are SQL expressions (the
+    array column and the pair's two symbols)."""
+    cur, nxt = f"element_at({seq}, i + 1)", f"element_at({seq}, i + 2)"
+    # nxt is NULL past the end
+    is_pair = (
+        f"((NOT acc.skip) AND i < size({seq}) - 1 AND {cur} = {a} AND {nxt} = {b})"
     )
-
-    def step(acc, i):
-        cur = F.element_at(seq_col, i + 1)
-        nxt = F.element_at(seq_col, i + 2)  # NULL past the end
-        is_pair = (
-            (~acc.skip) & (i < n - 1) & (cur == a_col) & (nxt == b_col)
-        )
-        return F.struct(
-            F.when(acc.skip, acc.out)
-            .when(is_pair, F.concat(acc.out, F.array(F.concat(a_col, b_col))))
-            .otherwise(F.concat(acc.out, F.array(cur)))
-            .alias("out"),
-            F.when(acc.skip, F.lit(False)).otherwise(is_pair).alias("skip"),
-        )
-
-    return F.aggregate(
-        F.sequence(F.lit(0), n - 1), init, step, lambda acc: acc.out
+    return F.expr(
+        f"aggregate(sequence(0, size({seq}) - 1), "
+        "struct(CAST(array() AS ARRAY<STRING>) AS out, false AS skip), "
+        "(acc, i) -> struct("
+        "CASE WHEN acc.skip THEN acc.out "
+        f"WHEN {is_pair} THEN concat(acc.out, array(concat({a}, {b}))) "
+        f"ELSE concat(acc.out, array({cur})) END AS out, "
+        f"CASE WHEN acc.skip THEN false ELSE {is_pair} END AS skip), "
+        "acc -> acc.out)"
     )
 
 
@@ -883,12 +878,9 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = (
             words.select(
                 "freq",
-                F.explode(
-                    F.zip_with(
-                        F.slice("seq", 1, F.size("seq") - 1),
-                        F.slice("seq", 2, F.size("seq") - 1),
-                        lambda a, b: F.struct(a.alias("a"), b.alias("b")),
-                    )
+                F.expr(
+                    "explode(zip_with(slice(seq, 1, size(seq) - 1), "
+                    "slice(seq, 2, size(seq) - 1), (a, b) -> struct(a AS a, b AS b)))"
                 ).alias("p"),
             )
             .groupBy("p.a", "p.b")
@@ -905,7 +897,7 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a").alias("ma"), F.col("b").alias("mb")
         )
         words = words.join(F.broadcast(b)).select(
-            _bpe_apply_merge(F.col("seq"), F.col("ma"), F.col("mb")).alias("seq"),
+            _bpe_apply_merge("seq", "ma", "mb").alias("seq"),
             "freq",
         ).localCheckpoint(eager=True)
 
@@ -972,15 +964,12 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     production run persists. V rides a 1-row cross join. ln sums
     ROUND(4) per the order-sensitive-float rule."""
     d = load_parallel(spark, sf_dir, "documents")
-    t = tokens("text")
+    t = "split(text, ' ')"
     bg = d.select(
         "doc_id",
-        F.explode(
-            F.zip_with(
-                F.slice(t, 1, F.size(t) - 1),
-                F.slice(t, 2, F.size(t) - 1),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
+        F.expr(
+            f"explode(zip_with(slice({t}, 1, size({t}) - 1), "
+            f"slice({t}, 2, size({t}) - 1), (a, b) -> struct(a AS w1, b AS w2)))"
         ).alias("p"),
     ).select("doc_id", "p.w1", "p.w2")
     # r12: bg fed FIVE plan branches (c2, c1, v twice, held) and each
@@ -1103,7 +1092,7 @@ def text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     and nothing is cross-document — cost ∝ corpus tokens."""
     d = load_parallel(spark, sf_dir, "documents")
     g = d.select(
-        "doc_id", F.explode(shingles3(tokens("text"))).alias("shingle")
+        "doc_id", F.explode(shingles3("text")).alias("shingle")
     )
     cnt = g.groupBy("doc_id", "shingle").agg(F.count("*").alias("c"))
     per = cnt.groupBy("doc_id").agg(
@@ -1375,14 +1364,9 @@ def text_boilerplate_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks.withColumn("cix", F.expr(f"pos div {_BP_CHUNK}"))
         .groupBy("doc_id", "cix")
         .agg(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("pos", "tok"))
-                    ),
-                    lambda s: s.tok,
-                ),
+            F.expr(
+                "concat_ws(' ', transform("
+                "array_sort(collect_list(struct(pos, tok))), s -> s.tok))"
             ).alias("chunk")
         )
         .select("doc_id", "cix", F.md5("chunk").alias("h"))

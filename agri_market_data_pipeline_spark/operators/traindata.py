@@ -194,7 +194,7 @@ def dedup_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     is visible in the per-doc counts rather than silently dropped."""
     d = load_parallel(spark, sf_dir, "documents")
     sh = d.select(
-        "doc_id", F.explode(shingles3(tokens("text"))).alias("shingle")
+        "doc_id", F.explode(shingles3("text")).alias("shingle")
     )
     bench = (
         sh.filter(F.col("doc_id") % _BENCH_MOD == 0)
@@ -624,7 +624,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is never rescanned per batch in production."""
     d = load_parallel(spark, sf_dir, "documents")
     sh = d.select(
-        "doc_id", F.explode(shingles3(tokens("text"))).alias("shingle")
+        "doc_id", F.explode(shingles3("text")).alias("shingle")
     ).distinct()
     is_batch = F.col("doc_id") % _NOV_MOD == _NOV_REM
     b = sh.filter(is_batch)

@@ -610,14 +610,9 @@ def win_event_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select("user_id", F.col("ts").alias("ts"), "event_id", code.alias("ch"))
         .groupBy("user_id")
         .agg(
-            F.concat_ws(
-                "",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("ts", "event_id", "ch"))
-                    ),
-                    lambda s: s.ch,
-                ),
+            F.expr(
+                "concat_ws('', transform("
+                "array_sort(collect_list(struct(ts, event_id, ch))), s -> s.ch))"
             ).alias("s")
         )
     )

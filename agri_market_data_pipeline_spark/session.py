@@ -58,6 +58,16 @@ PYTHON_DAEMON_MODULE = "agri_market_data_pipeline_spark.pydaemon"
 PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def default_driver_memory() -> str:
+    """Driver heap for get_spark sessions: a quarter of physical memory,
+    at most 16g (so any host with 64 GB or more keeps 16g). A fixed 16g
+    let one sf0.1 run grow to 10.7 GB resident on a 15 GB host, and the
+    kernel killed it when a second run shared the host.
+    ``SPARK_DRIVER_MEMORY`` overrides it."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, ram_mb // 4)}m"
+
+
 def codegen_compiles(spark: SparkSession) -> int:
     """Classes compiled by Spark's code generator in this JVM so far —
     one per codegen-cache miss. Diff it around a query to count what
@@ -100,7 +110,10 @@ def get_spark(app_name: str = "agri-market-data-pipeline-spark",
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", default_driver_memory()),
+        )
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))

@@ -240,27 +240,26 @@ def test_rolling_distinct_hll_error_envelope(spark, sf_dir):
 def test_pq_encode_zero_error_on_codebook_members(spark, sf_dir):
     """PQ encode correctness independent of the oracle: a vector whose
     subvectors ARE codewords (the codebook source vectors themselves,
-    vec_id < _PQ_CODES) must encode to its OWN code in every subspace
-    with quantization error exactly 0."""
+    vec_id < _PQ_CODES) has distance exactly 0 to its own codeword, so
+    the serve path's encoder must pick its OWN code in every
+    subspace."""
     from agri_market_data_pipeline_spark.operators.similarity import (
         _PQ_CODES,
         _PQ_M,
         _pq_codebooks,
-        _pq_encode,
+        _pq_encode_code_expr,
     )
 
     e = load(spark, sf_dir, "embeddings")
     members = e.filter(F.col("vec_id") < _PQ_CODES).join(
         F.broadcast(_pq_codebooks(e))
     )
-    enc = members.select(
-        "vec_id", *[_pq_encode(m).alias(f"w{m}") for m in range(_PQ_M)]
+    enc = members.selectExpr(
+        "vec_id", *[_pq_encode_code_expr(m) for m in range(_PQ_M)]
     )
+    assert enc.count() == _PQ_CODES
     bad = enc.filter(
-        " OR ".join(
-            f"(w{m}.code != vec_id OR w{m}.dist != 0.0)"
-            for m in range(_PQ_M)
-        )
+        " OR ".join(f"w{m} IS NULL OR w{m} != vec_id" for m in range(_PQ_M))
     )
     assert bad.count() == 0
 
@@ -361,16 +360,16 @@ def test_mix_temperature_flattens_toward_uniform(spark, sf_dir):
 
 
 def test_exact_substring_short_docs_yield_no_grams(spark):
-    """_kgrams must yield zero 8-grams for docs under 8 tokens (the
+    """kgrams must yield zero 8-grams for docs under 8 tokens (the
     slice-length guard), and exactly n-7 for longer docs."""
-    from agri_market_data_pipeline_spark.operators.dedup import _kgrams
-    from agri_market_data_pipeline_spark.functions.text import tokens
+    from agri_market_data_pipeline_spark.functions.text import kgrams
 
     df = spark.createDataFrame(
         [("a b c",), ("w1 w2 w3 w4 w5 w6 w7 w8 w9",)], "text string"
     )
-    out = df.select(F.size(_kgrams(tokens("text"), 8)).alias("n")).collect()
-    assert [r.n for r in out] == [0, 2]
+    out = df.select(kgrams("text", 8).alias("g")).collect()
+    assert [len(r.g) for r in out] == [0, 2]
+    assert out[1].g == ["w1 w2 w3 w4 w5 w6 w7 w8", "w2 w3 w4 w5 w6 w7 w8 w9"]
 
 
 def test_ks_test_zero_on_identical_cohorts(spark, sf_dir):

@@ -167,7 +167,7 @@ def test_bpe_fold_matches_python_reference(spark, seq, pair):
 
     df = spark.createDataFrame([(seq,)], "seq array<string>")
     got = df.select(
-        _bpe_apply_merge(F.col("seq"), F.lit(a), F.lit(b)).alias("m")
+        _bpe_apply_merge("seq", f"'{a}'", f"'{b}'").alias("m")
     ).collect()[0].m
     assert got == out, (seq, pair, got, out)
 
@@ -223,21 +223,22 @@ def _geo_lemma_body(lat1, lon1, lat2, lon2):
     assert abs(cx1 - cx2) <= 1, (lon1, lon2, d)
 
 
-def test_spark_dot_expr_bit_identical_to_vec_dot(spark):
-    """spark_dot_expr/spark_cosine_expr (parsed-SQL twins used by the
-    ivfpq serve path for plan-build speed) must produce BIT-identical
-    doubles to the Python-lambda vec_dot/vec_cosine forms — the r10
-    rewrite's correctness contract. Checked on adversarial vectors:
-    negatives, zeros, subnormal-ish magnitudes; the zero-norm vector
-    is dot-only (under ANSI a double /0 raises on both forms alike —
-    the serve paths never divide by an unguarded norm on real data)."""
+def test_spark_dot_and_cosine_expr_bit_identical_to_python_reference(spark):
+    """spark_dot_expr/spark_cosine_expr, the one builder of every
+    similarity score, must produce doubles BIT-identical to a pure-Python
+    reference of the same float ops: each element rounded to float32,
+    widened to float64, the products folded left to right from 0.0,
+    math.sqrt norms and the zero-norm → 0.0 guard. Checked on
+    adversarial vectors: negatives, zeros, extreme magnitudes, and a
+    zero-norm vector (cosine 0.0, never a division)."""
+    import math
+    import struct
+
     from pyspark.sql import functions as F
 
     from agri_market_data_pipeline_spark.functions.vectors import (
         spark_cosine_expr,
         spark_dot_expr,
-        vec_cosine,
-        vec_dot,
     )
 
     vecs = [
@@ -246,23 +247,34 @@ def test_spark_dot_expr_bit_identical_to_vec_dot(spark):
         ([1e-30, -1e30, 3.14159, -2.71828], [1e30, 1e-30, 1.0, -1.0]),
         ([0.1, 0.2, 0.3, 0.4], [0.4, 0.3, 0.2, 0.1]),
     ]
-    df = spark.createDataFrame(
-        [(list(map(float, a)), list(map(float, b))) for a, b in vecs],
-        "a array<float>, b array<float>",
-    )
-    import struct
+
+    def f32(x):
+        return struct.unpack("<f", struct.pack("<f", x))[0]
+
+    def dot(a, b):
+        s = 0.0
+        for x, y in zip(a, b):
+            s = s + f32(x) * f32(y)
+        return s
+
+    def cosine(a, b):
+        denom = math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))
+        return dot(a, b) / denom if denom > 0 else 0.0
 
     def bits(x):
-        return struct.pack("<d", x) if x is not None else None
+        return struct.pack("<d", x)
 
-    for r in df.select(
-        vec_dot("a", "b").alias("dot_py"),
-        F.expr(spark_dot_expr("a", "b")).alias("dot_sql"),
-    ).collect():
-        assert bits(r.dot_py) == bits(r.dot_sql), (r.dot_py, r.dot_sql)
-    nz = df.filter(F.expr("aggregate(a, 0.0D, (s, x) -> s + abs(x)) > 0"))
-    for r in nz.select(
-        vec_cosine("a", "b").alias("cos_py"),
-        F.expr(spark_cosine_expr("a", "b")).alias("cos_sql"),
-    ).collect():
-        assert bits(r.cos_py) == bits(r.cos_sql), (r.cos_py, r.cos_sql)
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(vecs)],
+        "i int, a array<float>, b array<float>",
+    )
+    rows = df.select(
+        "i",
+        F.expr(spark_dot_expr("a", "b")).alias("dot"),
+        F.expr(spark_cosine_expr("a", "b")).alias("cos"),
+    ).collect()
+    assert len(rows) == len(vecs)
+    for r in rows:
+        a, b = vecs[r.i]
+        assert bits(r.dot) == bits(dot(a, b)), (r.i, r.dot, dot(a, b))
+        assert bits(r.cos) == bits(cosine(a, b)), (r.i, r.cos, cosine(a, b))

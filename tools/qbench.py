@@ -7,10 +7,11 @@ Usage: python tools/qbench.py name1 name2 ...  [-n RUNS]
 Prints one line per query: median, samples, normalized (median /
 calibration probe median), and the untimed warm run's job, task and
 codegen-compile counts (classes the code generator compiled, i.e.
-codegen-cache misses), its Python-worker CPU seconds (py_cpu=) and its
-memo builds and reuses (memo=<builds>/<hits>, from memo.COUNTS).
---split adds build vs execute time and the compiles, worker CPU and
-memo counts of each timed run. For triage only — the committed
+codegen-cache misses), its Python-worker CPU seconds (py_cpu=), its
+memo builds and reuses (memo=<builds>/<hits>, from memo.COUNTS) and
+the py4j round trips its plan build (the queries() call) made (py4j=).
+--split adds build vs execute time and the compiles, worker CPU, memo
+and py4j counts of each timed run. For triage only — the committed
 BENCH_DETAIL.json comes from bench.py's full run.
 """
 
@@ -22,6 +23,8 @@ import os
 import statistics
 import sys
 import time
+
+from py4j.protocol import MEMORY_COMMAND_NAME
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -59,6 +62,27 @@ def python_worker_cpu_s(spark) -> float:
             total += ticks[pid]
         todo.extend(children.get(pid, []))
     return total / os.sysconf("SC_CLK_TCK")
+
+
+def count_py4j_calls(spark, build):
+    """(build(), py4j round trips it made): the gateway client's
+    send_command is wrapped for the call only. py4j's object-release
+    messages are not counted: one is sent whenever Python's garbage
+    collector frees a Java proxy, possibly one of an earlier query's,
+    so they made the same build's count vary by hundreds between runs."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, [0]
+
+    def counting_send(command, *args, **kwargs):
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            calls[0] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting_send
+    try:
+        return build(), calls[0]
+    finally:
+        del client.send_command  # back to the class's method
 
 
 def main() -> int:
@@ -109,11 +133,11 @@ def main() -> int:
     for name in args.names:
         fn = queries[name]
 
-        def one_run() -> tuple[float, float, int, float, str]:
+        def one_run() -> tuple[float, float, int, float, str, int]:
             c0, p0 = codegen_compiles(spark), python_worker_cpu_s(spark)
             m0 = dict(memo.COUNTS)
             t0 = time.time()
-            df = fn(spark, sf_dir)
+            df, py4j = count_py4j_calls(spark, lambda: fn(spark, sf_dir))
             t1 = time.time()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.time()
@@ -127,10 +151,10 @@ def main() -> int:
             # every sample pays its own index/state builds.
             memo.clear_all()
             gc.collect()
-            return t1 - t0, t2 - t1, compiled, py_cpu, memo_use
+            return t1 - t0, t2 - t1, compiled, py_cpu, memo_use, py4j
 
         j0, t0n = job_stats()
-        _, _, warm_compiled, warm_py_cpu, warm_memo = one_run()
+        _, _, warm_compiled, warm_py_cpu, warm_memo, warm_py4j = one_run()
         j1, t1n = job_stats()
         runs = [one_run() for _ in range(args.n)]
         tot = [b + e for b, e, *_ in runs]
@@ -138,7 +162,7 @@ def main() -> int:
         msg = (
             f"{name:40s} median={med:6.3f}  norm={med / calib:6.2f}"
             f"  jobs={j1 - j0} tasks={t1n - t0n} compiles={warm_compiled}"
-            f"  py_cpu={warm_py_cpu:.2f}  memo={warm_memo}"
+            f"  py_cpu={warm_py_cpu:.2f}  memo={warm_memo}  py4j={warm_py4j}"
             f"  samples={[round(t, 3) for t in tot]}"
         )
         if args.split:
@@ -148,6 +172,7 @@ def main() -> int:
                 f"  run_compiles={[r[2] for r in runs]}"
                 f"  run_py_cpu={[round(r[3], 2) for r in runs]}"
                 f"  run_memo={[r[4] for r in runs]}"
+                f"  run_py4j={[r[5] for r in runs]}"
             )
         print(msg)
     return 0

@@ -14,6 +14,7 @@ generation stage. Writes SCALING.md. Run:
 
 from __future__ import annotations
 
+import gc
 import os
 import statistics
 import sys
@@ -21,6 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from agri_market_data_pipeline_spark import memo  # noqa: E402
 from agri_market_data_pipeline_spark.registry import all_queries  # noqa: E402
 from agri_market_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -210,7 +212,11 @@ def main() -> int:
                 fn(spark, sf).write.format("noop").mode("overwrite").save()
                 if i > 0:  # first run is warm-up
                     runs.append(time.time() - t0)
+                # bench.py's sample boundary: evict data memos so every
+                # sample pays its own index/state builds.
                 spark.catalog.clearCache()
+                memo.clear_all()
+                gc.collect()
             medians.setdefault(name, []).append(statistics.median(runs))
 
     lines = [
