@@ -45,6 +45,23 @@ def _probe_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Oracle twin of `_daily_index` and `_probe_shipments`: the CTEs `idx`
+# and `probe`, shared by the as-of oracles; it follows `WITH`.
+_ASOF_SQL = f"""idx AS (
+    SELECT o_orderpriority AS prio,
+           CAST(o_orderdate AS DATE) AS d,
+           {sql_davg("o_totalprice")} AS idx_val
+    FROM orders
+    GROUP BY 1, 2
+),
+probe AS (
+    SELECT l.l_orderkey, l.l_linenumber,
+           o.o_orderpriority AS prio,
+           CAST(l.l_shipdate AS DATE) AS sd
+    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+)"""
+
+
 def _densified_index(spark: SparkSession, sf_dir: str):
     """(per-key range, forward-filled daily index) — the shared build
     side of the densify-and-broadcast as-of strategy. The index is
@@ -79,19 +96,7 @@ def _densified_index(spark: SparkSession, sf_dir: str):
 @query(
     "join_asof_prices",
     oracle=f"""
-WITH idx AS (
-    SELECT o_orderpriority AS prio,
-           CAST(o_orderdate AS DATE) AS d,
-           {sql_davg("o_totalprice")} AS idx_val
-    FROM orders
-    GROUP BY 1, 2
-),
-probe AS (
-    SELECT l.l_orderkey, l.l_linenumber,
-           o.o_orderpriority AS prio,
-           CAST(l.l_shipdate AS DATE) AS sd
-    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-)
+WITH {_ASOF_SQL}
 SELECT p.l_orderkey, p.l_linenumber, p.sd,
        i.d AS idx_date, i.idx_val
 FROM probe p
@@ -240,19 +245,7 @@ _NEAR_D = 7  # band width in days; candidates live in adjacent buckets
 @query(
     "join_asof_nearest",
     oracle=f"""
-WITH idx AS (
-    SELECT o_orderpriority AS prio,
-           CAST(o_orderdate AS DATE) AS d,
-           {sql_davg("o_totalprice")} AS idx_val
-    FROM orders
-    GROUP BY 1, 2
-),
-probe AS (
-    SELECT l.l_orderkey, l.l_linenumber,
-           o.o_orderpriority AS prio,
-           CAST(l.l_shipdate AS DATE) AS sd
-    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-),
+WITH {_ASOF_SQL},
 rep AS (
     SELECT prio, d, idx_val,
            (CAST(d - DATE '1970-01-01' AS BIGINT) // {_NEAR_D}) + off AS bkt
@@ -334,19 +327,7 @@ _TOL_DAYS = 7
 @query(
     "join_asof_tolerance",
     oracle=f"""
-WITH idx AS (
-    SELECT o_orderpriority AS prio,
-           CAST(o_orderdate AS DATE) AS d,
-           {sql_davg("o_totalprice")} AS idx_val
-    FROM orders
-    GROUP BY 1, 2
-),
-probe AS (
-    SELECT l.l_orderkey, l.l_linenumber,
-           o.o_orderpriority AS prio,
-           CAST(l.l_shipdate AS DATE) AS sd
-    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-)
+WITH {_ASOF_SQL}
 SELECT p.l_orderkey, p.l_linenumber, p.sd,
        CASE WHEN date_diff('day', i.d, p.sd) <= {_TOL_DAYS}
             THEN i.d END AS idx_date,
@@ -397,19 +378,7 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "join_asof_forward",
     oracle=f"""
-WITH idx AS (
-    SELECT o_orderpriority AS prio,
-           CAST(o_orderdate AS DATE) AS d,
-           {sql_davg("o_totalprice")} AS idx_val
-    FROM orders
-    GROUP BY 1, 2
-),
-probe AS (
-    SELECT l.l_orderkey, l.l_linenumber,
-           o.o_orderpriority AS prio,
-           CAST(l.l_shipdate AS DATE) AS sd
-    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-)
+WITH {_ASOF_SQL}
 SELECT p.l_orderkey, p.l_linenumber, p.sd,
        i.d AS idx_date, i.idx_val
 FROM probe p

@@ -479,11 +479,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _STOP_SHINGLE_DF = 100
 
-
-@query(
-    "dedup_ngram_jaccard",
-    oracle=f"""
-WITH toks AS (
+# The stop-shingled pair counts of dedup_ngram_jaccard and
+# dedup_containment, one definition per engine. `_SHINGLE_PAIRS_SQL` is
+# the oracle CTE chain ending in `sizes(doc_id, n)` and
+# `inter(doc_a, doc_b, c)`; it follows `WITH`.
+_SHINGLE_PAIRS_SQL = f"""toks AS (
     SELECT doc_id, string_split(text, ' ') AS t FROM documents
 ),
 sh AS (
@@ -502,27 +502,15 @@ inter AS (
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
     FROM ds a JOIN ds b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
     GROUP BY a.doc_id, b.doc_id
-)
-SELECT i.doc_a, i.doc_b,
-       ROUND(CAST(i.c AS DOUBLE) / (sa.n + sb.n - i.c), 6) AS jaccard
-FROM inter i
-JOIN sizes sa ON sa.doc_id = i.doc_a
-JOIN sizes sb ON sb.doc_id = i.doc_b
-WHERE CAST(i.c AS DOUBLE) / (sa.n + sb.n - i.c) >= 0.02
-""",
-)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard similarity join with stop-shingle removal:
-    shingles appearing in more than 100 documents carry
-    no near-dup signal but generate the quadratic worst-case buckets of
-    the inverted-index self-join, so they are dropped from the universe
-    FIRST (both sizes and intersections are over the capped sets —
-    standard stop-shingling, and what bounds the join at 100 TB). Then:
-    inverted-index self-join on shingle (only docs sharing ≥1 rare
-    shingle ever pair), |A∩B| by count, |A∪B| by inclusion-exclusion.
-    The 0.02 threshold keeps the candidate set honest for synthetic
-    data; production near-dup uses ~0.8. MinHash (dedup_near_minhash)
-    is the sub-quadratic alternative."""
+)"""
+
+
+def _shingle_pairs(spark: SparkSession, sf_dir: str):
+    """Lazy `(sizes, inter)`, the Spark twin of `_SHINGLE_PAIRS_SQL`:
+    each document's distinct word 3-gram set, minus the stop shingles
+    found in more than `_STOP_SHINGLE_DF` documents; `sizes` is each
+    set's size and `inter` the |A∩B| of every pair sharing a shingle,
+    from the inverted-index self-join on shingle."""
     d = load_parallel(spark, sf_dir, "documents")
     ds_all = (
         d.select("doc_id", F.explode(shingles3("text")).alias("shingle"))
@@ -555,6 +543,34 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").alias("c"))
     )
+    return sizes, inter
+
+
+@query(
+    "dedup_ngram_jaccard",
+    oracle=f"""
+WITH {_SHINGLE_PAIRS_SQL}
+SELECT i.doc_a, i.doc_b,
+       ROUND(CAST(i.c AS DOUBLE) / (sa.n + sb.n - i.c), 6) AS jaccard
+FROM inter i
+JOIN sizes sa ON sa.doc_id = i.doc_a
+JOIN sizes sb ON sb.doc_id = i.doc_b
+WHERE CAST(i.c AS DOUBLE) / (sa.n + sb.n - i.c) >= 0.02
+""",
+)
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact n-gram Jaccard similarity join with stop-shingle removal:
+    shingles appearing in more than 100 documents carry
+    no near-dup signal but generate the quadratic worst-case buckets of
+    the inverted-index self-join, so they are dropped from the universe
+    FIRST (both sizes and intersections are over the capped sets —
+    standard stop-shingling, and what bounds the join at 100 TB). Then:
+    inverted-index self-join on shingle (only docs sharing ≥1 rare
+    shingle ever pair), |A∩B| by count, |A∪B| by inclusion-exclusion.
+    The 0.02 threshold keeps the candidate set honest for synthetic
+    data; production near-dup uses ~0.8. MinHash (dedup_near_minhash)
+    is the sub-quadratic alternative."""
+    sizes, inter = _shingle_pairs(spark, sf_dir)
     sa = sizes.alias("sa")
     sb = sizes.alias("sb")
     jac = F.col("c").cast("double") / (
@@ -574,26 +590,7 @@ _CONTAIN_TAU = 0.1
 @query(
     "dedup_containment",
     oracle=f"""
-WITH toks AS (
-    SELECT doc_id, string_split(text, ' ') AS t FROM documents
-),
-sh AS (
-    SELECT doc_id, unnest({SQL_SHINGLES3.format(toks='t')}) AS shingle FROM toks
-),
-ds_all AS (SELECT DISTINCT doc_id, shingle FROM sh),
-ds AS (
-    SELECT doc_id, shingle
-    FROM (SELECT doc_id, shingle,
-                 COUNT(*) OVER (PARTITION BY shingle) AS df
-          FROM ds_all) t
-    WHERE df <= {_STOP_SHINGLE_DF}
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM ds GROUP BY doc_id),
-inter AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-    FROM ds a JOIN ds b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-),
+WITH {_SHINGLE_PAIRS_SQL},
 directed AS (
     SELECT i.doc_a AS doc_src, i.doc_b AS doc_dst,
            CAST(i.c AS DOUBLE) / sa.n AS containment
@@ -617,27 +614,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     projects into BOTH directions with its own denominator — no second
     join pass. Containment values are integer-count ratios, bitwise
     identical across engines (registry.py rules: don't round them)."""
-    d = load_parallel(spark, sf_dir, "documents")
-    ds = (
-        d.select("doc_id", F.explode(shingles3("text")).alias("shingle"))
-        .distinct()
-        .withColumn("df", F.count("*").over(Window.partitionBy("shingle")))
-        .filter(F.col("df") <= _STOP_SHINGLE_DF)
-        .drop("df")
-    )
-    sizes = ds.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a, b = ds.alias("a"), ds.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("c"))
-    )
+    sizes, inter = _shingle_pairs(spark, sf_dir)
     fwd = (
         inter.join(sizes, inter.doc_a == sizes.doc_id)
         .select(

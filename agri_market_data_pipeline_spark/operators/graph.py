@@ -191,8 +191,8 @@ aggregate(
 
 
 _TRI_SQL = f"""
-WITH d AS ({_EDGE_SQL}),
-u AS (
+WITH d AS MATERIALIZED ({_EDGE_SQL}),
+u AS MATERIALIZED (
   SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
   FROM d WHERE src != dst
   GROUP BY 1, 2
@@ -315,8 +315,8 @@ _CC_ROUNDS = 4
 
 def _cc_sql(rounds: int) -> str:
     ctes = [
-        f"d AS ({_EDGE_SQL})",
-        """u AS (
+        f"d AS MATERIALIZED ({_EDGE_SQL})",
+        """u AS MATERIALIZED (
   SELECT src, dst FROM d WHERE src != dst
   UNION SELECT dst, src FROM d WHERE src != dst
   UNION SELECT n_nationkey, n_nationkey FROM nation)""",
@@ -1096,6 +1096,24 @@ _KHOP_TOP = 3  # kNN backbone: each nation keeps its 3 strongest partners
 _KHOP_SRC_REGION = "ASIA"  # multi-source frontier: every ASIA nation
 
 
+def _knn_backbone_sql(top: int) -> str:
+    """Oracle CTEs `e`, `knn` and `und` of the kNN backbone: each
+    nation keeps its `top` heaviest out-edges (ties to the smaller
+    dst), then the undirected pairs. All three are MATERIALIZED, as
+    the loops downstream read `und` once per round. Follows `WITH`."""
+    return f"""e AS MATERIALIZED (SELECT * FROM ({_EDGE_SQL}) WHERE src <> dst),
+knn AS MATERIALIZED (
+  SELECT src, dst FROM (
+    SELECT src, dst,
+           ROW_NUMBER() OVER (PARTITION BY src
+                              ORDER BY w * 32 + (31 - dst) DESC) AS rk
+    FROM e) WHERE rk <= {top}),
+und AS MATERIALIZED (
+  SELECT DISTINCT u, v FROM (
+    SELECT src AS u, dst AS v FROM knn
+    UNION ALL SELECT dst AS u, src AS v FROM knn))"""
+
+
 def _khop_sql(k: int, top: int) -> str:
     """DuckDB twin: kNN-backbone build, then the BFS relaxation
     unrolled — d_{i}(v) = LEAST(d_{i-1}(v), MIN over in-neighbors u of
@@ -1106,17 +1124,7 @@ def _khop_sql(k: int, top: int) -> str:
     identically on both engines, so 'unreached' needs no sentinel
     inside the loop."""
     ctes = [
-        f"e AS MATERIALIZED (SELECT * FROM ({_EDGE_SQL}) WHERE src <> dst)",
-        f"""knn AS MATERIALIZED (
-  SELECT src, dst FROM (
-    SELECT src, dst,
-           ROW_NUMBER() OVER (PARTITION BY src
-                              ORDER BY w * 32 + (31 - dst) DESC) AS rk
-    FROM e) WHERE rk <= {top})""",
-        """und AS MATERIALIZED (
-  SELECT DISTINCT u, v FROM (
-    SELECT src AS u, dst AS v FROM knn
-    UNION ALL SELECT dst AS u, src AS v FROM knn))""",
+        _knn_backbone_sql(top),
         f"""d0 AS (
   SELECT n.n_nationkey AS node,
          CASE WHEN r.r_name = '{_KHOP_SRC_REGION}'
@@ -1379,17 +1387,7 @@ def _adamic_adar_sql(top: int) -> str:
     BEFORE the DECIMAL sum, and a left-anti edge filter so only
     PREDICTED (non-edge) links survive."""
     return f"""
-WITH e AS MATERIALIZED (SELECT * FROM ({_EDGE_SQL}) WHERE src <> dst),
-knn AS MATERIALIZED (
-  SELECT src, dst FROM (
-    SELECT src, dst,
-           ROW_NUMBER() OVER (PARTITION BY src
-                              ORDER BY w * 32 + (31 - dst) DESC) AS rk
-    FROM e) WHERE rk <= {top}),
-und AS MATERIALIZED (
-  SELECT DISTINCT u, v FROM (
-    SELECT src AS u, dst AS v FROM knn
-    UNION ALL SELECT dst AS u, src AS v FROM knn)),
+WITH {_knn_backbone_sql(top)},
 deg AS (SELECT u AS node, CAST(COUNT(*) AS BIGINT) AS deg
         FROM und GROUP BY 1),
 pr AS (
@@ -1502,17 +1500,7 @@ def _harmonic_sql(k: int, top: int) -> str:
     (each is referenced twice: as the union carry and the dedup
     base)."""
     ctes = [
-        f"e AS MATERIALIZED (SELECT * FROM ({_EDGE_SQL}) WHERE src <> dst)",
-        f"""knn AS MATERIALIZED (
-  SELECT src, dst FROM (
-    SELECT src, dst,
-           ROW_NUMBER() OVER (PARTITION BY src
-                              ORDER BY w * 32 + (31 - dst) DESC) AS rk
-    FROM e) WHERE rk <= {top})""",
-        """und AS MATERIALIZED (
-  SELECT DISTINCT u, v FROM (
-    SELECT src AS u, dst AS v FROM knn
-    UNION ALL SELECT dst AS u, src AS v FROM knn))""",
+        _knn_backbone_sql(top),
         """s0 AS MATERIALIZED (
   SELECT n_nationkey AS src, n_nationkey AS node,
          CAST(0 AS BIGINT) AS hop
@@ -2087,8 +2075,8 @@ def graph_louvain_move(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Local clustering coefficient (per-node triadic closure)
 
 _LCC_SQL = f"""
-WITH e AS ({_EDGE_SQL}),
-und AS (
+WITH e AS MATERIALIZED ({_EDGE_SQL}),
+und AS MATERIALIZED (
   SELECT DISTINCT u, v FROM (
     SELECT src AS u, dst AS v FROM e WHERE src <> dst
     UNION ALL

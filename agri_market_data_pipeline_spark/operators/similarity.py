@@ -1996,10 +1996,13 @@ def ml_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ECE_BINS = 10
-
-_ECE_SQL = f"""
-WITH probe AS (
+# The md5 probe score, one definition per engine: a fixed linear probe
+# (64 md5-lattice weights in [-1, 1]) over each embedding, through the
+# sigmoid at ROUND 6 — a deterministic stand-in for a trained model's
+# calibrated output, read by the six classifier-eval operators below.
+# `_PROBE_SCORES_SQL` is the oracle CTE chain ending in `s(vec_id, y,
+# score)`; it follows `WITH`.
+_PROBE_SCORES_SQL = """probe AS (
   SELECT i,
          (CAST(('0x' || substring(md5('probe:' || CAST(i AS VARCHAR)),
                 1, 8)) AS BIGINT) % 2001 - 1000) / 1000.0 AS w
@@ -2015,9 +2018,46 @@ z AS (
   GROUP BY 1, 2
 ),
 s AS (
-  SELECT vec_id, y, ROUND(1.0 / (1.0 + EXP(-z)), 6) AS score
-  FROM z
-),
+  SELECT vec_id, y, ROUND(1.0 / (1.0 + EXP(-z)), 6) AS score FROM z
+)"""
+
+
+def _probe_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lazy `(vec_id, y, score)` frame, the Spark twin of
+    `_PROBE_SCORES_SQL`; y = label % 2.
+
+    Determinism: the weights are md5-lattice rationals; z accumulates
+    the per-dimension products in DECIMAL(30,15) (order-exact); EXP is
+    transcendental, so the score takes ROUND(6) before any caller
+    compares, bins or groups it. Spark `posexplode` is 0-based, the
+    oracle's `generate_subscripts` 1-based, hence `i0 + 1`."""
+    return (
+        load_parallel(spark, sf_dir, "embeddings")
+        .selectExpr(
+            "vec_id",
+            "CAST(label % 2 AS BIGINT) AS y",
+            "posexplode(embedding) AS (i0, xf)",
+        )
+        .selectExpr(
+            "vec_id",
+            "y",
+            "CAST(xf AS DOUBLE) AS xi",
+            "(CAST(conv(substring(md5(concat('probe:',"
+            " CAST(i0 + 1 AS STRING))), 1, 8), 16, 10) AS BIGINT)"
+            " % 2001 - 1000) / 1000.0D AS w",
+        )
+        .groupBy("vec_id", "y")
+        .agg(F.expr("CAST(SUM(CAST(xi * w AS DECIMAL(30,15))) AS DOUBLE) AS z"))
+        .selectExpr(
+            "vec_id", "y", "ROUND(1.0D / (EXP(-z) + 1.0D), 6) AS score"
+        )
+    )
+
+
+_ECE_BINS = 10
+
+_ECE_SQL = f"""
+WITH {_PROBE_SCORES_SQL},
 b AS (
   SELECT LEAST(CAST(FLOOR(score * {_ECE_BINS}) AS BIGINT),
                {_ECE_BINS - 1}) AS bin,
@@ -2042,59 +2082,17 @@ def ml_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     loss (ml_logreg_quality): bucket predictions by confidence and
     compare each bin's predicted probability to its empirical positive
     rate; ECE = Σ (n_b/N)·|gap_b| is the headline scalar the test
-    assembles from the long form. The score is a FIXED md5-derived
-    linear probe through the sigmoid (deterministic stand-in for a
-    trained model's logits — the binning/gap machinery is the operator;
-    swap in any score column unchanged), the target label % 2.
+    assembles from the long form. Score and target come from
+    `_probe_scores` (the binning/gap machinery is the operator; swap in
+    any score column unchanged).
 
-    Determinism: the probe weights are md5-lattice rationals; z
-    accumulates per-dimension products in DECIMAL(30,15) (order-exact);
-    EXP is transcendental, so the score takes ROUND(6) BEFORE binning
-    (bin edges then compare lattice values — the CLAUDE.md rule that
-    rounding must precede any comparison on a transcendental); bin
-    sums of the rounded score are DECIMAL-exact (1e-6 multiples) and
-    frac_pos is an exact integer ratio — bitwise, unrounded.
+    Determinism: bins compare the ROUND(6) score, a lattice value; bin
+    sums of it are DECIMAL-exact (1e-6 multiples) and frac_pos is an
+    exact integer ratio — bitwise, unrounded.
 
-    Scale: one corpus scan (explode × broadcast 64-row probe), one
-    {_ECE_BINS}-key partial agg — calibration audits are scan-bound at
-    any corpus size."""
-    e = load_parallel(spark, sf_dir, "embeddings")
-    probe_w = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("probe:"), F.col("i").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2001
-        - 1000
-    ) / F.lit(1000.0)
-    x = e.select(
-        "vec_id",
-        (F.col("label") % 2).cast("bigint").alias("y"),
-        F.posexplode("embedding").alias("i0", "xf"),
-    ).select(
-        "vec_id",
-        "y",
-        (F.col("i0") + 1).alias("i"),
-        F.col("xf").cast("double").alias("xi"),
-    )
-    z = x.select(
-        "vec_id", "y", "xi", probe_w.alias("w")
-    ).groupBy("vec_id", "y").agg(
-        F.sum((F.col("xi") * F.col("w")).cast("decimal(30,15)"))
-        .cast("double")
-        .alias("z")
-    )
-    s = z.select(
-        "vec_id",
-        "y",
-        F.round(1.0 / (1.0 + F.exp(-F.col("z"))), 6).alias("score"),
-    )
-    b = s.select(
+    Scale: one corpus scan, one {_ECE_BINS}-key partial agg —
+    calibration audits are scan-bound at any corpus size."""
+    b = _probe_scores(spark, sf_dir).select(
         "y",
         "score",
         F.least(
@@ -2118,28 +2116,9 @@ def ml_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
 _AUC_FOLDS = 4
 
 _AUC_SQL = f"""
-WITH probe AS (
-  SELECT i,
-         (CAST(('0x' || substring(md5('probe:' || CAST(i AS VARCHAR)),
-                1, 8)) AS BIGINT) % 2001 - 1000) / 1000.0 AS w
-  FROM (SELECT UNNEST(generate_series(1, 64)) AS i)
-),
-z AS (
-  SELECT e.vec_id, CAST(e.label % 2 AS BIGINT) AS y,
-         CAST(SUM(CAST(x.xi * p.w AS DECIMAL(30,15))) AS DOUBLE) AS z
-  FROM embeddings e,
-       LATERAL (SELECT generate_subscripts(e.embedding, 1) AS i,
-                       CAST(UNNEST(e.embedding) AS DOUBLE) AS xi) x
-  JOIN probe p ON p.i = x.i
-  GROUP BY 1, 2
-),
-s AS (
-  SELECT vec_id % {_AUC_FOLDS} AS fold, y,
-         ROUND(1.0 / (1.0 + EXP(-z)), 6) AS score
-  FROM z
-),
+WITH {_PROBE_SCORES_SQL},
 g AS (
-  SELECT fold, score,
+  SELECT vec_id % {_AUC_FOLDS} AS fold, score,
          CAST(SUM(y) AS BIGINT) AS p,
          CAST(COUNT(*) - SUM(y) AS BIGINT) AS q
   FROM s GROUP BY 1, 2
@@ -2167,64 +2146,28 @@ def ml_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     half of probabilistic-classifier eval beside ml_calibration_ece's
     RELIABILITY half (a model can be perfectly calibrated yet rank no
     better than chance, and vice versa; both numbers are needed before
-    a quality filter's threshold means anything). Same deterministic
-    md5-probe sigmoid score and y = label % 2 as the ECE operator, so
-    the two read the SAME classifier; scored per vec_id-mod fold the
-    way a cross-validated eval would. AUC = P(score_pos > score_neg)
+    a quality filter's threshold means anything). Reads the same
+    `_probe_scores` classifier as the ECE operator, per vec_id-mod fold
+    the way a cross-validated eval would. AUC = P(score_pos > score_neg)
     + ½·P(tie), computed WITHOUT materializing pairs: group to
     (fold, score) → (p positives, q negatives), cumulate negatives
     strictly below each score, and 2U = Σ(2·p·q_below + p·q) — the
     tie-corrected average-rank formulation as ONE exact BIGINT.
 
-    Determinism: score is ROUND(6) before any comparison (the
-    transcendental rule), so the (fold, score) grouping keys are
-    lattice values; p, q, q_below, 2U are exact integers; AUC is one
-    division of exact BIGINTs — an integer-ratio double, bitwise
-    identical cross-engine, deliberately UNROUNDED (rounding would
-    introduce tie divergence, the CLAUDE.md rule).
+    Determinism: the (fold, score) grouping keys are lattice values; p,
+    q, q_below, 2U are exact integers; AUC is one division of exact
+    BIGINTs — an integer-ratio double, bitwise identical cross-engine,
+    deliberately UNROUNDED (rounding would introduce tie divergence, the
+    CLAUDE.md rule).
 
-    Scale: one corpus scan for z (explode x broadcast 64-row probe),
-    one (fold, score) partial agg; the cumulative window rides the
-    per-fold DISTINCT-score grain, which saturates at 1e6+1 lattice
-    values (grain-bounded exemption — value support saturates). At a
-    1e9-row fold 2·p·q_below approaches BIGINT range; shift to the
-    per-score-bucket U decomposition with DECIMAL(38,0) accumulation
-    before that point."""
-    e = load_parallel(spark, sf_dir, "embeddings")
-    probe_w = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("probe:"), F.col("i").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2001
-        - 1000
-    ) / F.lit(1000.0)
-    x = e.select(
-        "vec_id",
-        (F.col("label") % 2).cast("bigint").alias("y"),
-        F.posexplode("embedding").alias("i0", "xf"),
-    ).select(
-        "vec_id",
-        "y",
-        (F.col("i0") + 1).alias("i"),
-        F.col("xf").cast("double").alias("xi"),
-    )
-    z = x.select(
-        "vec_id", "y", "xi", probe_w.alias("w")
-    ).groupBy("vec_id", "y").agg(
-        F.sum((F.col("xi") * F.col("w")).cast("decimal(30,15)"))
-        .cast("double")
-        .alias("z")
-    )
-    s = z.select(
-        (F.col("vec_id") % _AUC_FOLDS).alias("fold"),
-        "y",
-        F.round(1.0 / (1.0 + F.exp(-F.col("z"))), 6).alias("score"),
+    Scale: one corpus scan, one (fold, score) partial agg; the
+    cumulative window rides the per-fold DISTINCT-score grain, which
+    saturates at 1e6+1 lattice values (grain-bounded exemption — value
+    support saturates). At a 1e9-row fold 2·p·q_below approaches BIGINT
+    range; shift to the per-score-bucket U decomposition with
+    DECIMAL(38,0) accumulation before that point."""
+    s = _probe_scores(spark, sf_dir).select(
+        (F.col("vec_id") % _AUC_FOLDS).alias("fold"), "y", "score"
     )
     g = s.groupBy("fold", "score").agg(
         F.sum("y").cast("bigint").alias("p"),
@@ -2260,24 +2203,7 @@ def ml_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _LIFT_SQL = f"""
-WITH probe AS (
-  SELECT i,
-         (CAST(('0x' || substring(md5('probe:' || CAST(i AS VARCHAR)),
-                1, 8)) AS BIGINT) % 2001 - 1000) / 1000.0 AS w
-  FROM (SELECT UNNEST(generate_series(1, 64)) AS i)
-),
-z AS (
-  SELECT e.vec_id, CAST(e.label % 2 AS BIGINT) AS y,
-         CAST(SUM(CAST(x.xi * p.w AS DECIMAL(30,15))) AS DOUBLE) AS z
-  FROM embeddings e,
-       LATERAL (SELECT generate_subscripts(e.embedding, 1) AS i,
-                       CAST(UNNEST(e.embedding) AS DOUBLE) AS xi) x
-  JOIN probe p ON p.i = x.i
-  GROUP BY 1, 2
-),
-s AS (
-  SELECT y, ROUND(1.0 / (1.0 + EXP(-z)), 6) AS score FROM z
-),
+WITH {_PROBE_SCORES_SQL},
 g AS (
   SELECT score, CAST(COUNT(*) AS BIGINT) AS n,
          CAST(SUM(y) AS BIGINT) AS pos
@@ -2312,60 +2238,24 @@ GROUP BY 1
 def ml_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decile gains/lift table — the TARGETING readout that completes
     the classifier-eval suite (ml_auc_roc ranks, ml_calibration_ece
-    calibrates; lift answers the operator's actual question: if I act
-    on the top d deciles by score, what fraction of the positives do I
-    capture, and at how many times the base rate?). Same deterministic
-    md5-probe sigmoid score as its two siblings, so all three read one
-    classifier. Rows are bucketed into score-descending deciles by
-    CUMULATIVE POSITION — decile = (cum_before·10) div N on exact
-    BIGINTs — never by a per-row rank.
+    calibrates; lift answers the operator's actual question: if I act on
+    the top d deciles by score, what fraction of the positives do I
+    capture, and at how many times the base rate?). Reads the same
+    `_probe_scores` classifier as its siblings. Rows are bucketed into
+    score-descending deciles by CUMULATIVE POSITION — decile =
+    (cum_before·10) div N on exact BIGINTs — never by a per-row rank.
 
-    Determinism: the score is ROUND(6) before grouping; the cumulative
-    window rides the distinct-score grain ordered BY the score itself
-    (the key is the order — no tiebreaker needed); within a decile
-    cum_pos/cum_n are monotone so decile-end values are MAXes;
-    capture, lift, and cum_lift are single divisions of exact-BIGINT
-    cross-products — unrounded integer-ratio doubles.
+    Determinism: the cumulative window rides the distinct-score grain
+    ordered BY the score itself (the key is the order — no tiebreaker
+    needed); within a decile cum_pos/cum_n are monotone so decile-end
+    values are MAXes; capture, lift, and cum_lift are single divisions
+    of exact-BIGINT cross-products — unrounded integer-ratio doubles.
 
-    Scale: one corpus scan for z, one (score) partial agg; the
+    Scale: one corpus scan, one (score) partial agg; the
     cumulative window's input is post-aggregate and saturates at 1e6+1
     lattice values (the grain-bounded exemption); the totals frame is
     one row (broadcast — NESTED_LOOP_OK)."""
-    e = load_parallel(spark, sf_dir, "embeddings")
-    probe_w = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("probe:"), F.col("i").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2001
-        - 1000
-    ) / F.lit(1000.0)
-    x = e.select(
-        "vec_id",
-        (F.col("label") % 2).cast("bigint").alias("y"),
-        F.posexplode("embedding").alias("i0", "xf"),
-    ).select(
-        "vec_id",
-        "y",
-        (F.col("i0") + 1).alias("i"),
-        F.col("xf").cast("double").alias("xi"),
-    )
-    z = x.select("vec_id", "y", "xi", probe_w.alias("w")).groupBy(
-        "vec_id", "y"
-    ).agg(
-        F.sum((F.col("xi") * F.col("w")).cast("decimal(30,15)"))
-        .cast("double")
-        .alias("z")
-    )
-    s = z.select(
-        "y", F.round(1.0 / (1.0 + F.exp(-F.col("z"))), 6).alias("score")
-    )
-    g = s.groupBy("score").agg(
+    g = _probe_scores(spark, sf_dir).groupBy("score").agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("y").cast("bigint").alias("pos"),
     )
@@ -2693,28 +2583,9 @@ def incr_ann_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Threshold tuning: argmax-F1 operating point over the score grain
 
 _THR_SQL = f"""
-WITH probe AS (
-  SELECT i,
-         (CAST(('0x' || substring(md5('probe:' || CAST(i AS VARCHAR)),
-                1, 8)) AS BIGINT) % 2001 - 1000) / 1000.0 AS w
-  FROM (SELECT UNNEST(generate_series(1, 64)) AS i)
-),
-z AS (
-  SELECT e.vec_id, CAST(e.label % 2 AS BIGINT) AS y,
-         CAST(SUM(CAST(x.xi * p.w AS DECIMAL(30,15))) AS DOUBLE) AS z
-  FROM embeddings e,
-       LATERAL (SELECT generate_subscripts(e.embedding, 1) AS i,
-                       CAST(UNNEST(e.embedding) AS DOUBLE) AS xi) x
-  JOIN probe p ON p.i = x.i
-  GROUP BY 1, 2
-),
-s AS (
-  SELECT vec_id % {_AUC_FOLDS} AS fold, y,
-         ROUND(1.0 / (1.0 + EXP(-z)), 6) AS score
-  FROM z
-),
+WITH {_PROBE_SCORES_SQL},
 g AS (
-  SELECT fold, score,
+  SELECT vec_id % {_AUC_FOLDS} AS fold, score,
          CAST(SUM(y) AS BIGINT) AS p,
          CAST(COUNT(*) - SUM(y) AS BIGINT) AS q
   FROM s GROUP BY 1, 2
@@ -2753,65 +2624,29 @@ FROM f WHERE rn = 1
 
 @query("ml_threshold_tuning", oracle=_THR_SQL)
 def ml_threshold_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Argmax-F1 threshold selection — the OPERATING-POINT member of
-    the classifier-eval family, answering the question the others
-    leave open: ml_auc_roc says whether the scores RANK well
-    (threshold-free), ml_calibration_ece whether they mean what they
-    say, ml_lift_gains how deep to mail a decile — this picks the
-    actual cutoff a quality FILTER would deploy. Same deterministic
-    md5-probe sigmoid classifier and vec_id-mod folds as its siblings
-    (all four read ONE model). Per fold: cumulate TP/FP from the top
-    of the score grain (predict positive iff score ≥ t for each
-    distinct score t), F1 = 2TP/(2TP+FP+FN), argmax with
-    smallest-threshold tie-break.
+    """Argmax-F1 threshold selection — the OPERATING-POINT member of the
+    classifier-eval family, answering the question the others leave
+    open: ml_auc_roc says whether the scores RANK well (threshold-free),
+    ml_calibration_ece whether they mean what they say, ml_lift_gains
+    how deep to mail a decile — this picks the actual cutoff a quality
+    FILTER would deploy. Same `_probe_scores` classifier and vec_id-mod
+    folds as its siblings. Per fold: cumulate TP/FP from the top of the
+    score grain (predict positive iff score ≥ t for each distinct score
+    t), F1 = 2TP/(2TP+FP+FN), argmax with smallest-threshold tie-break.
 
-    Determinism: scores are ROUND(6) lattice keys (transcendental
-    rule); TP/FP/FN are exact BIGINTs from one cumulative window over
-    the per-fold DISTINCT-score grain (grain-bounded — value support
-    saturates at 1e6+1 lattice points, the ml_auc_roc exemption);
-    precision/recall/F1 are integer-ratio doubles (bitwise both
-    engines, deliberately unrounded), so the DESC ordering and the
+    Determinism: TP/FP/FN are exact BIGINTs from one cumulative window
+    over the per-fold DISTINCT-score grain (grain-bounded — value
+    support saturates at 1e6+1 lattice points, the ml_auc_roc
+    exemption); precision/recall/F1 are integer-ratio doubles (bitwise
+    both engines, deliberately unrounded), so the DESC ordering and the
     row_number argmax agree exactly cross-engine.
 
     Scale: one corpus scan to (fold, score) partial aggregates;
     everything after lives on the bounded score grain — the sweep
     evaluates EVERY threshold in one window pass instead of K probe
     queries."""
-    e = load_parallel(spark, sf_dir, "embeddings")
-    probe_w = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("probe:"), F.col("i").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2001
-        - 1000
-    ) / F.lit(1000.0)
-    x = e.select(
-        "vec_id",
-        (F.col("label") % 2).cast("bigint").alias("y"),
-        F.posexplode("embedding").alias("i0", "xf"),
-    ).select(
-        "vec_id",
-        "y",
-        (F.col("i0") + 1).alias("i"),
-        F.col("xf").cast("double").alias("xi"),
-    )
-    z = x.select("vec_id", "y", "xi", probe_w.alias("w")).groupBy(
-        "vec_id", "y"
-    ).agg(
-        F.sum((F.col("xi") * F.col("w")).cast("decimal(30,15)"))
-        .cast("double")
-        .alias("z")
-    )
-    s = z.select(
-        (F.col("vec_id") % _AUC_FOLDS).alias("fold"),
-        "y",
-        F.round(1.0 / (1.0 + F.exp(-F.col("z"))), 6).alias("score"),
+    s = _probe_scores(spark, sf_dir).select(
+        (F.col("vec_id") % _AUC_FOLDS).alias("fold"), "y", "score"
     )
     g = s.groupBy("fold", "score").agg(
         F.sum("y").cast("bigint").alias("p"),
@@ -2871,26 +2706,9 @@ def ml_threshold_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Brier score + Murphy decomposition (calibration vs discrimination)
 
 _BRIER_SQL = f"""
-WITH probe AS (
-  SELECT i,
-         (CAST(('0x' || substring(md5('probe:' || CAST(i AS VARCHAR)),
-                1, 8)) AS BIGINT) % 2001 - 1000) / 1000.0 AS w
-  FROM (SELECT UNNEST(generate_series(1, 64)) AS i)
-),
-z AS (
-  SELECT e.vec_id, CAST(e.label % 2 AS BIGINT) AS y,
-         CAST(SUM(CAST(x.xi * p.w AS DECIMAL(30,15))) AS DOUBLE) AS z
-  FROM embeddings e,
-       LATERAL (SELECT generate_subscripts(e.embedding, 1) AS i,
-                       CAST(UNNEST(e.embedding) AS DOUBLE) AS xi) x
-  JOIN probe p ON p.i = x.i
-  GROUP BY 1, 2
-),
-s AS (
-  SELECT y,
-         CAST(FLOOR(ROUND(1.0 / (1.0 + EXP(-z)), 6) * 1e6 + 0.5) AS BIGINT)
-           AS s_lat
-  FROM z
+WITH {_PROBE_SCORES_SQL},
+sl AS (
+  SELECT y, CAST(FLOOR(score * 1e6 + 0.5) AS BIGINT) AS s_lat FROM s
 ),
 b AS (
   SELECT LEAST(s_lat * {_ECE_BINS} // 1000000, {_ECE_BINS - 1}) AS bin,
@@ -2899,7 +2717,7 @@ b AS (
          CAST(SUM(s_lat) AS BIGINT) AS slk,
          CAST(SUM((s_lat - y * 1000000) * (s_lat - y * 1000000)) AS BIGINT)
            AS d2k
-  FROM s GROUP BY 1
+  FROM sl GROUP BY 1
 ),
 tot AS (
   SELECT CAST(SUM(nk) AS BIGINT) AS n, CAST(SUM(pk) AS BIGINT) AS p,
@@ -2937,9 +2755,8 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     decomposition says WHERE a probabilistic score loses points —
     miscalibration (reliability, lower better), failure to separate
     outcomes (resolution, higher better), or irreducible base-rate
-    noise (uncertainty). Same fixed md5-probe sigmoid score and
-    y = label % 2 as ECE/AUC, so all three read ONE classifier; the
-    same {_ECE_BINS} equal-width confidence bins as ECE.
+    noise (uncertainty). Reads the same `_probe_scores` classifier and
+    the same {_ECE_BINS} equal-width confidence bins as ECE.
 
     Determinism: the score snaps to its ROUND(6) 1e-6 BIGINT lattice
     before anything else, so the per-row Brier term (s_lat − y·1e6)²
@@ -2954,47 +2771,11 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     says: move the N³ normalizer inside the floor) or DECIMAL(38,0);
     ANSI fails loudly until then.
 
-    Scale: one corpus scan (explode × broadcast 64-row probe), one
-    {_ECE_BINS}-key partial agg, scalar algebra on a ≤{_ECE_BINS}-row
-    frame — scan-bound at any corpus size, like ECE."""
-    e = load_parallel(spark, sf_dir, "embeddings")
-    probe_w = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("probe:"), F.col("i").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2001
-        - 1000
-    ) / F.lit(1000.0)
-    x = e.select(
-        "vec_id",
-        (F.col("label") % 2).cast("bigint").alias("y"),
-        F.posexplode("embedding").alias("i0", "xf"),
-    ).select(
-        "vec_id",
-        "y",
-        (F.col("i0") + 1).alias("i"),
-        F.col("xf").cast("double").alias("xi"),
-    )
-    z = (
-        x.select("vec_id", "y", "xi", probe_w.alias("w"))
-        .groupBy("vec_id", "y")
-        .agg(
-            F.sum((F.col("xi") * F.col("w")).cast("decimal(30,15)"))
-            .cast("double")
-            .alias("z")
-        )
-    )
-    s = z.select(
-        "y",
-        F.floor(F.round(1.0 / (1.0 + F.exp(-F.col("z"))), 6) * 1e6 + F.lit(0.5))
-        .cast("bigint")
-        .alias("s_lat"),
+    Scale: one corpus scan, one {_ECE_BINS}-key partial agg, scalar
+    algebra on a ≤{_ECE_BINS}-row frame — scan-bound at any corpus
+    size, like ECE."""
+    s = _probe_scores(spark, sf_dir).selectExpr(
+        "y", "CAST(FLOOR(score * 1e6 + 0.5D) AS BIGINT) AS s_lat"
     )
     d = F.col("s_lat") - F.col("y") * 1000000
     b = (
@@ -3053,27 +2834,13 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ISO_BINS = 20
 
 _ISO_SQL = f"""
-WITH probe AS (
-  SELECT i,
-         (CAST(('0x' || substring(md5('probe:' || CAST(i AS VARCHAR)),
-                1, 8)) AS BIGINT) % 2001 - 1000) / 1000.0 AS w
-  FROM (SELECT UNNEST(generate_series(1, 64)) AS i)
-),
-z AS (
-  SELECT e.vec_id, CAST(e.label % 2 AS BIGINT) AS y,
-         CAST(SUM(CAST(x.xi * p.w AS DECIMAL(30,15))) AS DOUBLE) AS z
-  FROM embeddings e,
-       LATERAL (SELECT generate_subscripts(e.embedding, 1) AS i,
-                       CAST(UNNEST(e.embedding) AS DOUBLE) AS xi) x
-  JOIN probe p ON p.i = x.i
-  GROUP BY 1, 2
-),
+WITH {_PROBE_SCORES_SQL},
 b AS MATERIALIZED (
-  SELECT LEAST(CAST(FLOOR(ROUND(1.0 / (1.0 + EXP(-z)), 6) * {_ISO_BINS})
-                    AS BIGINT), {_ISO_BINS - 1}) AS bin,
+  SELECT LEAST(CAST(FLOOR(score * {_ISO_BINS}) AS BIGINT), {_ISO_BINS - 1})
+           AS bin,
          CAST(COUNT(*) AS BIGINT) AS nk,
          CAST(SUM(y) AS BIGINT) AS pk
-  FROM z GROUP BY 1
+  FROM s GROUP BY 1
 ),
 cum AS MATERIALIZED (
   SELECT bin,
@@ -3104,8 +2871,8 @@ FROM b JOIN iso USING (bin)
 
 @query("ml_isotonic_calibration", oracle=_ISO_SQL)
 def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Isotonic (monotone non-decreasing) calibration of the shared
-    md5-probe sigmoid score — the CALIBRATION-FIT member of the
+    """Isotonic (monotone non-decreasing) calibration of the
+    `_probe_scores` score — the CALIBRATION-FIT member of the
     classifier-eval family: ml_calibration_ece measures the gap per
     confidence bin, ml_brier_decomposition attributes the loss, and
     this op produces the monotone remapping a serving pipeline applies
@@ -3121,56 +2888,20 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums + a bounded interval enumeration — no iterative pooling, no
     driver loop. Interval averages are ratios of exact BIGINT prefix
     sums (integer-ratio doubles — bitwise cross-engine, CLAUDE.md), so
-    MIN/MAX agree unrounded; the score itself snaps to ROUND(6) before
-    binning (the ECE rule: transcendental rounds precede comparison).
+    MIN/MAX agree unrounded; bins compare the ROUND(6) score.
 
-    Scale: one corpus scan (explode x broadcast 64-row probe) into a
-    {_ISO_BINS}-key partial agg; everything after is algebra on
-    <= {_ISO_BINS}-row frames (intervals {_ISO_BINS}^2/2, minimax
-    {_ISO_BINS}^3/6 rows — constants independent of corpus size). The
-    tiny theta self-joins broadcast (NESTED_LOOP_OK: score-bin grain);
-    the one global window rides the same bounded grain
-    (GLOBAL_WINDOW_OK: score-bin grain)."""
-    e = load_parallel(spark, sf_dir, "embeddings")
-    probe_w = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("probe:"), F.col("i").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2001
-        - 1000
-    ) / F.lit(1000.0)
-    x = e.select(
-        "vec_id",
-        (F.col("label") % 2).cast("bigint").alias("y"),
-        F.posexplode("embedding").alias("i0", "xf"),
-    ).select(
-        "vec_id",
-        "y",
-        (F.col("i0") + 1).alias("i"),
-        F.col("xf").cast("double").alias("xi"),
-    )
-    z = (
-        x.select("vec_id", "y", "xi", probe_w.alias("w"))
-        .groupBy("vec_id", "y")
-        .agg(
-            F.sum((F.col("xi") * F.col("w")).cast("decimal(30,15)"))
-            .cast("double")
-            .alias("z")
-        )
-    )
+    Scale: one corpus scan into a {_ISO_BINS}-key partial agg;
+    everything after is algebra on <= {_ISO_BINS}-row frames (intervals
+    {_ISO_BINS}^2/2, minimax {_ISO_BINS}^3/6 rows — constants
+    independent of corpus size). The tiny theta self-joins broadcast
+    (NESTED_LOOP_OK: score-bin grain); the one global window rides the
+    same bounded grain (GLOBAL_WINDOW_OK: score-bin grain)."""
     b = (
-        z.select(
+        _probe_scores(spark, sf_dir)
+        .select(
             "y",
             F.least(
-                F.floor(
-                    F.round(1.0 / (1.0 + F.exp(-F.col("z"))), 6) * _ISO_BINS
-                ).cast("bigint"),
+                F.floor(F.col("score") * _ISO_BINS).cast("bigint"),
                 F.lit(_ISO_BINS - 1),
             ).alias("bin"),
         )

@@ -27,6 +27,40 @@ from ..tables import load, load_parallel
 
 _GAP_US = 30 * 60 * 1_000_000  # 30-minute session gap, microseconds
 
+# The daily event series, one definition per engine: per (event_type,
+# day) the exact-sum/count mean of value. `DAILY_EVENTS_SQL` is the
+# oracle CTE `daily(et, day_no, v)`; it follows `WITH` or
+# `WITH RECURSIVE`.
+DAILY_EVENTS_SQL = """daily AS (
+  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
+         CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS v
+  FROM events GROUP BY 1, 2
+)"""
+
+
+def daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lazy `(et, day_no, v)` frame, the Spark twin of `DAILY_EVENTS_SQL`.
+
+    Day numbers are integral `unix_micros div 86400000000` (DuckDB
+    `epoch_us // 86400000000`; epochs here are non-negative, so the two
+    divisions agree). The mean is a DECIMAL sum over a count, bitwise
+    equal on both engines. Callers that need a BIGINT lattice
+    (`FLOOR(v * 1e6 + 0.5)`) apply it in their own projection; Catalyst
+    folds it back into the aggregate."""
+    return (
+        load(spark, sf_dir, "events")
+        .groupBy(
+            F.expr("event_type AS et"),
+            F.expr("unix_micros(ts) div 86400000000 AS day_no"),
+        )
+        .agg(
+            F.expr(
+                "CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE)"
+                " / COUNT(*) AS v"
+            )
+        )
+    )
+
 
 @query(
     "win_sessionize",
@@ -1006,11 +1040,7 @@ def ts_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
 _XCORR_LAGS = 3  # lead-lag window: -3 .. +3 days
 
 _XCORR_SQL = f"""
-WITH daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS v
-  FROM events GROUP BY 1, 2
-),
+WITH {DAILY_EVENTS_SQL},
 lags AS (
   SELECT UNNEST(generate_series(-{_XCORR_LAGS}, {_XCORR_LAGS})) AS lag
 ),
@@ -1050,7 +1080,7 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair is the shippable signal; the full matrix is emitted so the
     consumer sees the contrast.
 
-    Determinism: daily means are exact-sum/count doubles; each (x, y)
+    Determinism: `daily_events` means are bitwise; each (x, y)
     product is one IEEE op snapped to DECIMAL(30,15); the power sums
     are order-exact; GREATEST(.., 0) guards the sqrt against
     cancellation-negative variances (DuckDB hard-errors where Spark
@@ -1062,16 +1092,7 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial agg; the lag join runs grain x lags (days x types x 7
     rows), never fact rows — at 100 TB this is the same plan with a
     bigger first exchange and an unchanged tail."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        (
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-        ).alias("v")
-    )
+    daily = daily_events(spark, sf_dir)
     lags = spark.range(-_XCORR_LAGS, _XCORR_LAGS + 1).select(
         F.col("id").cast("int").alias("lag")
     )
@@ -1121,11 +1142,7 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PERIODS = (7, 14, 30)  # candidate cycle lengths, days
 
 _PERIOD_SQL = f"""
-WITH daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS v
-  FROM events GROUP BY 1, 2
-),
+WITH {DAILY_EVENTS_SQL},
 g AS (
   SELECT et, COUNT(*) AS n,
          CAST(SUM(CAST(v AS DECIMAL(30,15))) AS DOUBLE) AS sv,
@@ -1175,16 +1192,7 @@ def ts_periodicity_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: facts reduce to (type, day) in one partial agg; phase sums
     are a (type, period, phase) grain aggregate (≤ 51 rows per type);
     everything downstream is K-row algebra."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        (
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-        ).alias("v")
-    )
+    daily = daily_events(spark, sf_dir)
     g = daily.groupBy("et").agg(
         F.count("*").alias("n"),
         F.sum(F.col("v").cast("decimal(30,15)")).cast("double").alias("sv"),
@@ -1241,12 +1249,8 @@ def ts_periodicity_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MK_SQL = """
-WITH daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS v
-  FROM events GROUP BY 1, 2
-),
+_MK_SQL = f"""
+WITH {DAILY_EVENTS_SQL},
 pairs AS (
   SELECT a.et,
          CASE WHEN b.v > a.v THEN 1 WHEN b.v < a.v THEN -1 ELSE 0 END AS sgn
@@ -1304,16 +1308,7 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference never tests its price trends
     (fetch_data.py has no analytics at all); this is the missing
     monitoring primitive for its 3-hourly harvest loop."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        (
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-        ).alias("v")
-    )
+    daily = daily_events(spark, sf_dir)
     a = daily.alias("a")
     b = daily.alias("b")
     pairs = a.join(
@@ -1376,11 +1371,7 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LTTB_B = 24  # output buckets per series
 
 _LTTB_SQL = f"""
-WITH daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS v
-  FROM events GROUP BY 1, 2
-),
+WITH {DAILY_EVENTS_SQL},
 n AS (SELECT et, CAST(COUNT(*) AS BIGINT) AS n FROM daily GROUP BY 1),
 r AS (
   SELECT d.et, d.day_no, d.v, n.n,
@@ -1459,16 +1450,7 @@ def ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
     series per (metric, year) stays a few hundred points while raw
     events are billions — the whole point of shipping the downsample
     as an operator."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        (
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-        ).alias("v")
-    )
+    daily = daily_events(spark, sf_dir)
     n = daily.groupBy("et").agg(F.count("*").cast("bigint").alias("n"))
     w_rn = Window.partitionBy("et").orderBy("day_no")
     b = (
@@ -1520,12 +1502,8 @@ def ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GRANGER_SQL = """
-WITH daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS v
-  FROM events GROUP BY 1, 2
-),
+_GRANGER_SQL = f"""
+WITH {DAILY_EVENTS_SQL},
 rows_ AS (
   SELECT dx.et AS cause, dy.et AS effect,
          dy.v AS y, dl.v AS u, dx.v AS x
@@ -1589,7 +1567,7 @@ def ts_granger_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinguish. (Granger causality is predictive, not mechanistic —
     the standard caveat rides with the name.)
 
-    Determinism: daily means are exact-ratio doubles; every product
+    Determinism: `daily_events` means are bitwise; every product
     moment snaps to DECIMAL(30,15) before its order-exact sum (the
     ts_cross_correlation pattern); the normal-equation solve is one
     fixed IEEE tree and the outputs take ROUND(6); degenerate pairs
@@ -1600,16 +1578,7 @@ def ts_granger_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
     triple alignment join is day-blocked (types per day x types —
     grain-bounded like ts_theil_sen's pair join); moments are one
     partial agg per ordered pair; the solve is K-row algebra."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        (
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-        ).alias("v")
-    )
+    daily = daily_events(spark, sf_dir)
     dy = daily.select(
         F.col("et").alias("effect"), "day_no", F.col("v").alias("y")
     )
@@ -1692,11 +1661,7 @@ def ts_granger_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HURST_NS = (8, 16, 32, 64)  # R/S window sizes (log2 = 3..6, exact x)
 
 _HURST_SQL = f"""
-WITH daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS v
-  FROM events GROUP BY 1, 2
-),
+WITH {DAILY_EVENTS_SQL},
 lat AS (
   SELECT et, day_no, v,
          CAST(FLOOR(v * 1e6 + 0.5) AS BIGINT) AS vl,
@@ -1793,16 +1758,7 @@ def ts_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: facts reduce to (type, day); ranks and block windows are
     calendar-bounded per series (grain exemption); everything after
     full_blocks is (type, scale, block) grain algebra."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        (
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-        ).alias("v")
-    )
+    daily = daily_events(spark, sf_dir)
     w_rk = Window.partitionBy("et").orderBy("day_no")
     lat = daily.select(
         "et",
@@ -1932,11 +1888,7 @@ def ts_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
 _VAR_PCT = 5  # tail percent: VaR/CVaR at the 95% confidence level
 
 _VAR_SQL = f"""
-WITH daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS v
-  FROM events GROUP BY 1, 2
-),
+WITH {DAILY_EVENTS_SQL},
 ret AS (
   SELECT et, day_no,
          v - LAG(v) OVER (PARTITION BY et ORDER BY day_no) AS r
@@ -1972,7 +1924,7 @@ def ts_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     first differences (no division — the exact-ratio discipline), so
     a price series' 'loss' is its day-over-day drop.
 
-    Determinism: daily means are exact-ratio doubles (bitwise), so
+    Determinism: `daily_events` means are bitwise, so
     differences and their (r, day_no) rank order are identical both
     engines; k is pure integer ceiling arithmetic ((n·5+99) div 100);
     VaR is a VALUE from the data (no interpolation); CVaR accumulates
@@ -1984,16 +1936,7 @@ def ts_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one partial agg to (type, day); the rank window rides the
     per-series calendar grain (the CLAUDE.md grain-bounded exemption);
     the tail filter and moments are K-row aggregates."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        (
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-        ).alias("v")
-    )
+    daily = daily_events(spark, sf_dir)
     w = Window.partitionBy("et").orderBy("day_no")
     ret = daily.select(
         "et", "day_no", (F.col("v") - F.lag("v").over(w)).alias("r")
@@ -2026,11 +1969,7 @@ def ts_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HOLT_H = 7  # forecast horizon (days ahead)
 
 _HOLT_SQL = f"""
-WITH RECURSIVE daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS v
-  FROM events GROUP BY 1, 2
-),
+WITH RECURSIVE {DAILY_EVENTS_SQL},
 lat AS (
   SELECT et, CAST(FLOOR(v * 1e6 + 0.5) AS BIGINT) AS lv,
          ROW_NUMBER() OVER (PARTITION BY et ORDER BY day_no) AS rk,
@@ -2086,16 +2025,7 @@ def ts_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     textbook mapGroups shape."""
     import pandas as pd
 
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        (
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-        ).alias("v")
-    )
+    daily = daily_events(spark, sf_dir)
     lat = daily.select(
         "et",
         "day_no",
@@ -2130,12 +2060,8 @@ def ts_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RUNS_SQL = """
-WITH daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS v
-  FROM events GROUP BY 1, 2
-),
+_RUNS_SQL = f"""
+WITH {DAILY_EVENTS_SQL},
 mu AS (
   SELECT et,
          CAST(SUM(CAST(v AS DECIMAL(30,15))) AS DOUBLE) / COUNT(*) AS m
@@ -2193,16 +2119,7 @@ def ts_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one partial agg to (type, day), a K-row moment broadcast,
     one lag window on the calendar-bounded series grain."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        (
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-        ).alias("v")
-    )
+    daily = daily_events(spark, sf_dir)
     mu = daily.groupBy("et").agg(
         (
             F.sum(F.col("v").cast("decimal(30,15)")).cast("double")
@@ -2252,12 +2169,8 @@ def ts_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ADF_SQL = """
-WITH daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS v
-  FROM events GROUP BY 1, 2
-),
+_ADF_SQL = f"""
+WITH {DAILY_EVENTS_SQL},
 p AS (
   SELECT et, day_no, v,
          LAG(v) OVER (PARTITION BY et ORDER BY day_no) AS yl
@@ -2306,7 +2219,7 @@ def ts_adf_unit_root(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant adds Δy lags as extra regressors to the same
     sufficient-statistics solve.
 
-    Determinism: daily means are exact-ratio doubles; every product
+    Determinism: `daily_events` means are bitwise; every product
     moment snaps to DECIMAL(30,15) before its order-exact sum; ρ and τ
     are ratios of such sums — the summed moments carry ~17+ significant
     digits (the r7 ts_twap DECIMAL→DOUBLE 1-ulp class), so both
@@ -2316,16 +2229,7 @@ def ts_adf_unit_root(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one partial agg to (type, day), one lag window on the
     calendar-bounded series grain, one K-row moment aggregate, scalar
     algebra."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        (
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-        ).alias("v")
-    )
+    daily = daily_events(spark, sf_dir)
     w = Window.partitionBy("et").orderBy("day_no")
     r = (
         daily.select(
@@ -2392,11 +2296,7 @@ def _hw_sql() -> str:
         f"WHEN {j} THEN s{j}" for j in range(7)
     ) + " END"
     return f"""
-WITH RECURSIVE daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS v
-  FROM events GROUP BY 1, 2
-),
+WITH RECURSIVE {DAILY_EVENTS_SQL},
 lat AS (
   SELECT et, day_no, CAST(FLOOR(v * 1e6 + 0.5) AS BIGINT) AS lv,
          ROW_NUMBER() OVER (PARTITION BY et ORDER BY day_no) AS rk,
@@ -2464,16 +2364,7 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel across series — the mapGroups shape."""
     import pandas as pd
 
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        (
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-        ).alias("v")
-    )
+    daily = daily_events(spark, sf_dir)
     lat = daily.select(
         "et",
         "day_no",
@@ -2611,12 +2502,8 @@ def ts_quantile_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COINT_SQL = """
-WITH daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS v
-  FROM events GROUP BY 1, 2
-),
+_COINT_SQL = f"""
+WITH {DAILY_EVENTS_SQL},
 pair AS (
   SELECT a.et AS ye, b.et AS xe, a.day_no, a.v AS y, b.v AS x
   FROM daily a JOIN daily b
@@ -2686,7 +2573,7 @@ def ts_cointegration(spark: SparkSession, sf_dir: str) -> DataFrame:
     levels): ρ = Σz₋Δz / Σz₋², τ = ρ/SE from the same exact-moment
     algebra, GREATEST-guarding the variance (CLAUDE.md sqrt rule).
 
-    Determinism: daily means are exact-ratio doubles; α, β are ratios
+    Determinism: `daily_events` means are bitwise; α, β are ratios
     of order-exact DECIMAL sums — identical doubles both engines — so
     every residual is the same IEEE expression; second-stage moments
     snap to DECIMAL(30,15) before summation; both reported statistics
@@ -2696,17 +2583,8 @@ def ts_cointegration(spark: SparkSession, sf_dir: str) -> DataFrame:
     K-series × calendar rows, the ts_granger_causality shape measured
     sub-linear (SCALING.md) — and both moment passes are partial
     aggs; the coefficient frame is K²-row broadcast."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        (
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-        ).alias("v")
-    ).localCheckpoint(eager=True)  # feeds both sides of the alignment
-    # join and the residual pass
+    # feeds both sides of the alignment join and the residual pass
+    daily = daily_events(spark, sf_dir).localCheckpoint(eager=True)
     a = daily.select(
         F.col("et").alias("ye"), "day_no", F.col("v").alias("y")
     )
@@ -2787,11 +2665,7 @@ _KAL_R = 4.0  # observation variance
 # Riccati fixed point: P'inf = (Q + sqrt(Q^2 + 4QR)) / 2, Kinf = P'/(P'+R)
 
 _KALMAN_SQL = f"""
-WITH RECURSIVE daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS v
-  FROM events GROUP BY 1, 2
-),
+WITH RECURSIVE {DAILY_EVENTS_SQL},
 lat AS (
   SELECT et,
          CAST(CAST(FLOOR(v * 1e6 + 0.5) AS BIGINT) AS DOUBLE) / 1e6 AS z,
@@ -2839,7 +2713,7 @@ def ts_kalman_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     gain is auditable against the analytic limit it must approach.
 
     Determinism: observations enter on the 1e-6 lattice (FLOOR half-up
-    of the exact-ratio daily mean); every recursion step is a FIXED
+    of the `daily_events` mean); every recursion step is a FIXED
     sequential chain of IEEE basic ops (+,−,×,÷ — correctly rounded
     identically in Python binary64 and DuckDB DOUBLE; no transcendental,
     no reordering freedom), so x/P/K are bitwise identical across
@@ -2857,16 +2731,7 @@ def ts_kalman_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     each recursion touches only its own ≤n_days rows."""
     import pandas as pd
 
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        (
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-        ).alias("v")
-    )
+    daily = daily_events(spark, sf_dir)
     lat = daily.select(
         "et",
         "day_no",
@@ -2945,11 +2810,7 @@ def _haar_sql() -> str:
         for lv in range(1, _HAAR_LEVELS + 1)
     )
     return f"""
-WITH daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS v
-  FROM events GROUP BY 1, 2
-),
+WITH {DAILY_EVENTS_SQL},
 lat AS (
   SELECT et, CAST(FLOOR(v * 1e3 + 0.5) AS BIGINT) AS lv,
          ROW_NUMBER() OVER (PARTITION BY et ORDER BY day_no) AS rk
@@ -3009,16 +2870,7 @@ def ts_wavelet_haar(spark: SparkSession, sf_dir: str) -> DataFrame:
     second GROUP BY (type, level) sums their energies and a per-type
     window adds the share denominator. L·n rows per series, no
     iteration state, no skew (grain is the bounded calendar)."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        (
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-        ).alias("v")
-    )
+    daily = daily_events(spark, sf_dir)
     ranked = daily.select(
         "et",
         (F.row_number().over(Window.partitionBy("et").orderBy("day_no")) - 1)
@@ -3095,15 +2947,13 @@ def _pacf_sql() -> str:
         for k in range(1, _PACF_K + 1)
     )
     return f"""
-WITH daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(FLOOR((CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE)
-                     / COUNT(*)) * 1e3 + 0.5) AS BIGINT) AS s
-  FROM events GROUP BY 1, 2),
+WITH {DAILY_EVENTS_SQL},
+lat AS (
+  SELECT et, day_no, CAST(FLOOR(v * 1e3 + 0.5) AS BIGINT) AS s FROM daily),
 lagged AS (
   SELECT et, s,
 {leads}
-  FROM daily),
+  FROM lat),
 g AS (
   SELECT et, CAST(COUNT(*) AS BIGINT) AS n,
          CAST(SUM(s) AS BIGINT) AS s1,
@@ -3180,21 +3030,8 @@ def ts_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily frame (grain-bounded, same exemption as ts_ljung_box), one
     per-type aggregate, then pure scalar algebra on a |types|-row
     frame. Fact rows are touched exactly once."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        F.floor(
-            (
-                F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-                / F.count("*")
-            )
-            * 1e3
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("s")
+    daily = daily_events(spark, sf_dir).selectExpr(
+        "et", "day_no", "CAST(FLOOR(v * 1e3 + 0.5D) AS BIGINT) AS s"
     )
     w = Window.partitionBy("et").orderBy("day_no")
     lagged = daily.select(
@@ -3286,16 +3123,14 @@ def ts_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DTW_BIG = 1 << 60  # unreachable-cell sentinel (path sums stay < 2^40)
 
 _DTW_SQL = f"""
-WITH RECURSIVE daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(FLOOR(CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE)
-                    / COUNT(*) * 1e6 + 0.5) AS BIGINT) AS lv
-  FROM events GROUP BY 1, 2
+WITH RECURSIVE {DAILY_EVENTS_SQL},
+lat AS (
+  SELECT et, day_no, CAST(FLOOR(v * 1e6 + 0.5) AS BIGINT) AS lv FROM daily
 ),
 ser AS MATERIALIZED (
   SELECT et, list(lv ORDER BY day_no) AS arr,
          CAST(COUNT(*) AS BIGINT) AS n
-  FROM daily GROUP BY 1
+  FROM lat GROUP BY 1
 ),
 pairs AS MATERIALIZED (
   SELECT a.et AS ta, b.et AS tb, a.arr AS aa, b.arr AS bb,
@@ -3364,19 +3199,8 @@ def ts_dtw_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        F.floor(
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-            * 1e6
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("lv")
+    daily = daily_events(spark, sf_dir).selectExpr(
+        "et", "day_no", "CAST(FLOOR(v * 1e6 + 0.5D) AS BIGINT) AS lv"
     )
     ser = daily.groupBy("et").agg(
         F.expr(
@@ -3441,16 +3265,14 @@ def ts_dtw_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GARCH_W = 10_000_000_000  # omega on the 1e12 sigma^2-lattice (0.01)
 
 _GARCH_SQL = f"""
-WITH RECURSIVE daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(FLOOR(CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE)
-                    / COUNT(*) * 1e6 + 0.5) AS BIGINT) AS lv
-  FROM events GROUP BY 1, 2
+WITH RECURSIVE {DAILY_EVENTS_SQL},
+lat AS (
+  SELECT et, day_no, CAST(FLOOR(v * 1e6 + 0.5) AS BIGINT) AS lv FROM daily
 ),
 dif AS (
   SELECT et, day_no,
          lv - LAG(lv) OVER (PARTITION BY et ORDER BY day_no) AS r
-  FROM daily
+  FROM lat
 ),
 ret AS MATERIALIZED (
   SELECT et, r,
@@ -3517,19 +3339,8 @@ def ts_garch_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     series — the textbook mapGroups shape."""
     import pandas as pd
 
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        F.floor(
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-            * 1e6
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("lv")
+    daily = daily_events(spark, sf_dir).selectExpr(
+        "et", "day_no", "CAST(FLOOR(v * 1e6 + 0.5D) AS BIGINT) AS lv"
     )
 
     def garch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -3578,16 +3389,14 @@ _SAX_W = 5  # days per PAA segment
 
 
 _SAX_SQL = f"""
-WITH daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(FLOOR(CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE)
-                    / COUNT(*) * 1e6 + 0.5) AS BIGINT) AS lv
-  FROM events GROUP BY 1, 2
+WITH {DAILY_EVENTS_SQL},
+lat AS (
+  SELECT et, day_no, CAST(FLOOR(v * 1e6 + 0.5) AS BIGINT) AS lv FROM daily
 ),
 rk AS (
   SELECT et, lv,
          ROW_NUMBER() OVER (PARTITION BY et ORDER BY day_no) - 1 AS r
-  FROM daily
+  FROM lat
 ),
 mom AS (
   SELECT et, CAST(COUNT(*) AS BIGINT) AS n,
@@ -3659,19 +3468,8 @@ def ts_sax_symbolic(spark: SparkSession, sf_dir: str) -> DataFrame:
     window rides the saturating per-series calendar grain
     (grain-bounded exemption); segments and words are K-row frames.
     The SAX word is a plain string column — atomic output."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        F.floor(
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-            * 1e6
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("lv")
+    daily = daily_events(spark, sf_dir).selectExpr(
+        "et", "day_no", "CAST(FLOOR(v * 1e6 + 0.5D) AS BIGINT) AS lv"
     )
     w = Window.partitionBy("et").orderBy("day_no")
     rk = daily.select(
@@ -3737,16 +3535,14 @@ _VIT_STAY = 2  # max-plus transition bonus for staying in a regime
 _VIT_MATCH = 3  # emission bonus when the day's sign matches the regime
 
 _VIT_SQL = f"""
-WITH RECURSIVE daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(FLOOR(CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE)
-                    / COUNT(*) * 1e6 + 0.5) AS BIGINT) AS lv
-  FROM events GROUP BY 1, 2
+WITH RECURSIVE {DAILY_EVENTS_SQL},
+lat AS (
+  SELECT et, day_no, CAST(FLOOR(v * 1e6 + 0.5) AS BIGINT) AS lv FROM daily
 ),
 dif AS (
   SELECT et, day_no,
          lv - LAG(lv) OVER (PARTITION BY et ORDER BY day_no) AS r
-  FROM daily
+  FROM lat
 ),
 obs AS MATERIALIZED (
   SELECT et, day_no, CASE WHEN r > 0 THEN 1 ELSE 0 END AS o,
@@ -3816,19 +3612,8 @@ def ts_regime_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
     is day-grain long form, all atomic columns."""
     import pandas as pd
 
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        F.floor(
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-            * 1e6
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("lv")
+    daily = daily_events(spark, sf_dir).selectExpr(
+        "et", "day_no", "CAST(FLOOR(v * 1e6 + 0.5D) AS BIGINT) AS lv"
     )
 
     def viterbi(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -3886,17 +3671,15 @@ def ts_regime_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PE_NORM = "LN(6.0)"  # 3! ordinal patterns → max-entropy normalizer
 
 _PE_SQL = f"""
-WITH daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(FLOOR(CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE)
-                    / COUNT(*) * 1e6 + 0.5) AS BIGINT) AS lv
-  FROM events GROUP BY 1, 2
+WITH {DAILY_EVENTS_SQL},
+lat AS (
+  SELECT et, day_no, CAST(FLOOR(v * 1e6 + 0.5) AS BIGINT) AS lv FROM daily
 ),
 tri AS (
   SELECT et, lv AS a,
          LEAD(lv, 1) OVER (PARTITION BY et ORDER BY day_no) AS b,
          LEAD(lv, 2) OVER (PARTITION BY et ORDER BY day_no) AS c
-  FROM daily
+  FROM lat
 ),
 pat AS (
   SELECT et,
@@ -3966,19 +3749,8 @@ def ts_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: facts reduce to (type, day) in one partial agg; LEAD rides
     the saturating calendar grain; everything after is a ≤27-row
     frame per series."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        F.floor(
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-            * 1e6
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("lv")
+    daily = daily_events(spark, sf_dir).selectExpr(
+        "et", "day_no", "CAST(FLOOR(v * 1e6 + 0.5D) AS BIGINT) AS lv"
     )
     w = Window.partitionBy("et").orderBy("day_no")
     tri = daily.select(

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from ..functions.exact import dsum, sql_dsum
 from ..registry import query
 from ..tables import load
+from .timeseries import DAILY_EVENTS_SQL, daily_events
 
 
 def _daily_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -633,11 +634,7 @@ def win_event_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RSL_W = 14  # rolling frame: current day + 14 preceding = 15 days
 
 _RSL_SQL = f"""
-WITH daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS v
-  FROM events GROUP BY 1, 2
-),
+WITH {DAILY_EVENTS_SQL},
 lat AS (
   SELECT et, day_no, v,
          CAST(FLOOR(v * 1e6 + 0.5) AS BIGINT) AS yl
@@ -681,16 +678,7 @@ def win_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: facts reduce to (type, day) grain first; the window runs
     per type over calendar-bounded rows (grain-bounded exemption)."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        (
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-        ).alias("v")
-    )
+    daily = daily_events(spark, sf_dir)
     lat = daily.withColumn(
         "yl", F.floor(F.col("v") * 1e6 + F.lit(0.5)).cast("bigint")
     )
@@ -724,12 +712,8 @@ def win_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SPC_SQL = """
-WITH daily AS (
-  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS v
-  FROM events GROUP BY 1, 2
-),
+_SPC_SQL = f"""
+WITH {DAILY_EVENTS_SQL},
 g AS (
   SELECT et, CAST(COUNT(*) AS BIGINT) AS n,
          CAST(SUM(CAST(v AS DECIMAL(30,15))) AS DOUBLE) AS sv,
@@ -813,16 +797,7 @@ def win_spc_runs_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one partial agg to (type, day), one broadcast of K moment
     rows, three bounded-frame windows on the natural series partition
     key — grain-bounded (calendar) per series."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("et"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_no"),
-    ).agg(
-        (
-            F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
-            / F.count("*")
-        ).alias("v")
-    )
+    daily = daily_events(spark, sf_dir)
     g = daily.groupBy("et").agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum(F.col("v").cast("decimal(30,15)")).cast("double").alias("sv"),

@@ -3,6 +3,8 @@ commits to, pinned against the actual Catalyst output."""
 
 from __future__ import annotations
 
+import pytest
+
 from agri_market_data_pipeline_spark.plans import (
     has_broadcast_join,
     has_partial_agg,
@@ -14,6 +16,19 @@ from agri_market_data_pipeline_spark.registry import all_queries
 
 def _q(name):
     return all_queries()[name]
+
+
+@pytest.fixture(scope="module")
+def registry_plans(spark, sf_dir):
+    """Every registered query built once, shared by the registry-wide
+    plan checks below. Plan build only for batch queries; the streaming
+    ops run their bounded replay, so keep the test sf small."""
+    import __spark_entry__ as entrymod
+
+    return [
+        (name, fn(spark, sf_dir))
+        for name, fn in sorted(entrymod.queries().items())
+    ]
 
 
 def test_scan_parquet_pushes_filter_and_prunes_columns(spark, sf_dir):
@@ -163,20 +178,16 @@ def test_bloom_runtime_filter_injected_and_scoped(spark, sf_dir):
     assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == before
 
 
-def test_no_query_emits_non_atomic_columns(spark):
+def test_no_query_emits_non_atomic_columns(registry_plans):
     """Driver-canonicalizer guard: pandas-based result comparators
     cannot hash array/map/struct cells (numpy arrays are unhashable in
     sort_values), so NO registered query may emit one — serialized
     strings or long form instead (tools/schema_audit.py is the ad-hoc
-    twin). Plan build only for batch queries; the streaming ops run
-    their bounded replay, so point everything at the smallest sf."""
+    twin)."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    import __spark_entry__ as entrymod
-
     bad = []
-    for name, fn in sorted(entrymod.queries().items()):
-        df = fn(spark, "/root/testdata/sf0.001")
+    for name, df in registry_plans:
         for f in df.schema.fields:
             if isinstance(f.dataType, (ArrayType, MapType, StructType)):
                 bad.append(f"{name}.{f.name}: {f.dataType.simpleString()}")
@@ -300,7 +311,7 @@ def test_sim_knn_join_recall_reuses_trained_quantizer(spark, sf_dir):
     assert with_twin.columns == ["n_hits", "n_exact", "recall"]
 
 
-def test_no_registered_query_has_unbounded_global_window(spark):
+def test_no_registered_query_has_unbounded_global_window(registry_plans):
     """Engine-wide invariant (VERDICT r3 item 3 + r10 item 6): an
     empty-partition Window may only rank a limit/aggregate-bounded
     frame — over a fact scan it is a latent single-task global sort at
@@ -313,7 +324,6 @@ def test_no_registered_query_has_unbounded_global_window(spark):
     import importlib.util
     import os
 
-    import __spark_entry__ as entrymod
     from agri_market_data_pipeline_spark.plans.audit import (
         global_window_bounds,
     )
@@ -326,8 +336,7 @@ def test_no_registered_query_has_unbounded_global_window(spark):
     spec.loader.exec_module(pa)
 
     bad = []
-    for name, fn in sorted(entrymod.queries().items()):
-        df = fn(spark, "/root/testdata/sf0.001")
+    for name, df in registry_plans:
         kinds = global_window_bounds(df)
         for kind, w in kinds:
             if kind == "unbounded":

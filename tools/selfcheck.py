@@ -9,9 +9,12 @@ DuckDB at the given sf dir, then compares: row count, column names
 
 from __future__ import annotations
 
+import atexit
 import math
 import os
+import shutil
 import sys
+import tempfile
 import time
 import traceback
 
@@ -38,6 +41,28 @@ def norm_cell(v):
     return str(v)
 
 
+def duckdb_memory_limit() -> str:
+    """DuckDB's memory limit for the oracle side: an eighth of physical
+    memory. DuckDB's default, 80% of RAM, let three graph oracles grow
+    one sf0.1 selfcheck to 6.9 GB, and the kernel killed it beside a
+    second run. An eighth leaves room for two selfchecks, each beside
+    its get_spark JVM (heap a quarter of RAM, `default_driver_memory`);
+    what does not fit spills to the temp directory."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{ram_mb // 8}MB"
+
+
+def duckdb_temp_dir() -> str:
+    """A fresh spill directory under the first of SPARK_LOCAL_DIRS (the
+    system temp directory when unset), removed when the process exits."""
+    base = os.environ.get("SPARK_LOCAL_DIRS") or tempfile.gettempdir()
+    base = base.split(",")[0]
+    os.makedirs(base, exist_ok=True)
+    spill = tempfile.mkdtemp(prefix="selfcheck-duckdb-", dir=base)
+    atexit.register(shutil.rmtree, spill, True)
+    return spill
+
+
 def canon(rows, cols):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     out = []
@@ -61,7 +86,10 @@ def main() -> int:
     hostile = bool(os.environ.get("SPARK_GRAFT_HOSTILE"))
     if hostile:
         print("HOSTILE session: Asia/Kolkata + ANSI re-set before EVERY query")
-    con = duckdb.connect()
+    con = duckdb.connect(config={
+        "memory_limit": duckdb_memory_limit(),
+        "temp_directory": duckdb_temp_dir(),
+    })
     for t in TABLE_NAMES:
         con.sql(
             f"CREATE VIEW {t} AS SELECT * FROM '{os.path.join(sf_dir, t + '.parquet')}'"
