@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import spark_cosine_expr
+from ..memo import pin
 from ..operators.similarity import _argmax_cell, _cells_arr
 from ..tables import load_parallel
 
@@ -143,8 +144,8 @@ def build_index(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     """Stages 1-4: chunk, embed, train, write the cell-partitioned
     index. Returns the build report."""
     ch = chunk_docs(spark, sf_dir)
-    vecs = embed_chunks(ch).localCheckpoint(eager=True)  # reused 3×
-    cells = _train_cells(vecs, KM_ROUNDS).localCheckpoint(eager=True)
+    vecs = pin(embed_chunks(ch))  # reused 3×
+    cells = pin(_train_cells(vecs, KM_ROUNDS))
     arr = _cells_arr(cells)
     assigned = vecs.join(F.broadcast(arr)).select(
         "chunk_id",

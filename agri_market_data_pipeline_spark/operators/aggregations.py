@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import davg, dsum, sql_davg, sql_dsum
+from ..memo import pin
 from ..registry import query
 from ..tables import load
 
@@ -1453,7 +1454,7 @@ def incr_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("h"),
     ).select("d", "h.i", "h.bucket")
     daily = rows_h.groupBy("d", "i", "bucket").agg(F.count("*").alias("c"))
-    daily = daily.localCheckpoint(eager=True)  # feeds three aggregates
+    daily = pin(daily)  # feeds three aggregates
     merged = daily.groupBy("i", "bucket").agg(F.sum("c").alias("mc"))
     direct = rows_h.groupBy("i", "bucket").agg(F.count("*").alias("dc"))
     cmp = merged.join(direct, ["i", "bucket"]).agg(
@@ -1948,7 +1949,7 @@ def incr_minhash_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = d.withColumn("a", F.split(F.col("text"), " ")).filter(
         F.size("a") >= 3
     )
-    sh = (
+    sh = pin(  # feeds hashes, sets, cnt, inter
         x.select(
             "source",
             (F.col("doc_id") % _MHM_SHARDS).alias("shard"),
@@ -1961,7 +1962,6 @@ def incr_minhash_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("s"),
         )
         .distinct()
-        .localCheckpoint(eager=True)  # feeds hashes, sets, cnt, inter
     )
 
     hv = (
@@ -1977,10 +1977,9 @@ def incr_minhash_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ONE md5 pass over the distinct shingles; the 16 components are
     # linear permutations of it, as wide columns.
-    hw = (
+    hw = pin(  # feeds pshard AND direct
         sh.select("source", "shard", hv)
         .select("source", "shard", *[_h(i) for i in range(_MHM_H)])
-        .localCheckpoint(eager=True)  # feeds pshard AND direct
     )
 
     def _unpivot(df: DataFrame, keys: list, out: str) -> DataFrame:
@@ -1997,7 +1996,7 @@ def incr_minhash_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mn",
     )
     merged = pshard.groupBy("source", "i").agg(F.min("mn").alias("sig"))
-    merged = merged.localCheckpoint(eager=True)  # feeds eq + both est sides
+    merged = pin(merged)  # feeds eq + both est sides
     direct = _unpivot(
         hw.groupBy("source").agg(
             *[F.min(f"h{i}").alias(f"h{i}") for i in range(_MHM_H)]
@@ -2433,35 +2432,26 @@ def agg_theta_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern). Exact truth columns cost the audit join at test SFs and
     are dropped in production."""
     o = load(spark, sf_dir, "orders")
-    ca = (
+    ca = pin(
         o.filter(F.expr("o_orderdate < TIMESTAMP '1998-01-01'"))
         .select(F.col("o_custkey").alias("u"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    cb = (
+    cb = pin(
         o.filter(F.expr("o_orderdate >= TIMESTAMP '1998-01-01'"))
         .select(F.col("o_custkey").alias("u"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     def sketch(c: DataFrame) -> DataFrame:
-        return (
+        return pin(
             c.select("u", F.expr(_kmv_h("u")).alias("h"))
             .orderBy("h", "u")
             .limit(_KMV_K)
-            .localCheckpoint(eager=True)
         )
 
     sa, sb = sketch(ca), sketch(cb)
-    su = (
-        sa.unionByName(sb)
-        .distinct()
-        .orderBy("h", "u")
-        .limit(_KMV_K)
-        .localCheckpoint(eager=True)
-    )
+    su = sa.unionByName(sb).distinct().orderBy("h", "u").limit(_KMV_K)
     ex = (
         ca.agg(F.count("*").alias("na"))
         .crossJoin(F.broadcast(cb.agg(F.count("*").alias("nb"))))
@@ -2471,6 +2461,8 @@ def agg_theta_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
+    # su and th (read by ovl and the output) stay unpinned: recomputing
+    # them from the pinned K-row sketches measured flat or faster
     th = (
         sa.agg(F.count("*").alias("ka"), F.max("h").alias("ta"))
         .crossJoin(
@@ -2496,7 +2488,6 @@ def agg_theta_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("tm", F.expr("LEAST(ta, tb)"))
     )
-    th = th.localCheckpoint(eager=True)
     ovl = (
         sa.join(sb.withColumnRenamed("h", "hb"), "u", "left")
         .crossJoin(F.broadcast(th.select("tm")))

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import dsum, sql_dsum
+from ..memo import pin
 from ..registry import query
 from ..tables import load
 
@@ -989,7 +990,7 @@ def agg_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("_rn") <= _MB_DEGREE_CAP)
             .drop("_rn")
         )
-    ob = ob.localCheckpoint(eager=False)
+    ob = pin(ob, eager=False)
     n_orders = ob.select("ok").distinct().agg(F.count("*").alias("n"))
     brand_n = ob.groupBy("brand").agg(F.count("*").alias("nb"))
     # r12: explicit N-way repartition for the pair expansion —
@@ -1227,9 +1228,7 @@ def incr_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lead("ts").over(w).alias("valid_to"),
         )
 
-    base = intervals(ev.filter(F.col("ts") < cutoff)).localCheckpoint(
-        eager=True
-    )
+    base = pin(intervals(ev.filter(F.col("ts") < cutoff)))
 
     nb = ev.filter(F.col("ts") >= cutoff)
     cur = base.filter(F.col("valid_to").isNull()).select(
@@ -1254,11 +1253,13 @@ def incr_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("user_id", "event_type", "ts", "event_id")
     )
-    new_iv = nchg.select(
-        "user_id", "event_type",
-        F.col("ts").alias("valid_from"),
-        F.lead("ts").over(w).alias("valid_to"),
-    ).localCheckpoint(eager=True)
+    new_iv = pin(
+        nchg.select(
+            "user_id", "event_type",
+            F.col("ts").alias("valid_from"),
+            F.lead("ts").over(w).alias("valid_to"),
+        )
+    )
 
     first_new = new_iv.groupBy("user_id").agg(
         F.min("valid_from").alias("close_ts")
@@ -2351,7 +2352,7 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_partkey", "l_shipdate", "l_extendedprice", "l_quantity"
     )
     p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    bm = (
+    bm = pin(
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy(
             F.col("p_brand").alias("brand"),
@@ -2359,13 +2360,13 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("mi"),
         )
-        .agg((dsum("l_extendedprice") / dsum("l_quantity")).alias("p"))
+        .agg((dsum("l_extendedprice") / dsum("l_quantity")).alias("p")),
+        eager=False,
         # r12: bm feeds BOTH sides of the pairwise self-join — without
         # the checkpoint each side re-executed the fact scan + join +
         # month aggregation (2 full passes for a ~brands×months-row
         # frame). Lazy localCheckpoint: one fact pass, the self-join
         # reads the materialized grain frame twice (guide §2.4).
-        .localCheckpoint(eager=False)
     )
     a, b = bm.alias("a"), bm.alias("b")
     slopes = a.join(
@@ -3016,17 +3017,16 @@ def agg_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = g.agg(
         F.sum("ng").cast("bigint").alias("n"), F.sum("sg").alias("s")
     )
-    mu = (
-        g.join(F.broadcast(tot))
-        .select(
+    # brand-grain frame; feeds the row scan AND the final reductions —
+    # one group-moment pass total
+    mu = pin(
+        g.join(F.broadcast(tot)).select(
             "grp",
             "ng",
             "n",
             (F.col("sg").cast("double") / F.col("ng")).alias("mug"),
             (F.col("s").cast("double") / F.col("n")).alias("mu"),
         )
-        .localCheckpoint(eager=True)  # brand-grain frame; feeds the row
-        # scan AND the final reductions — one group-moment pass total
     )
 
     def lat_term(mean_col: str) -> Column:
@@ -3079,12 +3079,12 @@ def agg_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.lit(0.5)
         ).cast("bigint")
     ).cast("bigint")
-    lat = per_grp.agg(
+    lat = pin(per_grp.agg(
         within_lat.alias("within_lat"),
         between_lat.alias("between_lat"),
         F.sum("ltt").cast("bigint").alias("ltt_lat"),
         F.max("n").alias("n"),
-    ).localCheckpoint(eager=True)  # 1 row; referenced by three outputs
+    ))  # 1 row; referenced by three outputs
     parts = [
         lat.select(
             F.lit("total").alias("component"),
@@ -3193,7 +3193,7 @@ def agg_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cell self-join is equi on rf with lattice-bounded sides —
     broadcastable, shuffle-free on the fact."""
     li = load(spark, sf_dir, "lineitem")
-    cells = (
+    cells = pin(  # feeds pairs, margins, totals
         li.groupBy(
             F.col("l_returnflag").alias("rf"),
             F.floor(F.col("l_quantity") + 0.5).cast("bigint").alias("x"),
@@ -3202,7 +3202,6 @@ def agg_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("y"),
         )
         .agg(F.count("*").cast("bigint").alias("f"))
-        .localCheckpoint(eager=True)  # feeds pairs, margins, totals
     )
     a = cells.select(
         F.col("rf"), F.col("x"), F.col("y").alias("ya"), F.col("f").alias("fa")
@@ -3386,7 +3385,7 @@ def agg_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
     v = F.floor(F.col("l_extendedprice") * 100).cast("long")
-    g = (
+    g = pin(
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .select(
             F.col("p_brand").alias("brand"),
@@ -3402,13 +3401,13 @@ def agg_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * F.col("v").cast("decimal(19,0)")
             ).alias("sq"),
         )
-        .filter(F.col("n") > 1)
+        .filter(F.col("n") > 1),
+        eager=False,
         # r12: the (brand, arm) moment frame feeds BOTH the R and the N
         # branch of the downstream join — without the checkpoint each
         # branch re-executed the fact scan + broadcast join + partial
         # agg (2 full passes for a ~|brands|×2-row frame). Lazy
         # localCheckpoint: one fact pass (guide §2.4).
-        .localCheckpoint(eager=False)
     )
     mean = F.col("sv").cast("double") / 100 / F.col("n")
     var = F.greatest(
@@ -3455,7 +3454,7 @@ def agg_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(_bh_p_expr("z")).alias("p"),
         )
     )
-    ranked = pv.select(
+    ranked = pin(pv.select(
         "brand",
         "n_r",
         "n_n",
@@ -3463,7 +3462,7 @@ def agg_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p",
         F.row_number().over(Window.orderBy("p", "brand")).alias("rk"),
         F.count("*").over(Window.partitionBy()).alias("m"),
-    ).localCheckpoint(eager=True)  # feeds the k* scan AND the output
+    ))  # feeds the k* scan AND the output
     alpha = float(_BH_ALPHA)
     kk = ranked.agg(
         F.coalesce(
@@ -3582,10 +3581,9 @@ def ml_markov_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("ft"),
         F.lead("event_type").over(w).alias("tt"),
     )
-    trn = (
+    trn = pin(  # feeds tr, outd, and the states
         seq.groupBy("ft", "tt")
         .agg(F.count("*").cast("bigint").alias("c"))
-        .localCheckpoint(eager=True)  # feeds tr, outd, and the states
     )
     tr = trn.filter(F.col("tt").isNotNull())
     outd = tr.groupBy("ft").agg(F.sum("c").alias("o"))
@@ -3752,7 +3750,7 @@ def agg_cuped_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.expr("CAST(xc AS DECIMAL(19,0)) * xc")).alias("sxx"),
         F.sum(F.expr("CAST(yc AS DECIMAL(19,0)) * yc")).alias("syy"),
     )
-    mom = mom.localCheckpoint(eager=True)
+    mom = pin(mom)
     glob = mom.agg(
         F.expr("CAST(SUM(n) AS DOUBLE)").alias("gn"),
         F.expr("CAST(SUM(sx) AS DOUBLE)").alias("gsx"),
@@ -3894,7 +3892,7 @@ def ml_cox_score_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.col("ts").cast("date")).alias("d1"),
         F.count("*").cast("bigint").alias("ec"),
     )
-    span = span.localCheckpoint(eager=True)
+    span = pin(span)
     g = span.agg(
         F.max("d1").alias("gmax"),
         (F.sum("ec").cast("double") / F.count("*")).alias("cmean"),
@@ -3907,7 +3905,7 @@ def ml_cox_score_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("dead"),
         F.expr("CASE WHEN ec > cmean THEN 1 ELSE 0 END").alias("x"),
     )
-    lt = lt.localCheckpoint(eager=True)
+    lt = pin(lt)
     grp = lt.groupBy("lt").agg(
         F.count("*").cast("bigint").alias("n_at"),
         F.sum("x").cast("bigint").alias("x_at"),

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import davg, sql_davg
+from ..memo import pin
 from ..registry import query
 from ..tables import load
 
@@ -69,7 +70,7 @@ def _densified_index(spark: SparkSession, sf_dir: str):
     (range bounds, densify left-join, clamp broadcast) that Spark would
     otherwise recompute as three full orders-table aggregations; the
     forward-fill window runs over the SMALL side only."""
-    idx = _daily_index(spark, sf_dir).localCheckpoint(eager=True)
+    idx = pin(_daily_index(spark, sf_dir))
     rng = idx.groupBy("prio").agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
     dense_days = rng.select(
         "prio", F.explode(F.sequence("d0", "d1")).alias("d")
@@ -396,7 +397,7 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the key's first index day clamp up to it, dates after the
     last drop (inner-forward). Still a zero-shuffle broadcast equi-join
     on the probe side at any scale."""
-    idx = _daily_index(spark, sf_dir).localCheckpoint(eager=True)
+    idx = pin(_daily_index(spark, sf_dir))
     rng = idx.groupBy("prio").agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
     dense_days = rng.select("prio", F.explode(F.sequence("d0", "d1")).alias("d"))
     wbf = (

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..functions.text import SQL_SHINGLES3, kgrams, shingles3, tokens
 from ..functions.vectors import spark_cosine_expr, sql_cosine
 from .. import memo
+from ..memo import pin
 from ..registry import query
 from ..tables import load, load_parallel
 
@@ -126,7 +127,7 @@ def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         ("documents",),
-        lambda: _minhash_bands_build(spark, sf_dir).localCheckpoint(eager=True),
+        lambda: pin(_minhash_bands_build(spark, sf_dir)),
     )
 
 
@@ -321,12 +322,11 @@ def _curation_stage_frames(spark: SparkSession, sf_dir: str):
         keep_exact = gated.groupBy(F.md5("text").alias("h")).agg(
             F.min("doc_id").alias("doc_id")
         )
-        exact = (
+        exact = pin(
             gated.join(keep_exact, "doc_id", "leftsemi")
             .select("doc_id")
-            .localCheckpoint(eager=True)
         )
-        gated_ids = gated.select("doc_id").localCheckpoint(eager=True)
+        gated_ids = pin(gated.select("doc_id"))
         return gated_ids, exact
 
     return memo.cached(_CUR_STAGE_CACHE, spark, sf_dir, ("documents",), build)
@@ -362,7 +362,7 @@ def _connected_components(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame
     doubles per round, so 16 rounds covers diameters past 2^16. Two
     shuffles per round over edges/labels only; lineage truncated per
     round (shared by dedup_cluster and dedup_semantic_cluster)."""
-    edges = (
+    edges = pin(
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionByName(
             pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
@@ -370,13 +370,11 @@ def _connected_components(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame
         # materialize once: pair extraction (LSH band join / blocked
         # cosine join) is the expensive subtree, and every round joins
         # edges twice — without this the loop re-runs it every iteration
-        .localCheckpoint(eager=True)
     )
-    labels = (
+    labels = pin(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(16):  # log-diameter bound; loop exits early at fixpoint
         neighbor_min = (
@@ -396,7 +394,7 @@ def _connected_components(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame
         lab_map = stepped.select(
             F.col("node").alias("pj_node"), F.col("label").alias("pj_label")
         )
-        new_labels = (
+        new_labels = pin(
             stepped.join(lab_map, stepped.label == lab_map.pj_node, "left")
             .select(
                 "node",
@@ -406,7 +404,6 @@ def _connected_components(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame
                 ).alias("label"),
             )
             # truncate lineage each round or the plan grows exponentially
-            .localCheckpoint(eager=True)
         )
         changed = (
             new_labels.alias("n")
@@ -875,12 +872,12 @@ def dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_semantic_cluster",
     oracle=f"""
-WITH RECURSIVE pairs AS (
+WITH RECURSIVE pairs AS MATERIALIZED (
   SELECT a.vec_id AS va, b.vec_id AS vb
   FROM embeddings a
   JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
   WHERE ROUND({sql_cosine('a.embedding', 'b.embedding')}, 6) > 0.3
-), edges AS (
+), edges AS MATERIALIZED (
   SELECT va AS src, vb AS dst FROM pairs
   UNION ALL
   SELECT vb AS src, va AS dst FROM pairs

@@ -26,13 +26,10 @@ vertex state to the edge list + aggregate of messages).
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..memo import pin
 from ..registry import query
 from ..tables import load, max_column_value, max_group_count
 
@@ -134,7 +131,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # e feeds wout AND the join below — materialize the ≤n²-row edge
     # aggregate once so the fact-scale pass never re-executes (Spark
     # shares no subplan results; AQE exchange reuse is best-effort).
-    e = _edges(spark, sf_dir).localCheckpoint(eager=True)
+    e = pin(_edges(spark, sf_dir))
     wout = e.groupBy("src").agg(F.sum("w").alias("wo"))
     ew = e.join(wout, "src")
     nd_row = load(spark, sf_dir, "nation").agg(
@@ -226,7 +223,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     part, building it from the facts, is the same aggregation
     graph_pagerank plans."""
     d = _edges(spark, sf_dir)
-    u = (
+    u = pin(
         d.filter(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
@@ -235,7 +232,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         # one explicit fact pass: u feeds three join legs — without the
         # checkpoint the fact-scale edge build appears three times in
         # the plan (graph_pagerank's argument)
-        .localCheckpoint(eager=True)
     )
     e1 = u.alias("e1")
     e2 = u.alias("e2")
@@ -359,20 +355,18 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").alias("node")
     )
     nd = d.filter(F.col("src") != F.col("dst"))
-    u = (
+    u = pin(
         nd.select("src", "dst")
         .union(nd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .union(nodes.select(F.col("node").alias("src"), F.col("node").alias("dst")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     lbl = nodes.withColumn("lbl", F.col("node"))
     for _ in range(_CC_ROUNDS):
-        lbl = (
+        lbl = pin(
             u.join(F.broadcast(lbl), u.dst == lbl.node)
             .groupBy(F.col("src").alias("node"))
             .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=True)
         )
     nat = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("node"), F.col("n_name").alias("nation")
@@ -426,11 +420,11 @@ def _bp_capped_cust_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repartition("cust") would NOT help: localCheckpoint does not
     # preserve outputPartitioning in Spark 4.1 — measured r12 — and it
     # would defeat the map-side partial distinct.)
-    cp0 = (
+    cp0 = pin(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part"))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
     # degree(cust) = |distinct parts| ≤ orders-per-customer ×
     # lines-per-order, each a memoized single-column partial-agg max —
@@ -603,10 +597,9 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear work, the textbook distributed k-core."""
     # e feeds the threshold scalar AND the pruned edge set — one fact
     # pass via the checkpoint (graph_pagerank's discipline).
-    e = (
+    e = pin(
         _edges(spark, sf_dir)
         .filter(F.col("src") != F.col("dst"))
-        .localCheckpoint(eager=True)
     )
     thr = e.agg((F.sum("w").cast("double") / F.count("*")).alias("t"))
     ue = (
@@ -761,11 +754,10 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     On an open-domain graph the Pregel-on-relational loop with
     per-round materialization returns (dedup_cluster's shape)."""
     _assert_node_radix(spark, sf_dir, 1024, "graph_label_propagation")
-    edges = (
+    edges = pin(
         _edges(spark, sf_dir)
         .filter(F.col("src") != F.col("dst"))
         # feeds both unionAll branches: fact pass runs once
-        .localCheckpoint(eager=True)
     )
     und = (
         edges.select(
@@ -838,33 +830,6 @@ aggregate(
 
 _MSB_ROUNDS = 4  # Boruvka halves components: 25 -> <=12 -> <=6 -> <=3 -> 1
 _MSB_JUMPS = 5   # pointer-jumping doublings: 2^5 = 32 > n covers any chain
-
-
-_STATE_DIRS: list[str] = []
-
-
-def _sweep_state_dirs() -> None:
-    """Remove every temp-parquet state dir this process created; wired
-    to atexit so repeated selfcheck/bench runs don't accumulate
-    orphaned graph_state_* dirs in tmp (ADVICE r8)."""
-    while _STATE_DIRS:
-        shutil.rmtree(_STATE_DIRS.pop(), ignore_errors=True)
-
-
-atexit.register(_sweep_state_dirs)
-
-
-def _materialized(df: DataFrame) -> DataFrame:
-    """Temp-parquet round-trip for a SMALL iterative-state frame: cuts
-    both lineage AND the checkpoint-rewritten statistics (see the
-    stats-squaring note in graph_max_spanning_backbone). The directory
-    must remain readable while the returned plan is consumed — later
-    rounds' state derives from it lazily — so dirs are swept at
-    PROCESS exit (atexit), not per call."""
-    out = tempfile.mkdtemp(prefix="graph_state_")
-    _STATE_DIRS.append(out)
-    df.write.mode("overwrite").parquet(out)
-    return df.sparkSession.read.parquet(out)
 
 
 def _assert_node_radix(
@@ -980,7 +945,7 @@ def graph_max_spanning_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain with the same halving guarantee."""
     _assert_node_radix(spark, sf_dir, 32, "graph_max_spanning_backbone")
     e0 = _edges(spark, sf_dir).filter(F.col("src") != F.col("dst"))
-    e = (
+    e = pin(
         e0.select(
             F.least("src", "dst").alias("u"),
             F.greatest("src", "dst").alias("v"),
@@ -988,7 +953,6 @@ def graph_max_spanning_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("u", "v")
         .agg(F.sum("w").cast("bigint").alias("w"))
-        .localCheckpoint(eager=True)
     )
     nodes = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("node"), "n_name"
@@ -1012,7 +976,7 @@ def graph_max_spanning_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("cb").alias("c"), F.col("ca").alias("oth"), "w", "u", "v"
             )
         )
-        pick = (
+        pick = pin(
             dirb.groupBy("c")
             .agg(
                 F.max_by("oth", key).alias("oth"),
@@ -1020,7 +984,6 @@ def graph_max_spanning_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max_by("v", key).alias("v"),
                 F.max_by("w", key).alias("w"),
             )
-            .localCheckpoint(eager=True)
         )
         ptr = (
             comp.select("lbl")
@@ -1036,9 +999,9 @@ def graph_max_spanning_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
         # finished analyzing; same class as graph_kcore's lazy-CTE
         # lesson, Spark edition). Frames are component-cardinality, so
         # each checkpoint is a tiny job.
-        ptr = ptr.localCheckpoint(eager=True)
+        ptr = pin(ptr)
         b = ptr.select(F.col("c").alias("bc"), F.col("p").alias("bp"))
-        ptr = (
+        ptr = pin(
             ptr.join(b, F.col("bc") == F.col("p"))
             .select(
                 "c",
@@ -1049,14 +1012,12 @@ def graph_max_spanning_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .otherwise(F.col("p"))
                 .alias("p"),
             )
-            .localCheckpoint(eager=True)
         )
         for _j in range(_MSB_JUMPS):
             b = ptr.select(F.col("c").alias("bc"), F.col("p").alias("bp"))
-            ptr = (
+            ptr = pin(
                 ptr.join(b, F.col("bc") == F.col("p"))
                 .select("c", F.col("bp").alias("p"))
-                .localCheckpoint(eager=True)
             )
         # Per-round stats reset — the Spark-side MATERIALIZED, and the
         # r8 hang lesson: Dataset.localCheckpoint REWRITES the
@@ -1070,10 +1031,11 @@ def graph_max_spanning_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
         # restores real file-size stats, so every later BigInt stays
         # small; frames here are component-cardinality, so the write is
         # tiny at any fact scale.
-        comp = _materialized(
+        comp = pin(
             comp.join(ptr, F.col("c") == F.col("lbl")).select(
                 "node", F.col("p").alias("lbl")
-            )
+            ),
+            reset_stats=True,
         )
         part = pick.select("u", "v", "w").distinct()
         mst = part if mst is None else mst.unionAll(part)
@@ -1182,10 +1144,9 @@ def graph_khop_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     _assert_node_radix(spark, sf_dir, 32, "graph_khop_distance")
     # e feeds both unionAll branches of the symmetrized backbone —
     # materialize the edge aggregate once (fact pass never re-runs).
-    e = (
+    e = pin(
         _edges(spark, sf_dir)
         .filter(F.col("src") != F.col("dst"))
-        .localCheckpoint(eager=True)
     )
     wk = Window.partitionBy("src").orderBy(
         (F.col("w") * 32 + (31 - F.col("dst"))).desc()
@@ -1316,7 +1277,7 @@ def graph_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("node"), "n_name", "n_regionkey"
     )
-    lbl = (
+    lbl = pin(
         lpa.join(F.broadcast(nat), lpa.nation == nat.n_name)
         .select(
             F.lit("lpa").alias("part"),
@@ -1330,7 +1291,6 @@ def graph_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_regionkey").cast("bigint").alias("lbl"),
             )
         )
-        .localCheckpoint(eager=True)
     )
     edges = _edges(spark, sf_dir).filter(F.col("src") != F.col("dst"))
     und = (
@@ -1446,11 +1406,10 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= _AA_TOP)
         .select("src", "dst")
     )
-    und = (
+    und = pin(
         knn.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .unionAll(knn.select(F.col("dst").alias("u"), F.col("src").alias("v")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = und.groupBy(F.col("u").alias("node")).agg(
         F.count("*").cast("bigint").alias("deg")
@@ -1569,10 +1528,9 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     _assert_node_radix(spark, sf_dir, 32, "graph_harmonic_centrality")
     # e feeds both unionAll branches of the symmetrized backbone —
     # materialize the edge aggregate once (fact pass never re-runs).
-    e = (
+    e = pin(
         _edges(spark, sf_dir)
         .filter(F.col("src") != F.col("dst"))
-        .localCheckpoint(eager=True)
     )
     wk = Window.partitionBy("src").orderBy(
         (F.col("w") * 32 + (31 - F.col("dst"))).desc()
@@ -1725,13 +1683,12 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= _ASSORT_TOP)
         .select("src", "dst")
     )
-    und = (
+    und = pin(  # feeds deg AND both ends legs
         knn.select(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"),
         )
         .distinct()
-        .localCheckpoint(eager=True)  # feeds deg AND both ends legs
     )
     deg = (
         und.select(F.col("a").alias("node"))
@@ -1901,7 +1858,7 @@ def graph_louvain_move(spark: SparkSession, sf_dir: str) -> DataFrame:
     misassigned node moves home with the textbook gain and that Q
     strictly improves."""
     edges = _edges(spark, sf_dir).filter(F.col("src") != F.col("dst"))
-    und = (
+    und = pin(  # feeds deg, kuc, and both Q passes
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"), "w")
         .unionAll(
             edges.select(
@@ -1910,7 +1867,6 @@ def graph_louvain_move(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("u", "v")
         .agg(F.sum("w").cast("bigint").alias("w"))
-        .localCheckpoint(eager=True)  # feeds deg, kuc, and both Q passes
     )
     nat = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("node"),
@@ -2124,13 +2080,12 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE-skew-safe; degree caps are unnecessary at the nation grain and
     at larger grains the standard high-degree-vertex split applies."""
     edges = _edges(spark, sf_dir).filter(F.col("src") != F.col("dst"))
-    und = (
+    und = pin(  # feeds deg + three wedge-join sides
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .unionAll(
             edges.select(F.col("dst").alias("u"), F.col("src").alias("v"))
         )
         .distinct()
-        .localCheckpoint(eager=True)  # feeds deg + three wedge-join sides
     )
     deg = und.groupBy(F.col("u").alias("node")).agg(
         F.count("*").cast("bigint").alias("d")
@@ -2263,7 +2218,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     r11 join-per-round form. On an OPEN-domain graph the state is
     data-proportional and the join-per-round loop with per-round
     materialization returns (dedup_cluster keeps that shape)."""
-    e = _edges(spark, sf_dir).localCheckpoint(eager=True)
+    e = pin(_edges(spark, sf_dir))
     nd_row = load(spark, sf_dir, "nation").agg(
         F.expr(
             "sort_array(collect_list(struct(n_nationkey AS node,"

@@ -20,6 +20,7 @@ from ..functions.cleaning import (
     filter_required_nonnull,
 )
 from ..functions.exact import dsum, sql_dsum
+from ..memo import pin
 from ..registry import query
 from ..tables import load, mirror
 from .scalar_fns import safe_name
@@ -258,16 +259,16 @@ def op_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_extendedprice double, l_returnflag string, l_shipdate date, "
         "_corrupt string"
     )
-    df = (
+    # pin BEFORE filtering on _corrupt: without it, column pruning
+    # parses only the projected columns and corruption in the others
+    # silently passes as clean (cf. tests/test_csv_corrupt.py)
+    df = pin(
         spark.read.schema(schema)
         .option("header", True)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt")
-        .csv(path)
-        # cache BEFORE filtering on _corrupt: without it, column pruning
-        # parses only the projected columns and corruption in the others
-        # silently passes as clean (cf. tests/test_csv_corrupt.py)
-        .cache()
+        .csv(path),
+        eager=False,
     )
     return (
         df.filter(F.col("_corrupt").isNull())

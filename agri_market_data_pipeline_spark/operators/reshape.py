@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import dsum, sql_dsum
+from ..memo import pin
 from ..registry import query
 from ..tables import load, load_parallel
 
@@ -679,11 +680,10 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     # == vec_id order), observed as a byproduct of the ONE heavy
     # materialization.
     obs0 = Observation()
-    emb = (
+    emb = pin(
         load(spark, sf_dir, "embeddings")
         .select("vec_id", F.expr(qe).alias("qe"))
         .observe(obs0, F.min(F.struct("vec_id", "qe")).alias("s"))
-        .localCheckpoint(eager=True)
     )
 
     def emit(rows: list) -> DataFrame:
@@ -721,7 +721,7 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         if i == _KC_K:
             m.write.format("noop").mode("overwrite").save()
         else:
-            m = m.localCheckpoint(eager=True)
+            m = pin(m)
         s = obs.get["s"]
         pk = int(s.pk)  # DECIMAL(38,0) → exact Python int
         radii.append(pk // _KC_PACK)

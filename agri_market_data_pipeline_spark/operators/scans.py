@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.exact import dsum, sql_dsum
+from ..memo import pin
 from ..registry import query
 from ..tables import load, load_parallel, mirror
 
@@ -125,10 +126,8 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.md5("content").alias("content_md5"),
             )
         )
-        # materialize before deleting the backing files (lazy scan);
-        # localCheckpoint RETURNS the detached frame — the original stays
-        # file-backed
-        return scanned.localCheckpoint(eager=True)
+        # materialize before deleting the backing files (lazy scan)
+        return pin(scanned)
     finally:
         shutil.rmtree(blob_dir, ignore_errors=True)
 
@@ -178,13 +177,13 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged = spark.read.option("mergeSchema", "true").parquet(
             os.path.join(d, "snap=1"), os.path.join(d, "snap=2")
         )
-        out = merged.groupBy("o_orderpriority").agg(
-            F.count("*").alias("n_rows"),
-            F.count("o_totalprice").alias("n_with_price"),
+        # materialized BEFORE the tempdir vanishes
+        return pin(
+            merged.groupBy("o_orderpriority").agg(
+                F.count("*").alias("n_rows"),
+                F.count("o_totalprice").alias("n_with_price"),
+            )
         )
-        # rebind to the materialized frame BEFORE the tempdir vanishes
-        out = out.localCheckpoint(eager=True)
-    return out
 
 
 def _xml_mirror(spark: SparkSession, sf_dir: str) -> str:

@@ -18,6 +18,7 @@ from ..functions.vectors import (
     sql_dot,
 )
 from .. import memo
+from ..memo import pin
 from ..registry import query
 from ..tables import load, load_parallel
 
@@ -567,9 +568,7 @@ def _knn_trained_arr(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFram
         seeds = e.filter(F.col("vec_id") < kk).select(
             F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cvec")
         )
-        cells = _kmeans_cells(e, _KNN_ROUNDS, seeds=seeds).localCheckpoint(
-            eager=True
-        )
+        cells = pin(_kmeans_cells(e, _KNN_ROUNDS, seeds=seeds))
         return _cells_arr(cells)
 
     return memo.cached(_KNN_CELL_CACHE, spark, sf_dir, ("embeddings",), build)
@@ -952,7 +951,7 @@ def ml_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count), and only the K×dim POST-aggregate frame is checkpointed
     # (tiny) to stop its two consumers (carr, c0) re-running the
     # n×K×dim fold (guide §2.4: Spark shares no subplan results).
-    cent = (
+    cent = pin(
         assign0.select("cell_id", F.posexplode("embedding").alias("pos", "v"))
         .groupBy("cell_id", (F.col("pos") + 1).cast("long").alias("idx"))
         .agg(
@@ -963,7 +962,6 @@ def ml_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cv"),
             F.count("*").alias("n"),
         )
-        .localCheckpoint(eager=True)
     )
     carr = cent.groupBy("cell_id").agg(
         F.expr(
@@ -1059,9 +1057,11 @@ def _kmi_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         ("embeddings",),
-        lambda: _kmeans_cells(
-            load_parallel(spark, sf_dir, "embeddings"), _KMI_ROUNDS
-        ).localCheckpoint(eager=True),
+        lambda: pin(
+            _kmeans_cells(
+                load_parallel(spark, sf_dir, "embeddings"), _KMI_ROUNDS
+            )
+        ),
     )
 
 
@@ -1190,7 +1190,7 @@ def ml_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     stability); tests/test_extensions.py pins the real guarantees —
     loss decreases across rounds and training accuracy beats the
     majority-class baseline."""
-    X = _quality_features(spark, sf_dir).localCheckpoint(eager=True)
+    X = pin(_quality_features(spark, sf_dir))
     n_feat = 4
     w = spark.range(1).select(
         F.array(*[F.lit(0.0) for _ in range(n_feat)]).alias("w")
@@ -1217,7 +1217,7 @@ def ml_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("w")
             )
         )
-        w = w.localCheckpoint(eager=True)  # flatten the round lineage
+        w = pin(w)  # flatten the round lineage
     final = X.join(F.broadcast(w))
     z = F.expr(_LR_LOGIT)
     pred = (z >= 0).cast("double")
@@ -1332,8 +1332,8 @@ def _pq_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cvec")
     )
     cell_arr = _cells_arr(cents)
-    cbrow = _pq_codebooks(e).localCheckpoint(eager=True)
-    codes = (
+    cbrow = pin(_pq_codebooks(e))
+    codes = pin(
         load_parallel(spark, sf_dir, "embeddings")
         .join(F.broadcast(cell_arr))
         .select(
@@ -1347,7 +1347,6 @@ def _pq_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
             "cell_id",
             *[_pq_encode_code_expr(m) for m in range(_PQ_M)],
         )
-        .localCheckpoint(eager=True)
     )
     return cbrow, codes
 
@@ -1886,16 +1885,15 @@ def ml_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     per round via the parquet round-trip (CLAUDE.md's localCheckpoint
     stats-squaring rule — each product frame feeds both the norm and
     the renormalize)."""
-    from .graph import _materialized
 
     ut = agg_vector_covariance(spark, sf_dir).select(
         "i", "j", F.col("cov").alias("c")
     )
-    cfull = ut.unionAll(
+    cfull = pin(ut.unionAll(
         ut.filter(F.col("i") != F.col("j")).select(
             F.col("j").alias("i"), F.col("i").alias("j"), "c"
         )
-    ).localCheckpoint(eager=True)
+    ))
 
     def fro(df: DataFrame, col: str) -> DataFrame:
         return df.agg(
@@ -1919,7 +1917,7 @@ def ml_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    b = _materialized(snapped(cfull, "c", 1e12))
+    b = pin(snapped(cfull, "c", 1e12), reset_stats=True)
     for _ in range(_PCA_SQUARINGS):
         q = (
             b.join(
@@ -1937,7 +1935,7 @@ def ml_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("q")
             )
         )
-        b = _materialized(snapped(q, "q", 1e12))
+        b = pin(snapped(q, "q", 1e12), reset_stats=True)
     w = b.groupBy("i").agg(
         F.sum(
             (
@@ -1953,7 +1951,7 @@ def ml_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
         ).alias("s")
     ).withColumn("k", F.lit(1))
-    v = (
+    v = pin(
         w.withColumn("k", F.lit(1))
         .join(F.broadcast(sw), "k")
         .select(
@@ -1962,7 +1960,6 @@ def ml_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("w") / F.col("s") * 1e9 + F.lit(0.5)) / 1e9
             ).alias("v"),
         )
-        .localCheckpoint(eager=True)
     )
     cv = (
         cfull.join(
@@ -2530,9 +2527,9 @@ def incr_ann_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         ("embeddings",),
-        lambda: assign(e.filter(~is_batch))
-        .withColumn("src", F.lit(0))
-        .localCheckpoint(eager=True),
+        lambda: pin(
+            assign(e.filter(~is_batch)).withColumn("src", F.lit(0))
+        ),
     )
     ups = assign(e.filter(is_batch)).withColumn("src", F.lit(1))
     m = (
@@ -2778,7 +2775,7 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y", "CAST(FLOOR(score * 1e6 + 0.5D) AS BIGINT) AS s_lat"
     )
     d = F.col("s_lat") - F.col("y") * 1000000
-    b = (
+    b = pin(  # feeds tot AND terms — one scan
         s.groupBy(
             F.least(
                 F.expr(f"s_lat * {_ECE_BINS} div 1000000"),
@@ -2791,13 +2788,12 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("s_lat").cast("bigint").alias("slk"),
             F.sum(d * d).cast("bigint").alias("d2k"),
         )
-        .localCheckpoint(eager=True)  # feeds tot AND terms — one scan
     )
-    tot = b.agg(
+    tot = pin(b.agg(
         F.sum("nk").cast("bigint").alias("n"),
         F.sum("pk").cast("bigint").alias("p"),
         F.sum("d2k").cast("bigint").alias("d2"),
-    ).localCheckpoint(eager=True)
+    ))
     e_k = (F.col("pk") * 1000000 - F.col("slk")).cast("double")
     g_k = (F.col("pk") * F.col("n") - F.col("p") * F.col("nk")).cast("double")
     terms = (
@@ -2896,7 +2892,7 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of corpus size). The tiny theta self-joins broadcast
     (NESTED_LOOP_OK: score-bin grain); the one global window rides the
     same bounded grain (GLOBAL_WINDOW_OK: score-bin grain)."""
-    b = (
+    b = pin(  # feeds cum, the k frame, and output
         _probe_scores(spark, sf_dir)
         .select(
             "y",
@@ -2910,18 +2906,17 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("nk"),
             F.sum("y").cast("bigint").alias("pk"),
         )
-        .localCheckpoint(eager=True)  # feeds cum, the k frame, and output
     )
     w = Window.orderBy("bin").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    cum = b.select(
+    cum = pin(b.select(
         "bin",
         F.sum("nk").over(w).cast("bigint").alias("cn"),
         F.sum("pk").over(w).cast("bigint").alias("cp"),
         (F.sum("nk").over(w) - F.col("nk")).cast("bigint").alias("xn"),
         (F.sum("pk").over(w) - F.col("pk")).cast("bigint").alias("xp"),
-    ).localCheckpoint(eager=True)  # referenced twice by the interval join
+    ))  # referenced twice by the interval join
     starts = cum.select(F.col("bin").alias("i"), "xn", "xp")
     ends = cum.select(F.col("bin").alias("j"), "cn", "cp")
     iv = starts.join(F.broadcast(ends), F.col("i") <= F.col("j")).select(
@@ -3061,7 +3056,7 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_suppkey").cast("string"),
     )
     h = F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long") % 5
-    base = (
+    base = pin(
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .select(
             F.col("p_brand").alias("brand"),
@@ -3075,9 +3070,8 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         # narrow proxy once; both passes read it. At 100 TB this is the
         # classic fingerprint-table trade: one fact scan + a ~20 B/row
         # narrow intermediate vs two full scans each re-hashing 4 keys.
-        .localCheckpoint(eager=True)
     )
-    mu = (
+    mu = pin(  # joined into the cell scan + output
         base.filter(F.col("h") <= 2)
         .groupBy("brand")
         .agg(
@@ -3087,7 +3081,6 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.count("*")
             ).alias("m"),
         )
-        .localCheckpoint(eager=True)  # joined into the cell scan + output
     )
     cells = (
         base.filter(F.col("h") >= 3)
@@ -3476,7 +3469,7 @@ def ml_als_factorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     pt = load(spark, sf_dir, "part")
-    ratings = (
+    ratings = pin(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy(
             F.col("o_custkey").alias("u"), F.col("l_partkey").alias("p")
@@ -3493,7 +3486,6 @@ def ml_als_factorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         # outputPartitioning in Spark 4.1 (measured — downstream still
         # re-exchanges), so it was a pure extra shuffle of the grain
         # frame.
-        .localCheckpoint(eager=True)
     )
     q0 = pt.select(
         F.col("p_partkey").alias("p"),
@@ -3543,7 +3535,7 @@ def ml_als_factorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         return e1, e2
 
     u1, u2 = _solve2("1e6", "1e3", "lu1", "lu2")
-    uf = us.selectExpr("u", u1, u2).localCheckpoint(eager=True)
+    uf = pin(us.selectExpr("u", u1, u2))
     # r12 note: materializing ratings ⋈ uf once (to share between the
     # item solve and the residual pass) was measured SLOWER — the
     # checkpoint write of the fact-grain joined frame costs more than

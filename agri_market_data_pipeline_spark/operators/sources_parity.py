@@ -30,6 +30,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.exact import dsum, sql_dsum
+from ..memo import pin
 from ..registry import query
 from ..sources.checkpoint import OffsetCheckpoint
 from ..sources.paginated_api import read_paginated_api
@@ -206,9 +207,7 @@ def chk_offset_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
                 keys=["event_id"], order_col="event_id",
             )
             ckpt.save(stop)
-        out = _agg(spark.read.parquet(store))
-        out = out.localCheckpoint(eager=True)  # outlive the temp dir
-    return out
+        return pin(_agg(spark.read.parquet(store)))  # outlive the temp dir
 
 
 @query("orchestrate_cron", oracle=_EVENTS_AGG_ORACLE)
@@ -244,9 +243,7 @@ def orchestrate_cron(spark: SparkSession, sf_dir: str) -> DataFrame:
                 keys=["event_id"], order_col="event_id",
             )
             ckpt.save(end)
-        out = _agg(spark.read.parquet(store))
-        out = out.localCheckpoint(eager=True)
-    return out
+        return pin(_agg(spark.read.parquet(store)))
 
 
 @query(
@@ -274,11 +271,12 @@ def op_sink_partitioned_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         path = os.path.join(d, "parts")
         do_append(p, path, partition_key="ptype_dir")
         back = spark.read.parquet(path)
-        out = back.groupBy("ptype_dir").agg(
-            F.count("*").alias("n_rows"), dsum("p_retailprice").alias("sum_price")
+        return pin(
+            back.groupBy("ptype_dir").agg(
+                F.count("*").alias("n_rows"),
+                dsum("p_retailprice").alias("sum_price"),
+            )
         )
-        out = out.localCheckpoint(eager=True)
-    return out
 
 
 @query("src_python_datasource", oracle=_EVENTS_AGG_ORACLE)
@@ -355,9 +353,6 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             if done >= total:
                 break
-        # localCheckpoint is not in-place: rebind to the checkpointed
-        # frame, or the returned df stays bound to the memory sink.
-        out = spark.table(sink).localCheckpoint(eager=True)
-        return out
+        return pin(spark.table(sink))
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)

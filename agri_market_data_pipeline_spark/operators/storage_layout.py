@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from .. import memo
 from ..functions.exact import dsum, sql_dsum
+from ..memo import pin
 from ..registry import query
 from ..tables import load, mirror
 
@@ -338,18 +339,18 @@ def sink_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(path)
         )
         back = spark.read.parquet(path)
-        out = back.groupBy(
-            F.shiftright("zval", 2 * _Z_BITS - 6).alias("z_cell")
-        ).agg(
-            F.count("*").alias("n_rows"),
-            F.min("qa").alias("qa_min"),
-            F.max("qa").alias("qa_max"),
-            F.min("qb").alias("qb_min"),
-            F.max("qb").alias("qb_max"),
-            dsum("l_extendedprice").alias("sum_price"),
+        return pin(
+            back.groupBy(
+                F.shiftright("zval", 2 * _Z_BITS - 6).alias("z_cell")
+            ).agg(
+                F.count("*").alias("n_rows"),
+                F.min("qa").alias("qa_min"),
+                F.max("qa").alias("qa_max"),
+                F.min("qb").alias("qb_min"),
+                F.max("qb").alias("qb_max"),
+                dsum("l_extendedprice").alias("sum_price"),
+            )
         )
-        out = out.localCheckpoint(eager=True)
-    return out
 
 
 @query(
@@ -904,7 +905,7 @@ def layout_bloom_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count — lazily checkpointed so the fact distinct runs ONCE (the
     # r11 form re-ran the lineitem scan+distinct per reference: 3x via
     # the index union + truth + tot ≈ 5 passes; guide §2.4).
-    keys = (
+    keys = pin(
         li.select(
             F.expr(
                 "(unix_micros(CAST(l_shipdate AS TIMESTAMP))"
@@ -912,8 +913,8 @@ def layout_bloom_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("shard"),
             F.col("l_orderkey").alias("okey"),
         )
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
 
     def hpos(col: str, i: int):
@@ -936,7 +937,7 @@ def layout_bloom_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("pos"),
     ).distinct()
 
-    probes = (
+    probes = pin(  # r12: feeds ppos, truth, joined
         load(spark, sf_dir, "orders")
         .select(F.col("o_orderkey").alias("okey"))
         .filter(
@@ -956,8 +957,8 @@ def layout_bloom_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             % _BFP_PROBE_MOD
             == 0
         )
-        .distinct()
-        .localCheckpoint(eager=False)  # r12: feeds ppos, truth, joined
+        .distinct(),
+        eager=False,
     )
     # r12: posexplode replaces the k-way self-union (h = array position
     # == the old F.lit(i) label; one plan reference).
@@ -968,13 +969,13 @@ def layout_bloom_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("h", "pos"),
     )
 
-    cand = (
+    cand = pin(  # r12: read twice (c and c2)
         ppos.join(idx, "pos")
         .groupBy("okey", "shard")
         .agg(F.count_distinct("h").alias("nh"))
         .filter(F.col("nh") == _BFP_K)
-        .select("okey", "shard")
-        .localCheckpoint(eager=False)  # r12: read twice (c and c2)
+        .select("okey", "shard"),
+        eager=False,
     )
     truth = keys.join(F.broadcast(probes), "okey").select("okey", "shard")
     tot = keys.agg(F.count_distinct("shard").cast("bigint").alias("n_shards"))

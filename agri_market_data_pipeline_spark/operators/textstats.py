@@ -21,6 +21,7 @@ from ..functions.text import (
     shingles3,
     tokens,
 )
+from ..memo import pin
 from ..registry import query
 from ..tables import load, load_parallel
 
@@ -515,9 +516,9 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select("doc_id", F.explode(tokens("text")).alias("tok"))
     # lazy-materialized: the vocabulary is consumed twice (head
     # TakeOrdered + tail join) and is the model you'd persist anyway
-    vocab = (
-        tok.groupBy("tok").agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=False)
+    vocab = pin(
+        tok.groupBy("tok").agg(F.count("*").alias("cnt")),
+        eager=False,
     )
     total = vocab.agg(F.sum("cnt").alias("n_corpus"))
     # Zipf head/tail routing: the top-_ZIPF_HEAD tokens cover the vast
@@ -865,13 +866,13 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import load_parallel as _lp
 
     d = _lp(spark, sf_dir, "documents")
-    words = (
+    words = pin(
         d.select(F.explode(tokens("text")).alias("w"))
         .filter(F.length("w") >= 2)
         .groupBy("w")
         .agg(F.count("*").alias("freq"))
         .select(F.split("w", "").alias("seq"), "freq")
-    ).localCheckpoint(eager=True)
+    )
 
     merges = []
     for rank in range(_BPE_MERGES):
@@ -886,20 +887,19 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("p.a", "p.b")
             .agg(F.sum("freq").alias("cnt"))
         )
-        best = (
+        best = pin(
             pairs.orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
             .limit(1)
             .withColumn("rank", F.lit(rank).cast("long"))
-            .localCheckpoint(eager=True)
         )
         merges.append(best)
         b = best.select(
             F.col("a").alias("ma"), F.col("b").alias("mb")
         )
-        words = words.join(F.broadcast(b)).select(
+        words = pin(words.join(F.broadcast(b)).select(
             _bpe_apply_merge("seq", "ma", "mb").alias("seq"),
             "freq",
-        ).localCheckpoint(eager=True)
+        ))
 
     out = merges[0]
     for m in merges[1:]:
@@ -976,15 +976,15 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-ran the tokenize+zip+explode fact pass — checkpoint the bigram
     # frame ONCE; every model/eval frame below reads the materialized
     # blocks (guide §2.4).
-    bg = bg.localCheckpoint(eager=True)
+    bg = pin(bg)
     train = bg.filter(F.col("doc_id") % _BGLM_HOLD != 0)
-    c2 = (
-        train.groupBy("w1", "w2").agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)
+    c2 = pin(
+        train.groupBy("w1", "w2").agg(F.count("*").alias("c")),
+        eager=False,
     )
-    c1 = (
-        train.groupBy("w1").agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=False)
+    c1 = pin(
+        train.groupBy("w1").agg(F.count("*").alias("n")),
+        eager=False,
     )
     # vocab = train w1-set ∪ w2-set. The w1 set IS c1's key set and the
     # w2 set IS c2's distinct w2 — counting over the model tables reads
@@ -997,9 +997,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # held is consumed by two routed branches per join level — lazy
     # checkpoint so the filter of bg runs once, not once per branch
-    held = bg.filter(F.col("doc_id") % _BGLM_HOLD == 0).localCheckpoint(
-        eager=False
-    )
+    held = pin(bg.filter(F.col("doc_id") % _BGLM_HOLD == 0), eager=False)
 
     def routed(fact: DataFrame, table: DataFrame, keys, val: str) -> DataFrame:
         """LEFT join fact→table with Zipf head/tail routing: head-hit
@@ -1485,7 +1483,7 @@ def text_plsa_em_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("d", "w")
         .agg(F.count("*").cast("bigint").alias("c"))
     )
-    tok = tok.localCheckpoint(eager=True)  # feeds aw/bd distincts + E-step
+    tok = pin(tok)  # feeds aw/bd distincts + E-step
     # r12 (guide §2.4 + §3.1): the r11 E-step paid two nnz×K SHUFFLE
     # equi-joins (tok⋈pwt on w, ⋈ptd on (d,t)) plus an nnz×K window
     # for the γ denominator — 4 fact-grain exchanges. The params are
@@ -1530,7 +1528,7 @@ def text_plsa_em_step(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AS den",
         )
     )
-    m = (
+    m = pin(
         e.select(
             "w", "c", "den", F.posexplode("nums").alias("t", "num")
         )
@@ -1544,9 +1542,9 @@ def text_plsa_em_step(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("bigint")
             .alias("s")
-        )
+        ),
+        eager=False,
         # vocab×K grain; feeds the topic-total agg AND the rank join
-        .localCheckpoint(eager=False)
     )
     tot = m.groupBy("t").agg(F.sum("s").cast("bigint").alias("st"))
     w_rk = Window.partitionBy("t").orderBy(F.desc("s"), F.asc("w"))

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import dsum, sql_dsum
+from ..memo import pin
 from ..registry import query
 from ..tables import load, load_parallel
 
@@ -2584,7 +2585,7 @@ def ts_cointegration(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-linear (SCALING.md) — and both moment passes are partial
     aggs; the coefficient frame is K²-row broadcast."""
     # feeds both sides of the alignment join and the residual pass
-    daily = daily_events(spark, sf_dir).localCheckpoint(eager=True)
+    daily = pin(daily_events(spark, sf_dir))
     a = daily.select(
         F.col("et").alias("ye"), "day_no", F.col("v").alias("y")
     )
@@ -3103,7 +3104,7 @@ def ts_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the 4-lag union references this |types|-row frame 4x — pin the
     # events scan + window to ONE execution (the r10 ADVICE rule)
-    dl5 = dl5.localCheckpoint(eager=True)
+    dl5 = pin(dl5)
     parts = [
         dl5.select(
             F.col("et").alias("event_type"),

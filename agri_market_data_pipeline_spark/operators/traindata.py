@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import SQL_SHINGLES3, shingles3, tokens
+from ..memo import pin
 from ..registry import query
 from ..tables import load_parallel
 from .dedup import _MINHASH_CTE
@@ -482,9 +483,7 @@ def sample_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import dedup_near_minhash_pairs
 
     d = load_parallel(spark, sf_dir, "documents")
-    pairs = dedup_near_minhash_pairs(spark, sf_dir).localCheckpoint(
-        eager=True
-    )
+    pairs = pin(dedup_near_minhash_pairs(spark, sf_dir))
     nd = d.agg(F.count("*").alias("n"))
     neg0 = pairs.join(F.broadcast(nd)).select(
         "doc_a",
@@ -1393,7 +1392,6 @@ def mix_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats-squaring rule). A pytest pins margin convergence: after
     {_IPF_ROUNDS} rounds every source margin is within 0.1% of
     uniform."""
-    from .graph import _materialized
 
     d = load_parallel(spark, sf_dir, "documents")
     w = (
@@ -1435,7 +1433,7 @@ def mix_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     for _ in range(_IPF_ROUNDS):
-        w = _materialized(scale(scale(w, "source", tr), "lang", tl))
+        w = pin(scale(scale(w, "source", tr), "lang", tl), reset_stats=True)
     return w.select("source", "lang", F.col("n").alias("n_docs"),
                     F.col("w").alias("weight"))
 
@@ -1582,7 +1580,6 @@ def ml_gbm_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame joins back by broadcast (plan_audit NESTED_LOOP_OK — the
     ml_pca_power one-row class); cell state is stats-reset per round
     via the parquet round-trip (CLAUDE.md)."""
-    from .graph import _materialized
 
     li = load_parallel(spark, sf_dir, "lineitem")
     rng_row = li.agg(
@@ -1601,7 +1598,7 @@ def ml_gbm_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(_GBM_B - 1).cast("long"),
         )
 
-    cells = (
+    cells = pin(
         li.select(
             bucket(F.col("l_discount"), rng_row["dlo"], rng_row["dhi"])
             .alias("bd"),
@@ -1617,7 +1614,6 @@ def ml_gbm_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("n"),
             F.sum("cents").cast("bigint").alias("sy"),
         )
-        .localCheckpoint(eager=True)
     )
     tot = cells.agg(
         F.sum("sy").alias("ts"), F.sum("n").alias("tn")
@@ -1667,7 +1663,7 @@ def ml_gbm_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
         w_best = Window.orderBy(
             score.desc(), F.asc("f"), F.asc("bucket")
         )
-        best = (
+        best = pin(
             cum.withColumn("rn", F.row_number().over(w_best))
             .filter(F.col("rn") == 1)
             .select(
@@ -1692,7 +1688,6 @@ def ml_gbm_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("dr"),
             )
-            .localCheckpoint(eager=True)
         )
         brow = best.first()
         if brow is None:
@@ -1719,7 +1714,7 @@ def ml_gbm_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
         side_bucket = {
             "disc": F.col("bd"), "price": F.col("bp"), "qty": F.col("bq")
         }[brow["f"]]
-        state = _materialized(
+        state = pin(
             state.select(
                 "bd",
                 "bp",
@@ -1735,7 +1730,8 @@ def ml_gbm_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .cast("bigint")
                 .alias("fl"),
-            )
+            ),
+            reset_stats=True,
         )
     spark_ = li.sparkSession
     return spark_.createDataFrame(
@@ -1828,10 +1824,10 @@ def ml_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("y"),
     )
-    cf = base.groupBy("ck", "fold").agg(
+    cf = pin(base.groupBy("ck", "fold").agg(
         F.count("*").cast("bigint").alias("n_kf"),
         F.sum("y").cast("bigint").alias("sy_kf"),
-    ).localCheckpoint(eager=True)  # consumed by 3 branches (ct/gf/g):
+    ))  # consumed by 3 branches (ct/gf/g):
     # without this the fact scan + first agg re-run per branch
     ct = cf.groupBy("ck").agg(
         F.sum("n_kf").cast("bigint").alias("n_k"),
@@ -2114,7 +2110,7 @@ def ml_kfold_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     def dec(expr: Column, p: int, name: str) -> Column:
         return F.sum(expr.cast(f"decimal({p},6)")).alias(name)
 
-    sf_ = li.groupBy(F.col("l_returnflag").alias("grp"), fold).agg(
+    sf_ = pin(li.groupBy(F.col("l_returnflag").alias("grp"), fold).agg(
         F.count("*").alias("n"),
         dec(x1, 30, "sx1"),
         dec(x2, 30, "sx2"),
@@ -2124,7 +2120,7 @@ def ml_kfold_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
         dec(x1 * x2, 38, "sx1x2"),
         dec(x1 * y, 38, "sx1y"),
         dec(x2 * y, 38, "sx2y"),
-    ).localCheckpoint(eager=True)  # 15-row moment frame, fed to tot AND tr
+    ))  # 15-row moment frame, fed to tot AND tr
     # — Spark shares no subplan results across references (ADVICE r10:
     # without this the lineitem moment aggregation can run up to 4x in
     # one plan), so the fold-moment scan is pinned to exactly one pass.
@@ -2330,14 +2326,14 @@ def ml_linear_shap(spark: SparkSession, sf_dir: str) -> DataFrame:
     c1 = F.col("sx1y") - F.col("sx1") * F.col("sy") / n
     c2 = F.col("sx2y") - F.col("sx2") * F.col("sy") / n
     det = a11 * a22 - a12 * a12
-    model = s.select(
+    model = pin(s.select(
         "grp",
         "n",
         (F.col("sx1") / n).alias("mu1"),
         (F.col("sx2") / n).alias("mu2"),
         F.round((a22 * c1 - a12 * c2) / det, 6).alias("beta1"),
         F.round((a11 * c2 - a12 * c1) / det, 6).alias("beta2"),
-    ).localCheckpoint(eager=True)  # 3 rows; feeds the dev scan AND mas
+    ))  # 3 rows; feeds the dev scan AND mas
     # r12 (the §3 parsed-SQL rule, same as ml_kfold_cv): the Column-
     # builder form of everything below the checkpoint cost ~0.2-0.3 s
     # of py4j plan construction per build; the selectExpr strings parse

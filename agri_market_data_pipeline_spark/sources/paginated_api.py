@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..memo import pin
+
 FetchFn = Callable[[int, int], list[dict]]
 
 # Reference ladder constants (fetch_data.py:17-26), scaled down by
@@ -153,18 +155,16 @@ def read_paginated_api(
     # of the feed in executor memory for the session lifetime).
     raw = raw.persist()
     try:
-        records = (
+        records = pin(
             raw.filter(F.col("_err").isNull())
             .drop("_err")
-            .localCheckpoint(eager=True)
         )
-        dead_letters = (
+        dead_letters = pin(
             raw.filter(F.col("_err").isNotNull())
             .select(
                 F.col("_src_offset").alias("offset"),
                 F.col("_err").alias("error"),
             )
-            .localCheckpoint(eager=True)
         )
     finally:
         raw.unpersist()

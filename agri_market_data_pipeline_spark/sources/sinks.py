@@ -16,6 +16,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..memo import pin
+
 
 def sink_partitioned_append(
     df: DataFrame, path: str, partition_key: str = "Commodity", fmt: str = "parquet"
@@ -201,9 +203,7 @@ def merge_upsert(
             # above) or SnapshotStore's manifest swap. Keep the simple
             # rewrite, materialized first because Spark cannot read and
             # overwrite the same path in one job.
-            latest.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-                target_path
-            )
+            pin(latest).write.mode("overwrite").parquet(target_path)
             return
         _swap_local(latest, probe, old_dir)
 

@@ -29,6 +29,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.exact import dsum, sql_dsum
+from ..memo import pin
 from ..registry import query
 
 _run_counter = itertools.count()
@@ -95,6 +96,14 @@ def events_stream(
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
+# Stateful streaming pays a state-store init per shuffle partition per
+# micro-batch — at bounded-replay volume 32 partitions is ~5× slower
+# than 8 for identical results. The partition count is baked into the
+# (throwaway) checkpoint, so scoping it per run is safe; a durable
+# production stream sizes it to expected state volume instead.
+_STREAM_SHUFFLE = 8
+
+
 def run_to_table(df: DataFrame, name: str, output_mode: str) -> DataFrame:
     """Execute a streaming frame to completion (AvailableNow) into a
     memory sink; return the materialized result. The throwaway
@@ -105,15 +114,9 @@ def run_to_table(df: DataFrame, name: str, output_mode: str) -> DataFrame:
     spark = df.sparkSession
     sink = f"mem_{name}_{next(_run_counter)}_{os.getpid()}"
     ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    # Stateful streaming pays a state-store init per shuffle partition per
-    # micro-batch — at bounded-replay volume 32 partitions is ~5× slower
-    # than 8 for identical results. The partition count is baked into the
-    # (throwaway) checkpoint, so scoping it here is safe; a durable
-    # production stream sizes it to expected state volume instead.
-    n_stream = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", n_stream)
+        spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE)
         q = (
             df.writeStream.format("memory")
             .queryName(sink)
@@ -128,7 +131,7 @@ def run_to_table(df: DataFrame, name: str, output_mode: str) -> DataFrame:
         shutil.rmtree(ckpt, ignore_errors=True)
     # copy the result out and drop the sink view — otherwise every
     # streaming run pins its full materialized output for the session
-    out = spark.table(sink).localCheckpoint(eager=True)
+    out = pin(spark.table(sink))
     spark.catalog.dropTempView(sink)
     return out
 
@@ -617,13 +620,13 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             # created; the correct result is the empty aggregate, not a
             # missing-path error.
             back = spark.createDataFrame([], "event_type string, value double")
-        out = back.groupBy("event_type").agg(
-            F.count("*").alias("cnt"), dsum("value").alias("sum_value")
+        return pin(
+            back.groupBy("event_type").agg(
+                F.count("*").alias("cnt"), dsum("value").alias("sum_value")
+            )
         )
-        out = out.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(store, ignore_errors=True)
-    return out
 
 
 @query(
@@ -936,7 +939,6 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "value")
     src = tempfile.mkdtemp(prefix="ckres_src_")
     ckpt = tempfile.mkdtemp(prefix="ckres_ckpt_")
-    n_stream = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         def epoch(name: str) -> str:
@@ -960,7 +962,7 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.awaitTermination()
             return sink
 
-        spark.conf.set("spark.sql.shuffle.partitions", n_stream)
+        spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE)
         ev.filter(F.col("event_id") % 2 == 0).write.mode("append").parquet(src)
         s1 = epoch("e1")
         spark.catalog.dropTempView(s1)
@@ -968,7 +970,7 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         # checkpoint (offsets + state store) survives
         ev.filter(F.col("event_id") % 2 == 1).write.mode("append").parquet(src)
         s2 = epoch("e2")
-        out = spark.table(s2).localCheckpoint(eager=True)
+        out = pin(spark.table(s2))
         spark.catalog.dropTempView(s2)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_sp)
@@ -1067,12 +1069,13 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             back = spark.createDataFrame(
                 [], "user_id long, event_id long, value double, ts_us long"
             )
-        out = back.select(
-            "user_id",
-            F.col("event_id").alias("last_event_id"),
-            F.col("ts_us").alias("last_ts_us"),
-            F.col("value").alias("last_value"),
-        ).localCheckpoint(eager=True)
+        return pin(
+            back.select(
+                "user_id",
+                F.col("event_id").alias("last_event_id"),
+                F.col("ts_us").alias("last_ts_us"),
+                F.col("value").alias("last_value"),
+            )
+        )
     finally:
         shutil.rmtree(store, ignore_errors=True)
-    return out

@@ -287,18 +287,12 @@ def main() -> int:
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             dt = time.time() - t0
-            # drop per-invocation storage (query-internal .cache() /
-            # localCheckpoint blocks) so earlier queries' residue can't
-            # GC-pressure later ones — each timing starts from the same
-            # clean executor state.
-            spark.catalog.clearCache()
-            # r13 (VERDICT r12 item 2): also evict the data memos
-            # (index builds, stored-side assignments, curation stage
-            # frames) and unpersist their checkpointed blocks, so every
-            # timed sample pays its own builds instead of inheriting
-            # them from the untimed warm-up — one rule for every
-            # memoizing operator. Metadata memos (plans, footer row
-            # counts, one-row plan-shape stats) persist; see memo.py.
+            # drop per-invocation storage so earlier queries' residue
+            # can't GC-pressure later ones: memo.clear_all() releases
+            # every pin and empties the data memos, so every timed
+            # sample pays its own builds instead of inheriting them
+            # from the untimed warm-up. Metadata memos persist; see
+            # memo.py.
             memo.clear_all()
             gc.collect()
             return dt

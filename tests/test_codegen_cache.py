@@ -15,7 +15,6 @@ def _run(spark, sf_dir, name: str) -> int:
     """Build and execute one operator from cold data memos; returns the
     classes it compiled."""
     memo.clear_all()
-    spark.catalog.clearCache()
     before = codegen_compiles(spark)
     all_queries()[name](spark, sf_dir).write.format("noop").mode(
         "overwrite"

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from agri_market_data_pipeline_spark.memo import pin
+
 
 def test_corrupt_rows_are_captured_not_dropped(spark, tmp_path):
     p = tmp_path / "dirty.csv"
@@ -16,13 +18,16 @@ def test_corrupt_rows_are_captured_not_dropped(spark, tmp_path):
         "3,7.25,31/12/2023\n"           # date fails ISO parse
         "4,8.0,2023-02-01\n"
     )
-    df = (
+    # scan_csv's shape: a lazy pin before the _corrupt filter. Without
+    # it, a projection that leaves the bad columns out parses only the
+    # projected ones and lets their corruption pass as clean.
+    df = pin(
         spark.read.schema("id int, qty double, d date, _corrupt string")
         .option("header", True)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt")
-        .csv(str(p))
-        .cache()  # required: corrupt-record column + filter needs stable rows
+        .csv(str(p)),
+        eager=False,
     )
     rows = df.collect()
     assert len(rows) == 4  # nothing silently dropped
@@ -31,3 +36,5 @@ def test_corrupt_rows_are_captured_not_dropped(spark, tmp_path):
     good = df.filter(F.col("_corrupt").isNull()).collect()
     assert {r.id for r in good} == {1, 4}
     assert {r.qty for r in good} == {10.5, 8.0}
+    projected = df.filter(F.col("_corrupt").isNull()).select("id").collect()
+    assert {r.id for r in projected} == {1, 4}

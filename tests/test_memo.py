@@ -79,6 +79,38 @@ def test_operators_rebuild_after_clear(spark, sf_dir):
     memo.clear_all()
 
 
+def test_clear_all_releases_operator_pins(spark, sf_dir):
+    """Pins an operator makes inside its queries() call are released by
+    clear_all(), not only memo entries, so no checkpoint block outlives
+    the bench sample boundary. The frames stay referenced here, so a
+    JVM GC cannot be what releases them."""
+    from agri_market_data_pipeline_spark.registry import all_queries
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    memo.clear_all()
+    base = set(persistent())
+    queries = all_queries()
+    dfs = [
+        queries[n](spark, sf_dir)
+        for n in ("agg_theta_kmv", "graph_label_propagation")
+    ]
+    for df in dfs:
+        df.collect()
+    assert set(persistent()) - base  # the queries pinned something
+    memo.clear_all()
+    assert not set(persistent()) - base
+
+
+def test_clear_all_removes_round_trip_dirs(spark):
+    import os
+
+    df = memo.pin(spark.range(3), reset_stats=True)
+    path = memo._PIN_DIRS[-1]
+    assert df.count() == 3 and os.path.isdir(path)
+    memo.clear_all()
+    assert not os.path.exists(path)
+
+
 def test_memo_keys_and_mirror_paths_are_built_in_one_place():
     """Only memo.py and tables.py build a memo key from applicationId
     or a mirror path under the temp dir: every other module goes

