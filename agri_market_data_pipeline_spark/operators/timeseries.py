@@ -18,6 +18,8 @@ transforms its data exists to serve:
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -60,6 +62,44 @@ def daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " / COUNT(*) AS v"
             )
         )
+    )
+
+
+def fold_series(
+    frame: DataFrame,
+    key: str,
+    fields: str,
+    init: str,
+    step: str,
+    head: int = 1,
+) -> DataFrame:
+    """Per-`key` sequential recursion folded inside the JVM: `(key, n, st)`.
+
+    Each key's rows become `arr`, an array of `struct(<fields>)` sorted
+    by its first field (the order key, unique per key). `init` builds
+    the accumulator from the first `head` elements (`arr[0]`, ...), and
+    `step` advances it as `(acc, x) -> ...` over the rest in order; `st`
+    is the final accumulator and `n` the BIGINT row count. Keys with
+    fewer than `head` rows emit no row. The twin is a DuckDB
+    `WITH RECURSIVE` advancing all keys in rank lockstep."""
+    grouped = frame.groupBy(key).agg(
+        F.expr(f"array_sort(collect_list(struct({fields}))) AS arr"),
+        F.expr("COUNT(*) AS n"),
+    )
+    if head > 1:
+        grouped = grouped.where(f"n >= {head}")
+    return grouped.selectExpr(
+        key,
+        "n",
+        f"aggregate(slice(arr, {head + 1}, size(arr) - {head}), {init}, "
+        f"(acc, x) -> {step}) AS st",
+    )
+
+
+def _lattice_series(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`(et, day_no, lv)`: the daily series on the BIGINT 1e-6 lattice."""
+    return daily_events(spark, sf_dir).selectExpr(
+        "et", "day_no", "CAST(FLOOR(v * 1e6 + 0.5D) AS BIGINT) AS lv"
     )
 
 
@@ -1971,7 +2011,7 @@ _HOLT_H = 7  # forecast horizon (days ahead)
 
 _HOLT_SQL = f"""
 WITH RECURSIVE {DAILY_EVENTS_SQL},
-lat AS (
+lat AS MATERIALIZED (
   SELECT et, CAST(FLOOR(v * 1e6 + 0.5) AS BIGINT) AS lv,
          ROW_NUMBER() OVER (PARTITION BY et ORDER BY day_no) AS rk,
          CAST(COUNT(*) OVER (PARTITION BY et) AS BIGINT) AS n
@@ -2012,52 +2052,32 @@ def ts_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     FLOOR(x/2.0) on both engines, never integer `div`, whose
     truncation direction differs from `//` below zero).
 
-    This is the registry's genuinely SEQUENTIAL per-series recursion:
-    Spark runs it as applyInPandas over the calendar-bounded series
-    grain (the sanctioned custom-stateful path — no window can express
-    a recurrence whose coefficient feeds back), and the oracle is a
-    DuckDB RECURSIVE CTE advancing all series in rank lockstep. Both
-    engines produce identical integers, so the oracle is a full value
-    hash with no rounding (outputs are exact multiples of 1e-6).
+    This is the registry's genuinely SEQUENTIAL per-series recursion
+    (no window can express a recurrence whose coefficient feeds back):
+    Spark folds it inside the JVM (`fold_series`, state two BIGINTs),
+    and the oracle is a DuckDB RECURSIVE CTE advancing all series in
+    rank lockstep. Both engines produce identical integers, so the
+    oracle is a full value hash with no rounding (outputs are exact
+    multiples of 1e-6).
 
-    Scale: facts reduce to (type, day) in one partial agg; the pandas
-    recursion touches n_days rows per series and parallelizes across
-    series — at 100 TB the state is two BIGINTs per series, the
-    textbook mapGroups shape."""
-    import pandas as pd
-
-    daily = daily_events(spark, sf_dir)
-    lat = daily.select(
+    Scale: facts reduce to (type, day) in one partial agg; the fold
+    touches n_days elements per series and parallelizes across series
+    with no Python worker."""
+    level = "CAST(FLOOR((x.lv + acc.l + acc.b) / 2.0) AS BIGINT)"
+    st = fold_series(
+        _lattice_series(spark, sf_dir),
         "et",
-        "day_no",
-        F.floor(F.col("v") * 1e6 + F.lit(0.5)).cast("bigint").alias("lv"),
+        "day_no, lv",
+        "named_struct('l', arr[0].lv, 'b', CAST(0 AS BIGINT))",
+        f"named_struct('l', {level}, "
+        f"'b', CAST(FLOOR(({level} - acc.l + 3 * acc.b) / 4.0) AS BIGINT))",
     )
-
-    def holt(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("day_no")
-        lvs = [int(x) for x in pdf["lv"]]
-        l_prev, b_prev = lvs[0], 0
-        for x in lvs[1:]:
-            l_cur = (x + l_prev + b_prev) // 2  # == FLOOR(·/2.0) exactly
-            b_prev = (l_cur - l_prev + 3 * b_prev) // 4
-            l_prev = l_cur
-        n = len(lvs)
-        return pd.DataFrame(
-            {
-                "event_type": [pdf["et"].iloc[0]],
-                "n_days": [n],
-                "level": [l_prev / 1e6],
-                "trend": [b_prev / 1e6],
-                f"fc{_HOLT_H}": [(l_prev + _HOLT_H * b_prev) / 1e6],
-            }
-        )
-
-    return lat.groupBy("et").applyInPandas(
-        holt,
-        schema=(
-            "event_type string, n_days long, level double, trend double, "
-            f"fc{_HOLT_H} double"
-        ),
+    return st.selectExpr(
+        "et AS event_type",
+        "n AS n_days",
+        "CAST(st.l AS DOUBLE) / 1e6 AS level",
+        "CAST(st.b AS DOUBLE) / 1e6 AS trend",
+        f"CAST(st.l + {_HOLT_H} * st.b AS DOUBLE) / 1e6 AS fc{_HOLT_H}",
     )
 
 
@@ -2298,7 +2318,7 @@ def _hw_sql() -> str:
     ) + " END"
     return f"""
 WITH RECURSIVE {DAILY_EVENTS_SQL},
-lat AS (
+lat AS MATERIALIZED (
   SELECT et, day_no, CAST(FLOOR(v * 1e6 + 0.5) AS BIGINT) AS lv,
          ROW_NUMBER() OVER (PARTITION BY et ORDER BY day_no) AS rk,
          CAST(COUNT(*) OVER (PARTITION BY et) AS BIGINT) AS n,
@@ -2353,60 +2373,40 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_HW_H}-day forecast fan l_n + h·b_n + s[(max_day+h) % 7] in long
     form — one row per (series, horizon).
 
-    Spark runs the genuinely sequential recursion as applyInPandas
-    over the calendar-bounded series grain (the sanctioned custom
-    stateful path); the oracle is a DuckDB RECURSIVE CTE advancing all
-    series in rank lockstep with the 7 slots as carried BIGINT
-    columns. Both produce identical integers — full value hash, zero
-    rounding (outputs are exact 1e-6 multiples).
+    Spark folds the genuinely sequential recursion inside the JVM
+    (`fold_series`: level, trend, last day and the 7 slots as an array
+    the step rewrites with `transform`); the oracle is a DuckDB
+    RECURSIVE CTE advancing all series in rank lockstep with the 7
+    slots as carried BIGINT columns. Both produce identical integers —
+    full value hash, zero rounding (outputs are exact 1e-6 multiples).
 
-    Scale: facts reduce to (type, day) in one partial agg; the pandas
-    recursion is O(n_days) per series with 9 BIGINTs of state,
-    parallel across series — the mapGroups shape."""
-    import pandas as pd
-
-    daily = daily_events(spark, sf_dir)
-    lat = daily.select(
+    Scale: facts reduce to (type, day) in one partial agg; the fold is
+    O(n_days) per series with 10 BIGINTs of state, parallel across
+    series, with no Python worker."""
+    sprev = "acc.s[CAST(x.day_no % 7 AS INT)]"
+    level = f"CAST(FLOOR((x.lv - {sprev} + acc.l + acc.b) / 2.0) AS BIGINT)"
+    st = fold_series(
+        _lattice_series(spark, sf_dir),
         "et",
-        "day_no",
-        F.floor(F.col("v") * 1e6 + F.lit(0.5)).cast("bigint").alias("lv"),
+        "day_no, lv",
+        "named_struct('l', arr[0].lv, 'b', CAST(0 AS BIGINT), "
+        "'s', array_repeat(CAST(0 AS BIGINT), 7), 'd', arr[0].day_no)",
+        f"named_struct('l', {level}, "
+        f"'b', CAST(FLOOR(({level} - acc.l + 3 * acc.b) / 4.0) AS BIGINT), "
+        "'s', transform(acc.s, (v, j) -> IF(j = x.day_no % 7, "
+        f"CAST(FLOOR((x.lv - {level} + {sprev}) / 2.0) AS BIGINT), v)), "
+        "'d', x.day_no)",
     )
-
-    def hw(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("day_no")
-        days = [int(x) for x in pdf["day_no"]]
-        lvs = [int(x) for x in pdf["lv"]]
-        l_prev, b_prev = lvs[0], 0
-        s = [0] * 7
-        for day, x in zip(days[1:], lvs[1:]):
-            ph = day % 7
-            sprev = s[ph]
-            l_cur = (x - sprev + l_prev + b_prev) // 2  # FLOOR(·/2.0)
-            b_prev = (l_cur - l_prev + 3 * b_prev) // 4
-            s[ph] = (x - l_cur + sprev) // 2
-            l_prev = l_cur
-        n, max_day = len(lvs), days[-1]
-        et = pdf["et"].iloc[0]
-        return pd.DataFrame(
-            {
-                "event_type": [et] * _HW_H,
-                "h": list(range(1, _HW_H + 1)),
-                "n_days": [n] * _HW_H,
-                "level": [l_prev / 1e6] * _HW_H,
-                "trend": [b_prev / 1e6] * _HW_H,
-                "fc": [
-                    (l_prev + h * b_prev + s[(max_day + h) % 7]) / 1e6
-                    for h in range(1, _HW_H + 1)
-                ],
-            }
-        )
-
-    return lat.groupBy("et").applyInPandas(
-        hw,
-        schema=(
-            "event_type string, h long, n_days long, level double, "
-            "trend double, fc double"
-        ),
+    return st.selectExpr(
+        "et", "n", "st", f"explode(sequence(1L, {_HW_H}L)) AS h"
+    ).selectExpr(
+        "et AS event_type",
+        "h",
+        "n AS n_days",
+        "CAST(st.l AS DOUBLE) / 1e6 AS level",
+        "CAST(st.b AS DOUBLE) / 1e6 AS trend",
+        "CAST(st.l + h * st.b + st.s[CAST((st.d + h) % 7 AS INT)] AS DOUBLE)"
+        " / 1e6 AS fc",
     )
 
 
@@ -2667,7 +2667,7 @@ _KAL_R = 4.0  # observation variance
 
 _KALMAN_SQL = f"""
 WITH RECURSIVE {DAILY_EVENTS_SQL},
-lat AS (
+lat AS MATERIALIZED (
   SELECT et,
          CAST(CAST(FLOOR(v * 1e6 + 0.5) AS BIGINT) AS DOUBLE) / 1e6 AS z,
          ROW_NUMBER() OVER (PARTITION BY et ORDER BY day_no) AS rk,
@@ -2722,58 +2722,36 @@ def ts_kalman_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (FLOOR(x·10^k+0.5) — the CLAUDE.md half-tie rule) only for hash
     hygiene. √ in the steady-state gain is IEEE-exact too.
 
-    Sequential by nature (the gain feeds back through P): Spark runs
-    applyInPandas over the calendar-bounded per-series grain, the
-    oracle a RECURSIVE CTE advancing all series in rank lockstep —
-    ts_holt_forecast's sanctioned pattern (CLAUDE.md).
+    Sequential by nature (the gain feeds back through P): Spark folds
+    the recursion inside the JVM (`fold_series`), the oracle is a
+    RECURSIVE CTE advancing all series in rank lockstep —
+    ts_holt_forecast's pattern (CLAUDE.md).
 
     Scale: facts reduce to (type, day) in one partial agg; state is
     three doubles per series; series parallelize across executors and
-    each recursion touches only its own ≤n_days rows."""
-    import pandas as pd
-
-    daily = daily_events(spark, sf_dir)
-    lat = daily.select(
-        "et",
-        "day_no",
-        (
-            F.floor(F.col("v") * 1e6 + F.lit(0.5)).cast("bigint")
-            .cast("double")
-            / 1e6
-        ).alias("z"),
-    )
+    each fold touches only its own ≤n_days elements."""
     q_, r_ = _KAL_Q, _KAL_R
     pp_inf = (q_ + (q_ * q_ + 4.0 * q_ * r_) ** 0.5) / 2.0
-    k_inf = pp_inf / (pp_inf + r_)
-
-    def kalman(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("day_no")
-        zs = [float(z) for z in pdf["z"]]
-        x, p, k = zs[0], r_, 0.0
-        for z in zs[1:]:
-            pp = p + q_
-            k = pp / (pp + r_)
-            x = x + k * (z - x)
-            p = (1.0 - k) * pp
-        import math
-
-        return pd.DataFrame(
-            {
-                "event_type": [pdf["et"].iloc[0]],
-                "n_days": [len(zs)],
-                "level_lat": [int(math.floor(x * 1e6 + 0.5))],
-                "pvar_lat": [int(math.floor(p * 1e9 + 0.5))],
-                "gain_lat": [int(math.floor(k * 1e9 + 0.5))],
-                "gain_steady_lat": [int(math.floor(k_inf * 1e9 + 0.5))],
-            }
-        )
-
-    return lat.groupBy("et").applyInPandas(
-        kalman,
-        schema=(
-            "event_type string, n_days long, level_lat long, "
-            "pvar_lat long, gain_lat long, gain_steady_lat long"
+    gain_steady = math.floor(pp_inf / (pp_inf + r_) * 1e9 + 0.5)
+    pp = f"(acc.p + {q_}D)"
+    gain = f"({pp} / ({pp} + {r_}D))"
+    st = fold_series(
+        _lattice_series(spark, sf_dir).selectExpr(
+            "et", "day_no", "CAST(lv AS DOUBLE) / 1e6 AS z"
         ),
+        "et",
+        "day_no, z",
+        f"named_struct('x', arr[0].z, 'p', {r_}D, 'k', 0.0D)",
+        f"named_struct('x', acc.x + {gain} * (x.z - acc.x), "
+        f"'p', (1.0D - {gain}) * {pp}, 'k', {gain})",
+    )
+    return st.selectExpr(
+        "et AS event_type",
+        "n AS n_days",
+        "CAST(FLOOR(st.x * 1e6 + 0.5D) AS BIGINT) AS level_lat",
+        "CAST(FLOOR(st.p * 1e9 + 0.5D) AS BIGINT) AS pvar_lat",
+        "CAST(FLOOR(st.k * 1e9 + 0.5D) AS BIGINT) AS gain_lat",
+        f"CAST({gain_steady} AS BIGINT) AS gain_steady_lat",
     )
 
 
@@ -3185,8 +3163,8 @@ def ts_dtw_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_holt_forecast daily-mean recipe), costs |a_i - b_j| and every
     DP cell are therefore exact BIGINTs — the distance matches
     bitwise with NO rounding anywhere. Spark runs the genuinely
-    sequential DP vectorized over anti-diagonals in pandas (the
-    sanctioned applyInPandas-family path for recurrences); the oracle
+    sequential DP vectorized over anti-diagonals in pandas (a Python
+    worker, because the DP rows grow with the series); the oracle
     is a DuckDB RECURSIVE CTE advancing one anti-diagonal per round
     with the two previous diagonals carried as BIGINT lists — cell
     (i, j) on diagonal d reads (i-1, j), (i, j-1) from diagonal d-1
@@ -3200,9 +3178,7 @@ def ts_dtw_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    daily = daily_events(spark, sf_dir).selectExpr(
-        "et", "day_no", "CAST(FLOOR(v * 1e6 + 0.5D) AS BIGINT) AS lv"
-    )
+    daily = _lattice_series(spark, sf_dir)
     ser = daily.groupBy("et").agg(
         F.expr(
             "transform(array_sort(collect_list(struct(day_no, lv))),"
@@ -3324,63 +3300,38 @@ def ts_garch_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     alpha*E[r^2]) — the planted test plants a variance burst and a
     calm twin around exactly that fixed point.
 
-    Spark runs the genuinely sequential recursion as applyInPandas
-    over the calendar-bounded series grain (the sanctioned
-    custom-stateful path, as ts_holt_forecast); the oracle is a DuckDB
-    RECURSIVE CTE advancing all series in rank lockstep off a
-    MATERIALIZED returns frame.
+    Spark folds the genuinely sequential recursion inside the JVM
+    (`fold_series`, as ts_holt_forecast, seeded from the first two
+    days; a one-day series has no return and emits no row); the oracle
+    is a DuckDB RECURSIVE CTE advancing all series in rank lockstep off
+    a MATERIALIZED returns frame.
 
     Overflow budget: daily means stay < ~1e3, so lv < 1e9, |r| < 1e9
     in principle and < ~1e8 on every shipped SF; r^2 < 1e16 and
     h <= 2*omega + max(r^2)/2 < 6e15 — inside int64 with headroom.
 
-    Scale: facts reduce to (type, day) in one partial agg; the lag
-    window and the pandas recursion ride the saturating per-series
-    calendar grain (grain-bounded exemption); state is one BIGINT per
-    series — the textbook mapGroups shape."""
-    import pandas as pd
-
-    daily = daily_events(spark, sf_dir).selectExpr(
-        "et", "day_no", "CAST(FLOOR(v * 1e6 + 0.5D) AS BIGINT) AS lv"
+    Scale: facts reduce to (type, day) in one partial agg; the fold
+    rides the saturating per-series calendar grain (grain-bounded
+    exemption); state is three BIGINTs per series (last level, last
+    return, h), with no Python worker."""
+    r0 = "(arr[1].lv - arr[0].lv)"
+    h_next = f"({_GARCH_W} + (st.r * st.r) div 4 + st.h div 2)"
+    st = fold_series(
+        _lattice_series(spark, sf_dir),
+        "et",
+        "day_no, lv",
+        f"named_struct('pl', arr[1].lv, 'r', {r0}, 'h', {r0} * {r0})",
+        "named_struct('pl', x.lv, 'r', x.lv - acc.pl, "
+        f"'h', {_GARCH_W} + (acc.r * acc.r) div 4 + acc.h div 2)",
+        head=2,
     )
-
-    def garch(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("day_no")
-        lvs = [int(x) for x in pdf["lv"]]
-        rs = [b - a for a, b in zip(lvs, lvs[1:])]
-        if not rs:
-            return pd.DataFrame(
-                {
-                    "event_type": pd.Series([], dtype="object"),
-                    "n_ret": pd.Series([], dtype="int64"),
-                    "h_last": pd.Series([], dtype="int64"),
-                    "h_next": pd.Series([], dtype="int64"),
-                }
-            )
-        h = rs[0] * rs[0]
-        for r_prev in rs[:-1]:
-            h = _GARCH_W + (r_prev * r_prev) // 4 + h // 2
-        h_next = _GARCH_W + (rs[-1] * rs[-1]) // 4 + h // 2
-        return pd.DataFrame(
-            {
-                "event_type": [pdf["et"].iloc[0]],
-                "n_ret": [len(rs)],
-                "h_last": [h],
-                "h_next": [h_next],
-            }
-        )
-
-    st = daily.groupBy("et").applyInPandas(
-        garch,
-        schema="event_type string, n_ret long, h_last long, h_next long",
-    )
-    return st.select(
-        "event_type",
-        "n_ret",
-        "h_last",
-        "h_next",
-        (F.col("h_last").cast("double") / 1e12).alias("sigma2"),
-        (F.col("h_next").cast("double") / 1e12).alias("sigma2_next"),
+    return st.selectExpr(
+        "et AS event_type",
+        "n - 1 AS n_ret",
+        "st.h AS h_last",
+        f"{h_next} AS h_next",
+        "CAST(st.h AS DOUBLE) / 1e12 AS sigma2",
+        f"CAST({h_next} AS DOUBLE) / 1e12 AS sigma2_next",
     )
 
 
@@ -3469,9 +3420,7 @@ def ts_sax_symbolic(spark: SparkSession, sf_dir: str) -> DataFrame:
     window rides the saturating per-series calendar grain
     (grain-bounded exemption); segments and words are K-row frames.
     The SAX word is a plain string column — atomic output."""
-    daily = daily_events(spark, sf_dir).selectExpr(
-        "et", "day_no", "CAST(FLOOR(v * 1e6 + 0.5D) AS BIGINT) AS lv"
-    )
+    daily = _lattice_series(spark, sf_dir)
     w = Window.partitionBy("et").orderBy("day_no")
     rk = daily.select(
         "et", "lv", (F.row_number().over(w) - 1).alias("r")
@@ -3602,7 +3551,8 @@ def ts_regime_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
     is broken by a fixed rule both engines share (stay beats switch
     at equal score via >=; final state prefers 'L' via strict >).
     Spark runs forward+backtrace per series in applyInPandas (the
-    sanctioned sequential path); the oracle is TWO chained DuckDB
+    backtrace keeps one backpointer pair per step, so the state grows
+    with the series and no O(1) fold applies); the oracle is TWO chained DuckDB
     recursive CTEs — a forward pass materializing per-step scores and
     backpointers, then a backward pass walking them — with the
     forward frame MATERIALIZED (referenced by both the backward
@@ -3613,9 +3563,7 @@ def ts_regime_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
     is day-grain long form, all atomic columns."""
     import pandas as pd
 
-    daily = daily_events(spark, sf_dir).selectExpr(
-        "et", "day_no", "CAST(FLOOR(v * 1e6 + 0.5D) AS BIGINT) AS lv"
-    )
+    daily = _lattice_series(spark, sf_dir)
 
     def viterbi(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("day_no")
@@ -3750,9 +3698,7 @@ def ts_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: facts reduce to (type, day) in one partial agg; LEAD rides
     the saturating calendar grain; everything after is a ≤27-row
     frame per series."""
-    daily = daily_events(spark, sf_dir).selectExpr(
-        "et", "day_no", "CAST(FLOOR(v * 1e6 + 0.5D) AS BIGINT) AS lv"
-    )
+    daily = _lattice_series(spark, sf_dir)
     w = Window.partitionBy("et").orderBy("day_no")
     tri = daily.select(
         "et",
@@ -3858,14 +3804,13 @@ def ts_croston_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the guard, documented here and replayed in the planted test).
     croston_fc is a ratio of exact BIGINTs — bitwise, unrounded.
 
-    Spark runs the per-part recursion as a JVM-side aggregate() fold
-    over the week-sorted demand array (struct accumulator carrying
-    s, v, prev-week) — the applyInPandas first cut paid ~9 s at sf0.1
-    purely in 20k-group Python/Arrow churn (measured r12; the holt
-    recursion is fine there because it has 5 groups, not 20k); the
-    fold is the same exact integer recursion with zero Python
-    workers. The oracle advances all parts in rank lockstep in a
-    recursive CTE off a MATERIALIZED demand frame.
+    Spark runs the per-part recursion as a JVM-side fold
+    (`fold_series`, struct accumulator carrying s, v, prev-week) — an
+    applyInPandas first cut paid ~9 s at sf0.1 purely in 20k-group
+    Python/Arrow churn (measured r12); the fold is the same exact
+    integer recursion with zero Python workers. The oracle advances all
+    parts in rank lockstep in a recursive CTE off a MATERIALIZED demand
+    frame.
 
     Scale: one fact pass to the (part, week) grain; the recursion
     state is two BIGINTs per part; output is part-grain."""
@@ -3880,44 +3825,22 @@ def ts_croston_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("z")
     )
-    # JVM-side fold: the first cut ran the recursion in applyInPandas
-    # over |parts| groups — 20k tiny Arrow round-trips cost ~9 s at
-    # sf0.1 (measured r12). The sorted-array aggregate() fold is the
-    # same exact integer recursion (array_sort by week = rank order;
-    # struct accumulator carries s, v, prev week) but stays inside the
-    # JVM — one shuffle, no Python workers.
     L = _CRO_LAT
-    fold = (
-        "aggregate(slice(arr, 2, size(arr) - 1), "
-        "named_struct('s', arr[0].z * CAST({L} AS BIGINT), "
-        "'v', CAST({L} AS BIGINT), 'pw', arr[0].w), "
-        "(acc, x) -> named_struct("
-        "'s', (acc.s + x.z * {L}) div 2, "
-        "'v', (acc.v + (x.w - acc.pw) * {L}) div 2, "
-        "'pw', x.w))"
-    ).format(L=L)
-    return (
-        wk.groupBy("p")
-        .agg(
-            F.expr(
-                "array_sort(collect_list(struct(w, z)))"
-            ).alias("arr"),
-            F.count("*").cast("bigint").alias("n"),
-        )
-        .select(
-            F.col("p").alias("partkey"),
-            F.col("n").alias("n_demand_periods"),
-            F.expr(fold).alias("st"),
-        )
-        .select(
-            "partkey",
-            "n_demand_periods",
-            F.col("st.s").alias("size_lat"),
-            F.col("st.v").alias("interval_lat"),
-            (F.col("st.s").cast("double") / L).alias("smoothed_size"),
-            (F.col("st.v").cast("double") / L).alias("smoothed_interval"),
-            (F.col("st.s").cast("double") / F.col("st.v")).alias(
-                "croston_fc"
-            ),
-        )
+    st = fold_series(
+        wk,
+        "p",
+        "w, z",
+        f"named_struct('s', arr[0].z * CAST({L} AS BIGINT), "
+        f"'v', CAST({L} AS BIGINT), 'pw', arr[0].w)",
+        f"named_struct('s', (acc.s + x.z * {L}) div 2, "
+        f"'v', (acc.v + (x.w - acc.pw) * {L}) div 2, 'pw', x.w)",
+    )
+    return st.selectExpr(
+        "p AS partkey",
+        "n AS n_demand_periods",
+        "st.s AS size_lat",
+        "st.v AS interval_lat",
+        f"CAST(st.s AS DOUBLE) / {L} AS smoothed_size",
+        f"CAST(st.v AS DOUBLE) / {L} AS smoothed_interval",
+        "CAST(st.s AS DOUBLE) / st.v AS croston_fc",
     )

@@ -30,7 +30,9 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Every operator the r11 degencheck discovery run flagged (plus the
-# two r10 hand-finds), i.e. the regression surface of this bug class.
+# two r10 hand-finds), i.e. the regression surface of this bug class,
+# and the five JVM-side series folds, whose slice length reaches 0 on
+# the fixture's one-day event series (GARCH's seed needs two days).
 DEGEN_PINNED = [
     "agg_chi2_independence",
     "agg_corr_covar",
@@ -55,6 +57,11 @@ DEGEN_PINNED = [
     "sim_search_ivf_recall",
     "sim_search_ivfpq",
     "sim_search_ivfpq_recall",
+    "ts_croston_forecast",
+    "ts_garch_volatility",   # a one-day series has no return: no row
+    "ts_holt_forecast",
+    "ts_holt_winters",
+    "ts_kalman_filter",
     "ts_twap",
     "ts_wavelet_haar",       # the r10 hand-find (zero energy share)
 ]

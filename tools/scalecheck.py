@@ -148,13 +148,13 @@ AUDITED = [
     "dq_table_diff",  # full-outer key join of two snapshot versions
     "ts_var_cvar",    # per-series rank window (calendar grain-bounded)
     "join_point_in_polygon",  # inverted-cell-list candidate equi-join
-    "ts_holt_forecast",  # applyInPandas per-series recursion
+    "ts_holt_forecast",  # JVM-side per-series fold (sorted array aggregate)
     "mix_raking_ipf",    # corpus-once contingency + K-cell IPF loop
     "graph_community_modularity",  # rides LPA + two label joins
     "join_interval_overlap",  # two-phase top-k + day-blocked pair join
     "ml_gbm_stumps",  # corpus-once cell stats + bounded boosting rounds
     "graph_adamic_adar",  # neighbor-pair self-join blocked on w
-    "ts_holt_winters",  # applyInPandas per-series seasonal recursion
+    "ts_holt_winters",  # JVM-side per-series seasonal fold
     "graph_harmonic_centrality",  # visited-set BFS expansion loop
     "ml_auc_roc",  # per-fold cumulative window on the distinct-score grain
     "ml_kmeans_silhouette",  # kmeans training rounds + broadcast-fold eval pass
