@@ -12,12 +12,14 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from agri_market_data_pipeline_spark import memo  # noqa: E402
+from agri_market_data_pipeline_spark import observe  # noqa: E402
 from agri_market_data_pipeline_spark.registry import all_queries  # noqa: E402
 from agri_market_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -178,65 +180,7 @@ def main() -> int:
     queries = all_queries()
     names = [n for n in HEADLINE if n in queries]
 
-    # Warm-up: spin the JVM, whole-stage codegen for the join/agg/exchange
-    # operators, the Python UDF worker pool, the streaming machinery, and
-    # parquet footer caches once — session startup is environment cost,
-    # not query cost.
-    from agri_market_data_pipeline_spark.schemas import TABLE_NAMES
-    from agri_market_data_pipeline_spark.tables import load
-
-    # Full pass over every table: parquet footers, OS page cache, and the
-    # vectorized-reader codegen are one-time environment costs; without
-    # this the first query to touch each table absorbs them (~2 s on the
-    # suite's first query alone).
-    for t in TABLE_NAMES:
-        load(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
-    # scan_csv reads a CSV mirror of lineitem; creating that mirror is
-    # fixture setup (the reference ships CSVs — the testdata doesn't),
-    # not query cost, so build it before the timed region.
-    from agri_market_data_pipeline_spark.operators.ingest_parity import (
-        _csv_mirror,
-    )
-
-    _csv_mirror(spark, sf_dir)
-    a = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).limit(1000)
-    b = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).limit(1000)
-    (
-        a.join(b, a.l_orderkey == b.o_orderkey)
-        .groupBy("o_orderpriority")
-        .count()
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-    from pyspark.sql.functions import pandas_udf
-
-    # non-decorator form: `from __future__ import annotations` stringifies
-    # type hints module-wide, which breaks pandas_udf hint inference
-    _warm = pandas_udf(lambda v: v * 1.0, "double")
-
-    spark.range(1000).select(_warm("id")).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    if "stream_tumbling_agg" in [n for n in names]:
-        from agri_market_data_pipeline_spark.streaming.ops import (
-            events_stream,
-            run_to_table,
-        )
-
-        run_to_table(
-            events_stream(spark, sf_dir).groupBy("event_type").count(),
-            "warm",
-            "complete",
-        )
-
-    # One untimed warm run (that plan shape's one-time codegen/AQE
-    # compile cost — environment, not query cost), then the MEDIAN of
-    # three timed runs: medians make round-over-round comparison robust
-    # to a single GC pause or scheduler hiccup, where a min hides real
-    # regressions and a first-run mean drowns in warm-up.
-    import gc
-    import statistics
+    observe.warm_session(spark, sf_dir, names)
 
     # Same-run calibration probe: a fixed synthetic plan (range → hash
     # project → shuffle agg) whose cost depends only on the machine's
@@ -254,12 +198,7 @@ def main() -> int:
     # reported timing. Validated: two consecutive full sf0.1 runs agree
     # to 0.4% on normalized_total (95.9 vs 96.2) where absolute totals
     # drifted 4.3% — compare normalized_total round-over-round.
-    def calib_run() -> float:
-        return _calib_run(spark)
-
     calib_samples: list[float] = []
-
-    calib_run()  # plan-shape warm-up
 
     # Settle loop (VERDICT r10 item 1): the driver's r10 run recorded its
     # first three probes at 1.03/1.16/1.29 s against a 0.47 s run median —
@@ -269,9 +208,9 @@ def main() -> int:
     # untimed probes until two consecutive samples agree within 20%
     # (bounded at 8 attempts), so slot 1 starts from the same
     # neighborhood every later slot enjoys.
-    prev = calib_run()
+    prev = observe.calib_run(spark)
     for _ in range(7):
-        cur_probe = calib_run()
+        cur_probe = observe.calib_run(spark)
         if max(prev, cur_probe) / max(min(prev, cur_probe), 1e-9) < 1.2:
             break
         prev = cur_probe
@@ -279,41 +218,16 @@ def main() -> int:
     timings: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
     for name in names:
-        calib_samples.append(calib_run())  # one probe per query slot
-        fn = queries[name]
-
-        def one_run() -> float:
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            # drop per-invocation storage so earlier queries' residue
-            # can't GC-pressure later ones: memo.clear_all() releases
-            # every pin and empties the data memos, so every timed
-            # sample pays its own builds instead of inheriting them
-            # from the untimed warm-up. Metadata memos persist; see
-            # memo.py.
-            memo.clear_all()
-            gc.collect()
-            return dt
-
-        one_run()  # warm-up (plan-shape codegen/AQE compile — env cost)
-        runs = [one_run() for _ in range(3)]
-        # Contention guard: a transient GC pause / noisy neighbor can
-        # poison one or two of only three samples (r2 recorded
-        # dedup_ngram_jaccard at 4.6 s where the committed plan runs
-        # 1.2-1.7 s warm). If the spread is wide, take more samples so
-        # the median reflects the plan, not the neighborhood.
-        if min(runs) > 0 and max(runs) / min(runs) > 1.5:
-            runs += [one_run() for _ in range(2)]
-        timings[name] = round(statistics.median(runs), 3)
+        calib_samples.append(observe.calib_run(spark))  # one probe per query slot
+        m = observe.measure(spark, partial(queries[name], spark, sf_dir), 3)
+        timings[name] = round(m.median, 3)
         # raw samples preserved in the detail file (VERDICT r6 item 8):
         # regression triage can separate per-query noise (wide sample
         # spread) from a plan change (tight spread at a new level)
         # without needing three full confirmation runs.
-        samples[name] = [round(r, 3) for r in runs]
+        samples[name] = [round(r, 3) for r in m.samples]
 
-    calib_samples.append(calib_run())  # suite end
+    calib_samples.append(observe.calib_run(spark))  # suite end
     calib = statistics.median(calib_samples)
     # Per-slot normalization (VERDICT r10 item 1): query i sits between
     # probes i and i+1, so a transient neighborhood shift (GC storm,
@@ -419,29 +333,6 @@ def slot_calib(calib_samples: list, i: int) -> float:
     return statistics.median(window)
 
 
-def _calib_run(spark) -> float:
-    """Fixed synthetic probe (range → hash project → shuffle agg): cost
-    depends only on the machine's current CPU/JVM neighborhood, never on
-    testdata or code under test. Shared by the query suite and the
-    ingest subprocess so both metrics normalize against the same unit."""
-    t0 = time.time()
-    (
-        spark.range(0, 20_000_000, 1, 32)
-        .selectExpr(
-            "id % 1024 AS k",
-            # mod keeps the ANSI sum far from int64 overflow
-            "xxhash64(id) % 1000003 AS h1",
-            "xxhash64(id + 1) % 97 AS h2",
-        )
-        .groupBy("k")
-        .agg({"h1": "sum", "h2": "max"})
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-    return time.time() - t0
-
-
 def _ingest_throughput_isolated() -> tuple[float, float]:
     """Run the ingest benchmark in its own JVM; return (rows/s, rows
     per calib-second). The raw rows/s figure swings 2-3x across rounds
@@ -514,13 +405,11 @@ def _ingest_throughput(spark, n_rows: int = 1_000_000, limit: int = 1000) -> flo
 
 if __name__ == "__main__":
     if "--ingest-only" in sys.argv:
-        import statistics as _st
-
         _spark = get_spark("bench-ingest")
         _spark.sparkContext.setLogLevel("ERROR")
         _spark.range(1).count()
         _ingest_throughput(_spark, n_rows=64_000)  # warm the worker pool
-        _calib_run(_spark)  # probe plan-shape warm-up
+        observe.calib_run(_spark)  # probe plan-shape warm-up
         # Median of 3 full passes: a single 1M-row pass is only a few
         # seconds, short enough that one GC pause or page-cache miss
         # swings the number 2-3× (r1 435k vs r2 74k was mostly this).
@@ -528,11 +417,11 @@ if __name__ == "__main__":
         # can be neighborhood-normalized by the parent (VERDICT r10
         # item 4: 255k vs 676k rows/s across rounds on identical code).
         _rps: list[float] = []
-        _cal: list[float] = [_calib_run(_spark)]
+        _cal: list[float] = [observe.calib_run(_spark)]
         for _ in range(3):
             _rps.append(_ingest_throughput(_spark))
-            _cal.append(_calib_run(_spark))
-        print(f"INGEST_RPS={_st.median(_rps)}")
-        print(f"INGEST_CALIB={round(_st.median(_cal), 4)}")
+            _cal.append(observe.calib_run(_spark))
+        print(f"INGEST_RPS={statistics.median(_rps)}")
+        print(f"INGEST_CALIB={round(statistics.median(_cal), 4)}")
         raise SystemExit(0)
     raise SystemExit(main())

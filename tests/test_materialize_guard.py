@@ -6,7 +6,10 @@ trip — so `memo.clear_all` can release it at the bench sample boundary.
 A direct `.localCheckpoint()`, `.cache()`, `.persist()` or
 `.checkpoint()` elsewhere in the package strands its blocks until a JVM
 GC happens to run (3 to 12 checkpointed RDDs per query, measured with
-`getPersistentRDDs` after `clear_all`). Pure AST, no Spark session.
+`getPersistentRDDs` after `clear_all`). The scan covers `bench.py` and
+`tools/*.py` too: their samples end with `memo.clear_all()`, which
+releases a pin of theirs as well, so a planted input is frozen as
+parquet instead. Pure AST, no Spark session.
 """
 
 from __future__ import annotations
@@ -16,6 +19,8 @@ import pathlib
 
 import agri_market_data_pipeline_spark
 
+PKG = pathlib.Path(agri_market_data_pipeline_spark.__file__).parent
+ROOT = PKG.parent
 PIN_METHODS = {"localCheckpoint", "cache", "persist", "checkpoint"}
 RETIRED = {"_materialized", "_STATE_DIRS", "_sweep_state_dirs"}
 # (module, method) -> why the site may pin without the helper
@@ -65,11 +70,18 @@ def test_scan_flags_direct_pins():
     ], got
 
 
+def _scanned() -> list[tuple[str, pathlib.Path]]:
+    """The package's modules (named relative to it), then `bench.py`
+    and `tools/*.py` (named relative to the repository)."""
+    harness = [ROOT / "bench.py", *sorted((ROOT / "tools").glob("*.py"))]
+    return [(p.relative_to(PKG).as_posix(), p) for p in sorted(PKG.rglob("*.py"))] + [
+        (p.relative_to(ROOT).as_posix(), p) for p in harness
+    ]
+
+
 def test_every_pin_goes_through_memo_pin():
-    pkg = pathlib.Path(agri_market_data_pipeline_spark.__file__).parent
     offenders, allowed = [], []
-    for path in sorted(pkg.rglob("*.py")):
-        rel = path.relative_to(pkg).as_posix()
+    for rel, path in _scanned():
         if rel == "memo.py":
             continue
         tree = ast.parse(path.read_text(), str(path))

@@ -14,15 +14,13 @@ generation stage. Writes SCALING.md. Run:
 
 from __future__ import annotations
 
-import gc
 import os
-import statistics
 import sys
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from agri_market_data_pipeline_spark import memo  # noqa: E402
+from agri_market_data_pipeline_spark import observe  # noqa: E402
 from agri_market_data_pipeline_spark.registry import all_queries  # noqa: E402
 from agri_market_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -205,24 +203,14 @@ def main() -> int:
     medians: dict[str, list[float]] = {}
     for sf in SFS:
         for name in targets:
-            fn = queries[name]
-            runs = []
-            for i in range(n_runs + 1):
-                t0 = time.time()
-                fn(spark, sf).write.format("noop").mode("overwrite").save()
-                if i > 0:  # first run is warm-up
-                    runs.append(time.time() - t0)
-                # bench.py's sample boundary: evict data memos so every
-                # sample pays its own index/state builds.
-                memo.clear_all()
-                gc.collect()
-            medians.setdefault(name, []).append(statistics.median(runs))
+            m = observe.measure(spark, partial(queries[name], spark, sf), n_runs)
+            medians.setdefault(name, []).append(m.median)
 
     lines = [
         "# SCALING — measured 10x data-step behavior",
         "",
         f"Generated by `python tools/scalecheck.py` ({n_runs}-run warm"
-        f" medians at sf0.01 and sf0.1, local[32]).",
+        f" medians at sf0.01 and sf0.1, {spark.sparkContext.master}).",
         "",
         "ratio = t(sf0.1) / t(sf0.01) against a 10x data step. Ratios at",
         "or under ~10 indicate per-row-dominated (linear) plans; fixed",

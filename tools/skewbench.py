@@ -11,8 +11,8 @@ fact rows — and measures the same aggregate join three ways:
           pattern that also covers what AQE can't (single-key
           aggregation state, already-aggregated build sides)
 
-Prints one markdown table row per variant: wall seconds (median of 3),
-plus a hash-equality check of salted vs plain results. Run:
+Prints one markdown table row per variant: wall seconds (observe.measure's
+median), plus a hash-equality check of salted vs plain results. Run:
 
     python tools/skewbench.py [n_rows] [skew_frac]
 
@@ -34,22 +34,49 @@ threshold guidance in operators/geo.py and SCALE.md. Run:
 
 from __future__ import annotations
 
+import contextlib
 import os
-import statistics
 import sys
-import time
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from agri_market_data_pipeline_spark import observe  # noqa: E402
 from agri_market_data_pipeline_spark.functions.exact import dsum  # noqa: E402
 from agri_market_data_pipeline_spark.session import get_spark  # noqa: E402
 
 _SALT = 16
 
 
-def main() -> int:
+@contextlib.contextmanager
+def _confs(spark, confs: dict[str, str]):
+    """Set ``confs`` for the block, then restore each key's old value
+    (unset when it had none)."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _freeze(df, root: str, name: str):
+    """``df`` written once as parquet under ``root`` and read back: the
+    planted input stays out of the timing and, unlike a checkpoint,
+    outlives the memo.clear_all() that ends every sample."""
+    path = os.path.join(root, name)
+    df.write.parquet(path)
+    return df.sparkSession.read.parquet(path)
+
+
+def main(root: str) -> int:
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 4_000_000
     skew_frac = float(sys.argv[2]) if len(sys.argv) > 2 else 0.5
     n_keys = 100
@@ -59,22 +86,24 @@ def main() -> int:
 
     # Planted skew: key 0 owns skew_frac of all rows; the rest uniform.
     cut = int(n_rows * skew_frac)
-    fact = (
-        spark.range(n_rows, numPartitions=32)
-        .select(
+    fact = _freeze(
+        spark.range(n_rows, numPartitions=32).select(
             F.when(F.col("id") < cut, F.lit(0))
             .otherwise((F.col("id") % (n_keys - 1)) + 1)
             .cast("long")
             .alias("k"),
             (F.col("id") % 1000).cast("double").alias("v"),
             F.col("id").alias("rid"),
-        )
-        .localCheckpoint(eager=True)  # freeze the input out of the timing
+        ),
+        root,
+        "fact",
     )
-    dim = (
-        spark.range(n_keys)
-        .select(F.col("id").alias("k"), F.concat(F.lit("key-"), F.col("id")).alias("name"))
-        .localCheckpoint(eager=True)
+    dim = _freeze(
+        spark.range(n_keys).select(
+            F.col("id").alias("k"), F.concat(F.lit("key-"), F.col("id")).alias("name")
+        ),
+        root,
+        "dim",
     )
 
     def plain():
@@ -104,21 +133,8 @@ def main() -> int:
             "spark.sql.autoBroadcastJoinThreshold": "-1",
             "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
         }
-        old = {k: spark.conf.get(k, None) for k in confs}
-        try:
-            for k, v in confs.items():
-                spark.conf.set(k, v)
-            mk().write.format("noop").mode("overwrite").save()  # warm
-            ts = []
-            for _ in range(3):
-                t0 = time.time()
-                mk().write.format("noop").mode("overwrite").save()
-                ts.append(time.time() - t0)
-            return statistics.median(ts)
-        finally:
-            for k, v in old.items():
-                if v is not None:
-                    spark.conf.set(k, v)
+        with _confs(spark, confs):
+            return observe.measure(spark, mk, 3).median
 
     rows = [
         ("plain (AQE skew off)", timed(plain, aqe_skew=False, aqe=False)),
@@ -131,7 +147,7 @@ def main() -> int:
     assert [tuple(r) for r in a] == [tuple(r) for r in b], "salted != plain"
 
     print(f"planted skew: {n_rows:,} fact rows, key 0 owns {skew_frac:.0%}, "
-          f"{n_keys} keys, local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+          f"{n_keys} keys, {spark.sparkContext.master}")
     print("| variant | median wall s |")
     print("|---------|--------------:|")
     for name, t in rows:
@@ -140,7 +156,7 @@ def main() -> int:
     return 0
 
 
-def hub_main() -> int:
+def hub_main(root: str) -> int:
     """Planted-hub degree-cap measurement: one key with `hub_degree`
     distinct values (C(d,2) candidate pairs), `n_normal` keys with 3
     each. Times the blocked pair self-join uncapped vs rank-capped at
@@ -169,7 +185,7 @@ def hub_main() -> int:
             )
         ).alias("part"),
     )
-    cp = hub.union(normal).repartition(32).localCheckpoint(eager=True)
+    cp = _freeze(hub.union(normal).repartition(32), root, "hub")
 
     def pairs(frame):
         a, b = frame.alias("a"), frame.alias("b")
@@ -183,9 +199,6 @@ def hub_main() -> int:
             .agg(F.count("*").alias("w"))
         )
 
-    def uncapped():
-        return pairs(cp)
-
     def capped():
         w = Window.partitionBy("cust").orderBy("part")
         return pairs(
@@ -194,17 +207,8 @@ def hub_main() -> int:
             .drop("_rn")
         )
 
-    def timed(mk) -> float:
-        mk().write.format("noop").mode("overwrite").save()  # warm
-        ts = []
-        for _ in range(3):
-            t0 = time.time()
-            mk().write.format("noop").mode("overwrite").save()
-            ts.append(time.time() - t0)
-        return statistics.median(ts)
-
-    t_un = timed(uncapped)
-    t_cap = timed(capped)
+    t_un = observe.measure(spark, lambda: pairs(cp), 3).median
+    t_cap = observe.measure(spark, capped, 3).median
     print(
         f"planted hub: 1 key x degree {hub_degree:,} "
         f"(C(d,2)={hub_degree * (hub_degree - 1) // 2:,} pairs) + "
@@ -218,7 +222,7 @@ def hub_main() -> int:
     return 0
 
 
-def geo_main() -> int:
+def geo_main(root: str) -> int:
     """Planted hot-city-cell measurement for join_geo_radius's skew
     story: pin `hot_frac` of both customers and suppliers into ONE grid
     cell (a megacity), so roughly half the candidate-pair work of the
@@ -272,9 +276,9 @@ def geo_main() -> int:
             .alias("lon"),
         )
         cy, cx = _cell_cols(F.col("lat"), F.col("lon"))
-        return d.select(
-            "id", "lat", "lon", cy.alias("cy"), cx.alias("cx")
-        ).localCheckpoint(eager=True)
+        return _freeze(
+            d.select("id", "lat", "lon", cy.alias("cy"), cx.alias("cx")), root, salt
+        )
 
     cust = frame(n_cust, "gc", int(n_cust * hot_frac))
     supp = frame(n_supp, "gs", int(n_supp * hot_frac))
@@ -326,34 +330,14 @@ def geo_main() -> int:
     }
 
     def timed(skew_on: bool, tuned: bool) -> float:
-        old = {
-            k: spark.conf.get(k, None)
-            for k in list(_SKEW_CONFS)
-            + [
-                "spark.sql.adaptive.skewJoin.enabled",
-                "spark.sql.autoBroadcastJoinThreshold",
-            ]
+        confs = {
+            "spark.sql.adaptive.skewJoin.enabled": str(skew_on).lower(),
+            # force shuffle joins so the skewed exchange actually exists
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            **(_SKEW_CONFS if tuned else {}),
         }
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", str(skew_on).lower())
-        # force shuffle joins so the skewed exchange actually exists
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        if tuned:
-            for k, v in _SKEW_CONFS.items():
-                spark.conf.set(k, v)
-        try:
-            radius_join().write.format("noop").mode("overwrite").save()  # warm
-            ts = []
-            for _ in range(3):
-                t0 = time.time()
-                radius_join().write.format("noop").mode("overwrite").save()
-                ts.append(time.time() - t0)
-            return statistics.median(ts)
-        finally:
-            for k, v in old.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
+        with _confs(spark, confs):
+            return observe.measure(spark, radius_join, 3).median
 
     t_off = timed(False, False)
     t_stock = timed(True, False)
@@ -374,9 +358,7 @@ def geo_main() -> int:
     return 0
 
 
-
-
-def zipf_main() -> int:
+def zipf_main(root: str) -> int:
     """Fourth mode (r7): measure the LM count-join ROUTING counterfactual
     behind textstats' conditional head/tail split. On the driver
     testdata the vocabulary is 31 tokens, so the whole model broadcasts
@@ -407,17 +389,16 @@ def zipf_main() -> int:
     u = F.pmod(F.hash(F.col("id")), F.lit(100))
     hot = F.pmod(F.hash(F.col("id") + 1), F.lit(head))
     cold = F.lit(head) + F.pmod(F.hash(F.col("id") + 2), F.lit(vocab))
-    fact = (
-        spark.range(0, n_rows, 1, 32)
-        .select(
+    fact = _freeze(
+        spark.range(0, n_rows, 1, 32).select(
             F.when(u < 90, hot).otherwise(cold).cast("long").alias("tok"),
             F.col("id"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        root,
+        "fact",
     )
-    counts = (
-        fact.groupBy("tok").agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=True)
+    counts = _freeze(
+        fact.groupBy("tok").agg(F.count("*").alias("cnt")), root, "counts"
     )
     print(f"fact rows {n_rows}, distinct keys {counts.count()}, head {head}")
 
@@ -435,13 +416,7 @@ def zipf_main() -> int:
         )
 
     def timed(mk) -> float:
-        runs = []
-        for i in range(4):
-            t0 = time.time()
-            mk().groupBy().agg(F.sum("cnt")).collect()
-            if i:
-                runs.append(time.time() - t0)
-        return statistics.median(runs)
+        return observe.measure(spark, lambda: mk().groupBy().agg(F.sum("cnt")), 3).median
 
     a = timed(shuffle)
     b = timed(routed)
@@ -457,10 +432,8 @@ def zipf_main() -> int:
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "hub":
-        raise SystemExit(hub_main())
-    if len(sys.argv) > 1 and sys.argv[1] == "geo":
-        raise SystemExit(geo_main())
-    if len(sys.argv) > 1 and sys.argv[1] == "zipf":
-        raise SystemExit(zipf_main())
-    raise SystemExit(main())
+    mode = {"hub": hub_main, "geo": geo_main, "zipf": zipf_main}
+    run = mode.get(sys.argv[1] if len(sys.argv) > 1 else "", main)
+    # the planted inputs' parquet lives here and goes with the process
+    with tempfile.TemporaryDirectory(prefix="skewbench_") as root:
+        raise SystemExit(run(root))
