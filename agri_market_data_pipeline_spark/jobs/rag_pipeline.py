@@ -71,13 +71,13 @@ def chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def embed_chunks(df: DataFrame, id_col: str = "chunk_id") -> DataFrame:
+def embed_chunks(df: DataFrame) -> DataFrame:
     """Hashing-trick embeddings densified to array<double> — signed
     token counts on an md5 lattice (text_embed_hash), assembled into a
     dense vector via map_from_entries + a sequence fill, all built-ins.
     One explode + one partial-aggregated groupBy per chunk; the dense
     assembly is row-local."""
-    tok = df.select(id_col, F.explode(F.split("text", " ")).alias("tok"))
+    tok = df.select("chunk_id", F.explode(F.split("text", " ")).alias("tok"))
     hv = F.conv(
         F.substring(F.md5(F.concat(F.lit("emb:"), F.col("tok"))), 1, 8), 16, 10
     ).cast("long")
@@ -85,15 +85,15 @@ def embed_chunks(df: DataFrame, id_col: str = "chunk_id") -> DataFrame:
         F.lit(-1.0)
     )
     sparse = (
-        tok.select(id_col, hv.alias("hv"))
-        .groupBy(id_col, (F.col("hv") % EMB_D).cast("int").alias("dim"))
+        tok.select("chunk_id", hv.alias("hv"))
+        .groupBy("chunk_id", (F.col("hv") % EMB_D).cast("int").alias("dim"))
         .agg(F.sum(sign).alias("v"))
     )
-    m = sparse.groupBy(id_col).agg(
+    m = sparse.groupBy("chunk_id").agg(
         F.map_from_entries(F.collect_list(F.struct("dim", "v"))).alias("m")
     )
     out = m.selectExpr(
-        id_col,
+        "chunk_id",
         f"transform(sequence(0, {EMB_D - 1}), "
         "i -> coalesce(element_at(m, CAST(i AS INT)), 0.0D)) AS embedding",
     )

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.exact import davg, dsum, sql_davg, sql_dsum
+from ..functions.exact import DEC, DEC_WIDE, davg, dsum, sql_davg, sql_dsum
 from ..memo import pin
 from ..registry import query
 from ..tables import load
@@ -278,17 +278,14 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_corr_covar",
-    oracle="""
+    oracle=f"""
 WITH m AS (
   SELECT l_returnflag, CAST(COUNT(*) AS DOUBLE) AS n,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(30,6))) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,6))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(38,6)))
-              AS DOUBLE) AS sxy,
-         CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(38,6)))
-              AS DOUBLE) AS sxx,
-         CAST(SUM(CAST(l_extendedprice * l_extendedprice AS DECIMAL(38,6)))
-              AS DOUBLE) AS syy
+         {sql_dsum("l_quantity")} AS sx,
+         {sql_dsum("l_extendedprice")} AS sy,
+         {sql_dsum("l_quantity * l_extendedprice", DEC_WIDE)} AS sxy,
+         {sql_dsum("l_quantity * l_quantity", DEC_WIDE)} AS sxx,
+         {sql_dsum("l_extendedprice * l_extendedprice", DEC_WIDE)} AS syy
   FROM lineitem GROUP BY l_returnflag)
 SELECT l_returnflag,
        CASE WHEN n > 1 AND (n * sxx - sx * sx) > 0
@@ -313,18 +310,18 @@ def agg_corr_covar(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem pins this), while explicit moments let both engines guard
     the ratios identically: corr is NULL when either variance is zero
     or n = 1, covar NULL when n = 1. The products carry <= 4 decimal
-    digits so the DECIMAL(38,6) casts are exact; the final formula is
+    digits so the `DEC_WIDE` casts are exact; the final formula is
     the same IEEE tree on identical doubles, with ROUND absorbing the
     ~1-ulp decimal->double conversion drift of the wide sums."""
     li = load(spark, sf_dir, "lineitem")
     x, y = F.col("l_quantity"), F.col("l_extendedprice")
     g = li.groupBy("l_returnflag").agg(
         F.count("*").alias("cnt"),
-        F.sum(x.cast("decimal(30,6)")).alias("dsx"),
-        F.sum(y.cast("decimal(30,6)")).alias("dsy"),
-        F.sum((x * y).cast("decimal(38,6)")).alias("dsxy"),
-        F.sum((x * x).cast("decimal(38,6)")).alias("dsxx"),
-        F.sum((y * y).cast("decimal(38,6)")).alias("dsyy"),
+        F.sum(x.cast(DEC)).alias("dsx"),
+        F.sum(y.cast(DEC)).alias("dsy"),
+        F.sum((x * y).cast(DEC_WIDE)).alias("dsxy"),
+        F.sum((x * x).cast(DEC_WIDE)).alias("dsxx"),
+        F.sum((y * y).cast(DEC_WIDE)).alias("dsyy"),
     )
     n = F.col("cnt").cast("double")
     sx, sy = F.col("dsx").cast("double"), F.col("dsy").cast("double")
@@ -384,16 +381,13 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q1_SQL = """
+_Q1_SQL = f"""
 SELECT l_returnflag,
        l_linestatus,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(30,6))) AS DOUBLE) AS sum_qty,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,6))) AS DOUBLE)
-         AS sum_base_price,
-       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(30,6)))
-            AS DOUBLE) AS sum_disc_price,
-       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax)
-                     AS DECIMAL(30,6))) AS DOUBLE) AS sum_charge,
+       {sql_dsum("l_quantity")} AS sum_qty,
+       {sql_dsum("l_extendedprice")} AS sum_base_price,
+       {sql_dsum("l_extendedprice * (1 - l_discount)")} AS sum_disc_price,
+       {sql_dsum("l_extendedprice * (1 - l_discount) * (1 + l_tax)")} AS sum_charge,
        COUNT(*) AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '2023-09-02'
@@ -418,10 +412,10 @@ def sql_interface(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "incr_agg_merge",
-    oracle="""
+    oracle=f"""
 SELECT event_type,
        COUNT(*) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) AS sum_value
+       {sql_dsum("value")} AS sum_value
 FROM events
 GROUP BY event_type
 """,
@@ -444,7 +438,7 @@ def incr_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     def part(df: DataFrame) -> DataFrame:
         return df.groupBy("event_type").agg(
             F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(30,6)")).alias("sum_dec"),
+            F.sum(F.col("value").cast(DEC)).alias("sum_dec"),
         )
 
     snapshot = part(ev.filter(F.col("ts") < cut))
@@ -546,12 +540,12 @@ def agg_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SUBQ_SQL = """
+_SUBQ_SQL = f"""
 SELECT o.o_orderpriority,
        COUNT(*) AS n_expensive
 FROM orders o
 WHERE o.o_totalprice >
-      (SELECT 1.5 * CAST(SUM(CAST(o2.o_totalprice AS DECIMAL(30,6))) AS DOUBLE)
+      (SELECT 1.5 * {sql_dsum("o2.o_totalprice")}
              / COUNT(*)
        FROM orders o2
        WHERE o2.o_orderpriority = o.o_orderpriority)
@@ -725,10 +719,9 @@ def agg_topk_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q5_SQL = """
+_Q5_SQL = f"""
 SELECT n.n_name AS nation,
-       CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(30,6)))
-            AS DOUBLE) AS revenue,
+       {sql_dsum("l.l_extendedprice * (1 - l.l_discount)")} AS revenue,
        COUNT(*) AS n_lines
 FROM customer c
 JOIN orders o ON c.c_custkey = o.o_custkey
@@ -905,7 +898,7 @@ def sql_lateral_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT l_returnflag,
        COUNT(*) AS n_lines,
        COUNT(*) FILTER (WHERE l_quantity > 25) AS n_bulk,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,6)))
+       CAST(SUM(CAST(l_extendedprice AS {DEC}))
             FILTER (WHERE l_discount > 0.05) AS DOUBLE) AS sum_discounted,
        CAST(COALESCE(MAX(l_quantity) FILTER (WHERE l_returnflag = 'R'),
                      0) AS BIGINT) AS max_qty_returned
@@ -926,7 +919,7 @@ def agg_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     disc = F.when(
         F.col("l_discount") > 0.05, F.col("l_extendedprice")
-    ).cast("decimal(30,6)")
+    ).cast(DEC)
     return li.groupBy("l_returnflag").agg(
         F.count("*").alias("n_lines"),
         F.count(F.when(F.col("l_quantity") > 25, 1)).alias("n_bulk"),
@@ -954,7 +947,7 @@ spine AS (
 agg AS (
   SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month_start,
          COUNT(*) AS n_orders,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS DOUBLE) AS sum_price
+         {sql_dsum("o_totalprice")} AS sum_price
   FROM orders GROUP BY 1
 )
 SELECT s.month_start,
@@ -974,7 +967,7 @@ spine AS (
 agg AS (
   SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month_start,
          COUNT(*) AS n_orders,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS DOUBLE) AS sum_price
+         {sql_dsum("o_totalprice")} AS sum_price
   FROM orders GROUP BY 1
 )
 SELECT s.month_start,
@@ -1239,8 +1232,7 @@ def agg_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q3_SQL = f"""
 SELECT l.l_orderkey,
-       CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(30,6)))
-            AS DOUBLE) AS revenue,
+       {sql_dsum("l.l_extendedprice * (1 - l.l_discount)")} AS revenue,
        CAST(o.o_orderdate AS DATE) AS order_date,
        o.o_orderpriority AS priority
 FROM customer c

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.exact import dsum, sql_dsum
+from ..functions.exact import DEC, DEC_WIDE, dsum, sql_dsum
 from ..memo import pin
 from ..registry import query
 from ..tables import load
@@ -113,7 +113,7 @@ _Z_THRESHOLD = 1.7
 WITH s AS (
   SELECT o_orderpriority AS prio, COUNT(*) AS n,
          {sql_dsum("o_totalprice")} AS s1,
-         CAST(SUM(CAST(o_totalprice * o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS s2
+         {sql_dsum("o_totalprice * o_totalprice", DEC_WIDE)} AS s2
   FROM orders
   GROUP BY o_orderpriority
 ), m AS (
@@ -152,7 +152,7 @@ def anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = o.groupBy(F.col("o_orderpriority").alias("prio")).agg(
         F.count("*").alias("n"),
         dsum(x).alias("s1"),
-        F.sum((x * x).cast("decimal(38,6)")).cast("double").alias("s2"),
+        dsum(x * x, DEC_WIDE).alias("s2"),
     )
     m = st.select(
         "prio",
@@ -229,8 +229,8 @@ def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     "agg_vwap",
     oracle=f"""
 SELECT p.p_brand,
-       CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) * l.l_quantity
-                     AS DECIMAL(38,6))) AS DOUBLE)
+       {sql_dsum("l.l_extendedprice * (1 - l.l_discount) * l.l_quantity",
+                 DEC_WIDE)}
        / {sql_dsum("l.l_quantity")} AS vwap,
        {sql_dsum("l.l_quantity")} AS total_qty,
        COUNT(*) AS n_lines
@@ -246,7 +246,7 @@ def agg_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both numerator Σ(price·(1−disc)·qty) and denominator Σqty accumulate
     in DECIMAL (order-independent); the per-row product is plain IEEE
     arithmetic (deterministic given identical parquet doubles) and its
-    DECIMAL(38,6) quantization is tie-free (a binary double is never
+    `DEC_WIDE` quantization is tie-free (a binary double is never
     exactly at a 1e-6 midpoint). The final ratio of two exact doubles is
     one correctly-rounded division — bitwise equal across engines, so no
     rounding is applied (registry.py: rounding *introduces* divergence
@@ -254,11 +254,10 @@ def agg_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    wsum = F.sum(
-        (
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * F.col("l_quantity")
-        ).cast("decimal(38,6)")
-    ).cast("double")
+    wsum = dsum(
+        F.col("l_extendedprice") * (1 - F.col("l_discount")) * F.col("l_quantity"),
+        DEC_WIDE,
+    )
     qsum = dsum("l_quantity")
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
@@ -273,10 +272,10 @@ def agg_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "win_pareto_share",
-    oracle="""
+    oracle=f"""
 WITH r AS (
   SELECT p.p_brand,
-         SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,6))) AS rev
+         SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS {DEC_WIDE})) AS rev
   FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
   GROUP BY p.p_brand
 ), w AS (
@@ -312,7 +311,7 @@ def win_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
     rev = F.sum(
-        (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(38,6)")
+        (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(DEC_WIDE)
     ).alias("rev")
     r = (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
@@ -453,16 +452,16 @@ def win_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_seasonal_profile",
-    oracle="""
+    oracle=f"""
 WITH m AS (
   SELECT o_orderpriority AS prio,
          CAST(EXTRACT(MONTH FROM o_orderdate) AS BIGINT) AS moy,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS DOUBLE) AS s,
+         {sql_dsum("o_totalprice")} AS s,
          COUNT(*) AS n
   FROM orders GROUP BY 1, 2
 ), t AS (
   SELECT o_orderpriority AS prio,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS DOUBLE) AS s_all,
+         {sql_dsum("o_totalprice")} AS s_all,
          COUNT(*) AS n_all
   FROM orders GROUP BY 1
 )
@@ -505,7 +504,7 @@ def ts_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_gini",
-    oracle="""
+    oracle=f"""
 WITH r AS (
   SELECT o_orderpriority AS prio, o_totalprice AS x,
          ROW_NUMBER() OVER (PARTITION BY o_orderpriority
@@ -513,8 +512,8 @@ WITH r AS (
   FROM orders
 )
 SELECT prio,
-       ROUND(2.0 * CAST(SUM(CAST(rn * x AS DECIMAL(38,6))) AS DOUBLE)
-         / (COUNT(*) * CAST(SUM(CAST(x AS DECIMAL(30,6))) AS DOUBLE))
+       ROUND(2.0 * {sql_dsum("rn * x", DEC_WIDE)}
+         / (COUNT(*) * {sql_dsum("x")})
          - (COUNT(*) + 1.0) / COUNT(*), 10) AS gini,
        COUNT(*) AS n
 FROM r GROUP BY prio
@@ -543,8 +542,8 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").alias("x"),
         F.row_number().over(w).alias("rn"),
     )
-    s1 = F.sum((F.col("rn") * F.col("x")).cast("decimal(38,6)")).cast("double")
-    s0 = F.sum(F.col("x").cast("decimal(30,6)")).cast("double")
+    s1 = dsum(F.col("rn") * F.col("x"), DEC_WIDE)
+    s0 = dsum("x")
     n = F.count("*")
     return r.groupBy("prio").agg(
         F.round(F.lit(2.0) * s1 / (n * s0) - (n + 1.0) / n, 10).alias("gini"),
@@ -770,11 +769,11 @@ def ts_anomaly_mad_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_max_drawdown",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT o_orderpriority AS prio,
          CAST(o_orderdate AS DATE) AS d,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS DOUBLE) AS x
+         {sql_dsum("o_totalprice")} AS x
   FROM orders GROUP BY 1, 2
 ), run AS (
   SELECT prio, d, x,
@@ -808,7 +807,7 @@ def ts_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = o.groupBy(
         F.col("o_orderpriority").alias("prio"),
         F.col("o_orderdate").cast("date").alias("d"),
-    ).agg(F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double").alias("x"))
+    ).agg(dsum("o_totalprice").alias("x"))
     w = (
         Window.partitionBy("prio")
         .orderBy("d")
@@ -1032,7 +1031,7 @@ def agg_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_OLS_SQL = """
+_OLS_SQL = f"""
 WITH pts AS (
   SELECT o_orderpriority AS prio,
          CAST(date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))
@@ -1043,10 +1042,10 @@ WITH pts AS (
 s AS (
   SELECT prio,
          COUNT(*) AS n,
-         CAST(SUM(CAST(x AS DECIMAL(30,6))) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(y AS DECIMAL(30,6))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(x * y AS DECIMAL(38,6))) AS DOUBLE) AS sxy,
-         CAST(SUM(CAST(x * x AS DECIMAL(38,6))) AS DOUBLE) AS sxx
+         {sql_dsum("x")} AS sx,
+         {sql_dsum("y")} AS sy,
+         {sql_dsum("x * y", DEC_WIDE)} AS sxy,
+         {sql_dsum("x * x", DEC_WIDE)} AS sxx
   FROM pts GROUP BY prio
 )
 SELECT prio, n,
@@ -1063,7 +1062,7 @@ def ts_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     slope and intercept from the closed-form normal equations over
     exact-DECIMAL power sums — one aggregation pass, no iteration, no
     ML library. The four sums accumulate in DECIMAL so they are
-    order-exact (x·y products stay within DECIMAL(38,6) by
+    order-exact (x·y products stay within `DEC_WIDE` by
     construction: day-index × price ≈ 1e9); the final slope/intercept
     arithmetic runs on identical doubles both engines and ROUND(6)
     absorbs the last-ulp of the division chain. This is anomaly_
@@ -1080,14 +1079,10 @@ def ts_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = pts.groupBy("prio").agg(
         F.count("*").alias("n"),
-        F.sum(F.col("x").cast("decimal(30,6)")).cast("double").alias("sx"),
-        F.sum(F.col("y").cast("decimal(30,6)")).cast("double").alias("sy"),
-        F.sum((F.col("x") * F.col("y")).cast("decimal(38,6)"))
-        .cast("double")
-        .alias("sxy"),
-        F.sum((F.col("x") * F.col("x")).cast("decimal(38,6)"))
-        .cast("double")
-        .alias("sxx"),
+        dsum("x").alias("sx"),
+        dsum("y").alias("sy"),
+        dsum(F.col("x") * F.col("y"), DEC_WIDE).alias("sxy"),
+        dsum(F.col("x") * F.col("x"), DEC_WIDE).alias("sxx"),
     )
     slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -2152,10 +2147,6 @@ def agg_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_pi_dsum(expr: str) -> str:
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(30,6))) AS DOUBLE)"
-
-
 def _pi_lat6(x: Column) -> Column:
     """Bit-identical half-up on the 1e-6 lattice: FLOOR(x*1e6 + 0.5)
     is pure IEEE ops, so a product landing EXACTLY on a half-tie
@@ -2193,8 +2184,8 @@ def _pi_lat6(x: Column) -> Column:
 WITH bm AS (
   SELECT p.p_brand AS brand,
          CAST(date_trunc('month', l.l_shipdate) AS DATE) AS month,
-         {_sql_pi_dsum("l.l_extendedprice")} / {_sql_pi_dsum("l.l_quantity")} AS p,
-         {_sql_pi_dsum("l.l_quantity")} AS q
+         {sql_dsum("l.l_extendedprice")} / {sql_dsum("l.l_quantity")} AS p,
+         {sql_dsum("l.l_quantity")} AS q
   FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
   GROUP BY 1, 2
 ),
@@ -2304,8 +2295,7 @@ _TS_SEN_SQL = f"""
 WITH bm AS (
   SELECT p.p_brand AS brand,
          CAST(year(l.l_shipdate) * 12 + month(l.l_shipdate) AS BIGINT) AS mi,
-         {_sql_pi_dsum("l.l_extendedprice")} / {_sql_pi_dsum("l.l_quantity")}
-           AS p
+         {sql_dsum("l.l_extendedprice")} / {sql_dsum("l.l_quantity")} AS p
   FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
   GROUP BY 1, 2
 ),
@@ -2914,10 +2904,10 @@ def ml_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Theil inequality index with between/within decomposition
 
-_THEIL_SQL = """
+_THEIL_SQL = f"""
 WITH g AS (
   SELECT p_brand AS grp, CAST(COUNT(*) AS BIGINT) AS ng,
-         SUM(CAST(l_extendedprice AS DECIMAL(30,6))) AS sg
+         SUM(CAST(l_extendedprice AS {DEC})) AS sg
   FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
   GROUP BY 1
 ),
@@ -3012,7 +3002,7 @@ def agg_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = facts.groupBy("grp").agg(
         F.count("*").cast("bigint").alias("ng"),
-        F.sum(x.cast("decimal(30,6)")).alias("sg"),
+        F.sum(x.cast(DEC)).alias("sg"),
     )
     tot = g.agg(
         F.sum("ng").cast("bigint").alias("n"), F.sum("sg").alias("s")

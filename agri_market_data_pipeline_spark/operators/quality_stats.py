@@ -29,7 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.exact import DEC
+from ..functions.exact import DEC, DEC_WIDE, dsum, sql_dsum
 from ..registry import query
 from ..tables import load
 
@@ -145,7 +145,7 @@ def agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH by_price AS (
     SELECT l_returnflag,
            l_extendedprice AS price,
-           SUM(CAST(l_quantity AS DECIMAL(30,6))) AS wt
+           SUM(CAST(l_quantity AS {DEC})) AS wt
     FROM lineitem
     GROUP BY l_returnflag, l_extendedprice
 ), cum AS (
@@ -201,7 +201,7 @@ binned AS (
                           / (CASE WHEN r.mx = r.mn THEN 1.0
                                   ELSE (r.mx - r.mn) / {_WMS_BINS} END)),
                     {_WMS_BINS - 1}) AS BIGINT) AS k,
-         CAST(l.l_quantity AS DECIMAL(30,6)) AS w
+         CAST(l.l_quantity AS {DEC}) AS w
   FROM lineitem l JOIN rng r ON l.l_returnflag = r.l_returnflag
 ),
 hist AS (
@@ -234,7 +234,7 @@ ex AS (
            SUM(wt) OVER (PARTITION BY l_returnflag ORDER BY price) AS cw,
            SUM(wt) OVER (PARTITION BY l_returnflag) AS tw
     FROM (SELECT l_returnflag, l_extendedprice AS price,
-                 SUM(CAST(l_quantity AS DECIMAL(30,6))) AS wt
+                 SUM(CAST(l_quantity AS {DEC})) AS wt
           FROM lineitem GROUP BY 1, 2)
   ) WHERE cw * 2 >= tw GROUP BY l_returnflag
 )
@@ -387,17 +387,16 @@ def dq_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_moments_higher",
-    oracle="""
+    oracle=f"""
 WITH s AS (
   SELECT l_returnflag,
          COUNT(*) AS n,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS s1,
-         CAST(SUM(CAST(l_extendedprice * l_extendedprice AS DECIMAL(38,6)))
-              AS DOUBLE) AS s2,
-         CAST(SUM(CAST(l_extendedprice * l_extendedprice * l_extendedprice
-                       AS DECIMAL(38,6))) AS DOUBLE) AS s3,
-         CAST(SUM(CAST(l_extendedprice * l_extendedprice * l_extendedprice
-                       * l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS s4
+         {sql_dsum("l_extendedprice", DEC_WIDE)} AS s1,
+         {sql_dsum("l_extendedprice * l_extendedprice", DEC_WIDE)} AS s2,
+         {sql_dsum("l_extendedprice * l_extendedprice * l_extendedprice",
+                   DEC_WIDE)} AS s3,
+         {sql_dsum("l_extendedprice * l_extendedprice * l_extendedprice"
+                   " * l_extendedprice", DEC_WIDE)} AS s4
   FROM lineitem GROUP BY l_returnflag
 ), m AS (
   SELECT l_returnflag, n,
@@ -427,17 +426,16 @@ def agg_moments_higher(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass, four extra multiply columns, identical expression trees.
     ROUND(4) absorbs the pow/cancellation ulps; m2 ≤ 0 (constant group)
     yields NULL on both engines instead of a divide-by-zero. Headroom:
-    x⁴ ≈ 1e20 per row sums to < 1e27 per group — DECIMAL(38,6) holds to
+    x⁴ ≈ 1e20 per row sums to < 1e27 per group — DEC_WIDE holds to
     1e32, i.e. ~5 more orders of magnitude of rows."""
     li = load(spark, sf_dir, "lineitem")
     x = F.col("l_extendedprice")
-    dec = "decimal(38,6)"
     s = li.groupBy("l_returnflag").agg(
         F.count("*").alias("n"),
-        F.sum(x.cast(dec)).cast("double").alias("s1"),
-        F.sum((x * x).cast(dec)).cast("double").alias("s2"),
-        F.sum((x * x * x).cast(dec)).cast("double").alias("s3"),
-        F.sum((x * x * x * x).cast(dec)).cast("double").alias("s4"),
+        dsum(x, DEC_WIDE).alias("s1"),
+        dsum(x * x, DEC_WIDE).alias("s2"),
+        dsum(x * x * x, DEC_WIDE).alias("s3"),
+        dsum(x * x * x * x, DEC_WIDE).alias("s4"),
     )
     n = F.col("n")
     mean = F.col("s1") / n
@@ -1042,8 +1040,7 @@ SELECT CAST(c_nationkey AS BIGINT) AS nation,
        c_mktsegment AS segment,
        {_DP_EPS} AS epsilon,
        ROUND(COUNT(*) + {_dp_lap_sql("dpc", f"1.0 / {_DP_EPS}")}, 4) AS n_noisy,
-       ROUND(CAST(SUM(CAST(LEAST(GREATEST(c_acctbal, 0.0), {_DP_CLAMP})
-                           AS DECIMAL(30,6))) AS DOUBLE)
+       ROUND({sql_dsum(f"LEAST(GREATEST(c_acctbal, 0.0), {_DP_CLAMP})")}
              + {_dp_lap_sql("dps", f"{_DP_CLAMP} / {_DP_EPS}")}, 4) AS acctbal_sum_noisy
 FROM customer
 GROUP BY c_nationkey, c_mktsegment
@@ -1111,11 +1108,9 @@ def dq_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.count("*") + lap("dpc", 1.0 / _DP_EPS), 4).alias(
                 "n_noisy"
             ),
-            F.round(
-                F.sum(clamped.cast("decimal(30,6)")).cast("double")
-                + lap("dps", _DP_CLAMP / _DP_EPS),
-                4,
-            ).alias("acctbal_sum_noisy"),
+            F.round(dsum(clamped) + lap("dps", _DP_CLAMP / _DP_EPS), 4).alias(
+                "acctbal_sum_noisy"
+            ),
         )
         .select(
             F.col("c_nationkey").cast("long").alias("nation"),
@@ -1211,7 +1206,7 @@ def dq_rr_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WINSOR_SQL = """
+_WINSOR_SQL = f"""
 WITH cuts AS (
   SELECT l_returnflag AS grp,
          ROUND(quantile_cont(l_extendedprice, 0.05), 4) AS lo,
@@ -1224,10 +1219,9 @@ SELECT c.grp,
             AS BIGINT) AS n_clamped_lo,
        CAST(SUM(CASE WHEN l.l_extendedprice > c.hi THEN 1 ELSE 0 END)
             AS BIGINT) AS n_clamped_hi,
-       CAST(SUM(CAST(LEAST(GREATEST(l.l_extendedprice, c.lo), c.hi)
-                     AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*)
+       {sql_dsum("LEAST(GREATEST(l.l_extendedprice, c.lo), c.hi)")} / COUNT(*)
          AS winsorized_mean,
-       CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(30,6))) AS DOUBLE)
+       {sql_dsum("l.l_extendedprice")}
          / COUNT(*) AS raw_mean
 FROM lineitem l JOIN cuts c ON c.grp = l.l_returnflag
 GROUP BY c.grp
@@ -1272,13 +1266,8 @@ def agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"),
             F.sum((x < F.col("lo")).cast("long")).alias("n_clamped_lo"),
             F.sum((x > F.col("hi")).cast("long")).alias("n_clamped_hi"),
-            (
-                F.sum(clamped.cast("decimal(30,6)")).cast("double")
-                / F.count("*")
-            ).alias("winsorized_mean"),
-            (
-                F.sum(x.cast("decimal(30,6)")).cast("double") / F.count("*")
-            ).alias("raw_mean"),
+            (dsum(clamped) / F.count("*")).alias("winsorized_mean"),
+            (dsum(x) / F.count("*")).alias("raw_mean"),
         )
     )
 

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.exact import dsum, sql_dsum
+from ..functions.exact import DEC_WIDE, dsum, sql_dsum
 from ..memo import pin
 from ..registry import query
 from ..tables import load, load_parallel
@@ -312,9 +312,8 @@ _NEYMAN_SQL = f"""
 WITH s AS (
   SELECT l_returnflag AS grp,
          COUNT(*) AS n_pop,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,6))) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(l_extendedprice * l_extendedprice AS DECIMAL(38,6)))
-              AS DOUBLE) AS sxx
+         {sql_dsum("l_extendedprice")} AS sx,
+         {sql_dsum("l_extendedprice * l_extendedprice", DEC_WIDE)} AS sxx
   FROM lineitem GROUP BY 1
 ),
 w AS (
@@ -352,7 +351,7 @@ ranked AS (
 )
 SELECT a.grp, a.n_pop, a.sd, a.alloc_n,
        CAST(COUNT(*) AS BIGINT) AS n_sampled,
-       CAST(SUM(CAST(r.l_extendedprice AS DECIMAL(30,6))) AS DOUBLE)
+       {sql_dsum("r.l_extendedprice")}
          / COUNT(*) AS sample_mean
 FROM alloc a JOIN ranked r ON r.grp = a.grp AND r.rn <= a.alloc_n
 GROUP BY 1, 2, 3, 4
@@ -399,8 +398,8 @@ def sample_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = F.col("l_extendedprice")
     s = li.groupBy("grp").agg(
         F.count("*").alias("n_pop"),
-        F.sum(x.cast("decimal(30,6)")).cast("double").alias("sx"),
-        F.sum((x * x).cast("decimal(38,6)")).cast("double").alias("sxx"),
+        dsum(x).alias("sx"),
+        dsum(x * x, DEC_WIDE).alias("sxx"),
     )
     # single-row stratum: sample sd undefined (n-1 = 0 divides) →
     # define 0 (it contributes no Neyman weight) on both engines
@@ -506,11 +505,7 @@ def sample_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("grp", "n_pop", "sd", "alloc_n")
         .agg(
             F.count("*").alias("n_sampled"),
-            (
-                F.sum(F.col("l_extendedprice").cast("decimal(30,6)"))
-                .cast("double")
-                / F.count("*")
-            ).alias("sample_mean"),
+            (dsum("l_extendedprice") / F.count("*")).alias("sample_mean"),
         )
     )
 

@@ -23,10 +23,10 @@ from ..tables import load, load_parallel, mirror
 
 @query(
     "scan_parquet",
-    oracle="""
+    oracle=f"""
 SELECT l_returnflag,
        COUNT(*) AS cnt,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(30,6))) AS DOUBLE) AS sum_qty
+       {sql_dsum("l_quantity")} AS sum_qty
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '2000-01-01'
 GROUP BY l_returnflag

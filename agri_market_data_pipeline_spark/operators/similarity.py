@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import DEC_FINE, dsum, sql_dsum
 from ..functions.vectors import (
     spark_cosine_expr,
     spark_dot_expr,
@@ -503,7 +504,7 @@ def _top_cells(cells_col: str, vec_col: str, nrm_col: str, p: int):
     )
 
 
-def _knn_sql(where: str = "") -> str:
+def _knn_sql() -> str:
     """DuckDB twin of the IVF-blocked kNN join: ⌈√(P·n)⌉-seed quantizer
     trained _KNN_ROUNDS rounds (shared _km_ctes chain), every vector
     ranked against the trained centroids, candidates = query-side
@@ -535,7 +536,7 @@ FROM (
            ) AS BIGINT) AS rnk
     FROM scored
 ) t
-WHERE rnk <= {_KNN_K}{where}
+WHERE rnk <= {_KNN_K}
 """
     )
 
@@ -809,7 +810,7 @@ def agg_vector_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-width array merge; long-form wins at scale.)
 
     Determinism: float32 components have no exact decimal form, so the
-    DECIMAL(30,6) sum rule would *re-quantize* each value and the two
+    `DEC` sum rule would *re-quantize* each value and the two
     engines round those quantizations differently. Instead sum on an
     exact integer lattice — FLOOR(v·1e9) is the same IEEE product and
     floor on both engines, the BIGINT sum is order-independent, and one
@@ -1757,7 +1758,7 @@ def agg_vector_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PCA_SQUARINGS = 10  # effective power 2^10 = 1024: gap^1024 ~ 1e-6 at
 #                      the testdata's near-flat (MP-bulk) spectrum
-_PCA_COV = """
+_PCA_COV = f"""
 WITH x AS (
   SELECT vec_id, generate_subscripts(embedding, 1) AS i,
          CAST(UNNEST(embedding) AS DOUBLE) AS xi
@@ -1790,8 +1791,7 @@ cfull AS MATERIALIZED (
 ),
 b0 AS MATERIALIZED (
   SELECT i, j,
-         FLOOR(c / (SELECT SQRT(CAST(SUM(CAST(c * c AS DECIMAL(30,15)))
-                                     AS DOUBLE)) FROM cfull)
+         FLOOR(c / (SELECT SQRT({sql_dsum("c * c", DEC_FINE)}) FROM cfull)
                * 1e12 + 0.5) / 1e12 AS b
   FROM cfull)"""
 
@@ -1799,7 +1799,7 @@ b0 AS MATERIALIZED (
 def _pca_sql(squarings: int) -> str:
     """DuckDB twin: normalized repeated matrix squaring unrolled —
     B <- (B·B) / ||B·B||_F per round, every matmul cell accumulated in
-    DECIMAL(30,15) (order-exact), every entry snapped to the
+    `DEC_FINE` (order-exact), every entry snapped to the
     FLOOR(x*1e12+0.5)/1e12 lattice so no 1-ulp drift compounds. Loop
     CTEs MATERIALIZED (each product frame feeds both the norm and the
     renormalize — the lazy form would replay 2^rounds times)."""
@@ -1808,15 +1808,14 @@ def _pca_sql(squarings: int) -> str:
         ctes.append(
             f"""q{r} AS MATERIALIZED (
   SELECT a.i, c.j,
-         CAST(SUM(CAST(a.b * c.b AS DECIMAL(30,15))) AS DOUBLE) AS q
+         {sql_dsum("a.b * c.b", DEC_FINE)} AS q
   FROM b{r - 1} a JOIN b{r - 1} c ON c.i = a.j
   GROUP BY a.i, c.j)"""
         )
         ctes.append(
             f"""b{r} AS MATERIALIZED (
   SELECT i, j,
-         FLOOR(q / (SELECT SQRT(CAST(SUM(CAST(q * q AS DECIMAL(30,15)))
-                                     AS DOUBLE)) FROM q{r})
+         FLOOR(q / (SELECT SQRT({sql_dsum("q * q", DEC_FINE)}) FROM q{r})
                * 1e12 + 0.5) / 1e12 AS b
   FROM q{r})"""
         )
@@ -1827,20 +1826,18 @@ def _pca_sql(squarings: int) -> str:
         + f""",
 w AS MATERIALIZED (
   SELECT b.i,
-         CAST(SUM(CAST(b.b * (1.0 + CAST(b.j AS DOUBLE) / 100)
-                       AS DECIMAL(30,15))) AS DOUBLE) AS w
+         {sql_dsum("b.b * (1.0 + CAST(b.j AS DOUBLE) / 100)", DEC_FINE)} AS w
   FROM b{squarings} b GROUP BY b.i),
 v AS MATERIALIZED (
-  SELECT i, FLOOR(w / (SELECT SQRT(CAST(SUM(CAST(w * w AS DECIMAL(30,15)))
-                                        AS DOUBLE)) FROM w)
+  SELECT i, FLOOR(w / (SELECT SQRT({sql_dsum("w * w", DEC_FINE)}) FROM w)
                   * 1e9 + 0.5) / 1e9 AS v
   FROM w),
 cv AS MATERIALIZED (
-  SELECT c.i, CAST(SUM(CAST(c.c * v.v AS DECIMAL(30,15))) AS DOUBLE) AS w
+  SELECT c.i, {sql_dsum("c.c * v.v", DEC_FINE)} AS w
   FROM cfull c JOIN v ON v.i = c.j GROUP BY c.i),
 ray AS (
-  SELECT CAST(SUM(CAST(cv.w * v.v AS DECIMAL(30,15))) AS DOUBLE)
-         / CAST(SUM(CAST(v.v * v.v AS DECIMAL(30,15))) AS DOUBLE) AS ev
+  SELECT {sql_dsum("cv.w * v.v", DEC_FINE)}
+         / {sql_dsum("v.v * v.v", DEC_FINE)} AS ev
   FROM cv JOIN v ON v.i = cv.i)
 SELECT v.i, v.v AS loading, ROUND((SELECT ev FROM ray), 6) AS eigval
 FROM v"""
@@ -1870,7 +1867,7 @@ def ml_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: C entries are fixed IEEE trees of exact-lattice
     ratios (bitwise both engines); every matmul cell and every
-    Frobenius norm accumulates in DECIMAL(30,15) (order-exact); every
+    Frobenius norm accumulates in `DEC_FINE` (order-exact); every
     iterate entry snaps to the FLOOR(x·1e12+0.5)/1e12 lattice so drift
     cannot compound across rounds — measured: all 64 loadings are
     BITWISE identical unrounded. Only the Rayleigh quotient takes
@@ -1897,10 +1894,7 @@ def ml_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def fro(df: DataFrame, col: str) -> DataFrame:
         return df.agg(
-            F.sqrt(
-                F.sum((F.col(col) * F.col(col)).cast("decimal(30,15)"))
-                .cast("double")
-            ).alias("s")
+            F.sqrt(dsum(F.col(col) * F.col(col), DEC_FINE)).alias("s")
         ).withColumn("k", F.lit(1))
 
     def snapped(df: DataFrame, col: str, unit: float) -> DataFrame:
@@ -1929,27 +1923,16 @@ def ml_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "j",
             )
             .groupBy("i", F.col("j2").alias("j"))
-            .agg(
-                F.sum((F.col("b") * F.col("b2")).cast("decimal(30,15)"))
-                .cast("double")
-                .alias("q")
-            )
+            .agg(dsum(F.col("b") * F.col("b2"), DEC_FINE).alias("q"))
         )
         b = pin(snapped(q, "q", 1e12), reset_stats=True)
     w = b.groupBy("i").agg(
-        F.sum(
-            (
-                F.col("b") * (F.lit(1.0) + F.col("j").cast("double") / 100)
-            ).cast("decimal(30,15)")
-        )
-        .cast("double")
-        .alias("w")
+        dsum(
+            F.col("b") * (F.lit(1.0) + F.col("j").cast("double") / 100), DEC_FINE
+        ).alias("w")
     )
     sw = w.agg(
-        F.sqrt(
-            F.sum((F.col("w") * F.col("w")).cast("decimal(30,15)"))
-            .cast("double")
-        ).alias("s")
+        F.sqrt(dsum(F.col("w") * F.col("w"), DEC_FINE)).alias("s")
     ).withColumn("k", F.lit(1))
     v = pin(
         w.withColumn("k", F.lit(1))
@@ -1967,20 +1950,14 @@ def ml_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             "j",
         )
         .groupBy("i")
-        .agg(
-            F.sum((F.col("c") * F.col("vj")).cast("decimal(30,15)"))
-            .cast("double")
-            .alias("w")
-        )
+        .agg(dsum(F.col("c") * F.col("vj"), DEC_FINE).alias("w"))
     )
     ray = (
         cv.join(F.broadcast(v), "i")
         .agg(
             F.round(
-                F.sum((F.col("w") * F.col("v")).cast("decimal(30,15)"))
-                .cast("double")
-                / F.sum((F.col("v") * F.col("v")).cast("decimal(30,15)"))
-                .cast("double"),
+                dsum(F.col("w") * F.col("v"), DEC_FINE)
+                / dsum(F.col("v") * F.col("v"), DEC_FINE),
                 6,
             ).alias("eigval")
         )
@@ -1999,7 +1976,7 @@ def ml_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 # calibrated output, read by the six classifier-eval operators below.
 # `_PROBE_SCORES_SQL` is the oracle CTE chain ending in `s(vec_id, y,
 # score)`; it follows `WITH`.
-_PROBE_SCORES_SQL = """probe AS (
+_PROBE_SCORES_SQL = f"""probe AS (
   SELECT i,
          (CAST(('0x' || substring(md5('probe:' || CAST(i AS VARCHAR)),
                 1, 8)) AS BIGINT) % 2001 - 1000) / 1000.0 AS w
@@ -2007,7 +1984,7 @@ _PROBE_SCORES_SQL = """probe AS (
 ),
 z AS (
   SELECT e.vec_id, CAST(e.label % 2 AS BIGINT) AS y,
-         CAST(SUM(CAST(x.xi * p.w AS DECIMAL(30,15))) AS DOUBLE) AS z
+         {sql_dsum("x.xi * p.w", DEC_FINE)} AS z
   FROM embeddings e,
        LATERAL (SELECT generate_subscripts(e.embedding, 1) AS i,
                        CAST(UNNEST(e.embedding) AS DOUBLE) AS xi) x
@@ -2024,7 +2001,7 @@ def _probe_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     `_PROBE_SCORES_SQL`; y = label % 2.
 
     Determinism: the weights are md5-lattice rationals; z accumulates
-    the per-dimension products in DECIMAL(30,15) (order-exact); EXP is
+    the per-dimension products in `DEC_FINE` (order-exact); EXP is
     transcendental, so the score takes ROUND(6) before any caller
     compares, bins or groups it. Spark `posexplode` is 0-based, the
     oracle's `generate_subscripts` 1-based, hence `i0 + 1`."""
@@ -2044,7 +2021,7 @@ def _probe_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             " % 2001 - 1000) / 1000.0D AS w",
         )
         .groupBy("vec_id", "y")
-        .agg(F.expr("CAST(SUM(CAST(xi * w AS DECIMAL(30,15))) AS DOUBLE) AS z"))
+        .agg(F.expr(f"{sql_dsum('xi * w', DEC_FINE)} AS z"))
         .selectExpr(
             "vec_id", "y", "ROUND(1.0D / (EXP(-z) + 1.0D), 6) AS score"
         )
@@ -2063,10 +2040,10 @@ b AS (
 )
 SELECT bin, CAST(COUNT(*) AS BIGINT) AS n_rows,
        CAST(SUM(y) AS DOUBLE) / COUNT(*) AS frac_pos,
-       CAST(SUM(CAST(score AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*)
+       {sql_dsum("score")} / COUNT(*)
          AS avg_score,
        ABS(CAST(SUM(y) AS DOUBLE) / COUNT(*)
-           - CAST(SUM(CAST(score AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*))
+           - {sql_dsum("score")} / COUNT(*))
          AS abs_gap
 FROM b GROUP BY bin
 """
@@ -2098,10 +2075,7 @@ def ml_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("bin"),
     )
     frac = F.sum("y").cast("double") / F.count("*")
-    avg_s = (
-        F.sum(F.col("score").cast("decimal(30,6)")).cast("double")
-        / F.count("*")
-    )
+    avg_s = dsum("score") / F.count("*")
     return b.groupBy("bin").agg(
         F.count("*").cast("bigint").alias("n_rows"),
         frac.alias("frac_pos"),
@@ -2962,7 +2936,7 @@ WITH base AS (
 ),
 mu AS MATERIALIZED (
   SELECT brand, CAST(COUNT(*) AS BIGINT) AS n_train,
-         CAST(SUM(CAST(price AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS m
+         {sql_dsum("price")} / COUNT(*) AS m
   FROM base WHERE h <= 2 GROUP BY 1
 ),
 cells AS MATERIALIZED (
@@ -3076,10 +3050,7 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("brand")
         .agg(
             F.count("*").cast("bigint").alias("n_train"),
-            (
-                F.sum(F.col("price").cast("decimal(30,6)")).cast("double")
-                / F.count("*")
-            ).alias("m"),
+            (dsum("price") / F.count("*")).alias("m"),
         )
     )
     cells = (
@@ -3456,7 +3427,7 @@ def ml_als_factorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins). Residuals ride a DECIMAL(38,0) square sum (err can reach
     ~1e12, err² ~1e24 — past int64, inside DECIMAL38), and the final
     RMSE takes ROUND(6) because a 26-digit DECIMAL→DOUBLE cast is
-    past the ~19-digit bitwise span (the ts_twap rule).
+    past the 15-digit bitwise span (the ts_twap rule).
 
     Scale: ratings aggregate once from the facts (orderkey shuffle,
     then (cust, part) grain, localCheckpointed against the three

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import memo
+from ..functions.exact import DEC_FINE, dsum, sql_dsum
 from ..functions.text import (
     LANG_STOPWORDS,
     SENTIMENT_LEXICON,
@@ -1115,7 +1116,7 @@ def text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ZIPF_SQL = """
+_ZIPF_SQL = f"""
 WITH tok AS (
   SELECT UNNEST(string_split(text, ' ')) AS token FROM documents
 ),
@@ -1133,10 +1134,10 @@ pts AS (
 ),
 s AS (
   SELECT COUNT(*) AS n,
-         CAST(SUM(CAST(x AS DECIMAL(30,15))) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(y AS DECIMAL(30,15))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(x * y AS DECIMAL(30,15))) AS DOUBLE) AS sxy,
-         CAST(SUM(CAST(x * x AS DECIMAL(30,15))) AS DOUBLE) AS sxx
+         {sql_dsum("x", DEC_FINE)} AS sx,
+         {sql_dsum("y", DEC_FINE)} AS sy,
+         {sql_dsum("x * y", DEC_FINE)} AS sxy,
+         {sql_dsum("x * x", DEC_FINE)} AS sxx
   FROM pts
 )
 SELECT n AS n_types,
@@ -1160,8 +1161,8 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: ranks are integers off a (cnt DESC, token) total
     order; ln() of integer-valued doubles is correctly rounded and
-    engine-identical (transcendental ties are measure-zero —
-    CLAUDE.md); the OLS power sums accumulate in DECIMAL(30,15) so the
+    engine-identical (transcendental ties are measure-zero); the OLS
+    power sums accumulate in `DEC_FINE` so the
     fold is order-exact, and ROUND(6) absorbs the division chain.
 
     Scale: one token-keyed count (partial-agg), a K=vocab-row rank
@@ -1182,14 +1183,10 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = pts.agg(
         F.count("*").alias("n"),
-        F.sum(F.col("x").cast("decimal(30,15)")).cast("double").alias("sx"),
-        F.sum(F.col("y").cast("decimal(30,15)")).cast("double").alias("sy"),
-        F.sum((F.col("x") * F.col("y")).cast("decimal(30,15)"))
-        .cast("double")
-        .alias("sxy"),
-        F.sum((F.col("x") * F.col("x")).cast("decimal(30,15)"))
-        .cast("double")
-        .alias("sxx"),
+        dsum("x", DEC_FINE).alias("sx"),
+        dsum("y", DEC_FINE).alias("sy"),
+        dsum(F.col("x") * F.col("y"), DEC_FINE).alias("sxy"),
+        dsum(F.col("x") * F.col("x"), DEC_FINE).alias("sxx"),
     )
     n = F.col("n")
     slope = (n * F.col("sxy") - F.col("sx") * F.col("sy")) / (

@@ -23,7 +23,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.exact import dsum, sql_dsum
+from ..functions.exact import DEC, DEC_FINE, DEC_WIDE, dsum, sql_dsum
 from ..memo import pin
 from ..registry import query
 from ..tables import load, load_parallel
@@ -34,9 +34,9 @@ _GAP_US = 30 * 60 * 1_000_000  # 30-minute session gap, microseconds
 # day) the exact-sum/count mean of value. `DAILY_EVENTS_SQL` is the
 # oracle CTE `daily(et, day_no, v)`; it follows `WITH` or
 # `WITH RECURSIVE`.
-DAILY_EVENTS_SQL = """daily AS (
+DAILY_EVENTS_SQL = f"""daily AS (
   SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,
-         CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS v
+         {sql_dsum("value")} / COUNT(*) AS v
   FROM events GROUP BY 1, 2
 )"""
 
@@ -56,12 +56,7 @@ def daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("event_type AS et"),
             F.expr("unix_micros(ts) div 86400000000 AS day_no"),
         )
-        .agg(
-            F.expr(
-                "CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE)"
-                " / COUNT(*) AS v"
-            )
-        )
+        .agg(F.expr(f"{sql_dsum('value')} / COUNT(*) AS v"))
     )
 
 
@@ -166,10 +161,10 @@ def win_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_gap_fill",
-    oracle="""
+    oracle=f"""
 WITH agg AS (
   SELECT o_orderpriority AS prio, CAST(o_orderdate AS DATE) AS d,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS DOUBLE) AS v
+         {sql_dsum("o_totalprice")} AS v
   FROM orders
   WHERE o_totalprice > 400000
   GROUP BY 1, 2
@@ -210,7 +205,7 @@ def ts_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderpriority").alias("prio"),
             F.col("o_orderdate").cast("date").alias("d"),
         )
-        .agg(F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double").alias("v"))
+        .agg(dsum("o_totalprice").alias("v"))
     )
     rng = agg.groupBy("prio").agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
     cal = rng.select("prio", F.explode(F.sequence("d0", "d1")).alias("d"))
@@ -252,7 +247,7 @@ def _sql_ewma() -> tuple[str, str]:
 WITH daily AS (
   SELECT o_orderpriority AS prio,
          CAST(o_orderdate AS DATE) AS d,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS DOUBLE) AS x
+         {sql_dsum("o_totalprice")} AS x
   FROM orders GROUP BY 1, 2
 ), lagged AS (
   SELECT prio, d, x,
@@ -283,7 +278,7 @@ def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = o.groupBy(
         F.col("o_orderpriority").alias("prio"),
         F.col("o_orderdate").cast("date").alias("d"),
-    ).agg(F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double").alias("x"))
+    ).agg(dsum("o_totalprice").alias("x"))
     w = Window.partitionBy("prio").orderBy("d")
     lagged = daily.select(
         "prio",
@@ -304,15 +299,15 @@ def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_cusum_changepoint",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT o_orderpriority AS prio,
          CAST(o_orderdate AS DATE) AS d,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS DOUBLE) AS x
+         {sql_dsum("o_totalprice")} AS x
   FROM orders GROUP BY 1, 2
 ), stats AS (
   SELECT prio,
-         CAST(SUM(CAST(x AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*) AS mu,
+         {sql_dsum("x")} / COUNT(*) AS mu,
          COUNT(*) AS n_days
   FROM daily GROUP BY prio
 ), c AS (
@@ -350,9 +345,9 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = o.groupBy(
         F.col("o_orderpriority").alias("prio"),
         F.col("o_orderdate").cast("date").alias("d"),
-    ).agg(F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double").alias("x"))
+    ).agg(dsum("o_totalprice").alias("x"))
     stats = daily.groupBy("prio").agg(
-        (F.sum(F.col("x").cast("decimal(30,6)")).cast("double") / F.count("*")).alias("mu"),
+        (dsum("x") / F.count("*")).alias("mu"),
         F.count("*").alias("n_days"),
     )
     w = Window.partitionBy("prio").orderBy("d")
@@ -377,11 +372,11 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_autocorr",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT o_orderpriority AS prio,
          CAST(o_orderdate AS DATE) AS d,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS DOUBLE) AS x
+         {sql_dsum("o_totalprice")} AS x
   FROM orders GROUP BY 1, 2
 ), lagd AS (
   SELECT prio, x,
@@ -390,11 +385,11 @@ WITH daily AS (
 ), p AS (SELECT prio, x, xl FROM lagd WHERE xl IS NOT NULL
 ), s AS (
   SELECT prio, COUNT(*) AS n,
-         CAST(SUM(CAST(x AS DECIMAL(38,6))) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(xl AS DECIMAL(38,6))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(x * xl AS DECIMAL(38,6))) AS DOUBLE) AS sxy,
-         CAST(SUM(CAST(x * x AS DECIMAL(38,6))) AS DOUBLE) AS sxx,
-         CAST(SUM(CAST(xl * xl AS DECIMAL(38,6))) AS DOUBLE) AS syy
+         {sql_dsum("x", DEC_WIDE)} AS sx,
+         {sql_dsum("xl", DEC_WIDE)} AS sy,
+         {sql_dsum("x * xl", DEC_WIDE)} AS sxy,
+         {sql_dsum("x * x", DEC_WIDE)} AS sxx,
+         {sql_dsum("xl * xl", DEC_WIDE)} AS syy
   FROM p GROUP BY prio
 )
 SELECT prio, n,
@@ -420,21 +415,20 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = o.groupBy(
         F.col("o_orderpriority").alias("prio"),
         F.col("o_orderdate").cast("date").alias("d"),
-    ).agg(F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double").alias("x"))
+    ).agg(dsum("o_totalprice").alias("x"))
     w = Window.partitionBy("prio").orderBy("d")
     p = (
         daily.withColumn("xl", F.lag("x", 1).over(w))
         .filter(F.col("xl").isNotNull())
     )
-    dec = "decimal(38,6)"
     x, xl = F.col("x"), F.col("xl")
     s = p.groupBy("prio").agg(
         F.count("*").alias("n"),
-        F.sum(x.cast(dec)).cast("double").alias("sx"),
-        F.sum(xl.cast(dec)).cast("double").alias("sy"),
-        F.sum((x * xl).cast(dec)).cast("double").alias("sxy"),
-        F.sum((x * x).cast(dec)).cast("double").alias("sxx"),
-        F.sum((xl * xl).cast(dec)).cast("double").alias("syy"),
+        dsum(x, DEC_WIDE).alias("sx"),
+        dsum(xl, DEC_WIDE).alias("sy"),
+        dsum(x * xl, DEC_WIDE).alias("sxy"),
+        dsum(x * x, DEC_WIDE).alias("sxx"),
+        dsum(xl * xl, DEC_WIDE).alias("syy"),
     )
     n = F.col("n")
     vx = n * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -468,10 +462,10 @@ with_fc AS (
 )
 SELECT prio,
        COUNT(fc) AS n_scored,
-       ROUND(CAST(SUM(CAST(abs(actual - fc) AS DECIMAL(30,6))) AS DOUBLE)
-             / CAST(SUM(CAST(abs(actual) AS DECIMAL(30,6))) AS DOUBLE), 6)
+       ROUND({sql_dsum("abs(actual - fc)")}
+             / {sql_dsum("abs(actual)")}, 6)
          AS wape,
-       ROUND(CAST(SUM(CAST(actual - fc AS DECIMAL(30,6))) AS DOUBLE)
+       ROUND({sql_dsum("actual - fc")}
              / COUNT(fc), 6) AS mean_bias
 FROM with_fc WHERE fc IS NOT NULL
 GROUP BY prio
@@ -500,14 +494,8 @@ def ts_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     err = F.col("actual") - F.col("fc")
     return wf.groupBy("prio").agg(
         F.count("fc").alias("n_scored"),
-        F.round(
-            F.sum(F.abs(err).cast("decimal(30,6)")).cast("double")
-            / F.sum(F.abs("actual").cast("decimal(30,6)")).cast("double"),
-            6,
-        ).alias("wape"),
-        F.round(
-            F.sum(err.cast("decimal(30,6)")).cast("double") / F.count("fc"), 6
-        ).alias("mean_bias"),
+        F.round(dsum(F.abs(err)) / dsum(F.abs("actual")), 6).alias("wape"),
+        F.round(dsum(err) / F.count("fc"), 6).alias("mean_bias"),
     )
 
 
@@ -526,7 +514,7 @@ WITH monthly AS (
 tr AS (
   SELECT prio, m, actual,
          CASE WHEN COUNT(*) OVER w = {_DEC_W} THEN
-           ROUND(CAST(SUM(CAST(actual AS DECIMAL(30,6))) OVER w AS DOUBLE)
+           ROUND(CAST(SUM(CAST(actual AS {DEC})) OVER w AS DOUBLE)
                  / {_DEC_W}, 6)
          END AS trend
   FROM monthly
@@ -541,7 +529,7 @@ det AS (
 ),
 seas AS (
   SELECT prio, moy,
-         ROUND(CAST(SUM(CAST(detrended AS DECIMAL(30,6))) AS DOUBLE)
+         ROUND({sql_dsum("detrended")}
                / COUNT(*), 6) AS seasonal
   FROM det GROUP BY prio, moy
 )
@@ -582,7 +570,7 @@ def ts_classical_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             F.count("*").over(w) == _DEC_W,
             F.round(
-                F.sum(F.col("actual").cast("decimal(30,6)")).over(w).cast("double")
+                F.sum(F.col("actual").cast(DEC)).over(w).cast("double")
                 / _DEC_W,
                 6,
             ),
@@ -598,8 +586,7 @@ def ts_classical_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     seas = det.groupBy("prio", "moy").agg(
         F.round(
-            F.sum(F.col("detrended").cast("decimal(30,6)")).cast("double")
-            / F.count("*"),
+            dsum("detrended") / F.count("*"),
             6,
         ).alias("seasonal")
     )
@@ -995,7 +982,7 @@ def ts_session_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TWAP_SQL = """
+_TWAP_SQL = f"""
 WITH x AS (
   SELECT event_type, epoch_us(ts) AS tus, event_id, value,
          epoch_us(ts) // 86400000000 AS day_no,
@@ -1010,9 +997,9 @@ w AS (
 )
 SELECT event_type, day_no,
        COUNT(*) AS n_intervals,
-       CASE WHEN SUM(CAST(dt_us AS DECIMAL(30,6))) > 0 THEN
-         ROUND(CAST(SUM(CAST(value * dt_us AS DECIMAL(38,6))) AS DOUBLE)
-               / CAST(SUM(CAST(dt_us AS DECIMAL(30,6))) AS DOUBLE), 6)
+       CASE WHEN SUM(CAST(dt_us AS {DEC})) > 0 THEN
+         ROUND({sql_dsum("value * dt_us", DEC_WIDE)}
+               / {sql_dsum("dt_us")}, 6)
        END AS twap
 FROM w
 GROUP BY 1, 2
@@ -1031,7 +1018,7 @@ def ts_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same plan with one COALESCE).
 
     Determinism: interval widths are exact integer microsecond
-    differences; value*dt is one IEEE product snapped to DECIMAL(38,6)
+    differences; value*dt is one IEEE product snapped to `DEC_WIDE`
     (the dsum pattern) and both sums are order-exact — but at ~21
     significant digits the DECIMAL->DOUBLE conversion itself is no
     longer correctly rounded identically on both engines (measured: a
@@ -1065,12 +1052,9 @@ def ts_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
         # a group whose only intervals are zero-length (duplicate
         # timestamps) spans no time: TWAP undefined → NULL both sides
         F.when(
-            F.sum(F.col("dt_us").cast("decimal(30,6)")) > 0,
+            F.sum(F.col("dt_us").cast(DEC)) > 0,
             F.round(
-                F.sum((F.col("value") * F.col("dt_us")).cast("decimal(38,6)"))
-                .cast("double")
-                / F.sum(F.col("dt_us").cast("decimal(30,6)")).cast("double"),
-                6,
+                dsum(F.col("value") * F.col("dt_us"), DEC_WIDE) / dsum("dt_us"), 6
             ),
         )
         .otherwise(F.lit(None).cast("double"))
@@ -1094,11 +1078,11 @@ pairs AS (
 s AS (
   SELECT type_a, type_b, lag,
          COUNT(*) AS n,
-         CAST(SUM(CAST(x AS DECIMAL(30,15))) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(y AS DECIMAL(30,15))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(x * y AS DECIMAL(30,15))) AS DOUBLE) AS sxy,
-         CAST(SUM(CAST(x * x AS DECIMAL(30,15))) AS DOUBLE) AS sxx,
-         CAST(SUM(CAST(y * y AS DECIMAL(30,15))) AS DOUBLE) AS syy
+         {sql_dsum("x", DEC_FINE)} AS sx,
+         {sql_dsum("y", DEC_FINE)} AS sy,
+         {sql_dsum("x * y", DEC_FINE)} AS sxy,
+         {sql_dsum("x * x", DEC_FINE)} AS sxx,
+         {sql_dsum("y * y", DEC_FINE)} AS syy
   FROM pairs GROUP BY 1, 2, 3
 )
 SELECT type_a, type_b, lag, n,
@@ -1122,7 +1106,7 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer sees the contrast.
 
     Determinism: `daily_events` means are bitwise; each (x, y)
-    product is one IEEE op snapped to DECIMAL(30,15); the power sums
+    product is one IEEE op snapped to `DEC_FINE`; the power sums
     are order-exact; GREATEST(.., 0) guards the sqrt against
     cancellation-negative variances (DuckDB hard-errors where Spark
     yields NaN — CLAUDE.md); zero-variance cells are filtered on the
@@ -1154,16 +1138,13 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def exact(c):
-        return F.sum(c.cast("decimal(30,15)")).cast("double")
-
     s = pairs.groupBy("type_a", "type_b", "lag").agg(
         F.count("*").alias("n"),
-        exact(F.col("x")).alias("sx"),
-        exact(F.col("y")).alias("sy"),
-        exact(F.col("x") * F.col("y")).alias("sxy"),
-        exact(F.col("x") * F.col("x")).alias("sxx"),
-        exact(F.col("y") * F.col("y")).alias("syy"),
+        dsum("x", DEC_FINE).alias("sx"),
+        dsum("y", DEC_FINE).alias("sy"),
+        dsum(F.col("x") * F.col("y"), DEC_FINE).alias("sxy"),
+        dsum(F.col("x") * F.col("x"), DEC_FINE).alias("sxx"),
+        dsum(F.col("y") * F.col("y"), DEC_FINE).alias("syy"),
     )
     n = F.col("n")
     varx = n * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -1186,14 +1167,14 @@ _PERIOD_SQL = f"""
 WITH {DAILY_EVENTS_SQL},
 g AS (
   SELECT et, COUNT(*) AS n,
-         CAST(SUM(CAST(v AS DECIMAL(30,15))) AS DOUBLE) AS sv,
-         CAST(SUM(CAST(v * v AS DECIMAL(30,15))) AS DOUBLE) AS svv
+         {sql_dsum("v", DEC_FINE)} AS sv,
+         {sql_dsum("v * v", DEC_FINE)} AS svv
   FROM daily GROUP BY 1
 ),
 ph AS (
   SELECT d.et, p.period, d.day_no % p.period AS phase,
          COUNT(*) AS np,
-         CAST(SUM(CAST(d.v AS DECIMAL(30,15))) AS DOUBLE) AS sp
+         {sql_dsum("d.v", DEC_FINE)} AS sp
   FROM daily d, LATERAL (
     SELECT UNNEST(ARRAY{list(_PERIODS)}) AS period) p
   GROUP BY 1, 2, 3
@@ -1236,10 +1217,8 @@ def ts_periodicity_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = daily_events(spark, sf_dir)
     g = daily.groupBy("et").agg(
         F.count("*").alias("n"),
-        F.sum(F.col("v").cast("decimal(30,15)")).cast("double").alias("sv"),
-        F.sum((F.col("v") * F.col("v")).cast("decimal(30,15)"))
-        .cast("double")
-        .alias("svv"),
+        dsum("v", DEC_FINE).alias("sv"),
+        dsum(F.col("v") * F.col("v"), DEC_FINE).alias("svv"),
     )
     periods = spark.createDataFrame(
         [(p,) for p in _PERIODS], "period int"
@@ -1249,7 +1228,7 @@ def ts_periodicity_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("et", "period", (F.col("day_no") % F.col("period")).alias("phase"))
         .agg(
             F.count("*").alias("np"),
-            F.sum(F.col("v").cast("decimal(30,15)")).cast("double").alias("sp"),
+            dsum("v", DEC_FINE).alias("sp"),
         )
     )
     pm = F.col("sp") / F.col("np")
@@ -1554,15 +1533,15 @@ rows_ AS (
 ),
 m AS (
   SELECT cause, effect, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CAST(y AS DECIMAL(30,15))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(u AS DECIMAL(30,15))) AS DOUBLE) AS su,
-         CAST(SUM(CAST(x AS DECIMAL(30,15))) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(y * u AS DECIMAL(30,15))) AS DOUBLE) AS syu,
-         CAST(SUM(CAST(y * x AS DECIMAL(30,15))) AS DOUBLE) AS syx,
-         CAST(SUM(CAST(u * u AS DECIMAL(30,15))) AS DOUBLE) AS suu,
-         CAST(SUM(CAST(x * x AS DECIMAL(30,15))) AS DOUBLE) AS sxx,
-         CAST(SUM(CAST(u * x AS DECIMAL(30,15))) AS DOUBLE) AS sux,
-         CAST(SUM(CAST(y * y AS DECIMAL(30,15))) AS DOUBLE) AS syy
+         {sql_dsum("y", DEC_FINE)} AS sy,
+         {sql_dsum("u", DEC_FINE)} AS su,
+         {sql_dsum("x", DEC_FINE)} AS sx,
+         {sql_dsum("y * u", DEC_FINE)} AS syu,
+         {sql_dsum("y * x", DEC_FINE)} AS syx,
+         {sql_dsum("u * u", DEC_FINE)} AS suu,
+         {sql_dsum("x * x", DEC_FINE)} AS sxx,
+         {sql_dsum("u * x", DEC_FINE)} AS sux,
+         {sql_dsum("y * y", DEC_FINE)} AS syy
   FROM rows_ GROUP BY 1, 2
 ),
 c AS (
@@ -1609,7 +1588,7 @@ def ts_granger_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard caveat rides with the name.)
 
     Determinism: `daily_events` means are bitwise; every product
-    moment snaps to DECIMAL(30,15) before its order-exact sum (the
+    moment snaps to `DEC_FINE` before its order-exact sum (the
     ts_cross_correlation pattern); the normal-equation solve is one
     fixed IEEE tree and the outputs take ROUND(6); degenerate pairs
     (singular design, zero residual, short overlap) are filtered by
@@ -1642,21 +1621,18 @@ def ts_granger_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("cause", "effect", "y", "u", "x")
     )
 
-    def exact(col):
-        return F.sum(col.cast("decimal(30,15)")).cast("double")
-
     y, u, x = F.col("y"), F.col("u"), F.col("x")
     m = rows.groupBy("cause", "effect").agg(
         F.count("*").cast("bigint").alias("n"),
-        exact(y).alias("sy"),
-        exact(u).alias("su"),
-        exact(x).alias("sx"),
-        exact(y * u).alias("syu"),
-        exact(y * x).alias("syx"),
-        exact(u * u).alias("suu"),
-        exact(x * x).alias("sxx"),
-        exact(u * x).alias("sux"),
-        exact(y * y).alias("syy"),
+        dsum(y, DEC_FINE).alias("sy"),
+        dsum(u, DEC_FINE).alias("su"),
+        dsum(x, DEC_FINE).alias("sx"),
+        dsum(y * u, DEC_FINE).alias("syu"),
+        dsum(y * x, DEC_FINE).alias("syx"),
+        dsum(u * u, DEC_FINE).alias("suu"),
+        dsum(x * x, DEC_FINE).alias("sxx"),
+        dsum(u * x, DEC_FINE).alias("sux"),
+        dsum(y * y, DEC_FINE).alias("syy"),
     )
     n = F.col("n")
     cexp = {
@@ -1717,8 +1693,8 @@ blocks AS (
 full_blocks AS (
   SELECT et, n, blk,
          CAST(SUM(vl) AS BIGINT) AS s_l,
-         CAST(SUM(CAST(v AS DECIMAL(30,15))) AS DOUBLE) AS sv,
-         CAST(SUM(CAST(v * v AS DECIMAL(30,15))) AS DOUBLE) AS svv,
+         {sql_dsum("v", DEC_FINE)} AS sv,
+         {sql_dsum("v * v", DEC_FINE)} AS svv,
          CAST(COUNT(*) AS BIGINT) AS cnt
   FROM blocks GROUP BY 1, 2, 3 HAVING COUNT(*) = n
 ),
@@ -1818,12 +1794,8 @@ def ts_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
         blocks.groupBy("et", "n", "blk")
         .agg(
             F.sum("vl").cast("bigint").alias("s_l"),
-            F.sum(F.col("v").cast("decimal(30,15)"))
-            .cast("double")
-            .alias("sv"),
-            F.sum((F.col("v") * F.col("v")).cast("decimal(30,15)"))
-            .cast("double")
-            .alias("svv"),
+            dsum("v", DEC_FINE).alias("sv"),
+            dsum(F.col("v") * F.col("v"), DEC_FINE).alias("svv"),
             F.count("*").cast("bigint").alias("cnt"),
         )
         .filter(F.col("cnt") == F.col("n"))
@@ -1944,7 +1916,7 @@ rk AS (
 SELECT et AS event_type, MAX(n) AS n_ret,
        CAST((MAX(n) * {_VAR_PCT} + 99) // 100 AS BIGINT) AS k_tail,
        MAX(r) AS var_95,
-       ROUND(CAST(SUM(CAST(r AS DECIMAL(30,15))) AS DOUBLE)
+       ROUND({sql_dsum("r", DEC_FINE)}
          / CAST((MAX(n) * {_VAR_PCT} + 99) // 100 AS DOUBLE), 6) AS cvar_95
 FROM rk
 WHERE rn <= (n * {_VAR_PCT} + 99) // 100
@@ -1969,7 +1941,7 @@ def ts_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     differences and their (r, day_no) rank order are identical both
     engines; k is pure integer ceiling arithmetic ((n·5+99) div 100);
     VaR is a VALUE from the data (no interpolation); CVaR accumulates
-    the ≤k tail in DECIMAL(30,15) — the summed returns carry ~17
+    the ≤k tail in `DEC_FINE` — the summed returns carry ~17
     significant digits, past the bitwise DECIMAL→DOUBLE span (measured:
     1 ulp on one group), so the ratio takes ROUND(6) both sides (the
     ts_twap rule).
@@ -2000,8 +1972,7 @@ def ts_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
         kk.alias("k_tail"),
         F.max("r").alias("var_95"),
         F.round(
-            F.sum(F.col("r").cast("decimal(30,15)")).cast("double")
-            / kk.cast("double"),
+            dsum("r", DEC_FINE) / kk.cast("double"),
             6,
         ).alias("cvar_95"),
     )
@@ -2085,7 +2056,7 @@ _RUNS_SQL = f"""
 WITH {DAILY_EVENTS_SQL},
 mu AS (
   SELECT et,
-         CAST(SUM(CAST(v AS DECIMAL(30,15))) AS DOUBLE) / COUNT(*) AS m
+         {sql_dsum("v", DEC_FINE)} / COUNT(*) AS m
   FROM daily GROUP BY 1
 ),
 sided AS (
@@ -2142,10 +2113,7 @@ def ts_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     one lag window on the calendar-bounded series grain."""
     daily = daily_events(spark, sf_dir)
     mu = daily.groupBy("et").agg(
-        (
-            F.sum(F.col("v").cast("decimal(30,15)")).cast("double")
-            / F.count("*")
-        ).alias("m")
+        (dsum("v", DEC_FINE) / F.count("*")).alias("m")
     )
     sided = (
         daily.join(F.broadcast(mu), "et")
@@ -2202,11 +2170,11 @@ r AS (
 ),
 m AS (
   SELECT et, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CAST(x AS DECIMAL(30,15))) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(d AS DECIMAL(30,15))) AS DOUBLE) AS sd,
-         CAST(SUM(CAST(x * d AS DECIMAL(30,15))) AS DOUBLE) AS sxd,
-         CAST(SUM(CAST(x * x AS DECIMAL(30,15))) AS DOUBLE) AS sxx,
-         CAST(SUM(CAST(d * d AS DECIMAL(30,15))) AS DOUBLE) AS sdd
+         {sql_dsum("x", DEC_FINE)} AS sx,
+         {sql_dsum("d", DEC_FINE)} AS sd,
+         {sql_dsum("x * d", DEC_FINE)} AS sxd,
+         {sql_dsum("x * x", DEC_FINE)} AS sxx,
+         {sql_dsum("d * d", DEC_FINE)} AS sdd
   FROM r GROUP BY 1
 ),
 f AS (
@@ -2241,7 +2209,7 @@ def ts_adf_unit_root(spark: SparkSession, sf_dir: str) -> DataFrame:
     sufficient-statistics solve.
 
     Determinism: `daily_events` means are bitwise; every product
-    moment snaps to DECIMAL(30,15) before its order-exact sum; ρ and τ
+    moment snaps to `DEC_FINE` before its order-exact sum; ρ and τ
     are ratios of such sums — the summed moments carry ~17+ significant
     digits (the r7 ts_twap DECIMAL→DOUBLE 1-ulp class), so both
     reported statistics take ROUND(6) on both engines; the variance
@@ -2264,17 +2232,14 @@ def ts_adf_unit_root(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def exact(c):
-        return F.sum(c.cast("decimal(30,15)")).cast("double")
-
     x, d = F.col("x"), F.col("d")
     m = r.groupBy("et").agg(
         F.count("*").cast("bigint").alias("n"),
-        exact(x).alias("sx"),
-        exact(d).alias("sd"),
-        exact(x * d).alias("sxd"),
-        exact(x * x).alias("sxx"),
-        exact(d * d).alias("sdd"),
+        dsum(x, DEC_FINE).alias("sx"),
+        dsum(d, DEC_FINE).alias("sd"),
+        dsum(x * d, DEC_FINE).alias("sxd"),
+        dsum(x * x, DEC_FINE).alias("sxx"),
+        dsum(d * d, DEC_FINE).alias("sdd"),
     )
     n = F.col("n")
     vx = n * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -2417,8 +2382,7 @@ _QL_SQL = f"""
 WITH monthly AS (
   SELECT o_orderpriority AS prio,
          CAST(date_trunc('month', o_orderdate) AS DATE) AS m,
-         CAST(FLOOR(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6)))
-                         AS DOUBLE) * 100 + 0.5) AS BIGINT) AS ac
+         CAST(FLOOR({sql_dsum("o_totalprice")} * 100 + 0.5) AS BIGINT) AS ac
   FROM orders GROUP BY 1, 2
 ),
 wf AS (
@@ -2468,9 +2432,7 @@ def ts_quantile_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("month", "o_orderdate").cast("date").alias("m"),
     ).agg(
         F.floor(
-            F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
-            .cast("double")
-            * 100
+            dsum("o_totalprice") * 100
             + F.lit(0.5)
         )
         .cast("bigint")
@@ -2512,10 +2474,10 @@ pair AS (
 ),
 m1 AS (
   SELECT ye, xe, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CAST(x AS DECIMAL(30,15))) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(y AS DECIMAL(30,15))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(x * y AS DECIMAL(30,15))) AS DOUBLE) AS sxy,
-         CAST(SUM(CAST(x * x AS DECIMAL(30,15))) AS DOUBLE) AS sxx
+         {sql_dsum("x", DEC_FINE)} AS sx,
+         {sql_dsum("y", DEC_FINE)} AS sy,
+         {sql_dsum("x * y", DEC_FINE)} AS sxy,
+         {sql_dsum("x * x", DEC_FINE)} AS sxx
   FROM pair GROUP BY 1, 2
 ),
 coef AS (
@@ -2535,10 +2497,9 @@ zl AS (
 ),
 m2 AS (
   SELECT ye, xe, CAST(COUNT(*) AS BIGINT) AS n2,
-         CAST(SUM(CAST(zp * zp AS DECIMAL(30,15))) AS DOUBLE) AS szz,
-         CAST(SUM(CAST(zp * (z - zp) AS DECIMAL(30,15))) AS DOUBLE) AS szd,
-         CAST(SUM(CAST((z - zp) * (z - zp) AS DECIMAL(30,15))) AS DOUBLE)
-           AS sdd
+         {sql_dsum("zp * zp", DEC_FINE)} AS szz,
+         {sql_dsum("zp * (z - zp)", DEC_FINE)} AS szd,
+         {sql_dsum("(z - zp) * (z - zp)", DEC_FINE)} AS sdd
   FROM zl WHERE zp IS NOT NULL
   GROUP BY 1, 2
 )
@@ -2577,7 +2538,7 @@ def ts_cointegration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: `daily_events` means are bitwise; α, β are ratios
     of order-exact DECIMAL sums — identical doubles both engines — so
     every residual is the same IEEE expression; second-stage moments
-    snap to DECIMAL(30,15) before summation; both reported statistics
+    snap to `DEC_FINE` before summation; both reported statistics
     take ROUND(6) (the 17-digit DECIMAL→DOUBLE class).
 
     Scale: the alignment self-join runs on the (type, day) grain —
@@ -2597,16 +2558,13 @@ def ts_cointegration(spark: SparkSession, sf_dir: str) -> DataFrame:
         b, (F.col("day_no") == F.col("dn2")) & (F.col("ye") != F.col("xe"))
     ).select("ye", "xe", "day_no", "y", "x")
 
-    def exact(c):
-        return F.sum(c.cast("decimal(30,15)")).cast("double")
-
     x, y = F.col("x"), F.col("y")
     m1 = pair.groupBy("ye", "xe").agg(
         F.count("*").cast("bigint").alias("n"),
-        exact(x).alias("sx"),
-        exact(y).alias("sy"),
-        exact(x * y).alias("sxy"),
-        exact(x * x).alias("sxx"),
+        dsum(x, DEC_FINE).alias("sx"),
+        dsum(y, DEC_FINE).alias("sy"),
+        dsum(x * y, DEC_FINE).alias("sxy"),
+        dsum(x * x, DEC_FINE).alias("sxx"),
     )
     n = F.col("n")
     vx = n * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -2630,9 +2588,9 @@ def ts_cointegration(spark: SparkSession, sf_dir: str) -> DataFrame:
     zp, zc = F.col("zp"), F.col("z")
     m2 = zl.groupBy("ye", "xe").agg(
         F.count("*").cast("bigint").alias("n2"),
-        exact(zp * zp).alias("szz"),
-        exact(zp * (zc - zp)).alias("szd"),
-        exact((zc - zp) * (zc - zp)).alias("sdd"),
+        dsum(zp * zp, DEC_FINE).alias("szz"),
+        dsum(zp * (zc - zp), DEC_FINE).alias("szd"),
+        dsum((zc - zp) * (zc - zp), DEC_FINE).alias("sdd"),
     )
     rho = F.col("szd") / F.col("szz")
     tau = rho / F.sqrt(

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import DEC, DEC_WIDE, dsum, sql_dsum
 from ..functions.text import SQL_SHINGLES3, shingles3, tokens
 from ..memo import pin
 from ..registry import query
@@ -1038,19 +1039,14 @@ _RIDGE_SQL = f"""
 WITH s AS (
   SELECT l_returnflag AS grp,
          COUNT(*) AS n,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(30,6))) AS DOUBLE) AS sx1,
-         CAST(SUM(CAST(l_discount AS DECIMAL(30,6))) AS DOUBLE) AS sx2,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,6))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(38,6))) AS DOUBLE)
-           AS sx1x1,
-         CAST(SUM(CAST(l_discount * l_discount AS DECIMAL(38,6))) AS DOUBLE)
-           AS sx2x2,
-         CAST(SUM(CAST(l_quantity * l_discount AS DECIMAL(38,6))) AS DOUBLE)
-           AS sx1x2,
-         CAST(SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(38,6)))
-              AS DOUBLE) AS sx1y,
-         CAST(SUM(CAST(l_discount * l_extendedprice AS DECIMAL(38,6)))
-              AS DOUBLE) AS sx2y
+         {sql_dsum("l_quantity")} AS sx1,
+         {sql_dsum("l_discount")} AS sx2,
+         {sql_dsum("l_extendedprice")} AS sy,
+         {sql_dsum("l_quantity * l_quantity", DEC_WIDE)} AS sx1x1,
+         {sql_dsum("l_discount * l_discount", DEC_WIDE)} AS sx2x2,
+         {sql_dsum("l_quantity * l_discount", DEC_WIDE)} AS sx1x2,
+         {sql_dsum("l_quantity * l_extendedprice", DEC_WIDE)} AS sx1y,
+         {sql_dsum("l_discount * l_extendedprice", DEC_WIDE)} AS sx2y
   FROM lineitem GROUP BY 1
 ),
 c AS (
@@ -1095,24 +1091,21 @@ def ml_ridge_closed_form(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL accumulators make the sums order-exact, so the double
     algebra downstream is bit-identical on both engines and ROUND(6)
     absorbs only the division chain's last ulp. Products stay inside
-    DECIMAL(38,6): quantity*price <= ~5e6 per row, summed < 1e13 at
+    `DEC_WIDE`: quantity*price <= ~5e6 per row, summed < 1e13 at
     any tested SF."""
     li = load_parallel(spark, sf_dir, "lineitem")
-
-    def exact(expr: Column, scale: int = 38) -> Column:
-        return F.sum(expr.cast(f"decimal({scale},6)")).cast("double")
 
     x1, x2, y = F.col("l_quantity"), F.col("l_discount"), F.col("l_extendedprice")
     s = li.groupBy(F.col("l_returnflag").alias("grp")).agg(
         F.count("*").alias("n"),
-        exact(x1, 30).alias("sx1"),
-        exact(x2, 30).alias("sx2"),
-        exact(y, 30).alias("sy"),
-        exact(x1 * x1).alias("sx1x1"),
-        exact(x2 * x2).alias("sx2x2"),
-        exact(x1 * x2).alias("sx1x2"),
-        exact(x1 * y).alias("sx1y"),
-        exact(x2 * y).alias("sx2y"),
+        dsum(x1).alias("sx1"),
+        dsum(x2).alias("sx2"),
+        dsum(y).alias("sy"),
+        dsum(x1 * x1, DEC_WIDE).alias("sx1x1"),
+        dsum(x2 * x2, DEC_WIDE).alias("sx2x2"),
+        dsum(x1 * x2, DEC_WIDE).alias("sx1x2"),
+        dsum(x1 * y, DEC_WIDE).alias("sx1y"),
+        dsum(x2 * y, DEC_WIDE).alias("sx2y"),
     )
     n = F.col("n")
     a11 = F.col("sx1x1") - F.col("sx1") * F.col("sx1") / n + F.lit(_RIDGE_LAMBDA)
@@ -1322,7 +1315,7 @@ _IPF_ROUNDS = 6
 
 def _ipf_sql(rounds: int) -> str:
     """DuckDB twin: IPF unrolled — per round a source-margin scaling
-    then a lang-margin scaling. Margin sums accumulate in DECIMAL(30,6)
+    then a lang-margin scaling. Margin sums accumulate in `DEC`
     (weights are exact 1e-6 multiples, so the sums are EXACT — no fold
     order anywhere); each scaled weight snaps back to the
     FLOOR(x·1e6+0.5)/1e6 lattice so drift cannot compound. Loop CTEs
@@ -1346,7 +1339,7 @@ def _ipf_sql(rounds: int) -> str:
          FLOOR(w.w * (SELECT tr FROM t)
                / CAST(rs.s AS DOUBLE) * 1e6 + 0.5) / 1e6 AS w
   FROM {prev} w JOIN (
-    SELECT source, SUM(CAST(w AS DECIMAL(30,6))) AS s
+    SELECT source, SUM(CAST(w AS {DEC})) AS s
     FROM {prev} GROUP BY 1) rs ON rs.source = w.source)"""
         )
         ctes.append(
@@ -1355,7 +1348,7 @@ def _ipf_sql(rounds: int) -> str:
          FLOOR(w.w * (SELECT tl FROM t)
                / CAST(cs.s AS DOUBLE) * 1e6 + 0.5) / 1e6 AS w
   FROM r{i} w JOIN (
-    SELECT lang, SUM(CAST(w AS DECIMAL(30,6))) AS s
+    SELECT lang, SUM(CAST(w AS {DEC})) AS s
     FROM r{i} GROUP BY 1) cs ON cs.lang = w.lang)"""
         )
         prev = f"c{i}"
@@ -1380,7 +1373,7 @@ def mix_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-margin scale then a lang-margin scale.
 
     Determinism: weights live on an exact 1e-6 lattice — margin sums
-    accumulate in DECIMAL(30,6), which is EXACT for lattice multiples
+    accumulate in `DEC`, which is EXACT for lattice multiples
     (no fold order at all); targets are single integer divisions; each
     scaled weight snaps back to the lattice via FLOOR(x·1e6+0.5) (the
     ml_pca_power per-round discipline). Full value hash, no rounding.
@@ -1411,7 +1404,7 @@ def mix_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def scale(df: DataFrame, key: str, target: float) -> DataFrame:
         ms = df.groupBy(key).agg(
-            F.sum(F.col("w").cast("decimal(30,6)")).alias("s")
+            F.sum(F.col("w").cast(DEC)).alias("s")
         )
         return (
             df.join(F.broadcast(ms), key)
@@ -1990,14 +1983,14 @@ _KFOLD_SQL = f"""
 WITH sf AS (
   SELECT l_returnflag AS grp, l_orderkey % {_CV_K} AS fold,
          COUNT(*) AS n,
-         SUM(CAST(l_quantity AS DECIMAL(30,6))) AS sx1,
-         SUM(CAST(l_discount AS DECIMAL(30,6))) AS sx2,
-         SUM(CAST(l_extendedprice AS DECIMAL(30,6))) AS sy,
-         SUM(CAST(l_quantity * l_quantity AS DECIMAL(38,6))) AS sx1x1,
-         SUM(CAST(l_discount * l_discount AS DECIMAL(38,6))) AS sx2x2,
-         SUM(CAST(l_quantity * l_discount AS DECIMAL(38,6))) AS sx1x2,
-         SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(38,6))) AS sx1y,
-         SUM(CAST(l_discount * l_extendedprice AS DECIMAL(38,6))) AS sx2y
+         SUM(CAST(l_quantity AS {DEC})) AS sx1,
+         SUM(CAST(l_discount AS {DEC})) AS sx2,
+         SUM(CAST(l_extendedprice AS {DEC})) AS sy,
+         SUM(CAST(l_quantity * l_quantity AS {DEC_WIDE})) AS sx1x1,
+         SUM(CAST(l_discount * l_discount AS {DEC_WIDE})) AS sx2x2,
+         SUM(CAST(l_quantity * l_discount AS {DEC_WIDE})) AS sx1x2,
+         SUM(CAST(l_quantity * l_extendedprice AS {DEC_WIDE})) AS sx1y,
+         SUM(CAST(l_discount * l_extendedprice AS {DEC_WIDE})) AS sx2y
   FROM lineitem GROUP BY 1, 2
 ),
 tot AS (
@@ -2107,19 +2100,16 @@ def ml_kfold_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fold = (F.col("l_orderkey") % _CV_K).alias("fold")
 
-    def dec(expr: Column, p: int, name: str) -> Column:
-        return F.sum(expr.cast(f"decimal({p},6)")).alias(name)
-
     sf_ = pin(li.groupBy(F.col("l_returnflag").alias("grp"), fold).agg(
         F.count("*").alias("n"),
-        dec(x1, 30, "sx1"),
-        dec(x2, 30, "sx2"),
-        dec(y, 30, "sy"),
-        dec(x1 * x1, 38, "sx1x1"),
-        dec(x2 * x2, 38, "sx2x2"),
-        dec(x1 * x2, 38, "sx1x2"),
-        dec(x1 * y, 38, "sx1y"),
-        dec(x2 * y, 38, "sx2y"),
+        F.sum(x1.cast(DEC)).alias("sx1"),
+        F.sum(x2.cast(DEC)).alias("sx2"),
+        F.sum(y.cast(DEC)).alias("sy"),
+        F.sum((x1 * x1).cast(DEC_WIDE)).alias("sx1x1"),
+        F.sum((x2 * x2).cast(DEC_WIDE)).alias("sx2x2"),
+        F.sum((x1 * x2).cast(DEC_WIDE)).alias("sx1x2"),
+        F.sum((x1 * y).cast(DEC_WIDE)).alias("sx1y"),
+        F.sum((x2 * y).cast(DEC_WIDE)).alias("sx2y"),
     ))  # 15-row moment frame, fed to tot AND tr
     # — Spark shares no subplan results across references (ADVICE r10:
     # without this the lineitem moment aggregation can run up to 4x in
@@ -2212,19 +2202,14 @@ _SHAP_SQL = f"""
 WITH s AS (
   SELECT l_returnflag AS grp,
          COUNT(*) AS n,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(30,6))) AS DOUBLE) AS sx1,
-         CAST(SUM(CAST(l_discount AS DECIMAL(30,6))) AS DOUBLE) AS sx2,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,6))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(38,6))) AS DOUBLE)
-           AS sx1x1,
-         CAST(SUM(CAST(l_discount * l_discount AS DECIMAL(38,6))) AS DOUBLE)
-           AS sx2x2,
-         CAST(SUM(CAST(l_quantity * l_discount AS DECIMAL(38,6))) AS DOUBLE)
-           AS sx1x2,
-         CAST(SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(38,6)))
-              AS DOUBLE) AS sx1y,
-         CAST(SUM(CAST(l_discount * l_extendedprice AS DECIMAL(38,6)))
-              AS DOUBLE) AS sx2y
+         {sql_dsum("l_quantity")} AS sx1,
+         {sql_dsum("l_discount")} AS sx2,
+         {sql_dsum("l_extendedprice")} AS sy,
+         {sql_dsum("l_quantity * l_quantity", DEC_WIDE)} AS sx1x1,
+         {sql_dsum("l_discount * l_discount", DEC_WIDE)} AS sx2x2,
+         {sql_dsum("l_quantity * l_discount", DEC_WIDE)} AS sx1x2,
+         {sql_dsum("l_quantity * l_extendedprice", DEC_WIDE)} AS sx1y,
+         {sql_dsum("l_discount * l_extendedprice", DEC_WIDE)} AS sx2y
   FROM lineitem GROUP BY 1
 ),
 c AS (
@@ -2301,19 +2286,16 @@ def ml_linear_shap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_extendedprice"),
     )
 
-    def dec(expr: Column, p: int, name: str) -> Column:
-        return F.sum(expr.cast(f"decimal({p},6)")).cast("double").alias(name)
-
     s = li.groupBy(F.col("l_returnflag").alias("grp")).agg(
         F.count("*").alias("n"),
-        dec(x1, 30, "sx1"),
-        dec(x2, 30, "sx2"),
-        dec(y, 30, "sy"),
-        dec(x1 * x1, 38, "sx1x1"),
-        dec(x2 * x2, 38, "sx2x2"),
-        dec(x1 * x2, 38, "sx1x2"),
-        dec(x1 * y, 38, "sx1y"),
-        dec(x2 * y, 38, "sx2y"),
+        dsum(x1).alias("sx1"),
+        dsum(x2).alias("sx2"),
+        dsum(y).alias("sy"),
+        dsum(x1 * x1, DEC_WIDE).alias("sx1x1"),
+        dsum(x2 * x2, DEC_WIDE).alias("sx2x2"),
+        dsum(x1 * x2, DEC_WIDE).alias("sx1x2"),
+        dsum(x1 * y, DEC_WIDE).alias("sx1y"),
+        dsum(x2 * y, DEC_WIDE).alias("sx2y"),
     )
     n = F.col("n")
     a11 = F.col("sx1x1") - F.col("sx1") * F.col("sx1") / n + F.lit(

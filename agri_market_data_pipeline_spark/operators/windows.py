@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.exact import dsum, sql_dsum
+from ..functions.exact import DEC, DEC_FINE, dsum, sql_dsum
 from ..registry import query
 from ..tables import load
 from .timeseries import DAILY_EVENTS_SQL, daily_events
@@ -74,7 +74,7 @@ def win_rank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH daily AS ({_DAILY_SQL})
 SELECT o_orderpriority, d, day_total,
-       CAST(SUM(CAST(day_total AS DECIMAL(30,6))) OVER w AS DOUBLE)
+       CAST(SUM(CAST(day_total AS {DEC})) OVER w AS DOUBLE)
            / COUNT(day_total) OVER w AS ma7
 FROM daily
 WINDOW w AS (PARTITION BY o_orderpriority ORDER BY d
@@ -92,7 +92,7 @@ def win_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("d")
         .rowsBetween(-6, Window.currentRow)
     )
-    ma = F.sum(F.col("day_total").cast("decimal(30,6)")).over(w).cast(
+    ma = F.sum(F.col("day_total").cast(DEC)).over(w).cast(
         "double"
     ) / F.count("day_total").over(w)
     return daily.select("o_orderpriority", "d", "day_total", ma.alias("ma7"))
@@ -108,7 +108,7 @@ keyed AS (
     FROM daily
 )
 SELECT o_orderpriority, d, day_total,
-       CAST(SUM(CAST(day_total AS DECIMAL(30,6))) OVER w AS DOUBLE)
+       CAST(SUM(CAST(day_total AS {DEC})) OVER w AS DOUBLE)
            / COUNT(day_total) OVER w AS ma7r
 FROM keyed
 WINDOW w AS (PARTITION BY o_orderpriority ORDER BY day_no
@@ -130,7 +130,7 @@ def win_moving_avg_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("day_no")
         .rangeBetween(-6, Window.currentRow)
     )
-    ma = F.sum(F.col("day_total").cast("decimal(30,6)")).over(w).cast(
+    ma = F.sum(F.col("day_total").cast(DEC)).over(w).cast(
         "double"
     ) / F.count("day_total").over(w)
     return daily.select("o_orderpriority", "d", "day_total", ma.alias("ma7r"))
@@ -716,8 +716,8 @@ _SPC_SQL = f"""
 WITH {DAILY_EVENTS_SQL},
 g AS (
   SELECT et, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CAST(v AS DECIMAL(30,15))) AS DOUBLE) AS sv,
-         CAST(SUM(CAST(v * v AS DECIMAL(30,15))) AS DOUBLE) AS svv
+         {sql_dsum("v", DEC_FINE)} AS sv,
+         {sql_dsum("v * v", DEC_FINE)} AS svv
   FROM daily GROUP BY 1
 ),
 z AS (
@@ -784,7 +784,7 @@ def win_spc_runs_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: mu and sigma are fixed IEEE trees over DECIMAL-exact
     moments, so z is bitwise identical both engines — but a z landing
     within 1 ulp of a threshold could still flip an indicator if the
-    DECIMAL(30,15) sums ever exceed the ~15-significant-digit
+    `DEC_FINE` sums ever exceed the ~15-significant-digit
     correctly-rounded span (ADVICE r8), so every threshold compares
     the FLOOR(z*1e9+0.5) BIGINT lattice (pure IEEE ops, half-ties
     resolve identically — the CLAUDE.md lattice rule) rather than the
@@ -800,10 +800,8 @@ def win_spc_runs_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = daily_events(spark, sf_dir)
     g = daily.groupBy("et").agg(
         F.count("*").cast("bigint").alias("n"),
-        F.sum(F.col("v").cast("decimal(30,15)")).cast("double").alias("sv"),
-        F.sum((F.col("v") * F.col("v")).cast("decimal(30,15)"))
-        .cast("double")
-        .alias("svv"),
+        dsum("v", DEC_FINE).alias("sv"),
+        dsum(F.col("v") * F.col("v"), DEC_FINE).alias("svv"),
     )
     n, sv, svv = F.col("n"), F.col("sv"), F.col("svv")
     z = (

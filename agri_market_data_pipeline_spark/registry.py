@@ -13,8 +13,12 @@ name on both sides. Operators whose semantics are not SQL-expressible
 
 Determinism rules used throughout the operator library:
 
-- double SUMs go through ``DECIMAL(30,6)`` accumulation then CAST back to
-  DOUBLE: exact, order-independent, bitwise-equal across engines;
+- double SUMs accumulate in one of the three DECIMAL lattices named in
+  ``functions/exact`` (``DEC``, ``DEC_FINE``, ``DEC_WIDE``) through
+  ``dsum``/``sql_dsum``, then CAST back to DOUBLE: exact,
+  order-independent, bitwise-equal across engines while the unscaled
+  sum stays below 2^53 (past that, the result takes ROUND(6)); three
+  single-operator lattices stay at their call sites (listed there);
 - AVG is computed as exact-sum / count in double on both sides;
 - inherently order-sensitive float reductions (stddev) are ROUNDed on
   both sides;

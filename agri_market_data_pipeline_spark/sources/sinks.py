@@ -20,7 +20,7 @@ from ..memo import pin
 
 
 def sink_partitioned_append(
-    df: DataFrame, path: str, partition_key: str = "Commodity", fmt: str = "parquet"
+    df: DataFrame, path: str, partition_key: str = "Commodity"
 ) -> None:
     """Append-or-create, one directory per partition value — the Spark
     form of the reference's append_to_crop_csv loop. At 100 TB add a
@@ -30,7 +30,7 @@ def sink_partitioned_append(
         df.write.mode("append")
         .partitionBy(partition_key)
         .option("maxRecordsPerFile", 5_000_000)
-        .format(fmt)
+        .format("parquet")
         .save(path)
     )
 

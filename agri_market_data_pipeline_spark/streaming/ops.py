@@ -389,9 +389,9 @@ def _spike_fn(key, pdf_iter, state):
     )
 
 
-@query(
-    "stream_stateful",
-    oracle="""
+# The spike alert as a running window: both stateful paths
+# (stream_stateful, stream_stateful_tws) must hash-match it.
+_SPIKE_SQL = """
 WITH ordered AS (
     SELECT user_id, event_id, ts,
            CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
@@ -407,8 +407,10 @@ SELECT user_id,
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_spikes
 FROM ordered
 GROUP BY user_id
-""",
-)
+"""
+
+
+@query("stream_stateful", oracle=_SPIKE_SQL)
 def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom per-key streaming state via applyInPandasWithState: a
     price-spike alert (value > 2× the user's running mean). State is
@@ -504,26 +506,7 @@ def _make_spike_processor():
     return SpikeProcessor()
 
 
-@query(
-    "stream_stateful_tws",
-    oracle="""
-WITH ordered AS (
-    SELECT user_id, event_id, ts,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
-           COUNT(*) OVER w AS prior_cnt,
-           SUM(CAST(floor(value * 100 + 0.5) AS BIGINT)) OVER w AS prior_total
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-)
-SELECT user_id,
-       COUNT(*) AS n_events,
-       CAST(SUM(CASE WHEN prior_cnt > 0 AND cents * prior_cnt > 2 * prior_total
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_spikes
-FROM ordered
-GROUP BY user_id
-""",
-)
+@query("stream_stateful_tws", oracle=_SPIKE_SQL)
 def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """stream_stateful on Spark 4's successor stateful API:
     transformWithStateInPandas + StatefulProcessor (named value state

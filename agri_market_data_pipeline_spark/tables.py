@@ -264,9 +264,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-def load_parallel(
-    spark: SparkSession, sf_dir: str, name: str, parts: int | None = None
-) -> DataFrame:
+def load_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan + round-robin repartition for CPU-heavy derivations.
 
     The testdata tables are single parquet files → a map-only pipeline
@@ -274,12 +272,12 @@ def load_parallel(
     whose per-row work dominates (shingling, hashing, vector math,
     pandas UDFs) pay one cheap shuffle here to engage every core. On a
     real 100 TB table with many files this is unnecessary — file splits
-    already parallelize — so `parts` defaults to the local core count
+    already parallelize — so it repartitions to the local core count
     only when the scan has fewer partitions than that."""
     from .session import default_parallelism
 
     df = load(spark, sf_dir, name)
-    target = parts or default_parallelism()
+    target = default_parallelism()
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
@@ -289,19 +287,15 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view (for spark.sql paths).
 
-    Memoized per (session, prefix → sf_dir): a catalog registers once,
-    like a metastore — re-resolving ten parquet footers per query would
-    bill every SQL call ~1s of pure setup. Re-pointing the same prefix
-    at a different sf_dir re-registers (and replaces) the views."""
-    reg = getattr(spark, "_agri_registered_views", None)
-    if reg is None:
-        reg = {}
-        spark._agri_registered_views = reg
-    if reg.get(prefix) == sf_dir:
+    Memoized per (session → sf_dir): a catalog registers once, like a
+    metastore — re-resolving ten parquet footers per query would bill
+    every SQL call ~1s of pure setup. Pointing the session at a
+    different sf_dir re-registers (and replaces) the views."""
+    if getattr(spark, "_agri_registered_views", None) == sf_dir:
         return
     for name in TABLE_NAMES:
-        load(spark, sf_dir, name).createOrReplaceTempView(prefix + name)
-    reg[prefix] = sf_dir
+        load(spark, sf_dir, name).createOrReplaceTempView(name)
+    spark._agri_registered_views = sf_dir

@@ -23,10 +23,13 @@ BUILDERS = {
     "probe": ("operators/similarity.py", {"_probe_scores", "_PROBE_SCORES_SQL"}),
 }
 
-# oracle SQL: the per-(event_type, day) mean of value, lattice or not
+# oracle SQL: the per-(event_type, day) mean of value, lattice or not,
+# spelled out (literal or `{DEC}`) or through functions/exact's
+# sql_dsum / sql_davg
 _DAILY_SQL_RE = re.compile(
     r"epoch_us\(ts\) // 86400000000 AS day_no,.{0,60}?"
-    r"SUM\(CAST\(value AS DECIMAL\(30,6\)\)\)"
+    r"(SUM\(CAST\(value AS (DECIMAL\(30, ?6\)|\{DEC\})\)\)"
+    r"|\{sql_d(sum|avg)\('value'[^}]*\)\})"
 )
 # either engine's SQL: md5 of 'probe:' and the dimension index
 _PROBE_SQL_RE = re.compile(r"md5\((concat\()?'probe:'\s*(\|\||,)\s*CAST\(i0?\b")
@@ -34,14 +37,19 @@ _PROBE_SQL_RE = re.compile(r"md5\((concat\()?'probe:'\s*(\|\||,)\s*CAST\(i0?\b")
 
 def _strings(tree: ast.AST):
     """(line, text) of every string literal; an f-string's literal parts
-    are joined around `{}`. Whitespace runs collapse to one space."""
+    are joined around the `{source}` of its expressions. Whitespace runs
+    collapse to one space."""
     inner = set()
     for node in ast.walk(tree):
         if isinstance(node, ast.JoinedStr):
             parts = []
             for v in node.values:
                 inner.add(id(v))
-                parts.append(v.value if isinstance(v, ast.Constant) else "{}")
+                parts.append(
+                    v.value
+                    if isinstance(v, ast.Constant)
+                    else "{" + ast.unparse(v.value) + "}"
+                )
             yield node.lineno, " ".join("".join(parts).split())
     for node in ast.walk(tree):
         if (
@@ -121,6 +129,18 @@ def test_scan_flags_each_form():
         "# not these: another probe key, a per-row day number\n"
         "k = F.md5(F.concat(F.lit('probe:'), F.col('o_orderkey')))\n"
         "d = ev.select(F.expr('unix_micros(ts) div 86400000000'))\n"
+        "S = f'''daily AS (\n"
+        "  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,\n"
+        '         {sql_dsum("value")} / COUNT(*) AS v FROM events)\'\'\'\n'
+        "T = f'''daily AS (\n"
+        "  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,\n"
+        "         SUM(CAST(value AS {DEC})) / COUNT(*) AS v FROM events)'''\n"
+        "U = f'''daily AS (\n"
+        "  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,\n"
+        '         {sql_dsum("value", DEC)} AS v FROM events)\'\'\'\n'
+        "V = f'''daily AS (\n"
+        "  SELECT event_type AS et, epoch_us(ts) // 86400000000 AS day_no,\n"
+        '         {sql_davg("value")} AS v FROM events)\'\'\'\n'
     )
     got = sorted(_offenses(ast.parse(src)))
     assert got == [
@@ -129,6 +149,10 @@ def test_scan_flags_each_form():
         (11, "probe"),
         (12, "probe"),
         (13, "probe"),
+        (17, "daily"),
+        (20, "daily"),
+        (23, "daily"),
+        (26, "daily"),
     ], got
 
 

@@ -26,7 +26,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from agri_market_data_pipeline_spark.functions.exact import davg, dsum  # noqa: E402
+from agri_market_data_pipeline_spark.functions.exact import (  # noqa: E402
+    DEC_WIDE,
+    davg,
+    dsum,
+)
 from agri_market_data_pipeline_spark.operators.scalar_fns import safe_name  # noqa: E402
 from agri_market_data_pipeline_spark.schemas import AGMARKNET_SCHEMA  # noqa: E402
 from agri_market_data_pipeline_spark.session import get_spark  # noqa: E402
@@ -212,8 +216,8 @@ def main() -> int:
     x = F.col("Modal_Price")
     cstats = prices.groupBy("Commodity").agg(
         F.count("*").alias("cn"),
-        F.sum(x.cast("decimal(30,6)")).cast("double").alias("cs1"),
-        F.sum((x * x).cast("decimal(38,6)")).cast("double").alias("cs2"),
+        dsum(x).alias("cs1"),
+        dsum(x * x, DEC_WIDE).alias("cs2"),
     ).select(
         "Commodity",
         (F.col("cs1") / F.col("cn")).alias("cmean"),
@@ -268,11 +272,11 @@ def main() -> int:
     # commodity — the 'prices spike before monsoon' query
     big = prices.filter(F.col("Commodity") == biggest["Commodity"])
     mo = big.groupBy(F.month("Arrival_Date").alias("moy")).agg(
-        F.sum(F.col("Modal_Price").cast("decimal(30,6)")).cast("double").alias("s"),
+        dsum("Modal_Price").alias("s"),
         F.count("*").alias("cn"),
     )
     tot = big.agg(
-        F.sum(F.col("Modal_Price").cast("decimal(30,6)")).cast("double").alias("sa"),
+        dsum("Modal_Price").alias("sa"),
         F.count("*").alias("na"),
     )
     season = (
